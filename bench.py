@@ -176,61 +176,11 @@ def run_query(df) -> None:
     df.write.format("noop").mode("overwrite").save()
 
 
-class _SpyDict(dict):
-    """A cache dict that counts read hits — bench instrumentation for the
-    warm_cache flag (r9 sweep-hygiene item): a query whose recorded min
-    rode ANY memoized scaffold (its own rep-1 build or another headliner's)
-    is annotated so scale-sweep ratios aren't over-credited."""
-
-    def __init__(self, *a):
-        super().__init__(*a)
-        self.hits = 0
-
-    def get(self, key, default=None):
-        val = super().get(key, default)
-        if val is not None:
-            self.hits += 1
-        return val
-
-    def __getitem__(self, key):
-        val = super().__getitem__(key)
-        self.hits += 1
-        return val
-
-    def __contains__(self, key):
-        present = super().__contains__(key)
-        if present:
-            self.hits += 1
-        return present
-
-
-def _instrument_caches() -> tuple[list, list]:
-    """Swap every dbt_parquet_spark module-level ``*_CACHE`` dict for a
-    hit-counting spy, and every ``*_MEMO`` dict for a SEPARATE spy class
-    (r15, VERDICT_r14 what's-wrong #4: metadata memos — footer probes,
-    resolved-plan handles, row counts — are instrumented DISTINCTLY rather
-    than exempt; the sidecar reports which queries rode them under
-    `meta_memo`, the line under `mm`). Generic by NAME CONVENTION so new
-    scaffolds/memos are covered automatically — no hand-maintained list to
-    rot. Returns (cache_spies, memo_spies)."""
-    spies: list = []
-    memo_spies: list = []
-    for modname, mod in list(sys.modules.items()):
-        if not modname.startswith("dbt_parquet_spark"):
-            continue
-        for attr, val in list(vars(mod).items()):
-            if type(val) is dict and (
-                attr.endswith("_CACHE") or attr.endswith("_MEMO")
-            ):
-                spy = _SpyDict(val)
-                setattr(mod, attr, spy)
-                (spies if attr.endswith("_CACHE") else memo_spies).append(spy)
-    return spies, memo_spies
-
-
 def main() -> None:
+    from dbt_parquet_spark import memo
     from dbt_parquet_spark.registry import load_all
     from dbt_parquet_spark.session import get_spark
+    from dbt_parquet_spark.sources import readers
 
     spark = get_spark("bench")
     specs = load_all()
@@ -338,7 +288,10 @@ def main() -> None:
     # gets one extra rep of budget. A throwing query costs one error row,
     # never the artifact: the loop isolates per-query failures so the
     # JSON line always carries whatever ran.
-    spies, memo_spies = _instrument_caches()
+    # A query is annotated warm_cache when its reps rode ANY memoized
+    # scaffold (its own rep-1 build or another headliner's), so scale-sweep
+    # ratios aren't over-credited; meta_memo (`mm` on the line) when they
+    # rode a metadata memo (footer probes, resolved-plan handles, row counts).
     timings: dict[str, float] = {}
     spreads: dict[str, dict[str, float]] = {}
     errors: dict[str, str] = {}
@@ -346,8 +299,8 @@ def main() -> None:
     meta_memo: list[str] = []
     extra = 1 if contended else 0
     for name in names:
-        hits_before = sum(s.hits for s in spies)
-        memo_before = sum(s.hits for s in memo_spies)
+        hits_before = memo.stats()["hits"]
+        memo_before = readers.memo_hits
         runs: list[float] = []
         for attempt in range(5 + extra):
             t0 = time.perf_counter()
@@ -363,9 +316,9 @@ def main() -> None:
                     break  # converged: the min is stable
         converged = len(runs) >= 2 and sorted(runs)[1] <= sorted(runs)[0] * 1.05
         if name not in errors and runs:
-            if sum(s.hits for s in spies) > hits_before:
+            if memo.stats()["hits"] > hits_before:
                 warm_cache.append(name)
-            if sum(s.hits for s in memo_spies) > memo_before:
+            if readers.memo_hits > memo_before:
                 meta_memo.append(name)
             # steady spread EXCLUDES rep 1 (which carries per-query plan
             # compilation/codegen and any scaffold build): on a quiet box

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..registry import register
 from ..sources.readers import load_table
 
@@ -36,13 +37,6 @@ def shingles(toks: Column, k: int = 5) -> Column:
         F.size(toks) >= k,
         F.array_distinct(F.transform(F.sequence(F.lit(1), F.size(toks) - (k - 1)), gram)),
     ).otherwise(F.array().cast("array<string>"))
-
-
-# Memo of the persisted (doc_id, shingle) DataFrame per (application, corpus
-# dir, k). Registry queries share one SparkSession; without the memo every
-# dedup query re-persisted the same lineage ("Asked to cache already cached
-# data" warnings) and cache entries accumulated unboundedly (ADVICE r4).
-_SHINGLE_CACHE: dict[tuple[str, str, int], DataFrame] = {}
 
 
 def doc_shingles(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
@@ -69,20 +63,19 @@ def doc_shingles(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     ``doc_token_arrays`` memo too, un-caching every later positional
     consumer (span dedup, winnowing, cooccurrence) in the same session.
     Both scaffolds are MEMORY_AND_DISK (spill, not OOM);
-    ``release_shingle_cache`` frees everything for long-lived sessions.
+    ``memo.release(spark, "dedup")`` frees the whole family.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    hit = _SHINGLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    toks_df = doc_token_arrays(spark, sf_dir)
-    exploded = toks_df.select(
-        "doc_id", F.explode(shingles(F.col("toks"), k)).alias("s")
-    ).persist()
-    # Materialize now: every caller's first action needs the full set anyway.
-    exploded.count()
-    _SHINGLE_CACHE[key] = exploded
-    return exploded
+
+    def build() -> DataFrame:
+        toks_df = doc_token_arrays(spark, sf_dir)
+        exploded = toks_df.select(
+            "doc_id", F.explode(shingles(F.col("toks"), k)).alias("s")
+        ).persist()
+        # Materialize now: every caller's first action needs the full set anyway.
+        exploded.count()
+        return exploded
+
+    return memo.scaffold(spark, "dedup.shingles", (sf_dir, k), build)
 
 
 # Per-partition compressed-byte budget for _spread_small_scan. Tuned by
@@ -107,51 +100,18 @@ def _spread_small_scan(spark: SparkSession, df: DataFrame) -> DataFrame:
     return spread_small_scan(spark, df, _SPREAD_BYTES_PER_PARTITION)
 
 
-# Memo of persisted (doc_id, toks: array<string>) — the scaffold for
-# operators that need POSITIONED access to tokens (span dedup). Kept
-# separate from the shingle cache: doc_shingles releases its token scaffold
-# once the exploded shingles are materialized, while positioned consumers
-# need the arrays live across several plan branches of one job (persist is
-# the projection barrier that stops Catalyst inlining split() into every
-# element_at — see doc_shingles docstring).
-_TOKEN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def doc_token_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, toks: array<string>), persisted + memoized per
-    (application, sf_dir): one row per document, split exactly once."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TOKEN_CACHE.get(key)
-    if hit is not None:
-        return hit
-    docs = _spread_small_scan(spark, load_table(spark, sf_dir, "documents"))
-    toks_df = docs.select("doc_id", token_array().alias("toks")).persist()
-    _TOKEN_CACHE[key] = toks_df
-    return toks_df
+    """(doc_id, toks: array<string>), persisted + memoized per sf_dir: one
+    row per document, split exactly once. The scaffold for operators that
+    need POSITIONED access to tokens (span dedup): persist is the
+    projection barrier that stops Catalyst inlining split() into every
+    element_at — see the doc_shingles docstring."""
 
+    def build() -> DataFrame:
+        docs = _spread_small_scan(spark, load_table(spark, sf_dir, "documents"))
+        return docs.select("doc_id", token_array().alias("toks")).persist()
 
-def release_shingle_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist and forget all memoized shingle/token DataFrames (for the
-    given application only, if ``spark`` is passed). Call between corpora in
-    a long-lived session to release executor memory/disk."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_SHINGLE_CACHE):
-        if app is None or key[0] == app:
-            _SHINGLE_CACHE.pop(key).unpersist()
-    for key in list(_TOKEN_CACHE):
-        if app is None or key[0] == app:
-            _TOKEN_CACHE.pop(key).unpersist()
-    for key in list(_HASH_CACHE):
-        if app is None or key[0] == app:
-            _HASH_CACHE.pop(key).unpersist()
-    for key in list(_TOKEN_HASH_CACHE):
-        if app is None or key[0] == app:
-            _TOKEN_HASH_CACHE.pop(key).unpersist()
-    # the streaming scrub dictionary is part of the same scaffold family;
-    # lazy import keeps registration order untouched (build invariant)
-    from ..streaming.stream_ops import release_scrub_dict_cache
-
-    release_scrub_dict_cache(spark)
+    return memo.scaffold(spark, "dedup.tokens", sf_dir, build)
 
 
 def shingle_sets(exploded: DataFrame) -> DataFrame:
@@ -388,51 +348,39 @@ def pairs_from_buckets(
     return pairs.distinct() if dedup else pairs
 
 
-# Memo of persisted (doc_id, hs: array<bigint>) shingle BASE-HASH arrays —
-# the minhash signature scaffold. One row per doc, 8 bytes per distinct
-# shingle (vs the exploded string cache's full shingle text); persisted so
-# the 64 permutation minima are narrow array expressions over a bound
-# attribute (without the persist barrier Catalyst inlines the string
-# xxhash64 into all 64 array_min branches — the doc_shingles trap).
-_HASH_CACHE: dict[tuple[str, str, int], DataFrame] = {}
-
-
 def doc_shingle_hashes(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     """(doc_id, hs: array<bigint>) — xxhash64 of each distinct shingle,
-    persisted + memoized per (application, sf_dir, k)."""
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    hit = _HASH_CACHE.get(key)
-    if hit is not None:
-        return hit
-    toks_df = doc_token_arrays(spark, sf_dir)
-    hsdf = toks_df.select(
-        "doc_id",
-        F.transform(shingles(F.col("toks"), k), lambda s: F.xxhash64(s)).alias("hs"),
-    ).persist()
-    hsdf.count()
-    _HASH_CACHE[key] = hsdf
-    return hsdf
+    persisted + memoized per (sf_dir, k): the minhash signature scaffold.
+    One row per doc, 8 bytes per distinct shingle (vs the exploded string
+    scaffold's full shingle text); persisted so the 64 permutation minima
+    are narrow array expressions over a bound attribute (without the
+    persist barrier Catalyst inlines the string xxhash64 into all 64
+    array_min branches — the doc_shingles trap)."""
 
+    def build() -> DataFrame:
+        hsdf = doc_token_arrays(spark, sf_dir).select(
+            "doc_id",
+            F.transform(shingles(F.col("toks"), k), lambda s: F.xxhash64(s)).alias("hs"),
+        ).persist()
+        hsdf.count()
+        return hsdf
 
-# Memo of persisted (doc_id, th: array<bigint>) TOKEN hash arrays (with
-# multiplicities — SimHash weights by term frequency): the simhash scaffold.
-_TOKEN_HASH_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return memo.scaffold(spark, "dedup.shingle_hashes", (sf_dir, k), build)
 
 
 def doc_token_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, th: array<bigint>) — xxhash64 of every token occurrence,
-    persisted + memoized per (application, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _TOKEN_HASH_CACHE.get(key)
-    if hit is not None:
-        return hit
-    toks_df = doc_token_arrays(spark, sf_dir)
-    thdf = toks_df.select(
-        "doc_id", F.transform(F.col("toks"), lambda t: F.xxhash64(t)).alias("th")
-    ).persist()
-    thdf.count()
-    _TOKEN_HASH_CACHE[key] = thdf
-    return thdf
+    """(doc_id, th: array<bigint>) — xxhash64 of every token occurrence
+    (with multiplicities — SimHash weights by term frequency), persisted +
+    memoized per sf_dir: the simhash scaffold."""
+
+    def build() -> DataFrame:
+        thdf = doc_token_arrays(spark, sf_dir).select(
+            "doc_id", F.transform(F.col("toks"), lambda t: F.xxhash64(t)).alias("th")
+        ).persist()
+        thdf.count()
+        return thdf
+
+    return memo.scaffold(spark, "dedup.token_hashes", sf_dir, build)
 
 
 @register("q_dedup_minhash", tags=("dedup", "minhash", "lsh"))

@@ -6,11 +6,11 @@ that IS oracle-checkable because the round-trip must be lossless).
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..catalog import FilesystemCatalog
 from ..materialize import create_table_as, load_seed
 from ..registry import register
@@ -57,7 +57,7 @@ def q_seed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Oracle = the CSV's content as a typed VALUES relation, so the driver
     value-checks the whole inference+write+read loop."""
-    tmp = tempfile.mkdtemp(prefix="seed_db_")
+    tmp = memo.scratch_dir(spark, "seed_db_")
     csv_path = os.path.join(tmp, "base.csv")
     with open(csv_path, "w") as f:
         f.write(SEED_CSV)
@@ -141,7 +141,7 @@ def q_materialize_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     end-to-end (values, schema, row count)."""
     from .relational import q_join_multi
 
-    tmp = tempfile.mkdtemp(prefix="ctas_db_")
+    tmp = memo.scratch_dir(spark, "ctas_db_")
     catalog = FilesystemCatalog(tmp)
     rel = catalog.relation("nation_rollup")
     result = q_join_multi(spark, sf_dir)
@@ -168,7 +168,7 @@ def q_cluster_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..maintenance import cluster_by
 
-    tmp = tempfile.mkdtemp(prefix="cluster_db_")
+    tmp = memo.scratch_dir(spark, "cluster_db_")
     catalog = FilesystemCatalog(tmp)
     rel = catalog.relation("events_clustered")
     events = load_table(spark, sf_dir, "events").select(
@@ -205,7 +205,7 @@ def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
-    tmp = tempfile.mkdtemp(prefix="bucketed_db_")
+    tmp = memo.scratch_dir(spark, "bucketed_db_")
     sfx = _uuid.uuid4().hex[:8]
     t_orders, t_customer = f"orders_bkt_{sfx}", f"customer_bkt_{sfx}"
     (
@@ -249,7 +249,7 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("doc_id") < 500)
         .select("doc_id", "lang", "source", "n_chars")
     )
-    tmp = tempfile.mkdtemp(prefix="fmt_roundtrip_")
+    tmp = memo.scratch_dir(spark, "fmt_roundtrip_")
     jdest = os.path.join(tmp, "docs_jsonl")
     write_json(docs, jdest)
     back_j = read_json(spark, jdest, schema=docs.schema)
@@ -258,31 +258,26 @@ def q_format_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_orc(spark, odest)
 
 
-# sf_dir -> path of the hive-partitioned documents copy (memoized: built
-# once per corpus by the first consumer, the fitted-artifact discipline)
-_PARTITIONED_CACHE: dict[str, str] = {}
-
-
 def partitioned_documents(spark: SparkSession, sf_dir: str) -> str:
     """Materialize documents as a hive-partitioned table (source=*/...)
     via the CTAS machinery — the fixture for the partitioned-source read
     surface. In production this directory already exists (it IS the lake
     layout); here it is built once per corpus and memoized."""
-    hit = _PARTITIONED_CACHE.get(sf_dir)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="part_docs_"))
-    rel = catalog.relation("documents_by_source")
-    create_table_as(
-        spark,
-        catalog,
-        rel,
-        load_table(spark, sf_dir, "documents"),
-        partition_by=["source"],
-        register=False,
-    )
-    _PARTITIONED_CACHE[sf_dir] = rel.path
-    return rel.path
+
+    def build() -> str:
+        catalog = FilesystemCatalog(memo.scratch_dir(spark, "part_docs_"))
+        rel = catalog.relation("documents_by_source")
+        create_table_as(
+            spark,
+            catalog,
+            rel,
+            load_table(spark, sf_dir, "documents"),
+            partition_by=["source"],
+            register=False,
+        )
+        return rel.path
+
+    return memo.scaffold(spark, "lifecycle.partitioned_documents", sf_dir, build)
 
 
 @register(

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..registry import register
 from ..sources.readers import load_table
 from .corpus import PRUNE_PCT, QUALITY_PPM_SQL, quality_ppm_expr
@@ -123,21 +124,17 @@ def q_corpus_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Memo of the persisted post-dedup post-prune keep set — the release
-# pipeline's stage boundary. Three plan branches read it (span grams, span
-# reconstruction, final attribute join); without the persist barrier each
-# branch re-runs the whole dedup+threshold lineage (measured 3x, 40
-# exchanges at sf0.01). Same (applicationId, sf_dir) memo discipline as the
-# dedup scaffolds; in production this boundary is a catalog-materialized
-# table instead (tests/test_release_pipeline.py).
-_KEPT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _kept_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _KEPT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """The persisted post-dedup post-prune keep set, memoized per sf_dir —
+    the release pipeline's stage boundary. Three plan branches read it
+    (span grams, span reconstruction, final attribute join); without the
+    persist barrier each branch re-runs the whole dedup+threshold lineage
+    (measured 3x, 40 exchanges at sf0.01). In production this boundary is
+    a catalog-materialized table instead (tests/test_release_pipeline.py)."""
+    return memo.scaffold(spark, "release.kept", sf_dir, lambda: _build_kept(spark, sf_dir))
+
+
+def _build_kept(spark: SparkSession, sf_dir: str) -> DataFrame:
     comp = dedup_component_labels(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     q = docs.select("doc_id", "source", "text", quality_ppm_expr().alias("quality"))
@@ -160,7 +157,6 @@ def _kept_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     kept.count()
-    _KEPT_CACHE[key] = kept
     return kept
 
 

@@ -16,6 +16,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.vector import cosine
 from ..registry import register
 from ..sources.readers import load_table
@@ -33,13 +34,6 @@ DSIR_BUCKETS = 2048
 DSIR_TARGET_SOURCES = ("src0", "src1")  # the "domain we want more of"
 DSIR_TOP_N = 200
 
-# Memoized trained artifacts (the classifier._W_CACHE discipline): the LLR
-# table / centroids ARE the fitted model — deterministic given sf_dir — so
-# repeated invocations (bench min-of-3, composed queries) skip refitting.
-_LLR_CACHE: dict[str, list[int]] = {}
-# (applicationId, sf_dir, k) — the similarity._IVF_CACHE keying discipline
-_CENT_CACHE: dict[tuple[str, str, int], list[list[float]]] = {}
-
 
 def _bucket(tok):
     """Hash a token column to [0, DSIR_BUCKETS) — md5-prefix mod, identical
@@ -56,9 +50,12 @@ def dsir_llr_table(spark: SparkSession, sf_dir: str) -> list[int]:
 
     Scale: one explode + one groupBy(bucket) with map-side partials;
     driver state is 2·DSIR_BUCKETS longs regardless of corpus size.
+    Memoized: the table IS the fitted model, deterministic given sf_dir.
     """
-    if sf_dir in _LLR_CACHE:
-        return _LLR_CACHE[sf_dir]
+    return memo.scaffold(spark, "selection.llr", sf_dir, lambda: _fit_llr(spark, sf_dir))
+
+
+def _fit_llr(spark: SparkSession, sf_dir: str) -> list[int]:
     docs = load_table(spark, sf_dir, "documents")
     is_tgt = F.col("source").isin(*DSIR_TARGET_SOURCES).cast("long")
     counts = (
@@ -77,11 +74,10 @@ def dsir_llr_table(spark: SparkSession, sf_dir: str) -> list[int]:
         tgt[r.b] = r.n_tgt
         raw[r.b] = r.n_raw
     t_tot, r_tot = sum(tgt) + DSIR_BUCKETS, sum(raw) + DSIR_BUCKETS
-    _LLR_CACHE[sf_dir] = [
+    return [
         round(1e6 * (math.log((tgt[b] + 1) / t_tot) - math.log((raw[b] + 1) / r_tot)))
         for b in range(DSIR_BUCKETS)
     ]
-    return _LLR_CACHE[sf_dir]
 
 
 @register("q_dsir_select", tags=("corpus", "selection", "dsir", "quality"))
@@ -118,22 +114,18 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
 DSIR_TOKEN_BUDGET = 6000  # token budget for the budgeted variant (test SFs)
 
 
-# Memo of the persisted scored table per (applicationId, sf_dir): the
-# budget variant reads it from three plan branches (min/max agg, band
-# totals, banded cumsum) and the per-token md5 scoring is the expensive
-# part — the _ASSIGN_CACHE / release._KEPT_CACHE multi-consumer
-# discipline. One thin row per raw-pool doc.
-_DSIR_SCORE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, source, n_tokens, weight_unats) for every raw-pool doc —
     the shared scoring stage of both DSIR variants. Map-only integer
-    arithmetic; the LLR table rides in the expression closure."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DSIR_SCORE_CACHE.get(key)
-    if hit is not None:
-        return hit
+    arithmetic; the LLR table rides in the expression closure. Persisted
+    and memoized per sf_dir: the budget variant reads it from three plan
+    branches (min/max agg, band totals, banded cumsum) and the per-token
+    md5 scoring is the expensive part. One thin row per raw-pool doc."""
+    return memo.scaffold(spark, "selection.dsir_scores", sf_dir,
+                         lambda: _build_dsir_scored(spark, sf_dir))
+
+
+def _build_dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     llr = dsir_llr_table(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     raw = docs.filter(~F.col("source").isin(*DSIR_TARGET_SOURCES))
@@ -148,7 +140,6 @@ def _dsir_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", F.size(toks).cast("long").alias("n_tokens"), weight.alias("weight_unats")
     ).persist()
     scored.count()
-    _DSIR_SCORE_CACHE[key] = scored
     return scored
 
 
@@ -236,32 +227,28 @@ def semdedup_centroids(spark: SparkSession, sf_dir: str, k: int) -> list[list[fl
     Each round's driver-side mean is float(Fraction(sum, SCALE·count)) —
     one correctly-rounded division per (cell, dim). Only the centroids
     (k·dim doubles) ever reach the driver. Init = the k lowest-vec_id
-    vectors, fixed iteration count."""
-    key = (spark.sparkContext.applicationId, sf_dir, k)
-    if key in _CENT_CACHE:
-        return _CENT_CACHE[key]
+    vectors, fixed iteration count. Memoized per (sf_dir, k)."""
     from .kmeans import distinct_init, fit_kmeans
 
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    init = distinct_init(emb, k)  # duplicate inits would strand twin cells empty
-    cents = fit_kmeans(emb, init, SEMDEDUP_ITERS)
-    _CENT_CACHE[key] = cents
-    return cents
+    def build() -> list[list[float]]:
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        init = distinct_init(emb, k)  # duplicate inits would strand twin cells empty
+        return fit_kmeans(emb, init, SEMDEDUP_ITERS)
 
-
-# Memo of the persisted (vec_id, embedding, cluster) assignment per
-# (applicationId, sf_dir) — q_semdedup reads it from THREE plan branches
-# (pair-left, pair-right, final keep join); without the persist barrier
-# each branch re-runs the scan + assign UDF (the release.py _KEPT_CACHE
-# multi-consumer discipline). Deterministic given the memoized centroids.
-_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
+    return memo.scaffold(spark, "selection.centroids", (sf_dir, k), build)
 
 
 def _assigned_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _ASSIGN_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """The persisted (vec_id, embedding, cluster) assignment, memoized per
+    sf_dir — q_semdedup reads it from THREE plan branches (pair-left,
+    pair-right, final keep join); without the persist barrier each branch
+    re-runs the scan + assign UDF. Deterministic given the memoized
+    centroids."""
+    return memo.scaffold(spark, "selection.assignments", sf_dir,
+                         lambda: _assign(spark, sf_dir))
+
+
+def _assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     k = semdedup_k(emb.count())  # footer-only count, no data scan
     cents = semdedup_centroids(spark, sf_dir, k)
@@ -282,17 +269,7 @@ def _assigned_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     assigned.count()
-    _ASSIGN_CACHE[key] = assigned
     return assigned
-
-
-def release_assign_cache() -> None:
-    """Unpersist and forget all memoized cluster assignments and DSIR
-    score tables (the dedup.release_shingle_cache discipline)."""
-    for key in list(_ASSIGN_CACHE):
-        _ASSIGN_CACHE.pop(key).unpersist()
-    for key in list(_DSIR_SCORE_CACHE):
-        _DSIR_SCORE_CACHE.pop(key).unpersist()
 
 
 @register("q_semdedup", tags=("similarity", "dedup", "semdedup", "embedding"))

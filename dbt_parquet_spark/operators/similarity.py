@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType, LongType
 
+from .. import memo
 from ..functions.vector import cosine, dot, norm
 from ..registry import register
 from ..sources.readers import load_table, table_row_count
@@ -493,14 +494,6 @@ def adaptive_nprobe(cells: int, survivor_frac: float) -> int:
     s = max(float(survivor_frac), 1.0 / max(cells, 1))
     return min(cells, max(base, math.ceil(base / s)))
 
-# sf_dir -> fitted coarse quantizer / codebooks (the _PCA_CACHE discipline)
-# Keyed (applicationId, sf_dir) like _PQ_INDEX_CACHE/_LIFECYCLE_CACHE — one
-# scaffold-cache keying discipline package-wide: a new Spark session never
-# inherits another session's fitted artifacts (training is deterministic
-# today, so this is hygiene, not correctness).
-_IVF_CACHE: dict[tuple[str, str], list[list[float]]] = {}
-_PQBOOK_CACHE: dict[tuple[str, str], list[list[list[float]]]] = {}
-
 
 def _dense_lit_sql(x) -> str:
     if isinstance(x, (list, tuple)):
@@ -545,18 +538,12 @@ def train_ivf_quantizer(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     constants block above). len(return value) IS the fitted cell count.
 
     Deterministic: init = the lowest-vec_id vectors, fixed iteration count.
-    Memoized per sf_dir (the _PCA_CACHE fitted-artifact discipline): the
-    centroids ARE the fitted index, deterministic given the corpus, so
-    repeated invocations (all four IVF/PQ consumers, driver reps) skip the
-    Lloyd iterations.
+    Memoized per sf_dir: the centroids ARE the fitted index, deterministic
+    given the corpus, so repeated invocations (all four IVF/PQ consumers,
+    driver reps) skip the Lloyd iterations.
     """
-    hit = _IVF_CACHE.get(_index_key(spark, sf_dir))
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fitted = fit_ivf_quantizer(emb)
-    _IVF_CACHE[_index_key(spark, sf_dir)] = fitted
-    return fitted
+    return memo.scaffold(spark, "similarity.ivf", sf_dir, lambda: fit_ivf_quantizer(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")))
 
 
 def fit_ivf_quantizer(emb: DataFrame, spread: bool = False) -> list[list[float]]:
@@ -718,15 +705,10 @@ def train_pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float
     lowest-vec_id subvectors, fixed iteration count, and a deterministic
     xxhash64 sample caps the training set at ~PQ_TRAIN_MAX vectors (footer
     count -> keep-1-in-ceil(n/max)), so training cost is constant in corpus
-    size while the encode pass stays full-corpus.
+    size while the encode pass stays full-corpus. Memoized per sf_dir.
     """
-    hit = _PQBOOK_CACHE.get(_index_key(spark, sf_dir))
-    if hit is not None:
-        return hit
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    fitted = fit_pq_codebooks(emb)
-    _PQBOOK_CACHE[_index_key(spark, sf_dir)] = fitted
-    return fitted
+    return memo.scaffold(spark, "similarity.pq_books", sf_dir, lambda: fit_pq_codebooks(
+        load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")))
 
 
 def _spread_books_init(emb: DataFrame) -> list[list[list[float]]]:
@@ -825,51 +807,23 @@ def fit_pq_codebooks(emb: DataFrame, spread: bool = False) -> list[list[list[flo
     return [[[float(x) for x in c] for c in b] for b in books]
 
 
-# (applicationId, sf_dir) -> Spark path, the scaffold-cache keying discipline
-# (a new session must not inherit another session's temp-dir index).
-# _PQ_INDEX_CACHE is the IMMUTABLE base the registered ANN queries read;
-# _LIFECYCLE_CACHE is the mutable index that default-path append/compact
-# operate on (cloned from the base on first touch), so lifecycle mutation
-# can never drift the registered queries' results mid-session.
-_PQ_INDEX_CACHE: dict[tuple[str, str], str] = {}
-_LIFECYCLE_CACHE: dict[tuple[str, str], str] = {}
-
-
-def _index_key(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    return (spark.sparkContext.applicationId, sf_dir)
-
-
-def release_pq_index_cache() -> None:
-    """Drop the memoized index paths AND the fitted artifacts (quantizer
-    centroids, PQ codebooks) — the release_shingle_cache family's hook for
-    the ANN index. The next consumer re-trains and re-builds; on-disk files
-    are left for the tempdir/catalog owner to reap."""
-    _PQ_INDEX_CACHE.clear()
-    _LIFECYCLE_CACHE.clear()
-    _IVF_CACHE.clear()
-    _PQBOOK_CACHE.clear()
-
-
 def _lifecycle_index(spark: SparkSession, sf_dir: str) -> str:
     """The mutable index for default-path lifecycle ops (append/compact):
-    a byte-for-byte clone of the immutable base, created on first touch.
-    Registered queries keep reading the base; lifecycle mutation happens
-    here. Local-FS clone (the default index lives in a process tempdir);
-    an explicit ``path=`` handle bypasses this entirely."""
+    a byte-for-byte clone of the immutable base, created on first touch
+    and memoized per sf_dir. Registered queries keep reading the base, so
+    lifecycle mutation can never drift their results mid-session.
+    Local-FS clone (the default index lives in a scratch dir); an explicit
+    ``path=`` handle bypasses this entirely."""
     import shutil
-    import tempfile
 
-    key = _index_key(spark, sf_dir)
-    hit = _LIFECYCLE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    base = build_pq_index(spark, sf_dir)
-    src = base[len("file:"):] if base.startswith("file:") else base
-    dst = tempfile.mkdtemp(prefix="pq_index_lifecycle_")
-    shutil.rmtree(dst)
-    shutil.copytree(src, dst)
-    _LIFECYCLE_CACHE[key] = dst
-    return dst
+    def build() -> str:
+        base = build_pq_index(spark, sf_dir)
+        src = base[len("file:"):] if base.startswith("file:") else base
+        dst = memo.scratch_dir(spark, "pq_index_lifecycle_")
+        shutil.copytree(src, dst, dirs_exist_ok=True)
+        return dst
+
+    return memo.scaffold(spark, "similarity.pq_lifecycle", sf_dir, build)
 
 
 def build_pq_index(
@@ -905,18 +859,22 @@ def build_pq_index(
     build is the caller's relation (droppable, renamable) and is NOT
     installed as the process default — registered queries keep reading
     the memoized base build, so a user dropping their copy can't break
-    them. The default build lands in a process-lifetime temp database
-    memoized per (applicationId, sf_dir) — the scaffold-cache keying —
-    and is IMMUTABLE: default-path append/compact operate on a lifecycle
-    clone (_lifecycle_index), released via release_pq_index_cache().
+    them. The default build lands in a scratch database memoized per
+    sf_dir and is IMMUTABLE: default-path append/compact operate on a
+    lifecycle clone (_lifecycle_index).
     Returns the Spark-readable path of the codes table."""
-    if catalog is None:
-        hit = _PQ_INDEX_CACHE.get(_index_key(spark, sf_dir))
-        if hit is not None:
-            return hit
-    import tempfile
-
     from ..catalog import FilesystemCatalog
+
+    if catalog is None:
+        def build() -> str:
+            cat = FilesystemCatalog(memo.scratch_dir(spark, "pq_index_"))
+            return _write_pq_index(spark, sf_dir, cat, cat.relation("pq_codes"))
+
+        return memo.scaffold(spark, "similarity.pq_index", sf_dir, build)
+    return _write_pq_index(spark, sf_dir, catalog, rel or catalog.relation("pq_codes"))
+
+
+def _write_pq_index(spark: SparkSession, sf_dir: str, catalog, rel) -> str:
     from ..materialize import create_table_as
 
     from .kmeans import assign_udf
@@ -931,11 +889,6 @@ def build_pq_index(
         assigned.select("vec_id", "cell", "embedding"), _books_literal(books),
         keep_embedding=True,
     )
-    is_default = catalog is None
-    if catalog is None:
-        catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="pq_index_"))
-    if rel is None:
-        rel = catalog.relation("pq_codes")
     # one shuffle by cell before the write: each cell lands in exactly ONE
     # task, so the layout is ONE file per cell at any write parallelism —
     # without this, every task writes a sliver of every cell and a probed
@@ -950,8 +903,6 @@ def build_pq_index(
     # just the path handle — and any post-rebuild consumer — encodes and
     # probes with the artifacts that match these codes, not a retrain.
     _write_artifacts(path, cents, books)
-    if is_default:  # user-catalog builds never become the process default
-        _PQ_INDEX_CACHE[_index_key(spark, sf_dir)] = path
     return path
 
 
@@ -1145,23 +1096,23 @@ def index_recall_audit(
 # recipe: 8 well-separated unit centers, sigma 0.05, 480x64) plus a
 # minimal documents table carrying the filtered-audit predicate columns,
 # so both recall audits run on BOTH distributions and report per-corpus.
-_CLUSTERED_CORPUS_CACHE: dict[tuple[str, str], str] = {}
 
 
 def clustered_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     """Materialize (once per session+sf_dir) the clustered twin corpus as
     its own sf_dir-shaped directory — the whole index/audit machinery is
     sf_dir-generic, so the twin rides the production path end to end."""
-    import tempfile
+    return memo.scaffold(
+        spark, "similarity.clustered_corpus", sf_dir,
+        lambda: _write_clustered_corpus(memo.scratch_dir(spark, "clustered_corpus_")),
+    )
 
+
+def _write_clustered_corpus(d: str) -> str:
     import numpy as np
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLUSTERED_CORPUS_CACHE.get(key)
-    if hit is not None:
-        return hit
     rng = np.random.default_rng(4242)
     n_clusters, n, dim = 8, 480, 64
     centers = rng.standard_normal((n_clusters, dim))
@@ -1169,7 +1120,6 @@ def clustered_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
     labels = np.arange(n) % n_clusters
     pts = centers[labels] + 0.05 * rng.standard_normal((n, dim))
     pts /= np.linalg.norm(pts, axis=1, keepdims=True)
-    d = tempfile.mkdtemp(prefix="clustered_corpus_")
     papq.write_table(
         pa.table(
             {
@@ -1197,7 +1147,6 @@ def clustered_corpus_dir(spark: SparkSession, sf_dir: str) -> str:
         ),
         f"{d}/documents.parquet",
     )
-    _CLUSTERED_CORPUS_CACHE[key] = d
     return d
 
 
@@ -1387,15 +1336,15 @@ def compact_pq_index(
     scoped to the hive layout.
 
     ``path`` selects the index to compact (the handle returned by
-    build/append); default is the mutable lifecycle index if one exists,
-    else the registered-query base (compaction is content-preserving, so
-    compacting the base is safe). Returns the compacted index's path.
+    build/append); default is the mutable lifecycle index that default-path
+    appends write to, so the registered-query base is never rewritten.
+    Returns the compacted index's path.
     Contents are unchanged — pinned by test."""
     import glob as _glob
     import os
 
     if path is None:
-        path = _LIFECYCLE_CACHE.get(_index_key(spark, sf_dir)) or build_pq_index(spark, sf_dir)
+        path = _lifecycle_index(spark, sf_dir)
     root = path[len("file:"):] if path.startswith("file:") else path
     for cell_dir in sorted(_glob.glob(os.path.join(root, "cell=*"))):
         _compact_cell(spark, root, cell_dir, max_files_per_cell)
@@ -1874,10 +1823,6 @@ def q_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 PCA_K = 4
 
-# (sf_dir -> (mean vector, projection matrix rows)) — the fitted-artifact
-# memo discipline (classifier._W_CACHE): deterministic given sf_dir.
-_PCA_CACHE: dict[str, tuple[list[float], list[list[float]]]] = {}
-
 
 def embedding_gram_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(i, j, n, s_ppm) for 1 <= i <= j <= DIM: the upper-triangular
@@ -2004,12 +1949,14 @@ def pca_projection(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[
     """Fit PCA from the integer-ppm scatter matrix + per-dim integer-ppm
     sums: covariance C = S/n - mean meanT on the driver (DIM x DIM doubles),
     numpy eigh, top-PCA_K eigenvectors sign-fixed (largest-|coord| positive)
-    for full determinism. Driver transfer: DIM^2 + DIM longs."""
+    for full determinism. Driver transfer: DIM^2 + DIM longs. Memoized:
+    the fit is deterministic given sf_dir."""
+    return memo.scaffold(spark, "similarity.pca", sf_dir, lambda: _fit_pca(spark, sf_dir))
+
+
+def _fit_pca(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[list[float]]]:
     import numpy as np
 
-    hit = _PCA_CACHE.get(sf_dir)
-    if hit is not None:
-        return hit
     gram = {(r.i, r.j): (r.n, r.s_ppm) for r in embedding_gram_ppm(spark, sf_dir).collect()}
     if not gram:  # empty corpus: nothing to fit (BaseEmpty parity)
         return ([], [])
@@ -2051,9 +1998,7 @@ def pca_projection(spark: SparkSession, sf_dir: str) -> tuple[list[float], list[
         v = vecs[:, k]
         v = v if v[int(np.argmax(np.abs(v)))] >= 0 else -v
         comps.append([float(x) for x in v])
-    fitted = ([float(m) for m in mean], comps)
-    _PCA_CACHE[sf_dir] = fitted
-    return fitted
+    return [float(m) for m in mean], comps
 
 
 @register("q_embedding_pca", tags=("embedding", "linalg", "pca", "projection"))

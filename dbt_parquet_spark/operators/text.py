@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..registry import register
 from ..sources.readers import load_table
 
@@ -775,22 +776,19 @@ def q_lm_doc_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lm_doc_scored(spark, sf_dir)
 
 
-# Memo of the persisted per-doc LM score table per (applicationId, sf_dir):
-# q_perplexity_buckets reads it from FOUR plan branches (min/max agg, band
-# counts, per-source totals, the ranked select) — without the barrier each
-# branch re-ran the full bigram explode + two vocabulary groupBys + the
-# score join (measured 3.3 s vs 0.6 s for one evaluation). The release.py
-# _KEPT_CACHE multi-consumer discipline; the table is one thin row per doc.
-_LM_SCORE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _lm_doc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted per-doc LM score table, memoized per sf_dir:
+    q_perplexity_buckets reads it from FOUR plan branches (min/max agg,
+    band counts, per-source totals, the ranked select) — without the
+    barrier each branch re-ran the full bigram explode + two vocabulary
+    groupBys + the score join (measured 3.3 s vs 0.6 s for one
+    evaluation). One thin row per doc."""
+    return memo.scaffold(spark, "text.lm_scores", sf_dir, lambda: _lm_score(spark, sf_dir))
+
+
+def _lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .dedup import doc_token_arrays
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _LM_SCORE_CACHE.get(key)
-    if hit is not None:
-        return hit
     toks = doc_token_arrays(spark, sf_dir)
     bg = toks.filter(F.size("toks") >= 2).select(
         "doc_id",
@@ -819,15 +817,7 @@ def _lm_doc_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     scored.count()
-    _LM_SCORE_CACHE[key] = scored
     return scored
-
-
-def release_lm_score_cache() -> None:
-    """Unpersist and forget the memoized LM score tables (the
-    dedup.release_shingle_cache discipline for this module)."""
-    for key in list(_LM_SCORE_CACHE):
-        _LM_SCORE_CACHE.pop(key).unpersist()
 
 
 # --- CCNet-style perplexity bucketing -----------------------------------------
@@ -1028,25 +1018,28 @@ def _bm25_stats(
 ) -> tuple[int | None, int, dict[str, int]]:
     """(sum_dl, N, per-term df) for a term set — the scalars every BM25
     scorer needs. ONE driver action (the r14 fused collect), memoized per
-    (application, corpus, term set) like the other fitted artifacts
-    (_W_CACHE / _IVF_CACHE / _PQBOOK_CACHE): a production BM25 stack stores
+    (corpus, term set) like the other fitted artifacts (classifier
+    weights, IVF centroids, PQ codebooks): a production BM25 stack stores
     df and N in the index at build time and never recomputes them per
     query — re-running the two-branch corpus aggregate on EVERY call of
     every BM25-composed operator (topk, batch, hybrid, both evals, both
     context packs) was the single biggest repeated action in the serving
     family (r15, guide §1 job diet). Values are unchanged: same aggregates,
     same types, same driver-side ln downstream."""
-    key = (spark.sparkContext.applicationId, sf_dir, tuple(sorted(set(terms))))
-    hit = _BM25_STATS_CACHE.get(key)
-    if hit is not None:
-        return hit
+    key = (sf_dir, tuple(sorted(set(terms))))
+    return memo.scaffold(spark, "text.bm25_stats", key, lambda: _bm25_fit(spark, *key))
+
+
+def _bm25_fit(
+    spark: SparkSession, sf_dir: str, terms: tuple[str, ...]
+) -> tuple[int | None, int, dict[str, int]]:
     from .dedup import doc_token_arrays
 
     toks = doc_token_arrays(spark, sf_dir)
     dl = toks.select("doc_id", F.size("toks").alias("dl"))
     tf = (
         toks.select("doc_id", F.explode("toks").alias("tok"))
-        .filter(F.col("tok").isin(*key[2]))
+        .filter(F.col("tok").isin(*terms))
         .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
@@ -1072,20 +1065,7 @@ def _bm25_stats(
             sum_dl, n = r.a, r.b
         else:
             dfreq[r.tok] = r.a
-    stats = (sum_dl, n, dfreq)
-    _BM25_STATS_CACHE[key] = stats
-    return stats
-
-
-# BM25 index-time statistics (sum_dl, N, df per term) per (application,
-# corpus, term set) — the *_CACHE naming keeps it visible to bench.py's
-# scaffold spy like every other memoized artifact.
-_BM25_STATS_CACHE: dict[tuple[str, str, tuple[str, ...]], tuple] = {}
-
-
-def release_bm25_stats_cache() -> None:
-    """Forget the memoized BM25 statistics (corpus-rewrite hygiene)."""
-    _BM25_STATS_CACHE.clear()
+    return sum_dl, n, dfreq
 
 
 def bm25_topk(

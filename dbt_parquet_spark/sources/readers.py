@@ -35,9 +35,9 @@ def table_names(sf_dir: str) -> list[str]:
     return [t for t in TESTDATA_TABLES if os.path.exists(table_path(sf_dir, t))]
 
 
-# Metadata memos (the *_MEMO family; bench.py's spy reports their hits
-# under a separate metadata class — distinct from the *_CACHE result
-# scaffolds, never exempt from instrumentation). Each memo is keyed BY
+# Metadata memos (the *_MEMO family; bench.py reports the queries that
+# rode them via ``memo_hits``, apart from the result scaffolds in
+# dbt_parquet_spark.memo). Each memo is keyed BY
 # PATH holding a single (stat_key, value) entry, so a rewrite REPLACES the
 # entry instead of accumulating stale keys (ADVICE r15: the old
 # (path, mtime, size)-keyed dicts grew without bound across rewrites).
@@ -47,11 +47,14 @@ def table_names(sf_dir: str) -> list[str]:
 # FIFO eviction (insertion order) — metadata for a 100k-table warehouse
 # must not live in driver dicts forever.
 _MEMO_MAX = 4096
+memo_hits = 0  # valid entries served by _memo_get, across all three memos
 
 
 def _memo_get(memo: dict, path: str, stat_key):
+    global memo_hits
     hit = memo.get(path)
     if hit is not None and hit[0] == stat_key:
+        memo_hits += 1
         return hit[1]
     return None
 

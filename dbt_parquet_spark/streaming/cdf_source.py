@@ -257,45 +257,34 @@ def register_cdf_source(spark) -> None:
 # --- Registered contract query ----------------------------------------------
 # Scaffold: a four-commit history exercising every streaming-supported hop
 # class — base append, merge-on-read delete, append, and a rollback ACROSS
-# the MoR delete (the resurrection case) — memoized per (app, sf_dir).
-
-_CDF_FOLLOW_CACHE: dict = {}
+# the MoR delete (the resurrection case) — memoized per sf_dir.
 
 CDF_FOLLOW_OFFSET = 30_000_000
 
 
 def _cdf_follow_table(spark, sf_dir: str):
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CDF_FOLLOW_CACHE.get(key)
-    if hit is not None:
-        return hit
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from ..catalog import FilesystemCatalog
     from ..sources.readers import load_table
-    from ..versioned import delete_versioned, rollback_versioned, write_versioned
+    from ..versioned import _fixture, delete_versioned, rollback_versioned, write_versioned
 
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="cdf_follow_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs_feed", "vt")
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    write_versioned(
-        spark, catalog, rel, docs.repartitionByRange(4, "doc_id"),
-        stats_cols=("doc_id",),
-    )  # v1
-    delete_versioned(spark, catalog, rel, F.col("doc_id") % 9 == 4, mode="mor")  # v2
-    write_versioned(
-        spark, catalog, rel,
-        docs.filter(F.col("doc_id") % 13 == 0).select(
-            (F.col("doc_id") + CDF_FOLLOW_OFFSET).alias("doc_id"), "source"
-        ),
-        mode="append",
-    )  # v3
-    rollback_versioned(catalog, rel, 1)  # v4: resurrects the MoR-deleted rows
-    _CDF_FOLLOW_CACHE[key] = (catalog, rel)
-    return catalog, rel
+    def fill(catalog, rel) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "source")
+        write_versioned(
+            spark, catalog, rel, docs.repartitionByRange(4, "doc_id"),
+            stats_cols=("doc_id",),
+        )  # v1
+        delete_versioned(spark, catalog, rel, F.col("doc_id") % 9 == 4, mode="mor")  # v2
+        write_versioned(
+            spark, catalog, rel,
+            docs.filter(F.col("doc_id") % 13 == 0).select(
+                (F.col("doc_id") + CDF_FOLLOW_OFFSET).alias("doc_id"), "source"
+            ),
+            mode="append",
+        )  # v3
+        rollback_versioned(catalog, rel, 1)  # v4: resurrects the MoR-deleted rows
+
+    return _fixture(spark, sf_dir, "docs_feed", fill)
 
 
 def _register_query():

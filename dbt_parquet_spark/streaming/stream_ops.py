@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 _CAP_LOCK = threading.RLock()
 from pyspark.sql import functions as F
 
+from .. import memo
 from ..functions.exact import dec
 from ..sources.readers import read_parquet, table_path
 
@@ -600,33 +601,18 @@ def stream_scd2_to_table(
     return writer.start()
 
 
-# Persisted duplicated-gram dictionaries for the streaming scrub ingest,
-# keyed (applicationId, sf_dir) — a member of the dedup scaffold-cache
-# family, released by operators.dedup.release_shingle_cache().
-_SCRUB_DICT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 def _scrub_dictionary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _SCRUB_DICT_CACHE.get(key)
-    if hit is not None:
-        return hit
+    """The persisted duplicated-gram dictionary for the streaming scrub
+    ingest, memoized per sf_dir as a member of the dedup scaffold family
+    (``memo.release(spark, "dedup")`` frees it with the others)."""
     from ..operators.dedup import doc_token_arrays, substring_dup_keys
 
-    dup = substring_dup_keys(doc_token_arrays(spark, sf_dir)).persist()
-    dup.count()
-    _SCRUB_DICT_CACHE[key] = dup
-    return dup
+    def build() -> DataFrame:
+        dup = substring_dup_keys(doc_token_arrays(spark, sf_dir)).persist()
+        dup.count()
+        return dup
 
-
-def release_scrub_dict_cache(spark: SparkSession | None = None) -> None:
-    """Unpersist and forget the streaming-scrub dictionaries (for the given
-    application only, if ``spark`` is passed). Called from
-    release_shingle_cache so one hook frees the whole dedup scaffold set."""
-    app = spark.sparkContext.applicationId if spark is not None else None
-    for key in list(_SCRUB_DICT_CACHE):
-        if app is None or key[0] == app:
-            _SCRUB_DICT_CACHE.pop(key).unpersist()
+    return memo.scaffold(spark, "dedup.scrub_dict", sf_dir, build)
 
 
 def stream_substring_scrub_to_table(
@@ -647,10 +633,9 @@ def stream_substring_scrub_to_table(
     scrubbed. Exactly-once via _idempotent_batch_append (batch-id-keyed
     deterministic file names).
 
-    The persisted dictionary lives in the dedup scaffold-cache family
-    (_SCRUB_DICT_CACHE via _scrub_dictionary, keyed (applicationId,
-    sf_dir)): repeated streams over one corpus share a single cached
-    dictionary instead of stacking persists, and release_shingle_cache()
+    The persisted dictionary is a dedup-family scaffold (_scrub_dictionary):
+    repeated streams over one corpus share a single cached dictionary
+    instead of stacking persists, and ``memo.release(spark, "dedup")``
     frees it with the other dedup scaffolds — no executor-cache leak after
     the stream terminates, and no ad-hoc per-stream unpersist that could
     evict an identical-plan cache entry out from under a concurrent

@@ -49,12 +49,13 @@ metadata — no second scan), so ``version_history`` is exact and free.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import memo
 from .catalog import FilesystemCatalog, Relation
 from .fs import ConcurrentWriteError  # noqa: F401 — re-exported (public API)
 from .registry import register
@@ -1693,44 +1694,51 @@ def vacuum_versions(
 
 
 # --- Registered contract queries -------------------------------------------------
-# A deterministic three-commit lifecycle over the documents table, built
-# once per (applicationId, sf_dir) in a temp database (the scaffold-memo
-# discipline): v1 = full corpus (replace), v2 = append of the doc_id % 13
-# slice, v3 = rollback to v1. Time travel and history are then both fully
-# oracle-checkable against plain SQL over the source table.
+# Each contract query reads a versioned fixture table built once per sf_dir
+# (memo.scaffold), so registered queries stay idempotent across bench reps:
+# the writes happen once per session and the query just reads the result.
 
-_VERSIONED_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
+
+def _fixture(
+    spark: SparkSession, sf_dir: str, table: str,
+    fill: Callable[[FilesystemCatalog, Relation], None],
+) -> tuple[FilesystemCatalog, Relation]:
+    """(catalog, vt.<table>): a fresh catalog with schema ``vt`` in a
+    scratch dir, populated once per sf_dir by ``fill(catalog, rel)``."""
+
+    def build() -> tuple[FilesystemCatalog, Relation]:
+        catalog = FilesystemCatalog(memo.scratch_dir(spark, f"versioned_{table}_"))
+        catalog.create_schema("vt")
+        rel = catalog.relation(table, "vt")
+        fill(catalog, rel)
+        return catalog, rel
+
+    return memo.scaffold(spark, f"versioned.{table}", sf_dir, build)
 
 
 def _lifecycle_table(
     spark: SparkSession, sf_dir: str
 ) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _VERSIONED_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs", "vt")
-    docs = load_table(spark, sf_dir, "documents")
-    # range-clustered v1 with declared skipping stats on the key: each of
-    # the 8 files holds a disjoint doc_id range, so the q_versioned_skipping
-    # predicate provably prunes the file list (gated in tests)
-    write_versioned(
-        spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
-        mode="replace", stats_cols=("doc_id",),
-    )
-    write_versioned(
-        spark, catalog, rel, docs.filter(F.col("doc_id") % 13 == 0), mode="append"
-    )
-    rollback_versioned(catalog, rel, 1)
-    _VERSIONED_CACHE[key] = (catalog, rel)
-    return catalog, rel
+    """A deterministic three-commit lifecycle over the documents table:
+    v1 = full corpus (replace), v2 = append of the doc_id % 13 slice,
+    v3 = rollback to v1. Time travel and history are then both fully
+    oracle-checkable against plain SQL over the source table."""
 
+    def fill(catalog: FilesystemCatalog, rel: Relation) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        # range-clustered v1 with declared skipping stats on the key: each of
+        # the 8 files holds a disjoint doc_id range, so the q_versioned_skipping
+        # predicate provably prunes the file list (gated in tests)
+        write_versioned(
+            spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
+            mode="replace", stats_cols=("doc_id",),
+        )
+        write_versioned(
+            spark, catalog, rel, docs.filter(F.col("doc_id") % 13 == 0), mode="append"
+        )
+        rollback_versioned(catalog, rel, 1)
 
-def release_versioned_cache() -> None:
-    """Drop the lifecycle scaffolds (tests use this to force rebuilds)."""
-    _VERSIONED_CACHE.clear()
+    return _fixture(spark, sf_dir, "docs", fill)
 
 
 @register(
@@ -1816,45 +1824,39 @@ def q_versioned_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "lang", "source", "n_chars")
 
 
-# Merge scaffold: its own memoized table (separate from the time-travel
-# lifecycle — registered queries must be idempotent across bench reps, so
-# the merge happens ONCE per session and the query just reads the result).
-_MERGE_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
 MERGE_INSERT_OFFSET = 20_000_000
 
 
 def _merge_table(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, mode: str = "cow"
 ) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MERGE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_merge_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs_merge", "vt")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    write_versioned(
-        spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
-        mode="replace", stats_cols=("doc_id",),
-    )
-    updates = (
-        docs.filter(F.col("doc_id") % 10 == 0)
-        .select("doc_id", F.lit("merged").alias("source"), "n_chars")
-        .unionByName(
-            docs.filter(F.col("doc_id") % 17 == 0).select(
-                (F.col("doc_id") + MERGE_INSERT_OFFSET).alias("doc_id"),
-                F.lit("inserted").alias("source"),
-                "n_chars",
+    """The merge fixture: a range-clustered base, then one upsert that
+    rewrites source for doc_id % 10 == 0 and inserts the doc_id % 17 slice
+    at an offset — committed copy-on-write or, with ``mode="mor"``, as a
+    deletion-vector sidecar plus appended update files."""
+
+    def fill(catalog: FilesystemCatalog, rel: Relation) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "n_chars"
+        )
+        write_versioned(
+            spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
+            mode="replace", stats_cols=("doc_id",),
+        )
+        updates = (
+            docs.filter(F.col("doc_id") % 10 == 0)
+            .select("doc_id", F.lit("merged").alias("source"), "n_chars")
+            .unionByName(
+                docs.filter(F.col("doc_id") % 17 == 0).select(
+                    (F.col("doc_id") + MERGE_INSERT_OFFSET).alias("doc_id"),
+                    F.lit("inserted").alias("source"),
+                    "n_chars",
+                )
             )
         )
-    )
-    merge_versioned(spark, catalog, rel, updates, key="doc_id")
-    _MERGE_CACHE[key] = (catalog, rel)
-    return catalog, rel
+        merge_versioned(spark, catalog, rel, updates, key="doc_id", mode=mode)
+
+    return _fixture(spark, sf_dir, "docs_merge_mor" if mode == "mor" else "docs_merge", fill)
 
 
 @register(
@@ -1884,45 +1886,6 @@ def q_versioned_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_versioned(spark, catalog, rel).select("doc_id", "source", "n_chars")
 
 
-# MoR-merge scaffold: the q_versioned_merge lifecycle with mode='mor' —
-# zero rewrites, same oracle, so the driver value-hashes both upsert
-# paths identical.
-_MERGE_MOR_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
-
-def _merge_mor_table(
-    spark: SparkSession, sf_dir: str
-) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _MERGE_MOR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_merge_mor_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs_merge_mor", "vt")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    write_versioned(
-        spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
-        mode="replace", stats_cols=("doc_id",),
-    )
-    updates = (
-        docs.filter(F.col("doc_id") % 10 == 0)
-        .select("doc_id", F.lit("merged").alias("source"), "n_chars")
-        .unionByName(
-            docs.filter(F.col("doc_id") % 17 == 0).select(
-                (F.col("doc_id") + MERGE_INSERT_OFFSET).alias("doc_id"),
-                F.lit("inserted").alias("source"),
-                "n_chars",
-            )
-        )
-    )
-    merge_versioned(spark, catalog, rel, updates, key="doc_id", mode="mor")
-    _MERGE_MOR_CACHE[key] = (catalog, rel)
-    return catalog, rel
-
-
 @register(
     "q_versioned_merge_mor",
     oracle=f"""
@@ -1941,42 +1904,37 @@ def q_versioned_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     deletion-vector sidecar (matched rows) plus appended update files —
     ZERO pre-merge files rewritten (pinned in tests/test_versioned.py) —
     and the identical oracle, so both upsert paths are value-hash-equal."""
-    catalog, rel = _merge_mor_table(spark, sf_dir)
+    catalog, rel = _merge_table(spark, sf_dir, mode="mor")
     return read_versioned(spark, catalog, rel).select("doc_id", "source", "n_chars")
 
 
-# Delete scaffold: its own memoized table (same idempotence discipline as
-# the merge scaffold — the CoW delete happens ONCE per session, the
-# registered query just reads the committed result).
-_DELETE_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
-DELETE_LO, DELETE_HI = 300, 399  # the deleted doc_id window
+DELETE_LO, DELETE_HI = 300, 399  # the CoW-deleted doc_id window
+MOR_LO, MOR_HI = 500, 599  # the MoR-deleted doc_id window
 
 
 def _delete_table(
-    spark: SparkSession, sf_dir: str
+    spark: SparkSession, sf_dir: str, mode: str = "cow"
 ) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DELETE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_delete_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs_delete", "vt")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    write_versioned(
-        spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
-        mode="replace", stats_cols=("doc_id",),
-    )
-    delete_versioned(
-        spark, catalog, rel,
-        F.col("doc_id").between(DELETE_LO, DELETE_HI),
-        prune={"doc_id": (DELETE_LO, DELETE_HI)},
-    )
-    _DELETE_CACHE[key] = (catalog, rel)
-    return catalog, rel
+    """The delete fixture: a range-clustered base, then one pruned delete
+    of a doc_id window — copy-on-write (DELETE_LO..DELETE_HI) or, with
+    ``mode="mor"``, as deletion vectors (MOR_LO..MOR_HI, zero data files
+    rewritten, pinned in tests/test_versioned.py)."""
+    lo, hi = (MOR_LO, MOR_HI) if mode == "mor" else (DELETE_LO, DELETE_HI)
+
+    def fill(catalog: FilesystemCatalog, rel: Relation) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "n_chars"
+        )
+        write_versioned(
+            spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
+            mode="replace", stats_cols=("doc_id",),
+        )
+        delete_versioned(
+            spark, catalog, rel, F.col("doc_id").between(lo, hi),
+            prune={"doc_id": (lo, hi)}, mode=mode,
+        )
+
+    return _fixture(spark, sf_dir, "docs_mor" if mode == "mor" else "docs_delete", fill)
 
 
 @register(
@@ -1998,72 +1956,29 @@ def q_versioned_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_versioned(spark, catalog, rel).select("doc_id", "source", "n_chars")
 
 
-# Schema-evolution scaffold: v1 = the even-doc_id half at the NARROW shape
-# (n_chars int, no lang); v2 = evolved append of the odd half that both
-# WIDENS n_chars (int -> bigint) and ADDS lang — the full r12 evolution
-# surface (additive + widening) in one committed lineage.
-_EVOLUTION_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
-
 def _evolution_table(
     spark: SparkSession, sf_dir: str
 ) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _EVOLUTION_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_evolve_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs_evolve", "vt")
-    docs = load_table(spark, sf_dir, "documents")
-    narrow = docs.filter(F.col("doc_id") % 2 == 0).select(
-        "doc_id", F.col("n_chars").cast("int").alias("n_chars")
-    )
-    write_versioned(
-        spark, catalog, rel, narrow.repartitionByRange(4, "doc_id"),
-        mode="replace", stats_cols=("doc_id",),
-    )
-    wide = docs.filter(F.col("doc_id") % 2 == 1).select(
-        "doc_id", F.col("n_chars").cast("bigint").alias("n_chars"), "lang"
-    )
-    write_versioned(spark, catalog, rel, wide, mode="append", evolve=True)
-    _EVOLUTION_CACHE[key] = (catalog, rel)
-    return catalog, rel
+    """The schema-evolution fixture: v1 = the even-doc_id half at the
+    NARROW shape (n_chars int, no lang); v2 = evolved append of the odd
+    half that both WIDENS n_chars (int -> bigint) and ADDS lang — the full
+    r12 evolution surface (additive + widening) in one committed lineage."""
 
+    def fill(catalog: FilesystemCatalog, rel: Relation) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        narrow = docs.filter(F.col("doc_id") % 2 == 0).select(
+            "doc_id", F.col("n_chars").cast("int").alias("n_chars")
+        )
+        write_versioned(
+            spark, catalog, rel, narrow.repartitionByRange(4, "doc_id"),
+            mode="replace", stats_cols=("doc_id",),
+        )
+        wide = docs.filter(F.col("doc_id") % 2 == 1).select(
+            "doc_id", F.col("n_chars").cast("bigint").alias("n_chars"), "lang"
+        )
+        write_versioned(spark, catalog, rel, wide, mode="append", evolve=True)
 
-# MoR-delete scaffold: same shape as the CoW delete scaffold but the
-# delete commits as DELETION VECTORS (mode='mor') — zero data files
-# rewritten, pinned in tests/test_versioned.py.
-_DELETE_MOR_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
-MOR_LO, MOR_HI = 500, 599  # the MoR-deleted doc_id window
-
-
-def _delete_mor_table(
-    spark: SparkSession, sf_dir: str
-) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _DELETE_MOR_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_mor_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs_mor", "vt")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    write_versioned(
-        spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
-        mode="replace", stats_cols=("doc_id",),
-    )
-    delete_versioned(
-        spark, catalog, rel,
-        F.col("doc_id").between(MOR_LO, MOR_HI),
-        prune={"doc_id": (MOR_LO, MOR_HI)},
-        mode="mor",
-    )
-    _DELETE_MOR_CACHE[key] = (catalog, rel)
-    return catalog, rel
+    return _fixture(spark, sf_dir, "docs_evolve", fill)
 
 
 @register(
@@ -2081,7 +1996,7 @@ def q_versioned_delete_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     anti-join the small (file, row-index) sidecar at scan time. Same
     oracle shape as the CoW twin (q_versioned_delete), so the driver
     value-hashes that both delete paths produce identical results."""
-    catalog, rel = _delete_mor_table(spark, sf_dir)
+    catalog, rel = _delete_table(spark, sf_dir, mode="mor")
     return read_versioned(spark, catalog, rel).select("doc_id", "source", "n_chars")
 
 
@@ -2177,31 +2092,28 @@ def q_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "text", "lang", "source", "n_chars")
 
 
-# Shallow-clone scaffold: clone the lifecycle table's current snapshot
-# (v3 = the rollback, i.e. the full corpus) into a fresh relation in the
-# SAME catalog — a metadata-only commit referencing the source's files —
-# then give the clone its own history with an append the source never
-# sees. Zero-copy + divergence are pinned in tests/test_versioned.py.
-_CLONE_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
-
 def _clone_table(
     spark: SparkSession, sf_dir: str
 ) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CLONE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog, src = _lifecycle_table(spark, sf_dir)
-    dst = catalog.relation("docs_clone", "vt")
-    clone_versioned(catalog, src, dst)
-    docs = load_table(spark, sf_dir, "documents")
-    write_versioned(
-        spark, catalog, dst, docs.filter(F.col("doc_id") % 11 == 0),
-        mode="append",
-    )
-    _CLONE_CACHE[key] = (catalog, dst)
-    return catalog, dst
+    """The shallow-clone fixture: clone the lifecycle table's current
+    snapshot (v3 = the rollback, i.e. the full corpus) into a fresh
+    relation in the SAME catalog — a metadata-only commit referencing the
+    source's files — then give the clone its own history with an append
+    the source never sees. Zero-copy + divergence are pinned in
+    tests/test_versioned.py."""
+
+    def build() -> tuple[FilesystemCatalog, Relation]:
+        catalog, src = _lifecycle_table(spark, sf_dir)
+        dst = catalog.relation("docs_clone", "vt")
+        clone_versioned(catalog, src, dst)
+        docs = load_table(spark, sf_dir, "documents")
+        write_versioned(
+            spark, catalog, dst, docs.filter(F.col("doc_id") % 11 == 0),
+            mode="append",
+        )
+        return catalog, dst
+
+    return memo.scaffold(spark, "versioned.docs_clone", sf_dir, build)
 
 
 @register(
@@ -2229,48 +2141,40 @@ def q_versioned_clone(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# CDC-apply scaffold: a source table with a three-commit history (base,
-# merge-on-read DELETE, merge-on-read upsert) and a REPLICA initialized
-# from v1 and maintained purely by apply_changes_versioned over the
-# change feed — the full producer -> CDF -> consumer circle in one
-# driver-checked query.
-_CDC_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
-
 def _cdc_tables(
     spark: SparkSession, sf_dir: str
 ) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CDC_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_cdc_db_"))
-    catalog.create_schema("vt")
-    src = catalog.relation("docs_src", "vt")
-    dst = catalog.relation("docs_replica", "vt")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "source", "n_chars"
-    )
-    write_versioned(
-        spark, catalog, src, docs.repartitionByRange(8, "doc_id"),
-        mode="replace", stats_cols=("doc_id",),
-    )  # v1
-    delete_versioned(
-        spark, catalog, src, F.col("doc_id") % 7 == 3, mode="mor"
-    )  # v2: MoR delete, zero rewrites
-    updates = docs.filter(F.col("doc_id") % 5 == 0).select(
-        "doc_id", "source", (F.col("n_chars") * 2 + 1).alias("n_chars")
-    )
-    merge_versioned(spark, catalog, src, updates, key="doc_id", mode="mor")  # v3
-    # replica: base snapshot, then follow the feed 1 -> current
-    write_versioned(
-        spark, catalog, dst,
-        read_versioned(spark, catalog, src, version=1),
-        mode="replace", stats_cols=("doc_id",),
-    )
-    apply_changes_versioned(spark, catalog, src, dst, "doc_id", from_version=1)
-    _CDC_CACHE[key] = (catalog, dst)
-    return catalog, dst
+    """The CDC-apply fixture: a source table with a three-commit history
+    (base, merge-on-read DELETE, merge-on-read upsert) and a REPLICA
+    initialized from v1 and maintained purely by apply_changes_versioned
+    over the change feed — the full producer -> CDF -> consumer circle in
+    one driver-checked query. Returns the replica."""
+
+    def fill(catalog: FilesystemCatalog, dst: Relation) -> None:
+        src = catalog.relation("docs_src", "vt")
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "source", "n_chars"
+        )
+        write_versioned(
+            spark, catalog, src, docs.repartitionByRange(8, "doc_id"),
+            mode="replace", stats_cols=("doc_id",),
+        )  # v1
+        delete_versioned(
+            spark, catalog, src, F.col("doc_id") % 7 == 3, mode="mor"
+        )  # v2: MoR delete, zero rewrites
+        updates = docs.filter(F.col("doc_id") % 5 == 0).select(
+            "doc_id", "source", (F.col("n_chars") * 2 + 1).alias("n_chars")
+        )
+        merge_versioned(spark, catalog, src, updates, key="doc_id", mode="mor")  # v3
+        # replica: base snapshot, then follow the feed 1 -> current
+        write_versioned(
+            spark, catalog, dst,
+            read_versioned(spark, catalog, src, version=1),
+            mode="replace", stats_cols=("doc_id",),
+        )
+        apply_changes_versioned(spark, catalog, src, dst, "doc_id", from_version=1)
+
+    return _fixture(spark, sf_dir, "docs_replica", fill)
 
 
 @register(
@@ -2300,13 +2204,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Constraint scaffold: a versioned table committed under three CHECK
-# constraints; the registered query audits a CANDIDATE batch (the raw
-# documents table) against them — the pre-flight gate a pipeline runs
-# before the committing write. Enforcement (violating writes refused
-# with counts) is pinned in tests/test_versioned.py.
-_CONSTRAINT_CACHE: dict[tuple[str, str], tuple[FilesystemCatalog, Relation]] = {}
-
 _CONSTRAINTS = {
     "chars_min": "n_chars >= 100",
     "chars_nonneg": "n_chars >= 0",
@@ -2317,21 +2214,21 @@ _CONSTRAINTS = {
 def _constraint_table(
     spark: SparkSession, sf_dir: str
 ) -> tuple[FilesystemCatalog, Relation]:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _CONSTRAINT_CACHE.get(key)
-    if hit is not None:
-        return hit
-    catalog = FilesystemCatalog(tempfile.mkdtemp(prefix="versioned_ck_db_"))
-    catalog.create_schema("vt")
-    rel = catalog.relation("docs_checked", "vt")
-    docs = load_table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", "n_chars"
-    )
-    write_versioned(spark, catalog, rel, docs.filter(F.col("n_chars") >= 100))
-    for name, sql in _CONSTRAINTS.items():
-        set_check_constraint(spark, catalog, rel, name, sql)
-    _CONSTRAINT_CACHE[key] = (catalog, rel)
-    return catalog, rel
+    """The constraint fixture: a versioned table committed under three
+    CHECK constraints; the registered query audits a CANDIDATE batch (the
+    raw documents table) against them — the pre-flight gate a pipeline
+    runs before the committing write. Enforcement (violating writes refused
+    with counts) is pinned in tests/test_versioned.py."""
+
+    def fill(catalog: FilesystemCatalog, rel: Relation) -> None:
+        docs = load_table(spark, sf_dir, "documents").select(
+            "doc_id", "lang", "n_chars"
+        )
+        write_versioned(spark, catalog, rel, docs.filter(F.col("n_chars") >= 100))
+        for name, sql in _CONSTRAINTS.items():
+            set_check_constraint(spark, catalog, rel, name, sql)
+
+    return _fixture(spark, sf_dir, "docs_checked", fill)
 
 
 @register(
@@ -2500,7 +2397,7 @@ def q_row_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the DV-killed pre-merge rows never surface. Answered from manifest
     metadata + one broadcast join — no audit columns were ever stored in
     the data."""
-    catalog, rel = _merge_mor_table(spark, sf_dir)
+    catalog, rel = _merge_table(spark, sf_dir, mode="mor")
     return read_versioned_lineage(spark, catalog, rel).select(
         "doc_id", "source", "_file_version"
     )

@@ -31,8 +31,8 @@ FULL_TESTS = os.environ.get("SPARK_GRAFT_FULL_TESTS") == "1"
 # is kept so every module retains fast-tier presence). Regenerate after
 # adding heavyweight tests:
 #   SPARK_GRAFT_FULL_TESTS=1 python -m pytest tests/ -q --durations=0
-# Entries that stop resolving are harmless (the tier only ever gets wider);
-# a test ABOVE threshold that is missing here only makes the tier slower,
+# Every entry must resolve to a collected test (tests/test_tiers.py); a
+# test ABOVE threshold that is missing here only makes the tier slower,
 # never weaker.
 SLOW_TESTS = frozenset(
     t.split("#")[0].strip().strip('",')
@@ -108,6 +108,8 @@ SLOW_TESTS = frozenset(
     "test_layout.py::test_zorder_layout_prunes_both_dimensions",  # 3.8s
     "test_maintenance.py::test_compact_reduces_files_preserves_rows",  # 2.2s
     "test_maintenance.py::test_zorder_cluster_makes_both_columns_selective",  # 3.0s
+    "test_memo.py::test_scaffold_is_not_served_to_a_new_application",  # 41.7s
+    "test_memo.py::test_scratch_dirs_do_not_outlive_the_process",  # shares the 41.7s child
     "test_ntz_regression.py::test_streaming_query_executes_under_ntz_session[q_stream_session]",  # 2.0s
     "test_ntz_regression.py::test_streaming_query_executes_under_ntz_session[q_stream_stream_join]",  # 9.0s
     "test_ntz_regression.py::test_streaming_query_executes_under_ntz_session[q_stream_tumbling]",  # 2.5s
@@ -180,6 +182,7 @@ SLOW_TESTS = frozenset(
     "test_streaming.py::test_stream_substring_scrub_matches_batch",  # 3.2s
     "test_streaming.py::test_streaming_dedup_passthrough_when_unique",  # 2.1s
     "test_subword.py::test_bpe_learn_matches_reference_trainer",  # 35.6s
+    "test_tiers.py::test_node_id_and_k_bypass_the_tier",  # 4.9s
     "test_topology_independence.py::test_oracle_holds_on_alternate_topology",  # 116.9s
     "test_udtf_pyds.py::test_python_datasource_reads_partitioned",  # 2.8s
     "test_versioned.py::test_apply_changes_candidate_pruning",  # 8.5s
@@ -217,8 +220,9 @@ def pytest_collection_modifyitems(config, items):
         short = item.nodeid.split("/")[-1]
         if short in SLOW_TESTS:
             item.add_marker(_pytest.mark.slow)
-    if FULL_TESTS or config.getoption("-m"):
-        return  # explicit full run or explicit marker expression: no tiering
+    named = any("::" in a for a in config.args) or config.getoption("-k")
+    if FULL_TESTS or config.getoption("-m") or named:
+        return  # explicit full run, marker expression, node id or -k: no tiering
     selected, deselected = [], []
     for item in items:
         (deselected if item.get_closest_marker("slow") else selected).append(item)

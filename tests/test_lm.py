@@ -110,9 +110,9 @@ def test_kn_doc_score_backoff_ladder_on_constructed_corpus(spark, tmp_path):
     papq.write_table(tbl, os.path.join(d, "documents.parquet"))
 
     # fresh scaffolds for the throwaway corpus
-    from dbt_parquet_spark.operators.dedup import release_shingle_cache
+    from dbt_parquet_spark import memo
 
-    release_shingle_cache(spark)
+    memo.release(spark, "dedup")
     spec = load_all()["q_kn_doc_score"]
     con = duckdb.connect()
     con.execute(
@@ -120,7 +120,7 @@ def test_kn_doc_score_backoff_ladder_on_constructed_corpus(spark, tmp_path):
     )
     ok, msg = compare_spark_duckdb(spec.builder(spark, d), con, spec.oracle)
     assert ok, msg
-    release_shingle_cache(spark)
+    memo.release(spark, "dedup")
 
     # the ladder: every branch fired (recompute case assignment in python)
     counts = {}

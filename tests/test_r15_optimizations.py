@@ -170,20 +170,24 @@ def test_bm25_stats_memo_single_action(spark):
     """The BM25 index-time statistics must be collected once per
     (application, corpus, term set) and served from the memo afterwards —
     and the memoized scalars must equal a fresh recomputation."""
+    from dbt_parquet_spark import memo
     from dbt_parquet_spark.operators import text as t
 
     SF = "/root/testdata/sf0.001"
-    t._BM25_STATS_CACHE.clear()
+    memo.release(spark, "text.bm25_stats")
     s1 = t._bm25_stats(spark, SF, t.BM25_QUERY_TERMS)
-    assert len(t._BM25_STATS_CACHE) == 1
+    assert memo.stats()["by_kind"]["text.bm25_stats"] == 1
+    hits = memo.stats()["hits"]
     s2 = t._bm25_stats(spark, SF, t.BM25_QUERY_TERMS)
     assert s2 is s1  # served from the memo, no second action
     # order-insensitive key: a permuted term tuple hits the same entry
     s3 = t._bm25_stats(spark, SF, tuple(reversed(t.BM25_QUERY_TERMS)))
     assert s3 is s1
-    t._BM25_STATS_CACHE.clear()
+    assert memo.stats()["hits"] == hits + 2
+    assert memo.stats()["by_kind"]["text.bm25_stats"] == 1
+    memo.release(spark, "text.bm25_stats")
     assert t._bm25_stats(spark, SF, t.BM25_QUERY_TERMS) == s1
-    t._BM25_STATS_CACHE.clear()
+    memo.release(spark, "text.bm25_stats")
 
 
 def test_posting_multiplicity_is_intersection(spark, tmp_path):

@@ -125,19 +125,19 @@ def test_semdedup_keep_rule_is_exact(spark):
 def test_semdedup_deterministic_under_repartition(spark):
     """K-means must be retrained from scratch at a different partitioning
     and still produce the identical result (exact DECIMAL centroid means),
-    so the memoized-centroid cache is cleared between the two runs."""
-    from dbt_parquet_spark.operators.selection import _CENT_CACHE, release_assign_cache
+    so the memoized centroids and assignments are released between the
+    two runs."""
+    from dbt_parquet_spark import memo
 
-    _CENT_CACHE.clear()
-    release_assign_cache()
+    memo.release(spark, "selection.centroids", "selection.assignments")
     base = sorted(
         (r.vec_id, r.cluster, r.is_kept) for r in q_semdedup(spark, SF_SMALL).collect()
     )
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "5")
-        _CENT_CACHE.clear()
-        release_assign_cache()
+        memo.release(spark, "selection.centroids", "selection.assignments")
+        assert not memo.stats()["by_kind"]["selection.centroids"]
         again = sorted(
             (r.vec_id, r.cluster, r.is_kept) for r in q_semdedup(spark, SF_SMALL).collect()
         )

@@ -445,17 +445,19 @@ def test_stream_substring_scrub_matches_batch(spark, tmp_path):
 def test_scrub_dictionary_released_with_shingle_caches(spark, tmp_path):
     """The streaming scrub's persisted gram dictionary is scaffold-cache
     state: repeated streams share ONE persisted frame (no stacking), and
-    release_shingle_cache frees it (no executor-cache leak after the
-    stream ends)."""
+    releasing the dedup scaffold family frees it (no executor-cache leak
+    after the stream ends)."""
+    from dbt_parquet_spark import memo
     from dbt_parquet_spark.catalog import FilesystemCatalog
-    from dbt_parquet_spark.operators.dedup import release_shingle_cache
-    from dbt_parquet_spark.streaming import stream_ops
-    from dbt_parquet_spark.streaming.stream_ops import stream_substring_scrub_to_table
+    from dbt_parquet_spark.streaming.stream_ops import (
+        _scrub_dictionary,
+        stream_substring_scrub_to_table,
+    )
 
     from .conftest import SF_SMALL
 
-    release_shingle_cache(spark)
-    assert not stream_ops._SCRUB_DICT_CACHE
+    memo.release(spark, "dedup")
+    assert not memo.stats()["by_kind"]["dedup.scrub_dict"]
     cat = FilesystemCatalog(f"file://{tmp_path}/db")
     for i in range(2):
         rel = cat.relation(f"scrubbed_{i}")
@@ -464,11 +466,11 @@ def test_scrub_dictionary_released_with_shingle_caches(spark, tmp_path):
         )
         q.awaitTermination(300)
         q.stop()
-        assert len(stream_ops._SCRUB_DICT_CACHE) == 1  # shared, not stacked
-    dup = next(iter(stream_ops._SCRUB_DICT_CACHE.values()))
+        assert memo.stats()["by_kind"]["dedup.scrub_dict"] == 1  # shared, not stacked
+    dup = _scrub_dictionary(spark, SF_SMALL)  # a memo hit: the streams' frame
     assert dup.storageLevel.useMemory or dup.storageLevel.useDisk
-    release_shingle_cache(spark)
-    assert not stream_ops._SCRUB_DICT_CACHE
+    memo.release(spark, "dedup")
+    assert not memo.stats()["by_kind"]["dedup.scrub_dict"]
     assert not dup.storageLevel.useMemory and not dup.storageLevel.useDisk
 
 

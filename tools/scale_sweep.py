@@ -96,7 +96,7 @@ def run() -> None:
         print(label, "total", results[label]["value"], f"({time.time()-t0:.0f}s wall)")
     qs = results["sf0.1"]["queries"]
     # '*' = the recorded min rode a memoized scaffold cache at BOTH scales
-    # (bench's _SpyDict instrumentation) — its ratio measures the warm
+    # (bench's memo.stats() hit counter) — its ratio measures the warm
     # steady state, not a cold build, so don't over-credit it.
     warm = set(results["sf0.1"]["warm_cache"]) & set(results["sf1"]["warm_cache"])
     print(f"{'query':29s} {'sf0.1':>8s} {'sf1':>8s} {'ratio':>6s}   (* = warm scaffold cache)")
@@ -314,13 +314,13 @@ def blocking() -> None:
     from dbt_parquet_spark.operators.dedup import (
         doc_shingles,
         doc_token_arrays,
-        release_shingle_cache,
         substring_dup_starts,
     )
     from dbt_parquet_spark.operators.similarity import (
         blocked_candidates,
         neardup_chunk_bits,
     )
+    from dbt_parquet_spark import memo
     from dbt_parquet_spark.session import get_spark
 
     gen_blocking()
@@ -346,7 +346,7 @@ def blocking() -> None:
         # cross-replica grams never collide, so the per-doc rate must
         # stay flat as the corpus grows
         substr = substring_dup_starts(doc_token_arrays(spark, sf_dir)).count()
-        release_shingle_cache()
+        memo.release(spark, "dedup")
         bits = neardup_chunk_bits(n_vecs)
         if base_bits is None:
             base_bits = bits
