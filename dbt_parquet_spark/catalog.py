@@ -159,21 +159,16 @@ class FilesystemCatalog:
         a plain directory view would union duplicate/stale rows, and a
         file rewrite would corrupt committed history.
 
-        Detection checks the ``_versions.json`` read cache AND the
-        authoritative ``_commits/`` log (r12 advice: the cache is written
-        AFTER the commit-log put, so a crash between the two on a table's
-        first commit would otherwise leave a committed versioned root
-        undetected — bypassing the maintenance guards and falling back to
-        a directory scan)."""
-        from .versioned import COMMITS_DIR, VERSIONS_MANIFEST
+        Detection asks ``commitlog.committed``, which also finds a root whose
+        cache write was lost after its first commit — such a root must not
+        bypass the maintenance guards and fall back to a directory scan."""
+        from . import commitlog
+        from .versioned import VERSIONS_MANIFEST
 
         p = self.fs_path(rel)
         if not self.io.isdir(p):
             return False
-        if self.io.exists(self.io.join(p, VERSIONS_MANIFEST)):
-            return True
-        commits = self.io.join(p, COMMITS_DIR)
-        return self.io.isdir(commits) and bool(self.io.listdir(commits))
+        return commitlog.committed(self.io, p, VERSIONS_MANIFEST)
 
     # -- views (reference relation.py:115-122, connections.py:79-88) ------
     def register_view(self, spark: SparkSession, rel: Relation) -> DataFrame:

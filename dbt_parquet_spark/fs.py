@@ -201,11 +201,11 @@ class CatalogFS:
 
     def put_json_atomic(self, path: str, obj) -> None:
         """Write JSON such that a reader sees either the previous or the new
-        content, never a torn write — THE commit primitive for manifest
-        protocols (operators/index_manifest.py, versioned.py). Local
-        filesystem: stage a dot-file sibling, then one ``os.replace`` (a
-        single atomic rename syscall). Object stores: a direct single-object
-        PUT is itself atomic (and read-after-write consistent on S3)."""
+        content, never a torn write — the cache refresh after each
+        ``commitlog`` commit. Local filesystem: stage a dot-file sibling,
+        then one ``os.replace`` (a single atomic rename syscall). Object
+        stores: a direct single-object PUT is itself atomic (and
+        read-after-write consistent on S3)."""
         import json
         import uuid
 

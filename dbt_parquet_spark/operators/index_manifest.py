@@ -6,21 +6,20 @@ has a sub-millisecond window in compaction where a cell directory is absent
 between the two renames, and it assumes rename(2) semantics an object store
 does not provide (S3 "rename" is copy+delete, neither atomic nor cheap).
 
-This module makes a single small JSON object the source of truth instead:
+This module makes a committed JSON manifest the source of truth instead:
 
-- ``_manifest.json`` in the index root lists, per cell, the part files that
-  constitute the committed snapshot (plus a generation counter and the
-  previous generation's retired files).
+- The committed manifest lists, per cell, the part files that constitute
+  the snapshot (plus the previous generation's retired files).
 - READERS resolve the manifest to an explicit file list and scan exactly
   those files (``basePath`` keeps the hive ``cell=`` column). A directory
   listing is never consulted, so files being staged, orphaned by a crash,
   or retired by a compaction are simply invisible — no reader can ever
   observe a half-published state, an absent cell, or a duplicate row.
 - WRITERS stage new part files into the live ``cell=`` directories under
-  fresh unique names (invisible until committed) and COMMIT by atomically
-  replacing the manifest — ``os.replace`` on a local filesystem; on an
-  object store a direct single-object PUT, which is itself atomic (and
-  read-after-write consistent on S3 since 2020).
+  fresh unique names (invisible until committed) and COMMIT through the
+  generation-numbered commit log (``commitlog``): the commit point is a
+  put-if-absent commit file, so racing writers get exactly one winner.
+  ``_manifest.json`` is only the cache of the newest commit.
 - Compaction RETIRES the files it replaced: they are recorded in the new
   manifest and physically deleted one generation later (``retired``), so a
   reader that resolved the previous manifest an instant before the commit
@@ -28,8 +27,8 @@ This module makes a single small JSON object the source of truth instead:
   cannot offer.
 
 Crash safety, by construction: every mutation is (stage files) then
-(replace manifest) then (optionally delete previous generation's retired
-files). A crash before the manifest replace leaves orphan files no reader
+(commit) then (optionally delete previous generation's retired files).
+A crash before the commit leaves orphan files no reader
 resolves (reaped by ``manifest_vacuum``); a crash after it leaves the new
 snapshot fully committed. There is no crash point that loses bytes a
 committed manifest references.
@@ -54,18 +53,15 @@ No query registrations here — import-order-neutral (registry invariant).
 from __future__ import annotations
 
 import json
-import os
 import uuid
 
-import pyarrow.fs as pafs
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import commitlog
 from ..fs import CatalogFS, ConcurrentWriteError, resolve_database
 
-MANIFEST = "_manifest.json"  # read cache (the commit log is authoritative)
-COMMITS_DIR = "_commits"  # generation-numbered OCC commit log
-COMMIT_GRACE = 3  # manifest_vacuum keeps this many trailing commit files
+MANIFEST = "_manifest.json"  # commit-log cache
 
 
 def _ifs(path: str) -> tuple[CatalogFS, str]:
@@ -75,86 +71,13 @@ def _ifs(path: str) -> tuple[CatalogFS, str]:
     return cfs, cfs.root
 
 
-def _commit_path(cfs: CatalogFS, root: str, gen: int) -> str:
-    return cfs.join(root, COMMITS_DIR, f"{gen:012d}.json")
-
-
 def _load(cfs: CatalogFS, root: str) -> dict:
-    """Resolve the committed snapshot: highest generation in ``_commits/``
-    (each commit file a full manifest, written put-if-absent — always
-    complete), falling back to the ``_manifest.json`` cache for indexes
-    adopted before the OCC log or whose log was vacuumed away.
-
-    O(1) at any history length (r13, shared with versioned._load_manifest
-    — the Delta ``_last_checkpoint`` discipline): the cache doubles as the
-    checkpoint pointer (full manifest + generation, refreshed every
-    commit); the fast path reads it and probes FORWARD for commits whose
-    cache refresh was lost, LISTing the log only when the pointer is
-    missing or stale beyond the vacuumed grace tail — on object stores
-    LIST is the expensive op this removes from the hot read path."""
-    cache_path = cfs.join(root, MANIFEST)
-    cached = None
-    if cfs.exists(cache_path):
-        with cfs.open_input(cache_path) as fh:
-            cached = json.loads(fh.read().decode("utf-8"))
-    if cached is not None and int(cached.get("generation", 0)) >= 1:
-        g = int(cached["generation"])
-        if cfs.exists(_commit_path(cfs, root, g)):
-            ahead = g
-            while cfs.exists(_commit_path(cfs, root, ahead + 1)):
-                ahead += 1
-            if ahead == g:
-                return cached
-            with cfs.open_input(_commit_path(cfs, root, ahead)) as fh:
-                return json.loads(fh.read().decode("utf-8"))
-    commits = cfs.join(root, COMMITS_DIR)
-    if cfs.isdir(commits):
-        gens = [
-            int(e[:-5]) for e in cfs.listdir(commits)
-            if e.endswith(".json") and e[:-5].isdigit()
-        ]
-        if gens:
-            with cfs.open_input(_commit_path(cfs, root, max(gens))) as fh:
-                return json.loads(fh.read().decode("utf-8"))
-    if cached is None:
-        with cfs.open_input(cache_path) as fh:
-            cached = json.loads(fh.read().decode("utf-8"))
-    return cached
-
-
-def _put_json(cfs: CatalogFS, path: str, obj: dict) -> None:
-    with cfs.open_output(path) as fh:
-        fh.write(json.dumps(obj).encode("utf-8"))
-
-
-def _commit(cfs: CatalogFS, root: str, manifest: dict) -> None:
-    """Commit via put-if-absent on the generation-numbered commit file —
-    true multi-writer OCC (same primitive as versioned._commit_manifest):
-    the manifest's ``generation`` (already incremented by the caller) names
-    the commit file, racing mutators targeting the same generation get
-    exactly one winner, losers raise ConcurrentWriteError having committed
-    nothing (staged orphans; manifest_vacuum reaps). Mutators catch the
-    error, reload, and retry — this closes the load-merge-replace
-    lost-update window the r11 protocol retried on a generation PRE-check
-    (which left a sub-ms TOCTOU). After the winning commit the
-    ``_manifest.json`` cache is refreshed (atomic replace locally, plain
-    PUT on object stores); losing that write is harmless — the log is
-    authoritative and the cache at worst one generation stale."""
-    cfs.makedirs(cfs.join(root, COMMITS_DIR))
-    if not cfs.put_json_if_absent(
-        _commit_path(cfs, root, int(manifest["generation"])), manifest
-    ):
-        raise ConcurrentWriteError(
-            f"index generation {manifest['generation']} was committed by "
-            "another mutator; nothing committed — reload and retry"
-        )
-    target = cfs.join(root, MANIFEST)
-    if isinstance(cfs.fs, pafs.LocalFileSystem):
-        tmp = cfs.join(root, f".{MANIFEST}.{uuid.uuid4().hex[:8]}")
-        _put_json(cfs, tmp, manifest)
-        os.replace(tmp, target)
-    else:
-        _put_json(cfs, target, manifest)
+    """The committed manifest (``commitlog.load``); FileNotFoundError when
+    the manifest protocol does not own the index."""
+    m = commitlog.load(cfs, root, MANIFEST)
+    if m is None:
+        raise FileNotFoundError(f"{root}: no committed index manifest")
+    return m
 
 
 def manifest_snapshot(path: str) -> dict:
@@ -177,15 +100,13 @@ def manifest_snapshot(path: str) -> dict:
             cells[entry[len("cell="):]] = files
     # re-adoption commits the NEXT generation (idempotent in effect: each
     # call snapshots the current listing as a fresh committed generation)
-    try:
-        gen = int(_load(cfs, root)["generation"]) + 1
-    except FileNotFoundError:
-        gen = 1
-    manifest: dict = {"generation": gen, "cells": cells, "retired": []}
+    prev = commitlog.load(cfs, root, MANIFEST)
+    manifest: dict = {"cells": cells, "retired": []}
     if cfs.exists(cfs.join(root, "_ann_artifacts.json")):
         manifest["artifacts"] = "_ann_artifacts.json"
-    _commit(cfs, root, manifest)
-    return manifest
+    return commitlog.commit(
+        cfs, root, MANIFEST, manifest, prev["gen"] if prev is not None else 0
+    )
 
 
 def manifest_read(
@@ -219,33 +140,25 @@ def manifest_read(
     return df.withColumn("cell", F.col("cell").cast("long"))
 
 
-def _stage_codes(
-    spark: SparkSession, cfs: CatalogFS, root: str, codes: DataFrame
-) -> dict[str, list[str]]:
-    """Write encoded rows into the live cell dirs under fresh unique names
-    WITHOUT committing them: stage to a hidden tree, then move each part
-    file in. Returns {cell: [new file names]} for the commit step. Staged
-    files are invisible to manifest readers until the commit (so the
-    object-store copy+delete move cannot be observed half-done)."""
-    staging = cfs.join(root, f".stage_{uuid.uuid4().hex[:8]}")
-    # cell-clustered (the build_pq_index layout rule): one staged file per cell
-    codes.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
-        cfs.spark_url(staging)
-    )
+def _stage_codes(cfs: CatalogFS, root: str, codes: DataFrame) -> dict[str, list[str]]:
+    """Stage encoded rows into the live cell dirs under fresh unique names
+    WITHOUT committing them (``commitlog.stage``). Returns {cell: [new file
+    names]} for the commit step. Staged files are invisible to manifest
+    readers until the commit (so the object-store copy+delete move cannot be
+    observed half-done)."""
     added: dict[str, list[str]] = {}
-    for scell in cfs.listdir(staging):
-        if not scell.startswith("cell="):
-            continue
-        cell = scell[len("cell="):]
-        dest = cfs.join(root, f"cell={cell}")
-        cfs.makedirs(dest)
-        for e in cfs.listdir(cfs.join(staging, scell)):
-            if not (e.startswith("part-") and e.endswith(".parquet")):
-                continue
-            name = f"staged-{uuid.uuid4().hex[:12]}.parquet"
-            cfs.rename(cfs.join(staging, scell, e), cfs.join(dest, name))
-            added.setdefault(cell, []).append(name)
-    cfs.rmtree(staging)
+    # cell-clustered (the build_pq_index layout rule): one staged file per cell
+    for path in commitlog.stage(
+        cfs,
+        root,
+        lambda url: codes.repartition("cell")
+        .write.mode("overwrite")
+        .partitionBy("cell")
+        .parquet(url),
+        "staged",
+    ):
+        cell_dir, name = path.split("/")
+        added.setdefault(cell_dir[len("cell="):], []).append(name)
     return added
 
 
@@ -258,8 +171,8 @@ def manifest_append(
 ) -> dict:
     """Incremental add under the manifest protocol: encode the delta with
     the index's sidecar artifacts (frozen add-after-train — exactly
-    append_to_pq_index's semantics), stage the files, COMMIT by manifest
-    replace. A crash before the commit leaves invisible orphans (vacuum
+    append_to_pq_index's semantics), stage the files, COMMIT a new
+    generation. A crash before the commit leaves invisible orphans (vacuum
     reaps them); readers see the old snapshot until the commit and the
     full new one after — never anything in between.
 
@@ -277,10 +190,7 @@ def manifest_append(
 
     cfs, root = _ifs(path)
     while True:
-        try:
-            art_ptr = _load(cfs, root).get("artifacts")
-        except FileNotFoundError:
-            art_ptr = None
+        art_ptr = (commitlog.load(cfs, root, MANIFEST) or {}).get("artifacts")
         # resolve through the manifest's artifacts pointer: an append after
         # a manifest_rebuild must encode with the RETRAINED artifacts
         cents, books = manifest_artifacts(spark, sf_dir, path)
@@ -294,7 +204,7 @@ def manifest_append(
             _books_literal(books),
             keep_embedding=True,
         )
-        added = _stage_codes(spark, cfs, root, codes)
+        added = _stage_codes(cfs, root, codes)
         while True:
             if before_commit is not None:
                 before_commit()
@@ -304,10 +214,8 @@ def manifest_append(
             for cell, names in added.items():
                 m["cells"].setdefault(cell, [])
                 m["cells"][cell] = sorted(set(m["cells"][cell] + names))
-            m["generation"] += 1
             try:
-                _commit(cfs, root, m)
-                return m
+                return commitlog.commit(cfs, root, MANIFEST, m)
             except ConcurrentWriteError:
                 continue  # an append won this generation: re-merge, retry
 
@@ -335,7 +243,7 @@ def manifest_compact(
     cfs, root = _ifs(path)
     while True:
         m = _load(cfs, root)
-        gen_seen = m["generation"]
+        gen_seen = m["gen"]
         replaced: dict[str, tuple[list[str], list[str]]] = {}
         for cell, files in sorted(m["cells"].items(), key=lambda kv: int(kv[0])):
             if len(files) <= max_files_per_cell:
@@ -344,22 +252,20 @@ def manifest_compact(
             df = spark.read.parquet(
                 *[cfs.spark_url(cfs.join(cell_dir, f)) for f in files]
             )
-            staging = cfs.join(root, f".stage_{uuid.uuid4().hex[:8]}")
-            df.coalesce(max_files_per_cell).write.mode("overwrite").parquet(
-                cfs.spark_url(staging)
+            new_names = commitlog.stage(
+                cfs,
+                root,
+                lambda url, df=df: df.coalesce(max_files_per_cell)
+                .write.mode("overwrite")
+                .parquet(url),
+                "compact",
+                dest=cell_dir,
             )
-            new_names = []
-            for e in cfs.listdir(staging):
-                if e.startswith("part-") and e.endswith(".parquet"):
-                    name = f"compact-{uuid.uuid4().hex[:12]}.parquet"
-                    cfs.rename(cfs.join(staging, e), cfs.join(cell_dir, name))
-                    new_names.append(name)
-            cfs.rmtree(staging)
             replaced[cell] = (files, new_names)
         if before_commit is not None:
             before_commit()
         m2 = _load(cfs, root)
-        if m2["generation"] != gen_seen:
+        if m2["gen"] != gen_seen:
             # an append committed mid-compact: our staged replacements may
             # miss its files — abandon them (invisible orphans; vacuum
             # reaps) and redo against the new snapshot
@@ -369,9 +275,8 @@ def manifest_compact(
             keep = [f for f in m2["cells"][cell] if f not in set(old)]
             m2["cells"][cell] = sorted(keep + new)
         m2["retired"] = [[c, f] for c, (old, _) in replaced.items() for f in old]
-        m2["generation"] += 1
         try:
-            _commit(cfs, root, m2)
+            committed = commitlog.commit(cfs, root, MANIFEST, m2)
         except ConcurrentWriteError:
             continue  # lost the OCC race (no TOCTOU left): redo the compact
         # delete what the PREVIOUS generation retired (grace expired)
@@ -379,24 +284,22 @@ def manifest_compact(
             p = cfs.join(root, f"cell={cell}", f)
             if cfs.exists(p):
                 cfs.remove_any(p)
-        return m2
+        return committed
 
 
 def manifest_artifacts(spark: SparkSession, sf_dir: str, path: str):
     """The fitted (centroids, codebooks) that match a manifest index's
     committed codes. A manifest_rebuild commits a POINTER to a fresh
-    generation-stamped artifacts file inside the same atomic manifest
-    replace (a bare sidecar overwrite would race readers: new artifacts
+    generation-stamped artifacts file inside the same atomic commit
+    (a bare sidecar overwrite would race readers: new artifacts
     visible with the old codes still committed); manifest_snapshot points
     an adopted index at its plain sidecar. Manifests without a pointer
     fall back to the plain sidecar / memoized trainers."""
     cfs, root = _ifs(path)
-    if cfs.exists(cfs.join(root, MANIFEST)):
-        m = _load(cfs, root)
-        if m.get("artifacts"):
-            with cfs.open_input(cfs.join(root, m["artifacts"])) as fh:
-                a = json.loads(fh.read().decode("utf-8"))
-            return a["centroids"], a["codebooks"]
+    m = commitlog.load(cfs, root, MANIFEST)
+    if m is not None and m.get("artifacts"):
+        a = cfs.get_json(cfs.join(root, m["artifacts"]))
+        return a["centroids"], a["codebooks"]
     from .similarity import _index_artifacts
 
     return _index_artifacts(spark, sf_dir, path)
@@ -432,7 +335,7 @@ def manifest_rebuild(
 
     cfs, root = _ifs(path)
     while True:
-        gen_seen = _load(cfs, root)["generation"]
+        gen_seen = _load(cfs, root)["gen"]
         rows = manifest_read(spark, path).select("vec_id", "embedding").persist()
         rows.count()  # barrier: retrain + encode read this frame many times
         try:
@@ -448,21 +351,20 @@ def manifest_rebuild(
                 _books_literal(books),
                 keep_embedding=True,
             )
-            added = _stage_codes(spark, cfs, root, codes)
+            added = _stage_codes(cfs, root, codes)
         finally:
             rows.unpersist()
         art_name = f"_ann_artifacts.{uuid.uuid4().hex[:12]}.json"
-        _put_json(
-            cfs, cfs.join(root, art_name), {"centroids": cents, "codebooks": books}
-        )
+        art = {"centroids": cents, "codebooks": books}
+        with cfs.open_output(cfs.join(root, art_name)) as fh:
+            fh.write(json.dumps(art).encode("utf-8"))
         if before_commit is not None:
             before_commit()
         m2 = _load(cfs, root)
-        if m2["generation"] != gen_seen:
+        if m2["gen"] != gen_seen:
             continue  # an append moved the snapshot: redo against it
         prev_retired = [(c, f) for c, f in m2.get("retired", [])]
         new_manifest = {
-            "generation": gen_seen + 1,
             "cells": {c: sorted(ns) for c, ns in added.items()},
             "retired": [
                 [c, f] for c, files in sorted(m2["cells"].items()) for f in files
@@ -470,14 +372,14 @@ def manifest_rebuild(
             "artifacts": art_name,
         }
         try:
-            _commit(cfs, root, new_manifest)
+            committed = commitlog.commit(cfs, root, MANIFEST, new_manifest, gen_seen)
         except ConcurrentWriteError:
             continue  # lost the OCC race: redo against the new snapshot
         for cell, f in prev_retired:
             p = cfs.join(root, f"cell={cell}", f)
             if cfs.exists(p):
                 cfs.remove_any(p)
-        return new_manifest
+        return committed
 
 
 def manifest_stream_append(
@@ -492,7 +394,7 @@ def manifest_stream_append(
     """Continuous vector ingest under the manifest protocol, with
     TRANSACTIONAL batch idempotency: each micro-batch of ``(vec_id,
     embedding)`` rows is encoded with the manifest's artifacts, staged
-    invisibly, and committed by a manifest replace that ALSO records the
+    invisibly, and committed by a generation that ALSO records the
     batch id under ``streams[stream_id]`` — the Delta-style
     (txnAppId, txnVersion) discipline. A replayed batch (at-least-once
     delivery: crash between the manifest commit and the checkpoint commit)
@@ -532,7 +434,7 @@ def manifest_stream_append(
             books_lit,
             keep_embedding=True,
         )
-        added = _stage_codes(spark, cfs, root, codes)
+        added = _stage_codes(cfs, root, codes)
         while True:
             m = _load(cfs, root)
             last = m.get("streams", {}).get(sid)
@@ -542,9 +444,8 @@ def manifest_stream_append(
                 m["cells"].setdefault(cell, [])
                 m["cells"][cell] = sorted(set(m["cells"][cell] + names))
             m.setdefault("streams", {})[sid] = batch_id
-            m["generation"] += 1
             try:
-                _commit(cfs, root, m)
+                commitlog.commit(cfs, root, MANIFEST, m)
                 return
             except ConcurrentWriteError:
                 continue  # a racing batch append won the generation: retry
@@ -585,25 +486,14 @@ def manifest_vacuum(path: str, retention_s: float | None = None) -> list[str]:
         mtime = cfs.getmtime(p)
         return mtime is None or mtime > time.time() - retention_s
 
-    deleted: list[str] = []
+    deleted = [cfs.join(root, p) for p in commitlog.trim(cfs, root, young)]
     for entry in cfs.listdir(root):
         p = cfs.join(root, entry)
-        if entry.startswith(".stage_"):
+        if entry.startswith(commitlog.STAGE_PREFIX):
             if young(p):
                 continue
             cfs.rmtree(p)
             deleted.append(p)
-        elif entry == COMMITS_DIR:
-            gens = sorted(
-                int(e[:-5]) for e in cfs.listdir(p)
-                if e.endswith(".json") and e[:-5].isdigit()
-            )
-            for g in gens[:-COMMIT_GRACE]:
-                cp = _commit_path(cfs, root, g)
-                if young(cp):
-                    continue
-                cfs.remove_any(cp)
-                deleted.append(cp)
         elif entry.startswith("cell="):
             cell = entry[len("cell="):]
             for e in cfs.listdir(p):

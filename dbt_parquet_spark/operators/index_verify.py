@@ -41,6 +41,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from .. import commitlog
 from ..registry import register
 
 REPORT_SCHEMA = StructType(
@@ -56,7 +57,7 @@ REPORT_SCHEMA = StructType(
 # status vocabulary: ok | fail | warn | skipped
 #  - warn: not corruption, but attention-worthy (crash orphans awaiting
 #    manifest_vacuum; sidecar missing so the memoized trainers were used)
-#  - skipped: the check's substrate isn't present (no _manifest.json on a
+#  - skipped: the check's substrate isn't present (no committed manifest on a
 #    listing-protocol index)
 
 
@@ -120,7 +121,7 @@ def verify_pq_index(
     # data-loss case manifest_files reports; the scan must survive them,
     # so it reads the existing subset rather than manifest_read's strict
     # file list.
-    if cfs.exists(cfs.join(root, MANIFEST)):
+    if commitlog.committed(cfs, root, MANIFEST):
         m = _load(cfs, root)
         existing = [
             p
@@ -232,7 +233,7 @@ def _verify_sidecar(cfs, root: str, cents, books):
     from .similarity import _ARTIFACTS_FILE, PQ_K, PQ_M, PQ_SUB
 
     f = cfs.join(root, _ARTIFACTS_FILE)
-    if cfs.exists(cfs.join(root, MANIFEST)):
+    if commitlog.committed(cfs, root, MANIFEST):
         # a manifest artifacts pointer supersedes the plain sidecar
         pointed = _load(cfs, root).get("artifacts")
         if pointed:
@@ -269,9 +270,9 @@ def _verify_sidecar(cfs, root: str, cents, books):
 def _verify_manifest(cfs, root: str):
     from .index_manifest import MANIFEST, _load
 
-    if not cfs.exists(cfs.join(root, MANIFEST)):
+    if not commitlog.committed(cfs, root, MANIFEST):
         skip = (
-            "listing-protocol index (no _manifest.json)",
+            "listing-protocol index (no committed manifest)",
         )
         return [
             ("manifest_files", "skipped", None, None, skip[0]),

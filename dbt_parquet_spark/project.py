@@ -193,10 +193,11 @@ class Project:
         (explicit file list) — a plain directory view over its root would
         union every retained version's files."""
         if model.materialized == "versioned":
+            from . import commitlog
             from .versioned import VERSIONS_MANIFEST, read_versioned
 
-            io = self.catalog.io
-            if not io.exists(io.join(self.catalog.fs_path(rel), VERSIONS_MANIFEST)):
+            root = self.catalog.fs_path(rel)
+            if not commitlog.committed(self.catalog.io, root, VERSIONS_MANIFEST):
                 return None  # not built yet (first run builds + registers)
             df = read_versioned(spark, self.catalog, rel)
             df.createOrReplaceTempView(rel.view_name)

@@ -336,14 +336,14 @@ def q_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, Window.currentRow
     )
     # cast("timestamp") first: a no-op on LTZ, and the NTZ→LTZ bridge when a
-    # caller session infers parquet timestamps as TIMESTAMP_NTZ (cast(long)
-    # is invalid directly on NTZ).
-    ts_long = F.col("ts").cast("timestamp").cast("long")
-    gap = ts_long - F.lag(F.col("ts")).over(w).cast("timestamp").cast("long")
+    # caller session infers parquet timestamps as TIMESTAMP_NTZ. The gap is
+    # in microseconds, as the oracle's interval compare measures it.
+    ts_us = F.unix_micros(F.col("ts").cast("timestamp"))
+    gap = ts_us - F.lag(ts_us).over(w)
     flagged = events.select(
         "user_id",
         "ts",
-        F.when(gap > SESSION_GAP_MIN * 60, 1).otherwise(0).alias("is_new"),
+        F.when(gap > SESSION_GAP_MIN * 60 * 1_000_000, 1).otherwise(0).alias("is_new"),
     )
     sess = flagged.select("user_id", "ts", F.sum("is_new").over(wsum).alias("session_id"))
     return sess.groupBy("user_id", "session_id").agg(

@@ -3,8 +3,8 @@
 ``materialize.create_table_as`` publishes by directory swap — atomic on
 POSIX, destructive by design (the previous version is deleted). This module
 is the lake-table upgrade the 100 TB posture wants for REPLACEABLE serving
-tables: every write is a new immutable SNAPSHOT committed by atomically
-replacing one small JSON manifest, so
+tables: every write is a new immutable SNAPSHOT committed as one small JSON
+manifest, so
 
 - readers resolve the manifest to an explicit file list and scan exactly
   those files — a reader that resolved version N keeps a consistent view
@@ -17,23 +17,14 @@ replacing one small JSON manifest, so
 - ``rollback`` is a pure metadata commit: a new version whose file list is
   the target version's.
 
-This intentionally mirrors the ANN index's manifest protocol
-(operators/index_manifest.py) — same commit primitive
-(``CatalogFS.put_json_if_absent`` on a generation-numbered commit log:
-local ``os.link`` create-exclusive / object-store conditional PUT via the
-per-scheme hook, ``fs.register_conditional_put``), same crash story: a
-crash before the manifest commit leaves invisible staged orphans (reaped
-by vacuum), a crash after it leaves the new snapshot fully committed.
-There is no crash point that loses bytes a committed manifest references.
-Writers are multi-writer SAFE (true OCC since r12): racing mutators
-commit against the same generation, exactly one wins, losers raise
-ConcurrentWriteError with nothing committed — reload and retry. SCOPE of
-that guarantee (r12 advice): it holds on local filesystems (atomic
-link(2)) and on any backend with a conditional-PUT hook wired (s3/s3a get
-one automatically when boto3 is importable — S3 ``If-None-Match: *``);
-a non-local backend with NO hook keeps the documented exists+PUT
-fallback in ``fs.put_json_if_absent``, where a narrow lost-update window
-remains. Readers never coordinate and are always safe.
+Commits go through ``commitlog``, shared with the ANN index manifest
+(operators/index_manifest.py). Racing writers get exactly one winner per
+generation; losers raise ConcurrentWriteError with nothing committed —
+reload and retry. That guarantee holds on local filesystems and on backends
+with a conditional-PUT hook (``fs.register_conditional_put``). A crash
+before the commit leaves invisible staged orphans (reaped by vacuum), a
+crash after it leaves the new snapshot fully committed, so no crash point
+loses bytes a committed manifest references. Readers never coordinate.
 
 Reference parity: the reference's CTAS overwrites in place (reference
 impl.py:75-85 rename pattern, macros/adapters.sql:10) — this module keeps
@@ -48,30 +39,22 @@ metadata — no second scan), so ``version_history`` is exact and free.
 
 from __future__ import annotations
 
-import os
-import uuid
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import memo
+from . import commitlog, memo
 from .catalog import FilesystemCatalog, Relation
 from .fs import ConcurrentWriteError  # noqa: F401 — re-exported (public API)
 from .registry import register
 from .sources.readers import load_table
 
-VERSIONS_MANIFEST = "_versions.json"  # read cache + versioned-root marker
-COMMITS_DIR = "_commits"  # generation-numbered OCC commit log
-COMMIT_GRACE = 3  # vacuum keeps this many trailing commit files
+VERSIONS_MANIFEST = "_versions.json"  # commit-log cache + versioned-root marker
 
 
 def _root(catalog: FilesystemCatalog, rel: Relation) -> str:
     return catalog.fs_path(rel)
-
-
-def _commit_path(io, root: str, gen: int) -> str:
-    return io.join(root, COMMITS_DIR, f"{gen:012d}.json")
 
 
 # Shallow clones (clone_versioned) reference the SOURCE table's data/DV
@@ -105,54 +88,11 @@ def _basename(name: str) -> str:
 
 
 def _load_manifest(catalog: FilesystemCatalog, rel: Relation) -> dict:
-    """Resolve the table's committed state: the HIGHEST generation in the
-    ``_commits/`` log is authoritative (each commit file is a full manifest
-    snapshot written put-if-absent, so the max-gen file is always complete
-    and consistent). The returned dict carries its generation under
-    ``gen`` — mutators pass it back as ``expect_gen``.
-
-    O(1) at any history length (r12 next-round #2 — the Delta
-    ``_last_checkpoint`` discipline): ``_versions.json`` is refreshed with
-    the full manifest + its ``gen`` on every commit, so it doubles as the
-    checkpoint pointer. The fast path reads it, probes FORWARD for commits
-    whose cache refresh was lost (a crash between the commit put and the
-    cache write — at most a handful, never the whole log), and only falls
-    back to the O(#retained-commits) LIST when the pointer is missing or
-    stale beyond the vacuumed grace tail. A hot table's resolve is one
-    small GET plus two existence probes — no LIST, the expensive op on
-    object stores (pinned by tests/test_versioned.py's spying CatalogFS).
-    Tables created before the OCC log keep working off the cache; the
-    next commit seeds the log from there."""
-    io = catalog.io
-    root = _root(catalog, rel)
-    cache_path = io.join(root, VERSIONS_MANIFEST)
-    cached = io.get_json(cache_path) if io.exists(cache_path) else None
-    if cached is not None and int(cached.get("gen", 0)) >= 1:
-        g = int(cached["gen"])
-        if io.exists(_commit_path(io, root, g)):
-            ahead = g
-            while io.exists(_commit_path(io, root, ahead + 1)):
-                ahead += 1
-            if ahead == g:
-                return cached  # the cache IS the max-gen snapshot
-            m = io.get_json(_commit_path(io, root, ahead))
-            m["gen"] = ahead
-            return m
-        # pointer older than the pruned log tail: authoritative LIST below
-    commits = io.join(root, COMMITS_DIR)
-    if io.isdir(commits):
-        gens = [
-            int(e[:-5]) for e in io.listdir(commits)
-            if e.endswith(".json") and e[:-5].isdigit()
-        ]
-        if gens:
-            m = io.get_json(_commit_path(io, root, max(gens)))
-            m["gen"] = max(gens)
-            return m
-    if cached is None:
-        return {"current": 0, "versions": {}, "gen": 0}
-    cached.setdefault("gen", 0)
-    return cached
+    """The table's committed state (``commitlog.load``), carrying its
+    generation under ``gen`` — mutators pass it back as ``expect_gen``. A
+    table with nothing committed loads as an empty manifest at gen 0."""
+    m = commitlog.load(catalog.io, _root(catalog, rel), VERSIONS_MANIFEST)
+    return m if m is not None else {"current": 0, "versions": {}, "gen": 0}
 
 
 def _commit_manifest(
@@ -161,31 +101,11 @@ def _commit_manifest(
     m: dict,
     expect_gen: int | None = None,
 ) -> None:
-    """Commit the manifest at generation ``expect_gen + 1`` via
-    put-if-absent on the generation-numbered commit file — true
-    multi-writer OCC: when N writers race from the same loaded generation,
-    the filesystem's create-exclusive (local: one atomic link(2) syscall;
-    object stores: conditional PUT, see fs.put_json_if_absent) picks
-    exactly one winner and every loser raises ConcurrentWriteError having
-    committed NOTHING (staged orphans; vacuum reaps). This closes the
-    load-recheck-replace TOCTOU the r11 protocol documented. After the
-    winning commit, ``_versions.json`` is refreshed as a read cache /
-    versioned-root marker — losing that write is harmless (the commit log
-    is authoritative; the cache is one generation stale at worst until the
-    next commit)."""
-    io = catalog.io
-    root = _root(catalog, rel)
-    if expect_gen is None:
-        expect_gen = int(m.get("gen", 0))
-    gen = expect_gen + 1
-    m = dict(m, gen=gen)
-    io.makedirs(io.join(root, COMMITS_DIR))
-    if not io.put_json_if_absent(_commit_path(io, root, gen), m):
-        raise ConcurrentWriteError(
-            f"{rel.view_name}: generation {gen} was committed by another "
-            f"writer (this writer loaded gen {expect_gen}); nothing committed"
-        )
-    io.put_json_atomic(io.join(root, VERSIONS_MANIFEST), m)
+    """Commit the manifest at generation ``expect_gen + 1`` (default: one
+    past the generation ``m`` was loaded at). Racing writers get exactly one
+    winner; every loser raises ConcurrentWriteError having committed
+    nothing (staged orphans; vacuum reaps)."""
+    commitlog.commit(catalog.io, _root(catalog, rel), VERSIONS_MANIFEST, m, expect_gen)
 
 
 # Parquet-safe type widenings accepted under evolve=True (the Delta type-
@@ -347,29 +267,27 @@ def _stage_files(
 ) -> tuple[list[str], int, dict]:
     """Write df's part files into the table root under fresh unique names
     WITHOUT committing them (invisible to manifest readers until the
-    commit — the index_manifest staging discipline). Returns (names, rows,
+    commit — ``commitlog.stage``). Returns (names, rows,
     {file: {col: [min, max]}}), all from the staged footers. ``prefix``
     distinguishes data files (``v``) from deletion-vector sidecars
     (``dv``) — both live under the same orphan/vacuum discipline."""
     io = catalog.io
     root = _root(catalog, rel)
     io.makedirs(root)
-    staging = io.join(root, f".stage_{uuid.uuid4().hex[:8]}")
-    df.write.mode("overwrite").parquet(io.spark_url(staging))
-    names: list[str] = []
     rows = 0
     file_stats: dict = {}
-    for e in io.listdir(staging):
-        if not (e.startswith("part-") and e.endswith(".parquet")):
-            continue
-        name = f"{prefix}{version:06d}-{uuid.uuid4().hex[:12]}.parquet"
-        io.rename(io.join(staging, e), io.join(root, name))
+
+    def footer(name: str) -> None:
+        nonlocal rows
         n, stats = _footer_meta(io, io.join(root, name), stats_cols)
         rows += n
         if stats:
             file_stats[name] = stats
-        names.append(name)
-    io.rmtree(staging)
+
+    names = commitlog.stage(
+        io, root, lambda url: df.write.mode("overwrite").parquet(url),
+        f"{prefix}{version:06d}", on_move=footer,
+    )
     return sorted(names), rows, file_stats
 
 
@@ -508,7 +426,7 @@ def write_versioned(
     ``txn=(stream_id, batch_id)`` makes the commit TRANSACTIONAL for
     streaming ingest (the Delta txnAppId/txnVersion discipline, shared
     with index_manifest.manifest_stream_append): the batch id is recorded
-    under ``streams[stream_id]`` in the SAME manifest replace, and a
+    under ``streams[stream_id]`` in the SAME commit, and a
     replayed batch (at-least-once delivery) finds its id recorded and
     returns None without staging a byte.
 
@@ -656,7 +574,7 @@ def stream_append_versioned(
     available_now: bool = True,
 ):
     """Exactly-once streaming ingest into a versioned table: each
-    micro-batch commits as a new append version whose manifest replace
+    micro-batch commits as a new append version whose commit
     ALSO records the batch id (``write_versioned(txn=...)``). The
     at-least-once worst case — a crash between the manifest commit and the
     checkpoint commit — replays the batch into the txn skip, so the table
@@ -1667,29 +1585,17 @@ def vacuum_versions(
     for e in io.listdir(root):
         if e == VERSIONS_MANIFEST or e in kept_files:
             continue
-        if e.endswith(".parquet") or e.startswith(".stage_"):
+        if e.endswith(".parquet") or e.startswith(commitlog.STAGE_PREFIX):
             if e not in ever_referenced and young(io.join(root, e)):
                 continue  # possibly an in-flight mutator's staging
             if not dry_run:
                 io.remove_any(io.join(root, e))
             deleted.append(e)
-    # prune the OCC commit log: superseded generations are pure metadata
-    # history (every commit file is a full snapshot). Keep a COMMIT_GRACE
-    # tail so a reader between its log LIST and its max-gen read never has
-    # the file deleted under it (it would have to be GRACE commits stale).
-    # The dry run previews one FEWER pruned entry (the real vacuum's own
-    # commit pushes a generation into the tail) — preview counts are a
-    # floor, which is the conservative direction for a safety check.
-    commits = io.join(root, COMMITS_DIR)
-    if io.isdir(commits):
-        gens = sorted(
-            int(e[:-5]) for e in io.listdir(commits)
-            if e.endswith(".json") and e[:-5].isdigit()
-        )
-        for g in gens[:-COMMIT_GRACE]:
-            if not dry_run:
-                io.remove_any(_commit_path(io, root, g))
-            deleted.append(f"{COMMITS_DIR}/{g:012d}.json")
+    # superseded commits are pure metadata history (every commit file is a
+    # full snapshot). The dry run previews one FEWER pruned entry (the real
+    # vacuum's own commit pushes a generation into the tail) — preview
+    # counts are a floor, the conservative direction for a safety check.
+    deleted += commitlog.trim(io, root, dry_run=dry_run)
     return sorted(deleted)
 
 

@@ -71,7 +71,7 @@ def test_manifest_append_staged_invisible_then_committed(spark, tmp_path):
     assert seen_mid_stage["rows"] == before  # staged files invisible
     after = _rows(manifest_read(spark, path))
     assert len(after) == 500 and before < after
-    assert m["generation"] == 2
+    assert m["gen"] == 2
     # the appended rows carry the SAME codes the listing-protocol append
     # produces (same frozen artifacts) — cross-checked via read of the
     # whole directory tree, which sees committed files only because every
@@ -112,7 +112,7 @@ def test_manifest_compact_no_absent_window_and_retirement(spark, tmp_path):
     for cell, f in retired_before:
         assert not os.path.exists(os.path.join(root, f"cell={cell}", f))
     assert len(_rows(manifest_read(spark, path))) == 500 + emb.count()
-    assert m2["generation"] > m1["generation"]
+    assert m2["gen"] > m1["gen"]
 
 
 def test_manifest_vacuum_reaps_orphans_only(spark, tmp_path):
@@ -229,7 +229,7 @@ def test_occ_racing_appends_both_land(spark, tmp_path):
 
     base_dir, path, emb = _mk_index(spark, tmp_path)
     cfs, root = _ifs(path)
-    gen0 = _load(cfs, root)["generation"]
+    gen0 = _load(cfs, root)["gen"]
     barrier = threading.Barrier(2, timeout=120)
     local = threading.local()
     errors: list[Exception] = []
@@ -259,18 +259,15 @@ def test_occ_racing_appends_both_land(spark, tmp_path):
     assert not errors, errors
     got = {r.vec_id for r in manifest_read(spark, path).select("vec_id").collect()}
     assert got == set(range(440))  # base 400 + BOTH racing deltas
-    assert _load(cfs, root)["generation"] == gen0 + 2
+    assert _load(cfs, root)["gen"] == gen0 + 2
 
 
 def test_occ_commit_log_prune_and_inflight_stage_retention(spark, tmp_path):
     """manifest_vacuum prunes superseded commit-log generations (keeping
     the grace tail) and, with retention_s, keeps young stage dirs an
     in-flight mutator may still own."""
-    from dbt_parquet_spark.operators.index_manifest import (
-        COMMIT_GRACE,
-        COMMITS_DIR,
-        _ifs,
-    )
+    from dbt_parquet_spark.commitlog import COMMIT_GRACE, COMMITS_DIR
+    from dbt_parquet_spark.operators.index_manifest import _ifs
 
     base_dir, path, emb = _mk_index(spark, tmp_path)
     for lo in (400, 410, 420, 430):
@@ -303,7 +300,7 @@ def test_occ_commit_log_prune_and_inflight_stage_retention(spark, tmp_path):
 
 
 def test_index_manifest_resolution_is_o1(spark, tmp_path):
-    """r13 (shared with versioned._load_manifest): after N committed
+    """r13 (commitlog.load, shared with versioned tables): after N committed
     appends, resolving the index snapshot never LISTs the commit log —
     the _manifest.json cache doubles as the checkpoint pointer."""
     from dbt_parquet_spark.operators.index_manifest import _ifs, _load
@@ -322,14 +319,14 @@ def test_index_manifest_resolution_is_o1(spark, tmp_path):
         m = _load(cfs, root)
     finally:
         del cfs.__dict__["listdir"]
-    assert int(m["generation"]) >= 4
+    assert int(m["gen"]) >= 4
     assert counts["listdir"] == 0, counts
     # a lost cache refresh is found by the forward probe, not a stale read
-    stale = dict(m, generation=m["generation"] - 2) if m["generation"] >= 3 else None
+    stale = dict(m, gen=m["gen"] - 2) if m["gen"] >= 3 else None
     if stale is not None:
         import json as _json
 
         with cfs.open_output(cfs.join(root, MANIFEST)) as fh:
             fh.write(_json.dumps(stale).encode())
         m2 = _load(cfs, root)
-        assert int(m2["generation"]) == int(m["generation"])
+        assert int(m2["gen"]) == int(m["gen"])

@@ -137,7 +137,7 @@ def test_verify_detects_stale_sidecar(spark, tmp_path):
 
 
 def test_verify_manifest_coverage_and_missing_files(spark, tmp_path):
-    from dbt_parquet_spark.operators.index_manifest import manifest_snapshot
+    from dbt_parquet_spark.operators.index_manifest import MANIFEST, manifest_snapshot
     from dbt_parquet_spark.operators.index_verify import verify_pq_index
     from dbt_parquet_spark.operators.similarity import (
         append_to_pq_index,
@@ -148,6 +148,9 @@ def test_verify_manifest_coverage_and_missing_files(spark, tmp_path):
     build_pq_index(spark, base_dir)
     handle = append_to_pq_index(spark, base_dir, delta)
     manifest_snapshot(handle)
+    # a lost cache write leaves only the commit log: the index is still
+    # manifest-owned, so the manifest checks run instead of being skipped
+    os.remove(os.path.join(handle, MANIFEST))
 
     rep = verify_pq_index(spark, base_dir, path=handle)
     assert _status(rep, "manifest_files") == "ok"

@@ -469,7 +469,7 @@ def test_versioned_incremental_skip_and_materialization_change(spark, db):
     """state='modified': an unchanged versioned model is SKIPPED (no new
     version committed) and its view still resolves the current snapshot;
     switching table -> versioned is itself a change that re-materializes."""
-    from dbt_parquet_spark.versioned import version_history
+    from dbt_parquet_spark.versioned import VERSIONS_MANIFEST, version_history
 
     _seed_source(spark, db)
     project = Project(db)
@@ -494,6 +494,15 @@ def test_versioned_incremental_skip_and_materialization_change(spark, db):
     assert r2["m"].skipped
     assert [h["version"] for h in version_history(db, rel)] == [1]
     assert spark.table("m").count() == 4
+    # a lost cache write leaves only the commit log: the model is still
+    # built, so a skipped rerun re-registers its view over the snapshot
+    db.io.remove_any(db.io.join(db.fs_path(rel), VERSIONS_MANIFEST))
+    spark.catalog.dropTempView("m")
+    r3 = project.run(spark, state="modified")
+    assert r3["m"].skipped
+    assert spark.table("m").count() == 4
+    view = project._register_model_view(spark, project.models["m"], rel)
+    assert view is not None and view.count() == 4
 
 
 def test_config_block_with_extra_args_and_unknown_keys(spark, db):

@@ -60,6 +60,42 @@ def test_twin_session(spark):
     _assert_twin(stream, batch)
 
 
+def test_session_gap_keeps_sub_second_precision(spark, tmp_path):
+    """A 30 min 50 ms gap opens a second session: the gap is measured in
+    microseconds, as the DuckDB oracle measures it, not in whole seconds."""
+    import datetime
+
+    import duckdb
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from dbt_parquet_spark.registry import oracle_sql
+
+    from .oracle_utils import compare_spark_duckdb
+
+    ts = [
+        datetime.datetime(2024, 1, 1, 0, 0, 0, 900_000),
+        datetime.datetime(2024, 1, 1, 0, 30, 0, 950_000),
+    ]
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "event_id": pa.array([1, 2], pa.int64()),
+                "user_id": pa.array([7, 7], pa.int64()),
+                "ts": pa.array(ts, pa.timestamp("us")),
+            }
+        ),
+        path,
+    )
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM parquet_scan('{path}')")
+    sql = oracle_sql()["q_session_window"]
+    assert len(con.execute(sql).fetchall()) == 2
+    ok, msg = compare_spark_duckdb(q_session_window(spark, str(tmp_path)), con, sql)
+    assert ok, msg
+
+
 def test_twin_stream_stream_join(spark):
     events = load_table(spark, SF_SMALL, "events")
     c = events.filter(F.col("event_type") == "click").alias("c")

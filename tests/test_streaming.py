@@ -649,7 +649,7 @@ def test_manifest_stream_append_txn_idempotent(spark, tmp_path):
     with cfs.open_input(cfs.join(root, MANIFEST)) as fh:
         m_before = json.loads(fh.read().decode())
     assert m_before["streams"]["ingest-a"] == 1  # both batches recorded
-    gen_before = m_before["generation"]
+    gen_before = m_before["gen"]
 
     # kill between MANIFEST commit and CHECKPOINT commit, then replay: the
     # txn record must absorb the re-delivery — contents AND generation
@@ -663,7 +663,7 @@ def test_manifest_stream_append_txn_idempotent(spark, tmp_path):
     assert contents(streamed) == want
     with cfs.open_input(cfs.join(root, MANIFEST)) as fh:
         m_after = json.loads(fh.read().decode())
-    assert m_after["generation"] == gen_before
+    assert m_after["gen"] == gen_before
     assert m_after["streams"]["ingest-a"] == 1
 
 

@@ -566,7 +566,8 @@ def test_put_json_if_absent_race_one_winner(tmp_path):
 def test_legacy_versions_json_migrates_into_commit_log(spark, vt):
     """A table whose root predates the OCC log (only _versions.json) loads
     correctly, and its next commit seeds _commits/ from the cached state."""
-    from dbt_parquet_spark.versioned import COMMITS_DIR, _load_manifest
+    from dbt_parquet_spark.commitlog import COMMITS_DIR
+    from dbt_parquet_spark.versioned import _load_manifest
 
     catalog, rel = vt
     write_versioned(spark, catalog, rel, spark.range(5))
@@ -1146,11 +1147,8 @@ def test_snapshot_resolution_survives_lost_cache_refresh(spark, vt):
     the cache write) must not serve stale state: the walk-forward probe
     finds the newer commits. A pointer stale beyond the vacuumed log tail
     falls back to the authoritative LIST."""
-    from dbt_parquet_spark.versioned import (
-        VERSIONS_MANIFEST,
-        _commit_path,
-        _load_manifest,
-    )
+    from dbt_parquet_spark.commitlog import commit_path
+    from dbt_parquet_spark.versioned import VERSIONS_MANIFEST, _load_manifest
 
     catalog, rel = vt
     io = catalog.io
@@ -1166,7 +1164,7 @@ def test_snapshot_resolution_survives_lost_cache_refresh(spark, vt):
     assert set(_ids(read_versioned(spark, catalog, rel))) == set(range(8)) - {3}
     # pointer beyond the pruned tail: delete its commit file, expect LIST path
     io.put_json_atomic(io.join(root, VERSIONS_MANIFEST), stale_cache)
-    io.remove_any(_commit_path(io, root, 1))
+    io.remove_any(commit_path(io, root, 1))
     m = _load_manifest(catalog, rel)
     assert m["gen"] == 3 and m["current"] == 3
 
