@@ -148,8 +148,9 @@ EXTENSION_HEADLINE = [
     "q_substring_evidence",
     "q_retrieval_eval",
     # ANN-PQ joins the headliners now that the codes table is materialized
-    # (build_pq_index): recorded min-of-3 is the encode-free steady state;
-    # the one-time index build lands in the first (discarded) rep.
+    # (build_pq_index commits it once per session; every probe reads the
+    # manifest's file list): recorded min-of-3 is the encode-free steady
+    # state; the one-time index build lands in the first (discarded) rep.
     "q_ann_pq",
     "q_ann_ivf_pq",
     # r11 gates & serving: the skew diagnostic (two corpus shuffles), the

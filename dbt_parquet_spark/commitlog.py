@@ -9,13 +9,17 @@ commit sits on disk. Each publisher binds it to a root plus the name of its
 cache file and keeps only what is really its own: the manifest's contents,
 each mutator's retry policy, and the vacuum of its data files.
 
-Layout under a publisher's root:
+Layout under a publisher's root, for a cache file ``<name>.json``:
 
-- ``_commits/<gen:012d>.json`` — generation ``gen``'s full manifest, written
+- ``_commits<name>/<gen:012d>.json`` — generation ``gen``'s full manifest
+  (``_commits_versions/`` for ``_versions.json``), written
   put-if-absent (``CatalogFS.put_json_if_absent``: one ``os.link`` locally,
   a conditional PUT on object stores with a hook). Writers racing one
   generation get exactly one winner, and a commit file is never torn. The
   log is authoritative: a generation is committed once its file exists.
+  Deriving the log directory from the cache name binds each log to its
+  publisher, so an ANN index committed inside a catalog relation is never
+  mistaken for a versioned table.
 - ``<cache>`` (``_versions.json``, ``_manifest.json``) — a copy of the newest
   manifest, refreshed after each commit. It doubles as the checkpoint
   pointer that keeps ``load`` O(1) at any history length (the Delta
@@ -37,18 +41,22 @@ from typing import Callable
 
 from .fs import CatalogFS, ConcurrentWriteError
 
-COMMITS_DIR = "_commits"
 COMMIT_GRACE = 3  # trim keeps this many trailing commit files
 STAGE_PREFIX = ".stage_"
 
 
-def commit_path(io: CatalogFS, root: str, gen: int) -> str:
-    return io.join(root, COMMITS_DIR, f"{gen:012d}.json")
+def log_dir(cache: str) -> str:
+    """The log directory of the publisher whose cache file is ``cache``."""
+    return "_commits" + posixpath.splitext(cache)[0]
 
 
-def _gens(io: CatalogFS, root: str) -> list[int]:
+def commit_path(io: CatalogFS, root: str, cache: str, gen: int) -> str:
+    return io.join(root, log_dir(cache), f"{gen:012d}.json")
+
+
+def _gens(io: CatalogFS, root: str, cache: str) -> list[int]:
     """The generations present in the log, ascending (one LIST)."""
-    commits = io.join(root, COMMITS_DIR)
+    commits = io.join(root, log_dir(cache))
     if not io.isdir(commits):
         return []
     return sorted(
@@ -73,17 +81,17 @@ def load(io: CatalogFS, root: str, cache: str) -> dict | None:
     cached = io.get_json(cache_path) if io.exists(cache_path) else None
     if cached is not None and int(cached.get("gen", 0)) >= 1:
         g = int(cached["gen"])
-        if io.exists(commit_path(io, root, g)):
+        if io.exists(commit_path(io, root, cache, g)):
             ahead = g
-            while io.exists(commit_path(io, root, ahead + 1)):
+            while io.exists(commit_path(io, root, cache, ahead + 1)):
                 ahead += 1
             if ahead == g:
                 return cached  # the cache IS the newest commit
-            return dict(io.get_json(commit_path(io, root, ahead)), gen=ahead)
+            return dict(io.get_json(commit_path(io, root, cache, ahead)), gen=ahead)
         # pointer older than the trimmed tail: authoritative LIST below
-    gens = _gens(io, root)
+    gens = _gens(io, root, cache)
     if gens:
-        return dict(io.get_json(commit_path(io, root, gens[-1])), gen=gens[-1])
+        return dict(io.get_json(commit_path(io, root, cache, gens[-1])), gen=gens[-1])
     if cached is not None:
         cached.setdefault("gen", 0)
     return cached
@@ -101,8 +109,8 @@ def commit(
         expect_gen = int(m.get("gen", 0))
     gen = expect_gen + 1
     m = dict(m, gen=gen)
-    io.makedirs(io.join(root, COMMITS_DIR))
-    if not io.put_json_if_absent(commit_path(io, root, gen), m):
+    io.makedirs(io.join(root, log_dir(cache)))
+    if not io.put_json_if_absent(commit_path(io, root, cache, gen), m):
         raise ConcurrentWriteError(
             f"{root}: generation {gen} was committed by another writer (this "
             f"writer loaded gen {expect_gen}); nothing committed — reload and retry"
@@ -155,22 +163,23 @@ def stage(
 def trim(
     io: CatalogFS,
     root: str,
+    cache: str,
     young: Callable[[str], bool] | None = None,
     dry_run: bool = False,
 ) -> list[str]:
     """Delete superseded commit files, keeping the newest COMMIT_GRACE so a
     reader between its log LIST and its newest-commit GET never loses the
     file. A file for which ``young(fs_path)`` is true is kept. Returns the
-    deleted files as ``_commits/<gen>.json`` paths relative to ``root``;
+    deleted files as ``<log dir>/<gen>.json`` paths relative to ``root``;
     ``dry_run`` deletes nothing and returns the same list."""
     deleted = []
-    for g in _gens(io, root)[:-COMMIT_GRACE]:
-        p = commit_path(io, root, g)
+    for g in _gens(io, root, cache)[:-COMMIT_GRACE]:
+        p = commit_path(io, root, cache, g)
         if young is not None and young(p):
             continue
         if not dry_run:
             io.remove_any(p)
-        deleted.append(f"{COMMITS_DIR}/{g:012d}.json")
+        deleted.append(f"{log_dir(cache)}/{g:012d}.json")
     return deleted
 
 
@@ -178,4 +187,4 @@ def committed(io: CatalogFS, root: str, cache: str) -> bool:
     """True when ``root`` holds a commit: its cache file or a log entry. The
     cache alone is not enough to decide, because it is written after the
     commit and a crash between the two leaves only the log."""
-    return io.exists(io.join(root, cache)) or bool(_gens(io, root))
+    return io.exists(io.join(root, cache)) or bool(_gens(io, root, cache))

@@ -1,21 +1,21 @@
 """Integrity verification (fsck) for the materialized IVF-PQ ANN index.
 
-The index lifecycle mutates a lake table in place: builds CTAS-publish it,
-appends land new part files inside live ``cell=`` directories, compaction
-rewrites cells, rebuilds retrain and re-encode, streaming ingest replays
-micro-batches, and the manifest protocol stages-then-commits. Every one of
-those writers is individually tested — but a 100 TB index outlives any one
-writer, and the failure modes that survive testing are OPERATIONAL: a
-replayed job that wasn't idempotent (duplicate vec_ids), a file restored
-into the wrong partition directory (cell no longer matches its vectors), a
-rebuild that swapped codes but left a stale artifacts sidecar (codes no
-longer decodable with the shipped codebooks), crash debris no manifest
-references. ``verify_pq_index`` is the one-pass audit that catches all of
-them: ONE distributed scan of the index recomputes every row's cell
-assignment and PQ codes from the stored vector under the sidecar artifacts
-and compares them to what the file claims, plus driver-side footer/sidecar/
-manifest structure checks. Output is a tiny per-check report frame — the
-shape a scheduler alerts on.
+The index lifecycle mutates a lake table in place: builds commit it,
+appends commit new part files inside live ``cell=`` directories, compaction
+rewrites cells, rebuilds retrain and re-encode, and streaming ingest replays
+micro-batches — every one of them stages files, then commits a manifest
+(operators/index_manifest.py). Every one of those writers is individually
+tested — but a 100 TB index outlives any one writer, and the failure modes
+that survive testing are OPERATIONAL: a replayed job that wasn't idempotent
+(duplicate vec_ids), a file restored into the wrong partition directory
+(cell no longer matches its vectors), a rebuild that swapped codes but left
+a stale artifacts sidecar (codes no longer decodable with the shipped
+codebooks), crash debris no manifest references. ``verify_pq_index`` is
+the one-pass audit that catches all of them: ONE distributed scan of the
+index recomputes every row's cell assignment and PQ codes from the stored
+vector under the sidecar artifacts and compares them to what the file
+claims, plus driver-side footer/sidecar/manifest structure checks. Output
+is a tiny per-check report frame — the shape a scheduler alerts on.
 
 This module is part of the beyond-reference LLM-pipeline surface (the
 reference adapter, AlexanderVR/dbt-parquet, has no index machinery — its
@@ -41,7 +41,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from .. import commitlog
 from ..registry import register
 
 REPORT_SCHEMA = StructType(
@@ -54,11 +53,9 @@ REPORT_SCHEMA = StructType(
     ]
 )
 
-# status vocabulary: ok | fail | warn | skipped
+# status vocabulary: ok | fail | warn
 #  - warn: not corruption, but attention-worthy (crash orphans awaiting
-#    manifest_vacuum; sidecar missing so the memoized trainers were used)
-#  - skipped: the check's substrate isn't present (no committed manifest on a
-#    listing-protocol index)
+#    manifest_vacuum)
 
 
 def _report_row(check: str, ok, observed, expected, detail: str, warn: bool = False):
@@ -94,55 +91,40 @@ def verify_pq_index(
     - ``manifest_coverage`` on-disk data files are committed or retired
                            (orphans → warn: vacuum's job, not corruption)
     """
+    from .index_manifest import _artifacts, _open
     from .kmeans import assign_udf
-    from .similarity import (
-        PQ_K,
-        PQ_M,
-        _books_literal,
-        _pq_encode,
-        build_pq_index,
-        read_pq_index,
+    from .similarity import PQ_K, PQ_M, _books_literal, _pq_encode
+
+    # one manifest load for the whole report: codes, artifacts and file
+    # lists all come from the same committed generation. All filesystem IO
+    # goes through the catalog's pyarrow.fs layer, so the fsck works on
+    # file:// / s3:// roots too.
+    cfs, root, m = _open(spark, sf_dir, path)
+    cents, books = _artifacts(cfs, root, m)
+
+    # scan what READERS of this index observe: the committed snapshot
+    # (staged/orphan files are invisible there — they're the manifest
+    # checks' job). Committed-but-missing files are the data-loss case
+    # manifest_files reports; the scan must survive them, so it reads the
+    # existing subset rather than read_pq_index's strict file list.
+    present = {
+        (c, f)
+        for c, files in m["cells"].items()
+        for f in files
+        if cfs.exists(cfs.join(root, f"cell={c}", f))
+    }
+    if not present:  # total data loss: nothing left to scan
+        rows = [_report_row("row_count", False, 0, None, "index rows scanned")]
+        rows.append(_verify_sidecar(cents, books))
+        rows.extend(_verify_manifest(cfs, root, m, present))
+        return spark.createDataFrame(rows, REPORT_SCHEMA)
+    idx = (
+        spark.read.option("basePath", cfs.spark_url(root))
+        .parquet(*[
+            cfs.spark_url(cfs.join(root, f"cell={c}", f)) for c, f in sorted(present)
+        ])
+        .withColumn("cell", F.col("cell").cast("long"))
     )
-
-    from .index_manifest import MANIFEST, _ifs, _load, manifest_artifacts
-
-    resolved = path if path is not None else build_pq_index(spark, sf_dir)
-    # all filesystem IO through the catalog's pyarrow.fs layer (the
-    # index_manifest posture): the fsck works on file:// / s3:// roots too
-    cfs, root = _ifs(resolved)
-    # manifest_artifacts honors a manifest_rebuild's atomic artifacts
-    # pointer and falls back to the plain sidecar / memoized trainers
-    cents, books = manifest_artifacts(spark, sf_dir, resolved)
-
-    # scan what READERS of this index observe: the committed manifest
-    # snapshot when the manifest protocol owns the index (staged/orphan
-    # files are invisible there — they're the manifest checks' job), the
-    # directory listing otherwise. Committed-but-missing files are the
-    # data-loss case manifest_files reports; the scan must survive them,
-    # so it reads the existing subset rather than manifest_read's strict
-    # file list.
-    if commitlog.committed(cfs, root, MANIFEST):
-        m = _load(cfs, root)
-        existing = [
-            p
-            for c, files in m["cells"].items()
-            for f in files
-            if cfs.exists(p := cfs.join(root, f"cell={c}", f))
-        ]
-        if not existing:  # total data loss: nothing left to scan
-            rows = [
-                _report_row("row_count", False, 0, None, "index rows scanned")
-            ]
-            rows.append(_verify_sidecar(cfs, root, cents, books))
-            rows.extend(_verify_manifest(cfs, root))
-            return spark.createDataFrame(rows, REPORT_SCHEMA)
-        idx = (
-            spark.read.option("basePath", cfs.spark_url(root))
-            .parquet(*[cfs.spark_url(p) for p in existing])
-            .withColumn("cell", F.col("cell").cast("long"))
-        )
-    else:
-        idx = read_pq_index(spark, sf_dir, path=resolved)
     renamed = idx.select(
         "vec_id",
         "embedding",
@@ -223,33 +205,14 @@ def verify_pq_index(
             "sidecar codebooks — stale sidecar or foreign codes",
         ),
     ]
-    rows.append(_verify_sidecar(cfs, root, cents, books))
-    rows.extend(_verify_manifest(cfs, root))
+    rows.append(_verify_sidecar(cents, books))
+    rows.extend(_verify_manifest(cfs, root, m, present))
     return spark.createDataFrame(rows, REPORT_SCHEMA)
 
 
-def _verify_sidecar(cfs, root: str, cents, books):
-    from .index_manifest import MANIFEST, _load
-    from .similarity import _ARTIFACTS_FILE, PQ_K, PQ_M, PQ_SUB
+def _verify_sidecar(cents, books):
+    from .similarity import PQ_K, PQ_M, PQ_SUB
 
-    f = cfs.join(root, _ARTIFACTS_FILE)
-    if commitlog.committed(cfs, root, MANIFEST):
-        # a manifest artifacts pointer supersedes the plain sidecar
-        pointed = _load(cfs, root).get("artifacts")
-        if pointed:
-            f = cfs.join(root, pointed)
-    if not cfs.exists(f):
-        # verification fell back to the memoized per-corpus trainers; the
-        # audit above is still sound, but the index isn't self-describing
-        return _report_row(
-            "artifacts_sidecar",
-            False,
-            0,
-            1,
-            "no _ann_artifacts.json — index is not self-describing "
-            "(pre-sidecar handle); verified against the memoized trainers",
-            warn=True,
-        )
     dims_ok = (
         len(books) == PQ_M
         and all(len(b) == PQ_K for b in books)
@@ -267,27 +230,13 @@ def _verify_sidecar(cfs, root: str, cents, books):
     )
 
 
-def _verify_manifest(cfs, root: str):
-    from .index_manifest import MANIFEST, _load
-
-    if not commitlog.committed(cfs, root, MANIFEST):
-        skip = (
-            "listing-protocol index (no committed manifest)",
-        )
-        return [
-            ("manifest_files", "skipped", None, None, skip[0]),
-            ("manifest_coverage", "skipped", None, None, skip[0]),
-        ]
-    m = _load(cfs, root)
+def _verify_manifest(cfs, root: str, m: dict, present: set):
+    """``present``: the committed (cell, file) pairs found on disk."""
     committed = {
         (c, f) for c, files in m["cells"].items() for f in files
     }
     retired = {(c, f) for c, f in m.get("retired", [])}
-    missing = [
-        (c, f)
-        for c, f in sorted(committed)
-        if not cfs.exists(cfs.join(root, f"cell={c}", f))
-    ]
+    missing = committed - present
     on_disk = set()
     for entry in cfs.listdir(root):
         if not entry.startswith("cell="):

@@ -20,6 +20,7 @@ from .. import memo
 from ..functions.vector import cosine, dot, norm
 from ..registry import register
 from ..sources.readers import load_table, table_row_count
+from .index_manifest import _artifacts, _open, _scan, read_pq_index
 
 TOP_K = 5
 N_QUERIES = 3  # vec_id < 3 are the query vectors
@@ -583,11 +584,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells.)
 
     Scale: the quantizer is tiny and broadcast; search cost drops from
-    O(Q·N) to O(Q·N·nprobe/cells) — and since r9 the probed cells are READ
-    as partitions of the materialized index (build_pq_index stores the raw
-    vectors next to the codes), so the unprobed majority of the corpus is
-    never opened: FAISS IVFFlat's layout as an actual lake table, with the
-    probe as PartitionFilters (plan-gated).
+    O(Q·N) to O(Q·N·nprobe/cells) — and the probed cells are READ from the
+    materialized index (build_pq_index stores the raw vectors next to the
+    codes), so the unprobed majority of the corpus is never opened: FAISS
+    IVFFlat's layout as an actual lake table, with the probe as the scan's
+    explicit file list (plan-gated).
     """
     from .kmeans import probe_udf
 
@@ -604,10 +605,10 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cell"),
         )
     )
-    # probed cells -> static partition filter on the materialized index;
+    # probed cells -> the probed cells' files of the materialized index;
     # the search never touches an unprobed cell's bytes (the stored raw
-    # vectors make the exact scoring read index partitions, not the base
-    # table — FAISS IVFFlat's storage layout as a lake table)
+    # vectors make the exact scoring read index files, not the base table —
+    # FAISS IVFFlat's storage layout as a lake table)
     probed = sorted({r.cell for r in q.select("cell").distinct().collect()})
     assigned = read_pq_index(spark, sf_dir, cells=probed).select(
         "vec_id", "embedding", "cell"
@@ -807,194 +808,19 @@ def fit_pq_codebooks(emb: DataFrame, spread: bool = False) -> list[list[list[flo
     return [[[float(x) for x in c] for c in b] for b in books]
 
 
-def _lifecycle_index(spark: SparkSession, sf_dir: str) -> str:
-    """The mutable index for default-path lifecycle ops (append/compact):
-    a byte-for-byte clone of the immutable base, created on first touch
-    and memoized per sf_dir. Registered queries keep reading the base, so
-    lifecycle mutation can never drift their results mid-session.
-    Local-FS clone (the default index lives in a scratch dir); an explicit
-    ``path=`` handle bypasses this entirely."""
-    import shutil
-
-    def build() -> str:
-        base = build_pq_index(spark, sf_dir)
-        src = base[len("file:"):] if base.startswith("file:") else base
-        dst = memo.scratch_dir(spark, "pq_index_lifecycle_")
-        shutil.copytree(src, dst, dirs_exist_ok=True)
-        return dst
-
-    return memo.scaffold(spark, "similarity.pq_lifecycle", sf_dir, build)
-
-
-def build_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    catalog=None,
-    rel=None,
-) -> str:
-    """Encode-once / scan-many: materialize the IVF-PQ index as a real
-    table ``(vec_id, embedding, codes: array<int>, cell)`` written
-    hive-partitioned by ``cell`` via the CTAS machinery (materialize.create_table_as with
-    partition_by — the atomic write-then-swap publish). This is the FAISS
-    IVFPQ storage layout as a lake table: the coarse-quantizer cell is the
-    partition directory, so a probe of nprobe cells becomes PartitionFilters
-    at the scan — unprobed cells are never opened, not even their footers.
-
-    The encode (PQ_M x PQ_K centroid folds per vector) runs ONCE per corpus
-    here instead of inline in every query; q_ann_pq / q_ann_ivf_pq scan the
-    4-byte-per-vector codes instead of re-deriving them (at 100 TB this is
-    the difference between a one-off indexing job and re-paying the encode
-    per query batch). Codes and cell assignments are byte-identical to the
-    former inline computation (same expressions, ints through parquet), so
-    query results are unchanged — pinned by the recall/soundness tests.
-
-    The raw vector is stored alongside the codes so every consumer reads
-    ONLY index partitions: IVF's exact scoring and the PQ rerank pull
-    vectors from the probed cells' files (column-pruned — an ADC scan
-    reads codes without vectors, an IVF scan vectors without codes,
-    plan-gated), and the base embeddings table is touched only for the
-    query vectors themselves.
-
-    Pass ``catalog``/``rel`` to publish into a user catalog; a catalog
-    build is the caller's relation (droppable, renamable) and is NOT
-    installed as the process default — registered queries keep reading
-    the memoized base build, so a user dropping their copy can't break
-    them. The default build lands in a scratch database memoized per
-    sf_dir and is IMMUTABLE: default-path append/compact operate on a
-    lifecycle clone (_lifecycle_index).
-    Returns the Spark-readable path of the codes table."""
-    from ..catalog import FilesystemCatalog
-
-    if catalog is None:
-        def build() -> str:
-            cat = FilesystemCatalog(memo.scratch_dir(spark, "pq_index_"))
-            return _write_pq_index(spark, sf_dir, cat, cat.relation("pq_codes"))
-
-        return memo.scaffold(spark, "similarity.pq_index", sf_dir, build)
-    return _write_pq_index(spark, sf_dir, catalog, rel or catalog.relation("pq_codes"))
-
-
-def _write_pq_index(spark: SparkSession, sf_dir: str, catalog, rel) -> str:
-    from ..materialize import create_table_as
-
-    from .kmeans import assign_udf
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    cents = train_ivf_quantizer(spark, sf_dir)
-    books = train_pq_codebooks(spark, sf_dir)
-    assigned = emb.select(
-        "vec_id", "embedding", assign_udf(cents)(F.col("embedding")).alias("cell")
-    )
-    codes = _pq_encode(
-        assigned.select("vec_id", "cell", "embedding"), _books_literal(books),
-        keep_embedding=True,
-    )
-    # one shuffle by cell before the write: each cell lands in exactly ONE
-    # task, so the layout is ONE file per cell at any write parallelism —
-    # without this, every task writes a sliver of every cell and a probed
-    # read opens tasks x nprobe files (25x more footers at the sf10 sweep)
-    create_table_as(
-        spark, catalog, rel, codes.repartition("cell"),
-        partition_by=["cell"], register=False,
-    )
-    path = rel.path
-    # the fitted artifacts travel WITH the index (underscore-prefixed, so
-    # Spark's listing ignores the file like _SUCCESS): any session holding
-    # just the path handle — and any post-rebuild consumer — encodes and
-    # probes with the artifacts that match these codes, not a retrain.
-    _write_artifacts(path, cents, books)
-    return path
-
-
-def append_to_pq_index(
-    spark: SparkSession, sf_dir: str, delta: DataFrame, path: str | None = None
-) -> str:
-    """Incremental index update: encode a delta of new vectors with the
-    FROZEN fitted quantizer and codebooks (standard ANN index practice —
-    FAISS add() after train(); retraining is a separate offline rebuild)
-    and append them into their cell partitions of the materialized index.
-
-    The delta lands as new part files inside the existing ``cell=``
-    directories, so consumers' partition pruning, column pruning, and plan
-    gates apply unchanged — a probe that never touches a cell never sees
-    its new files either. Cost is delta-proportional: assignment +
-    encode are map-only over the delta; no existing file is read or
-    rewritten (the incremental_dedup delta-discipline, applied to index
-    maintenance).
-
-    ``delta`` must carry (vec_id, embedding). ``path`` is the index handle
-    to mutate (from build_pq_index(catalog=...) or a prior append); when
-    omitted the append goes to the LIFECYCLE clone of the base — never to
-    the immutable base itself, so the registered ANN queries (which read
-    the base) cannot silently change results after a lifecycle append.
-    Returns the path of the mutated index — read it back with
-    ``read_pq_index(..., path=...)``."""
-    from .kmeans import assign_udf
-
-    if path is None:
-        path = _lifecycle_index(spark, sf_dir)
-    # the index's OWN artifacts (sidecar), so an append after a rebuild
-    # encodes with the retrained codebooks; memoized-trainer fallback for
-    # pre-sidecar handles
-    cents, books = _index_artifacts(spark, sf_dir, path)
-    assigned = delta.select(
-        "vec_id", "embedding", assign_udf(cents)(F.col("embedding")).alias("cell")
-    )
-    codes = _pq_encode(
-        assigned.select("vec_id", "cell", "embedding"), _books_literal(books),
-        keep_embedding=True,
-    )
-    # cell-clustered like the build: one new file per touched cell per append
-    codes.repartition("cell").write.mode("append").partitionBy("cell").parquet(path)
-    return path
-
-
-# --- Index freshness: artifacts sidecar, recall-drift audit, rebuild ---------
+# --- Index freshness: recall-drift audit ------------------------------------
 #
-# append_to_pq_index encodes deltas with FROZEN artifacts (FAISS add()-
-# after-train() semantics) — correct, but as the delta fraction grows, or
-# if the delta's distribution drifts from what the quantizer/codebooks were
-# fitted on, recall degrades SILENTLY: the index keeps answering, just
-# worse. The repo monitors source drift (q_source_drift); this block makes
-# it monitor its own index the same way — measure recall@k of the
-# production probe path against exact brute force over the index's own
-# stored vectors, and expose a threshold-gated offline rebuild.
+# append_to_pq_index (operators/index_manifest.py, the index's storage API)
+# encodes deltas with FROZEN artifacts (FAISS add()-after-train()
+# semantics) — correct, but as the delta fraction grows, or if the delta's
+# distribution drifts from what the quantizer/codebooks were fitted on,
+# recall degrades SILENTLY: the index keeps answering, just worse. The repo
+# monitors source drift (q_source_drift); this block makes it monitor its
+# own index the same way — measure recall@k of the production probe path
+# against exact brute force over the index's own stored vectors. The
+# threshold-gated actuator is rebuild_pq_index.
 
-_ARTIFACTS_FILE = "_ann_artifacts.json"
 RECALL_AUDIT_SAMPLE_1_IN = 8  # deterministic 1-in-8 xxhash query panel
-
-
-def _local_root(path: str) -> str:
-    return path[len("file:"):] if path.startswith("file:") else path
-
-
-def _write_artifacts(path: str, cents, books) -> None:
-    """Persist the fitted (centroids, codebooks) next to the codes they
-    produced. JSON doubles round-trip exactly (repr shortest-string, the
-    _dense_lit argument), so a reload encodes bit-identically. KB-to-MB
-    scale at any clamp (65536 cells x 64 dims ~ a few hundred MB worst
-    case — move to a parquet sidecar if that clamp is ever reached)."""
-    import json
-    import os
-
-    with open(os.path.join(_local_root(path), _ARTIFACTS_FILE), "w") as fh:
-        json.dump({"centroids": cents, "codebooks": books}, fh)
-
-
-def _index_artifacts(spark: SparkSession, sf_dir: str, path: str | None):
-    """The fitted artifacts that MATCH an index's codes: the sidecar if the
-    handle carries one (builds and rebuilds write it; the lifecycle clone
-    copies it), else the memoized per-corpus trainers."""
-    import json
-    import os
-
-    if path is not None:
-        f = os.path.join(_local_root(path), _ARTIFACTS_FILE)
-        if os.path.exists(f):
-            with open(f) as fh:
-                a = json.load(fh)
-            return a["centroids"], a["codebooks"]
-    return train_ivf_quantizer(spark, sf_dir), train_pq_codebooks(spark, sf_dir)
 
 
 def index_recall_audit(
@@ -1012,8 +838,8 @@ def index_recall_audit(
     so drift concentrated in a delta region is visible, not averaged away
     at the sampling step. Returns (query_id, n_hits, n_true, recall).
 
-    Scale: the approximate side costs one probed index read (partition-
-    pruned, same as production). The exact side is the honest price of
+    Scale: the approximate side costs one probed index read (pruned to
+    the probed cells' files, same as production). The exact side is the honest price of
     ground truth — panel x corpus cosines — bounded by the sample rate and
     run as a broadcast of the KB-scale panel against a single corpus scan
     (top-k via the rank<=k window that rewrites to map-side
@@ -1021,8 +847,11 @@ def index_recall_audit(
     panel never shuffles the corpus."""
     from .kmeans import probe_udf
 
-    idx = read_pq_index(spark, sf_dir, path=path)
-    cents, books = _index_artifacts(spark, sf_dir, path)
+    # one manifest load: the panel, the probed scan and the artifacts all
+    # come from the same committed generation
+    cfs, root, m = _open(spark, sf_dir, path)
+    idx = _scan(spark, cfs, root, m)
+    cents, books = _artifacts(cfs, root, m)
     adc = _adc_udf(books)
     q = idx.filter(
         F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(int(sample_1_in))) == 0
@@ -1034,7 +863,7 @@ def index_recall_audit(
         F.explode(probe_udf(cents, ivf_nprobe(len(cents)))(F.col("qe"))).alias("cell"),
     )
     probed = sorted({r.cell for r in probes.select("cell").distinct().collect()})
-    pruned = read_pq_index(spark, sf_dir, cells=probed, path=path)
+    pruned = _scan(spark, cfs, root, m, probed)
     scanned = (
         pruned.select("vec_id", "codes", "cell")
         .join(F.broadcast(probes), "cell")
@@ -1178,197 +1007,6 @@ def q_index_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         out = row if out is None else out.unionByName(row)
     return out
-
-
-def rebuild_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    path: str | None = None,
-    recall_threshold: float | None = None,
-) -> dict:
-    """Threshold-gated offline rebuild — the drift monitor's actuator.
-
-    With ``recall_threshold``, the recall audit runs first and a fresh-
-    enough index (mean recall >= threshold) is left untouched. Otherwise
-    the quantizer and codebooks are RETRAINED on the index's CURRENT
-    contents (deltas included — the whole point: the frozen artifacts are
-    what went stale), every row is re-encoded, and the result is published
-    by atomic directory swap (the _compact_cell protocol at whole-index
-    scope, retrained artifacts staged INSIDE the new directory so the
-    publish is atomic including the sidecar). Subsequent appends on this
-    handle encode with the retrained codebooks via _index_artifacts.
-
-    Returns {"path", "recall", "rebuilt"}; ``recall`` is the pre-rebuild
-    audit mean (None when no threshold was given — unconditional rebuild).
-    Run ONE maintainer at a time per index (the compact_pq_index rule)."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    from .kmeans import assign_udf
-
-    if path is None:
-        path = _lifecycle_index(spark, sf_dir)
-    recall_before = None
-    if recall_threshold is not None:
-        row = index_recall_audit(spark, sf_dir, path=path).agg(
-            F.avg("recall").alias("m")
-        ).collect()[0]
-        recall_before = float(row.m) if row.m is not None else 1.0
-        if recall_before >= recall_threshold:
-            return {"path": path, "recall": recall_before, "rebuilt": False}
-    rows = read_pq_index(spark, sf_dir, path=path).select("vec_id", "embedding")
-    # persist barrier: the retrain + encode pipeline reads this frame many
-    # times (count, init collect, Lloyd rounds, codebook rounds, encode)
-    rows = rows.persist()
-    rows.count()
-    try:
-        # spread (farthest-point) inits: the rebuild exists BECAUSE the
-        # distribution drifted — a lowest-id init from the original region
-        # would capture the drifted mass with one unsplittable centroid
-        cents = fit_ivf_quantizer(rows, spread=True)
-        books = fit_pq_codebooks(rows, spread=True)
-        assigned = rows.select(
-            "vec_id", "embedding", assign_udf(cents)(F.col("embedding")).alias("cell")
-        )
-        codes = _pq_encode(
-            assigned.select("vec_id", "cell", "embedding"), _books_literal(books),
-            keep_embedding=True,
-        )
-        root = _local_root(path)
-        parent = os.path.dirname(root.rstrip("/"))
-        tmp = os.path.join(parent, f".rebuild_{_uuid.uuid4().hex[:8]}")
-        codes.repartition("cell").write.partitionBy("cell").parquet(tmp)
-        _write_artifacts(tmp, cents, books)
-    finally:
-        rows.unpersist()
-    trash = os.path.join(parent, f".trash_{_uuid.uuid4().hex[:8]}")
-    os.rename(root, trash)
-    os.rename(tmp, root)
-    shutil.rmtree(trash)
-    return {"path": path, "recall": recall_before, "rebuilt": True}
-
-
-def _compact_cell(
-    spark, root: str, cell_dir: str, max_files: int, after_snapshot=None, after_trash=None
-) -> None:
-    """Compact one cell directory with an atomic-publish protocol:
-
-    1. SNAPSHOT the cell's part-file list, then read exactly those files
-       (explicit leaf paths — a file appended after the snapshot is never
-       read, and therefore never deleted either: no lost-append window).
-    2. Write the coalesced replacement into a hidden ``.compact_*`` dir
-       under the index root (dot-prefixed, invisible to Spark listings).
-    3. Publish by DIRECTORY swap: rename the live cell dir to a hidden
-       trash dir, move any post-snapshot appends from trash into the new
-       dir, rename the new dir into place. Each rename is one atomic
-       syscall, so a reader lists either the old file set or the new one —
-       never both (the duplicate-rows window of the old rename-files-in-
-       then-delete protocol). The only exposure is the sub-ms gap between
-       the two renames, where the cell is briefly absent (a manifest-based
-       commit would close even that; POSIX has no multi-file atomic op).
-    4. Delete trash LAST — a crash at any earlier point leaves the live
-       tree duplicate-free, with all bytes recoverable from the hidden
-       dirs.
-
-    ``after_snapshot`` is a test seam invoked between snapshot+write and
-    the swap, and ``after_trash`` one invoked inside the swap window (after
-    the trash rename, before the publish rename) — both simulate a
-    concurrent append."""
-    import os
-    import shutil
-    import uuid as _uuid
-
-    snapshot = sorted(e for e in os.listdir(cell_dir) if e.endswith(".parquet"))
-    if len(snapshot) <= max_files:
-        return
-    tmp = os.path.join(root, f".compact_{_uuid.uuid4().hex[:8]}")
-    df = spark.read.parquet(*[os.path.join(cell_dir, e) for e in snapshot])
-    df.coalesce(max_files).write.mode("overwrite").parquet(tmp)
-    for e in os.listdir(tmp):  # drop _SUCCESS/.crc noise from the staged dir
-        if not e.endswith(".parquet") or e.startswith("."):
-            os.remove(os.path.join(tmp, e))
-    if after_snapshot is not None:
-        after_snapshot()
-    trash = os.path.join(root, f".trash_{_uuid.uuid4().hex[:8]}")
-    os.rename(cell_dir, trash)  # atomic: readers now see neither old nor dupes
-    for e in os.listdir(trash):  # carry over files appended after the snapshot
-        if e.endswith(".parquet") and e not in snapshot:
-            os.rename(os.path.join(trash, e), os.path.join(tmp, e))
-    if after_trash is not None:
-        after_trash()
-    try:
-        os.rename(tmp, cell_dir)  # atomic: readers see the complete new set
-    except OSError:
-        # A concurrent append recreated cell_dir inside the swap window.
-        # Fall back to a file-level merge into the recreated dir: part-file
-        # names are write-UUID-unique so nothing collides, the append's
-        # files are preserved, and no bytes are stranded in hidden dirs.
-        # The merge is not a single atomic publish (a reader can list a
-        # partial new set mid-merge) — the one-maintainer-at-a-time
-        # assumption in compact_pq_index's docstring is what makes this
-        # path a rare race-recovery rather than a steady state.
-        for e in sorted(os.listdir(tmp)):
-            os.rename(os.path.join(tmp, e), os.path.join(cell_dir, e))
-        os.rmdir(tmp)
-    shutil.rmtree(trash)  # delete last: no earlier crash point loses bytes
-
-
-def compact_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    max_files_per_cell: int = 1,
-    path: str | None = None,
-) -> str:
-    """Per-cell compaction after delta appends: each ``append_to_pq_index``
-    adds part files inside the touched cell directories, and small files
-    are the silent killer at scale (a task + footer read + listing entry
-    each). Only FRAGMENTED cells (more than ``max_files_per_cell`` files)
-    are rewritten; untouched cells' files are not read, not rewritten, not
-    even listed twice. Publication is per-cell atomic (see _compact_cell:
-    snapshot-scoped read, whole-directory rename swap, trash deleted last),
-    so concurrent probes never observe duplicated rows and a concurrent
-    append is carried over, not deleted (even one landing inside the swap
-    window — see _compact_cell's merge fallback). Run ONE maintainer at a
-    time per index: concurrent compactors of the SAME cell could each
-    publish a coalesced copy of the same snapshot (duplicates); appends
-    and readers need no coordination. The maintenance .compact discipline,
-    scoped to the hive layout.
-
-    ``path`` selects the index to compact (the handle returned by
-    build/append); default is the mutable lifecycle index that default-path
-    appends write to, so the registered-query base is never rewritten.
-    Returns the compacted index's path.
-    Contents are unchanged — pinned by test."""
-    import glob as _glob
-    import os
-
-    if path is None:
-        path = _lifecycle_index(spark, sf_dir)
-    root = path[len("file:"):] if path.startswith("file:") else path
-    for cell_dir in sorted(_glob.glob(os.path.join(root, "cell=*"))):
-        _compact_cell(spark, root, cell_dir, max_files_per_cell)
-    return path
-
-
-def read_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    cells: list[int] | None = None,
-    path: str | None = None,
-) -> DataFrame:
-    """Scan the materialized codes table (building it on first touch).
-    ``cells`` applies the probe filter on the PARTITION column before
-    anything else, so the scan's PartitionFilters prune to exactly those
-    directories (plan-gated in tests/test_plans.py). Default target is the
-    IMMUTABLE base index (what the registered queries read); pass the
-    ``path`` handle returned by append/compact to read a mutated index."""
-    idx = spark.read.parquet(path if path is not None else build_pq_index(spark, sf_dir))
-    if cells is not None:
-        idx = idx.filter(F.col("cell").isin([int(c) for c in cells]))
-    # the hive partition column reads back as int; restore the long the
-    # inline array_position produced so downstream joins are unchanged
-    return idx.withColumn("cell", F.col("cell").cast("long"))
 
 
 @register("q_ann_pq", tags=("similarity", "ann", "pq"))
@@ -1531,10 +1169,10 @@ def q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     than raw floats), so a 100 TB corpus scans ~0.5 TB of codes at
     nprobe/cells=0.3. The codes come from the MATERIALIZED index
     (build_pq_index: encode once, hive-partitioned by cell), and the probe
-    set is applied as a static filter on the partition column, so the scan
-    prunes to exactly the probed cell directories (PartitionFilters,
-    plan-gated) — unprobed cells are never opened. Codebooks and centroids
-    stay KB-scale literals.
+    set selects the probed cells' files from the index manifest, so the
+    scan opens exactly those files (plan-gated) — unprobed cells are never
+    opened, not even listed. Codebooks and centroids stay KB-scale
+    literals.
     """
     return _ivf_pq_search(spark, sf_dir)
 
@@ -1570,8 +1208,8 @@ def _ivf_pq_search(
         )
     )
     # the probed cell set is queries x nprobe — driver-scale by definition
-    # (it IS the query plan); folding it into the index read as a static
-    # partition filter turns the probe into directory pruning at the scan.
+    # (it IS the query plan); folding it into the index read as the scan's
+    # file list turns the probe into file pruning at the scan.
     probed = sorted({r.cell for r in q.select("cell").distinct().collect()})
     pruned = read_pq_index(spark, sf_dir, cells=probed)
     candidates = pruned.select("vec_id", "codes", "cell")

@@ -669,106 +669,3 @@ def stream_substring_scrub_to_table(
         writer = writer.trigger(availableNow=True)
     return writer.start()
 
-
-def stream_append_to_pq_index(
-    spark: SparkSession,
-    sf_dir: str,
-    stream_df: DataFrame,
-    checkpoint_dir: str,
-    path: str | None = None,
-    available_now: bool = True,
-):
-    """Continuous vector ingest into the materialized ANN index: each
-    micro-batch of ``(vec_id, embedding)`` rows is encoded with the
-    index's OWN fitted artifacts (the ``_ann_artifacts.json`` sidecar —
-    append_to_pq_index's FROZEN add-after-train semantics, batched) and
-    lands as part files inside the touched ``cell=`` directories, so
-    consumers' partition pruning and plan gates apply to streamed rows the
-    moment their batch commits.
-
-    Exactly-once: the checkpoint guarantees no batch is skipped, and the
-    per-cell publish converges under replay (the _idempotent_batch_append
-    discipline, re-shaped for a hive-partitioned destination):
-
-    1. encode the batch and write it to a hidden ``.tmp_ingest_batch_{id}``
-       staging tree partitioned by cell (mode=overwrite: a replay rewrites
-       the same staging tree);
-    2. delete any ``batch-{id}-*`` files a previous partial attempt left in
-       ANY cell directory (attempts can differ in part counts);
-    3. move the staged files into their cell dirs under DETERMINISTIC
-       names (``batch-{id:010d}-{i:05d}.parquet``) — a replay overwrites
-       the same names instead of adding new ones;
-    4. drop the staging tree.
-
-    Encoding is deterministic (same artifacts, same rows -> same cells and
-    codes), so any crash point re-runs 1-4 and converges to one copy —
-    pinned by the kill-replay test.
-
-    Operational rules: ``path`` defaults to the LIFECYCLE clone (the
-    registered queries' immutable base is never mutated); the artifacts
-    are loaded once at wiring, so stop the ingest before rebuild_pq_index
-    swaps codebooks and restart it after (the single-maintainer rule);
-    pair with compact_pq_index on a schedule — every batch adds one file
-    per touched cell — and index_recall_audit to watch drift as the
-    streamed fraction grows. Local-FS rename semantics (the compaction
-    protocol's posture); an object store needs a manifest commit instead.
-    """
-    import glob as _glob
-    import shutil
-
-    from ..operators.kmeans import assign_udf
-    from ..operators.similarity import (
-        _books_literal,
-        _index_artifacts,
-        _lifecycle_index,
-        _local_root,
-        _pq_encode,
-    )
-
-    if path is None:
-        path = _lifecycle_index(spark, sf_dir)
-    root = _local_root(path)
-    cents, books = _index_artifacts(spark, sf_dir, path)
-    assign = assign_udf(cents)
-    books_lit = _books_literal(books)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        assigned = batch_df.select(
-            "vec_id", "embedding", assign(F.col("embedding")).alias("cell")
-        )
-        codes = _pq_encode(
-            assigned.select("vec_id", "cell", "embedding"), books_lit,
-            keep_embedding=True,
-        )
-        staging = os.path.join(root, f".tmp_ingest_batch_{batch_id}")
-        # cell-clustered (the build_pq_index layout rule): one file per
-        # touched cell per batch
-        codes.repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(staging)
-        marker = f"batch-{batch_id:010d}-"
-        for cell_dir in _glob.glob(os.path.join(root, "cell=*")):
-            for e in os.listdir(cell_dir):
-                if e.startswith(marker):
-                    os.remove(os.path.join(cell_dir, e))
-        for scell in sorted(_glob.glob(os.path.join(staging, "cell=*"))):
-            dest = os.path.join(root, os.path.basename(scell))
-            os.makedirs(dest, exist_ok=True)
-            parts = sorted(
-                e
-                for e in os.listdir(scell)
-                if e.startswith("part-") and e.endswith(".parquet")
-            )
-            for i, e in enumerate(parts):
-                os.rename(
-                    os.path.join(scell, e),
-                    os.path.join(dest, f"{marker}{i:05d}.parquet"),
-                )
-        shutil.rmtree(staging)
-
-    writer = stream_df.writeStream.foreachBatch(process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1595,7 +1595,7 @@ def vacuum_versions(
     # full snapshot). The dry run previews one FEWER pruned entry (the real
     # vacuum's own commit pushes a generation into the tail) — preview
     # counts are a floor, the conservative direction for a safety check.
-    deleted += commitlog.trim(io, root, dry_run=dry_run)
+    deleted += commitlog.trim(io, root, VERSIONS_MANIFEST, dry_run=dry_run)
     return sorted(deleted)
 
 

@@ -6,24 +6,29 @@
 
 Stages (each one an independently verified operator):
   1. build_pq_index      — train the coarse quantizer + PQ codebooks,
-                           CTAS the (vec_id, embedding, codes) table
-                           hive-partitioned by cell into a catalog
-                           (encode once; atomic publish)
-  2. q_ann_ivf_pq        — probe nprobe cells (PartitionFilters prune the
-                           scan to those directories), ADC-score the
-                           4-byte codes, exact-cosine rerank
+                           stage the (vec_id, embedding, codes) table
+                           hive-partitioned by cell into a catalog and
+                           commit it as manifest generation 1 (encode once)
+  2. q_ann_ivf_pq        — probe nprobe cells (the manifest lists the
+                           probed cells' files; the scan opens only those),
+                           ADC-score the 4-byte codes, exact-cosine rerank
   3. append_to_pq_index  — encode a delta of new vectors with the FROZEN
-                           fitted artifacts and append into their cell
-                           partitions (FAISS add-after-train, as a lake op)
+                           fitted artifacts, stage them into their cells
+                           and commit the next generation (FAISS
+                           add-after-train, as a lake op)
   4. q_hybrid_retrieval  — BM25 ⊕ dense cosine, reciprocal-rank fused
                            (the serving-stack default)
   5. index_recall_audit  — measure recall@k of the frozen-artifact index
-     + rebuild_pq_index    vs exact over its own vectors; retrain +
-                           atomically republish when below threshold
+     + rebuild_pq_index    vs exact over its own vectors; retrain and
+                           commit codes + artifacts together when below
+                           threshold
   6. verify_pq_index     — fsck: one distributed pass re-derives every
                            row's cell + codes from its stored vector under
-                           the sidecar artifacts; duplicate/misplaced/
-                           stale-sidecar defects each trip their own check
+                           the committed artifacts; duplicate/misplaced/
+                           stale-artifact defects each trip their own check
+
+Every read goes through the committed manifest (operators/index_manifest.py),
+never a directory listing.
 """
 
 from __future__ import annotations
@@ -45,13 +50,14 @@ def main() -> int:
     from pyspark.sql import functions as F
 
     from dbt_parquet_spark.catalog import FilesystemCatalog
-    from dbt_parquet_spark.operators.serving import q_hybrid_retrieval
-    from dbt_parquet_spark.operators.similarity import (
+    from dbt_parquet_spark.operators.index_manifest import (
         append_to_pq_index,
         build_pq_index,
-        q_ann_ivf_pq,
         read_pq_index,
+        rebuild_pq_index,
     )
+    from dbt_parquet_spark.operators.serving import q_hybrid_retrieval
+    from dbt_parquet_spark.operators.similarity import index_recall_audit, q_ann_ivf_pq
     from dbt_parquet_spark.sources.readers import load_table
 
     spark = (
@@ -66,8 +72,9 @@ def main() -> int:
 
     # 1. build + publish the index
     path = build_pq_index(spark, args.sf_dir, catalog=cat, rel=rel)
-    n = spark.read.parquet(path).count()
-    cells = spark.read.parquet(path).select("cell").distinct().count()
+    idx = read_pq_index(spark, args.sf_dir, path=path)
+    n = idx.count()
+    cells = idx.select("cell").distinct().count()
     print(f"[1] index published at {path}: {n} vectors across {cells} cells")
 
     # 2. query it (first call also memoizes the default-build path)
@@ -89,13 +96,9 @@ def main() -> int:
     q_hybrid_retrieval(spark, args.sf_dir).show(10, truncate=False)
 
     # 5. freshness: audit recall of the (frozen-artifact) index incl. the
-    # appended delta; rebuild retrains on current contents and republishes
-    # atomically when the mean falls below the threshold
-    from dbt_parquet_spark.operators.similarity import (
-        index_recall_audit,
-        rebuild_pq_index,
-    )
-
+    # appended delta; rebuild retrains on current contents and commits the
+    # new codes and artifacts together when the mean falls below the
+    # threshold
     audit = index_recall_audit(spark, args.sf_dir, path=path)
     mean = audit.agg(F.avg("recall").alias("m")).first().m
     print(f"[5] recall audit over {audit.count()} sampled queries: mean={mean:.3f}")

@@ -82,6 +82,7 @@ SLOW_TESTS = frozenset(
     "test_graph.py::test_star_components_match_propagation_on_random_graphs",  # 15.6s
     "test_graph.py::test_star_converges_where_propagation_cannot",  # 16.7s
     "test_grouped_stateful.py::test_stateful_user_profiles",  # 16.0s
+    "test_index_manifest.py::test_compact_keeps_append_committed_mid_compact",  # 27s
     "test_index_manifest.py::test_index_manifest_resolution_is_o1",  # 22.9s
     "test_index_manifest.py::test_manifest_append_staged_invisible_then_committed",  # 16.0s
     "test_index_manifest.py::test_manifest_compact_no_absent_window_and_retirement",  # 23.8s
@@ -93,14 +94,13 @@ SLOW_TESTS = frozenset(
     "test_index_verify.py::test_verify_detects_misplaced_part_file",  # 22.1s
     "test_index_verify.py::test_verify_detects_stale_sidecar",  # 22.1s
     "test_index_verify.py::test_verify_healthy_index_all_ok",  # 32.9s
+    "test_index_verify.py::test_verify_loads_the_manifest_once",  # 15s
     "test_index_verify.py::test_verify_manifest_coverage_and_missing_files",  # 40.2s
     "test_joins_ivf.py::test_ann_ivf_pq_filtered_membership_and_agreement",  # 13.4s
     "test_joins_ivf.py::test_ann_recall_on_clustered_corpus",  # 16.6s
     "test_joins_ivf.py::test_append_to_pq_index_delta_encode",  # 29.1s
     "test_joins_ivf.py::test_build_pq_index_publishes_into_catalog",  # 5.9s
     "test_joins_ivf.py::test_cluster_balanced_sample_invariants",  # 3.0s
-    "test_joins_ivf.py::test_compact_cell_merges_append_inside_swap_window",  # 17.2s
-    "test_joins_ivf.py::test_compact_cell_preserves_concurrent_append",  # 18.4s
     "test_joins_ivf.py::test_compact_pq_index_merges_delta_files",  # 23.1s
     "test_joins_ivf.py::test_filtered_recall_audit_selective_floor",  # 7.7s
     "test_joins_ivf.py::test_recall_drift_monitor_and_rebuild",  # 57.7s
@@ -175,7 +175,6 @@ SLOW_TESTS = frozenset(
     "test_stream_twins.py::test_twin_tumbling",  # 2.2s
     "test_streaming.py::test_manifest_stream_append_txn_idempotent",  # 36.5s
     "test_streaming.py::test_scrub_dictionary_released_with_shingle_caches",  # 2.6s
-    "test_streaming.py::test_stream_append_to_pq_index_bit_identical_and_replay",  # 48.6s
     "test_streaming.py::test_stream_merge_mid_batch_crash_replay_is_idempotent",  # 2.4s
     "test_streaming.py::test_stream_scd2_matches_sequential_batch_merges",  # 4.8s
     "test_streaming.py::test_stream_scd2_mid_batch_crash_replay_is_idempotent",  # 2.7s

@@ -1,7 +1,7 @@
 """The generation-numbered commit log on a non-local backend: ``memory://``
 CatalogFS, no Spark. One winner per generation, the forward probe past a
 lost cache refresh, the LIST fallback behind a trimmed tail, the trim grace
-tail, and detection from the log alone."""
+tail, detection from the log alone, and one log per publisher."""
 
 from __future__ import annotations
 
@@ -98,8 +98,8 @@ def test_stale_pointer_behind_trimmed_tail_falls_back_to_list(mem):
     stale = _commit_n(io, root, 1)
     _commit_n(io, root, 5)  # gens 2..6
     io.put_json_atomic(io.join(root, CACHE), stale)
-    assert commitlog.trim(io, root)  # gen 1, the pointer's commit, is gone
-    assert not io.exists(commitlog.commit_path(io, root, 1))
+    assert commitlog.trim(io, root, CACHE)  # gen 1, the pointer's commit, is gone
+    assert not io.exists(commitlog.commit_path(io, root, CACHE, 1))
     m = commitlog.load(io, root, CACHE)
     assert m["gen"] == 6 and m["rows"] == [0, 0, 1, 2, 3, 4]
 
@@ -108,12 +108,13 @@ def test_trim_keeps_grace_tail_honours_young_and_dry_run(mem):
     io, root = mem
     n = commitlog.COMMIT_GRACE + 3
     _commit_n(io, root, n)
-    old = [f"{commitlog.COMMITS_DIR}/{g:012d}.json" for g in (1, 2, 3)]
-    assert commitlog.trim(io, root, dry_run=True) == old
-    assert len(io.listdir(io.join(root, commitlog.COMMITS_DIR))) == n
-    assert commitlog.trim(io, root, young=lambda p: True) == []
-    assert commitlog.trim(io, root) == old
-    left = io.listdir(io.join(root, commitlog.COMMITS_DIR))
+    log = commitlog.log_dir(CACHE)
+    old = [f"{log}/{g:012d}.json" for g in (1, 2, 3)]
+    assert commitlog.trim(io, root, CACHE, dry_run=True) == old
+    assert len(io.listdir(io.join(root, log))) == n
+    assert commitlog.trim(io, root, CACHE, young=lambda p: True) == []
+    assert commitlog.trim(io, root, CACHE) == old
+    left = io.listdir(io.join(root, log))
     assert len(left) == commitlog.COMMIT_GRACE
     assert commitlog.load(io, root, CACHE)["gen"] == n
 
@@ -124,6 +125,25 @@ def test_committed_from_log_without_cache(mem):
     io.remove_any(io.join(root, CACHE))  # the refresh after a commit was lost
     assert commitlog.committed(io, root, CACHE)
     assert commitlog.load(io, root, CACHE)["gen"] == 2
+
+
+def test_index_commit_in_catalog_is_not_a_versioned_table(tmp_path):
+    """An ANN index committed inside a catalog relation shares the root
+    layout of a versioned table but not its log: neither ``is_versioned``
+    nor the versioned cache's ``committed`` may see the index's commit."""
+    from dbt_parquet_spark.catalog import FilesystemCatalog
+    from dbt_parquet_spark.operators.index_manifest import MANIFEST
+    from dbt_parquet_spark.versioned import VERSIONS_MANIFEST
+
+    cat = FilesystemCatalog(str(tmp_path))
+    rel = cat.relation("ann_index")
+    p = cat.fs_path(rel)
+    cat.io.makedirs(p)
+    commitlog.commit(cat.io, p, MANIFEST, {"cells": {}, "retired": []}, 0)
+    assert commitlog.committed(cat.io, p, MANIFEST)
+    assert not cat.is_versioned(rel)
+    assert not commitlog.committed(cat.io, p, VERSIONS_MANIFEST)
+    assert commitlog.load(cat.io, p, VERSIONS_MANIFEST) is None
 
 
 def test_stage_moves_parts_keeps_partitions_and_removes_staging(tmp_path):

@@ -190,16 +190,18 @@ def test_append_to_pq_index_delta_encode(spark, tmp_path):
     base-fitted codebooks produce — identical to what an inline encode of
     the delta yields — and partition pruning must keep working over the
     mixed old+new files."""
-    from dbt_parquet_spark.operators.similarity import (
-        _books_literal,
-        _pq_encode,
+    from dbt_parquet_spark.functions.vector import cosine
+    from dbt_parquet_spark.operators.index_manifest import (
         append_to_pq_index,
         build_pq_index,
         read_pq_index,
+    )
+    from dbt_parquet_spark.operators.similarity import (
+        _books_literal,
+        _pq_encode,
         train_ivf_quantizer,
         train_pq_codebooks,
     )
-    from dbt_parquet_spark.functions.vector import cosine
 
     emb = load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding")
     base_dir = str(tmp_path / "base_corpus")
@@ -253,16 +255,16 @@ def test_append_to_pq_index_delta_encode(spark, tmp_path):
 
 def test_build_pq_index_publishes_into_catalog(spark, tmp_path):
     """The lifecycle form: build_pq_index(catalog=, rel=) must publish the
-    index as a catalog relation (atomic CTAS) whose partition layout and
-    contents match the memoized default build."""
+    index as a catalog relation (committed as manifest generation 1) whose
+    partition layout and contents match the memoized default build."""
     from dbt_parquet_spark.catalog import FilesystemCatalog
-    from dbt_parquet_spark.operators.similarity import build_pq_index, read_pq_index
+    from dbt_parquet_spark.operators.index_manifest import build_pq_index, read_pq_index
 
     cat = FilesystemCatalog(f"file://{tmp_path}/db")
     rel = cat.relation("ann_index")
     path = build_pq_index(spark, SF_ORACLE, catalog=cat, rel=rel)
     assert path == rel.path
-    published = spark.read.parquet(path)
+    published = read_pq_index(spark, SF_ORACLE, path=path)
     assert set(published.columns) == {"vec_id", "embedding", "codes", "cell"}
     default = read_pq_index(spark, SF_ORACLE)
     want = {(r.vec_id, tuple(r.codes), r.cell) for r in default.collect()}
@@ -274,10 +276,9 @@ def test_compact_pq_index_merges_delta_files(spark, tmp_path):
     """After delta appends fragment the cell directories, compaction must
     bring every cell back to one file WITHOUT changing the index contents,
     and only touch fragmented cells."""
-    import glob
-    import os
-
-    from dbt_parquet_spark.operators.similarity import (
+    from dbt_parquet_spark.operators.index_manifest import (
+        _ifs,
+        _load,
         append_to_pq_index,
         build_pq_index,
         compact_pq_index,
@@ -299,13 +300,8 @@ def test_compact_pq_index_merges_delta_files(spark, tmp_path):
         (r.vec_id, tuple(r.codes), r.cell)
         for r in read_pq_index(spark, base_dir, path=path).collect()
     }
-    root = path[len("file:"):] if path.startswith("file:") else path
-
-    def files_per_cell():
-        return {
-            d: len([e for e in os.listdir(d) if e.endswith(".parquet")])
-            for d in glob.glob(os.path.join(root, "cell=*"))
-        }
+    def files_per_cell():  # in the committed snapshot
+        return {c: len(files) for c, files in _load(*_ifs(path))["cells"].items()}
 
     assert any(n > 1 for n in files_per_cell().values()), "appends did not fragment"
     compact_pq_index(spark, base_dir, path=path)
@@ -318,115 +314,6 @@ def test_compact_pq_index_merges_delta_files(spark, tmp_path):
     assert after == before
 
 
-def test_compact_cell_preserves_concurrent_append(spark, tmp_path):
-    """The compaction publish protocol must not lose a file appended
-    between the snapshot read and the directory swap (the lost-append
-    hazard of the old list-after-write protocol), must leave no duplicate
-    rows, and must leave no hidden staging dirs behind."""
-    import glob
-    import os
-    import shutil
-
-    from dbt_parquet_spark.operators.similarity import (
-        _compact_cell,
-        append_to_pq_index,
-        build_pq_index,
-        read_pq_index,
-    )
-
-    emb = load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding")
-    base_dir = str(tmp_path / "corpus")
-    emb.filter(F.col("vec_id") < 400).write.parquet(f"{base_dir}/embeddings.parquet")
-    build_pq_index(spark, base_dir)
-    delta = emb.filter(F.col("vec_id") >= 400).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    path = append_to_pq_index(spark, base_dir, delta)
-    root = path[len("file:"):] if path.startswith("file:") else path
-    cell_dirs = [
-        d for d in sorted(glob.glob(os.path.join(root, "cell=*")))
-        if len([e for e in os.listdir(d) if e.endswith(".parquet")]) > 1
-    ]
-    assert cell_dirs, "no fragmented cell to compact"
-    cell_dir = cell_dirs[0]
-    donor = next(
-        os.path.join(d, e)
-        for d in sorted(glob.glob(os.path.join(root, "cell=*")))
-        if d != cell_dir
-        for e in sorted(os.listdir(d))
-        if e.endswith(".parquet")
-    )
-    donor_rows = {r.vec_id for r in spark.read.parquet(donor).collect()}
-    before = {r.vec_id for r in spark.read.parquet(cell_dir).collect()}
-
-    def race_append():  # lands after the snapshot, before the swap
-        shutil.copy(donor, os.path.join(cell_dir, "late-append.parquet"))
-
-    _compact_cell(spark, root, cell_dir, 1, after_snapshot=race_append)
-    after = [r.vec_id for r in spark.read.parquet(cell_dir).collect()]
-    assert sorted(after) == sorted(before | donor_rows)  # no loss, no dupes
-    assert len(after) == len(set(after))
-    assert not glob.glob(os.path.join(root, ".compact_*"))
-    assert not glob.glob(os.path.join(root, ".trash_*"))
-    # the full-index read still sees a consistent hive layout
-    assert read_pq_index(spark, base_dir, path=path).count() == 500 + len(donor_rows)
-
-
-def test_compact_cell_merges_append_inside_swap_window(spark, tmp_path):
-    """The narrowest race: an append that RECREATES the cell directory
-    between the two swap renames (while the cell is briefly absent). The
-    publish rename then fails and _compact_cell must fall back to a
-    file-level merge — nothing lost, nothing duplicated, no bytes stranded
-    in hidden .compact_*/.trash_* dirs."""
-    import glob
-    import os
-    import shutil
-
-    from dbt_parquet_spark.operators.similarity import (
-        _compact_cell,
-        append_to_pq_index,
-        build_pq_index,
-        read_pq_index,
-    )
-
-    emb = load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding")
-    base_dir = str(tmp_path / "corpus")
-    emb.filter(F.col("vec_id") < 400).write.parquet(f"{base_dir}/embeddings.parquet")
-    build_pq_index(spark, base_dir)
-    delta = emb.filter(F.col("vec_id") >= 400).select(
-        (F.col("vec_id") + 1_000_000).alias("vec_id"), "embedding"
-    )
-    path = append_to_pq_index(spark, base_dir, delta)
-    root = path[len("file:"):] if path.startswith("file:") else path
-    cell_dirs = [
-        d for d in sorted(glob.glob(os.path.join(root, "cell=*")))
-        if len([e for e in os.listdir(d) if e.endswith(".parquet")]) > 1
-    ]
-    assert cell_dirs, "no fragmented cell to compact"
-    cell_dir = cell_dirs[0]
-    donor = next(
-        os.path.join(d, e)
-        for d in sorted(glob.glob(os.path.join(root, "cell=*")))
-        if d != cell_dir
-        for e in sorted(os.listdir(d))
-        if e.endswith(".parquet")
-    )
-    donor_rows = {r.vec_id for r in spark.read.parquet(donor).collect()}
-    before = {r.vec_id for r in spark.read.parquet(cell_dir).collect()}
-
-    def swap_window_append():  # cell_dir was just renamed away: recreate it
-        os.makedirs(cell_dir)
-        shutil.copy(donor, os.path.join(cell_dir, "swap-window-append.parquet"))
-
-    _compact_cell(spark, root, cell_dir, 1, after_trash=swap_window_append)
-    after = [r.vec_id for r in spark.read.parquet(cell_dir).collect()]
-    assert sorted(after) == sorted(before | donor_rows)  # no loss, no dupes
-    assert len(after) == len(set(after))
-    assert not glob.glob(os.path.join(root, ".compact_*"))
-    assert not glob.glob(os.path.join(root, ".trash_*"))
-    assert read_pq_index(spark, base_dir, path=path).count() == 500 + len(donor_rows)
-
-
 def test_recall_drift_monitor_and_rebuild(spark, tmp_path):
     """Index freshness end-to-end on a CLUSTERED corpus (the honest ANN
     benchmark — on isotropic noise recall is probe-fraction-bound and no
@@ -436,8 +323,8 @@ def test_recall_drift_monitor_and_rebuild(spark, tmp_path):
     the frozen-artifact index (the coarse quantizer funnels the whole
     region into few cells and ADC cannot rank within it); the threshold-
     gated rebuild must fire, retrain on the current contents with SPREAD
-    inits, republish atomically (sidecar included), and measurably restore
-    it without hurting the base region."""
+    inits, commit codes and artifacts together, and measurably restore it
+    without hurting the base region."""
     import glob
     import os
 
@@ -445,14 +332,17 @@ def test_recall_drift_monitor_and_rebuild(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as papq
 
-    from dbt_parquet_spark.operators.similarity import (
-        _ARTIFACTS_FILE,
-        _index_artifacts,
+    from dbt_parquet_spark.operators.index_manifest import (
+        _ifs,
+        _load,
         append_to_pq_index,
         build_pq_index,
-        index_recall_audit,
+        manifest_artifacts,
         read_pq_index,
         rebuild_pq_index,
+    )
+    from dbt_parquet_spark.operators.similarity import (
+        index_recall_audit,
         train_ivf_quantizer,
         train_pq_codebooks,
     )
@@ -480,10 +370,10 @@ def test_recall_drift_monitor_and_rebuild(spark, tmp_path):
     )
     base_path = build_pq_index(spark, base_dir)
 
-    # the sidecar round-trips the fitted artifacts bit-exactly
+    # the committed artifacts round-trip the fitted artifacts bit-exactly
     root = base_path[len("file:"):] if base_path.startswith("file:") else base_path
-    assert os.path.exists(os.path.join(root, _ARTIFACTS_FILE))
-    cents, books = _index_artifacts(spark, base_dir, base_path)
+    assert os.path.exists(os.path.join(root, _load(*_ifs(base_path))["artifacts"]))
+    cents, books = manifest_artifacts(spark, base_dir, base_path)
     assert cents == train_ivf_quantizer(spark, base_dir)
     assert books == train_pq_codebooks(spark, base_dir)
 
@@ -537,10 +427,8 @@ def test_recall_drift_monitor_and_rebuild(spark, tmp_path):
     assert res["rebuilt"] is True and res["path"] == handle
     assert read_pq_index(spark, base_dir, path=handle).count() == n + n2
     local = handle[len("file:"):] if handle.startswith("file:") else handle
-    assert os.path.exists(os.path.join(local, _ARTIFACTS_FILE))
-    parent = os.path.dirname(local.rstrip("/"))
-    assert not glob.glob(os.path.join(parent, ".rebuild_*"))
-    assert not glob.glob(os.path.join(parent, ".trash_*"))
+    assert os.path.exists(os.path.join(local, _load(*_ifs(handle))["artifacts"]))
+    assert not glob.glob(os.path.join(local, ".stage_*"))
 
     rows2 = index_recall_audit(spark, base_dir, path=handle).collect()
     drift2 = seg(rows2, lambda q: q >= 1000)
@@ -550,7 +438,7 @@ def test_recall_drift_monitor_and_rebuild(spark, tmp_path):
     assert base2 >= 0.95, f"rebuild hurt the base region: {base2}"
     assert seg(rows2, lambda q: True) > mean1
     # the retrained artifacts are what appends now encode with
-    cents2, _ = _index_artifacts(spark, base_dir, handle)
+    cents2, _ = manifest_artifacts(spark, base_dir, handle)
     assert cents2 != cents
     # and the immutable base the registered queries read is untouched
     assert read_pq_index(spark, base_dir).count() == n

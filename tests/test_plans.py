@@ -460,62 +460,98 @@ def test_serving_ops_are_map_only(spark):
 
 
 def test_pq_index_probe_prunes_partitions(spark):
-    """The materialized IVF-PQ index is hive-partitioned by cell, and
-    q_ann_ivf_pq's probe must reach the scan as PartitionFilters — only the
-    probed cell directories may be opened. Both gates are checked: the plan
-    string shows the partition filter, and the scan's numFiles metric (the
-    files the executed scan actually opened) equals the probed cell count,
-    a strict subset of all fitted-cell partitions. NB inputFiles() would
-    NOT measure this — it lists the FileIndex before pruning."""
+    """The materialized IVF-PQ index is hive-partitioned by cell, and the
+    probe reaches the scan as an explicit file list from the index
+    manifest: only the probed cells' files may be opened. The gate is the
+    executed scans' numFiles metric (the files each scan actually opened),
+    checked on a probed read and on every index scan of q_ann_ivf_pq and
+    q_ann_ivf: it must equal the probed cells' committed file count, a
+    strict subset of the index. NB inputFiles() would NOT measure this for
+    a filtered scan — it lists the FileIndex before pruning."""
     import re
 
-    from dbt_parquet_spark.operators.similarity import (
+    from pyspark.sql import functions as F
+
+    from dbt_parquet_spark.operators.index_manifest import (
+        _ifs,
+        _load,
         build_pq_index,
-        ivf_cells,
         read_pq_index,
+    )
+    from dbt_parquet_spark.operators.kmeans import probe_udf
+    from dbt_parquet_spark.operators.similarity import (
+        N_QUERIES,
+        ivf_cells,
+        ivf_nprobe,
+        q_ann_ivf,
+        q_ann_ivf_pq,
         train_ivf_quantizer,
     )
     from dbt_parquet_spark.sources.readers import load_table
 
-    def scan_num_files(df) -> int:
+    def scan_num_files(df) -> list[int]:
+        """numFiles of every executed scan of the index (the scans whose
+        relation is partitioned by cell), walking into AQE stages."""
         df.collect()
-        scan = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
-        return scan.metrics().apply("numFiles").value()
+        found = []
+
+        def walk(p) -> None:
+            name = p.getClass().getSimpleName()
+            if name == "AdaptiveSparkPlanExec":
+                return walk(p.executedPlan())
+            if name.endswith("QueryStageExec"):
+                return walk(p.plan())
+            if name == "FileSourceScanExec":
+                if "cell" in list(p.relation().partitionSchema().fieldNames()):
+                    found.append(p.metrics().apply("numFiles").value())
+                return
+            kids = p.children()
+            for i in range(kids.size()):
+                walk(kids.apply(i))
+
+        walk(df._jdf.queryExecution().executedPlan())
+        return found
 
     path = build_pq_index(spark, SF_ORACLE)
-    n_vectors = load_table(spark, SF_ORACLE, "embeddings").count()
-    n_cells = ivf_cells(n_vectors)
-    assert len(train_ivf_quantizer(spark, SF_ORACLE)) == n_cells
+    cell_files = _load(*_ifs(path))["cells"]
+    emb = load_table(spark, SF_ORACLE, "embeddings")
+    n_cells = ivf_cells(emb.count())
+    cents = train_ivf_quantizer(spark, SF_ORACLE)
+    assert len(cents) == n_cells
     all_cells = {
         int(m.group(1))
-        for f in spark.read.parquet(path).inputFiles()
+        for f in read_pq_index(spark, SF_ORACLE).inputFiles()
         for m in [re.search(r"cell=(\d+)", f)]
         if m
     }
     assert len(all_cells) == n_cells  # every fitted cell is occupied here
-    assert scan_num_files(read_pq_index(spark, SF_ORACLE)) == n_cells
+    assert scan_num_files(read_pq_index(spark, SF_ORACLE)) == [n_cells]
     probed = sorted(all_cells)[:3]
     pruned = read_pq_index(spark, SF_ORACLE, cells=probed)
-    assert scan_num_files(pruned) == len(probed)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
-    assert "cell" in pf and " IN " in pf
+    assert scan_num_files(pruned) == [len(probed)]
 
-    # and the full queries' executed plans carry the same partition filter
-    qplan = _plan(spark, "q_ann_ivf_pq")
-    qpf = [l for l in qplan.splitlines() if "PartitionFilters" in l and "cell" in l]
-    assert qpf, "q_ann_ivf_pq scan lost its cell partition filter"
-    # q_ann_ivf reads the same pruned partitions, vectors only (codes
-    # column pruned from the index scan)
+    # the full queries' executed index scans open exactly the files of the
+    # cells their queries probe (recomputed here with the same probe)
+    probe = probe_udf(cents, ivf_nprobe(n_cells))
+    q_cells = {
+        r.cell
+        for r in emb.filter(F.col("vec_id") < N_QUERIES)
+        .select(F.explode(probe(F.col("embedding"))).alias("cell"))
+        .distinct()
+        .collect()
+    }
+    want = sum(len(cell_files[str(c)]) for c in q_cells)
+    assert want < sum(len(v) for v in cell_files.values())
+    for query in (q_ann_ivf_pq, q_ann_ivf):
+        got = scan_num_files(query(spark, SF_ORACLE))
+        assert got and all(n == want for n in got), (query.__name__, got, want)
+    # q_ann_ivf reads the probed cells' vectors only (codes column pruned
+    # from the index scan)
     iplan = _plan(spark, "q_ann_ivf")
-    ipf = [l for l in iplan.splitlines() if "PartitionFilters" in l and "cell" in l]
-    assert ipf, "q_ann_ivf scan lost its cell partition filter"
-    import re as _re
-
     schemas = [
         m.group(1)
         for l in iplan.splitlines()
-        for m in [_re.search(r"ReadSchema: (struct<[^>]*>)", l)]
+        for m in [re.search(r"ReadSchema: (struct<[^>]*>)", l)]
         if m
     ]
     assert not any("codes" in sch for sch in schemas), (

@@ -474,100 +474,12 @@ def test_scrub_dictionary_released_with_shingle_caches(spark, tmp_path):
     assert not dup.storageLevel.useMemory and not dup.storageLevel.useDisk
 
 
-def test_stream_append_to_pq_index_bit_identical_and_replay(spark, tmp_path):
-    """Streaming ANN-index ingest: vectors streamed in two micro-batches
-    must land in their cell partitions with (vec_id, codes, cell) sets
-    IDENTICAL to a batch append_to_pq_index of the same delta (both encode
-    with the same frozen base-fitted artifacts), partition pruning must
-    hold over the mixed files, and the at-least-once worst case — kill
-    between the per-cell publish and the checkpoint commit — must converge
-    on replay (no duplicates, no loss)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as papq
-    from pyspark.sql import functions as F
-
-    from dbt_parquet_spark.catalog import FilesystemCatalog
-    from dbt_parquet_spark.operators.similarity import (
-        append_to_pq_index,
-        build_pq_index,
-        read_pq_index,
-    )
-    from dbt_parquet_spark.sources.readers import load_table
-    from dbt_parquet_spark.streaming.stream_ops import stream_append_to_pq_index
-
-    from .conftest import SF_ORACLE
-
-    emb = load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding")
-    base_dir = str(tmp_path / "corpus")
-    emb.filter(F.col("vec_id") < 400).write.parquet(f"{base_dir}/embeddings.parquet")
-
-    # two identical indexes over the same base: one streamed into, one
-    # batch-appended into — the expected-value cross-check
-    cat = FilesystemCatalog(f"file://{tmp_path}/db")
-    streamed = build_pq_index(spark, base_dir, catalog=cat, rel=cat.relation("idx_stream"))
-    batched = build_pq_index(spark, base_dir, catalog=cat, rel=cat.relation("idx_batch"))
-
-    delta = emb.filter(F.col("vec_id") >= 400)
-    halves = [
-        delta.toPandas(),
-        delta.select((F.col("vec_id") + 1000).alias("vec_id"), "embedding").toPandas(),
-    ]
-    src = tmp_path / "vec_src"
-    src.mkdir()
-    for i, pdf in enumerate(halves):
-        f = str(src / f"part-{i:03d}.parquet")
-        papq.write_table(pa.Table.from_pandas(pdf), f)
-        os.utime(f, (1_700_000_000 + i, 1_700_000_000 + i))
-    schema = spark.read.parquet(str(src)).schema
-
-    def source():
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(str(src))
-        )
-
-    ckpt = tmp_path / "ckpt_ingest"
-    q = stream_append_to_pq_index(spark, base_dir, source(), str(ckpt), path=streamed)
-    q.awaitTermination(300)
-    q.stop()
-
-    for pdf in halves:
-        bdf = spark.createDataFrame(pdf)
-        append_to_pq_index(spark, base_dir, bdf, path=batched)
-
-    def contents(path):
-        return {
-            (r.vec_id, tuple(r.codes), r.cell)
-            for r in read_pq_index(spark, base_dir, path=path).collect()
-        }
-
-    want = contents(batched)
-    got = contents(streamed)
-    assert len(got) == 400 + 2 * len(halves[0])
-    assert got == want  # frozen-artifact encode, streamed == batched
-
-    # pruning still holds over the mixed (build + streamed) files
-    idx = read_pq_index(spark, base_dir, path=streamed)
-    some_cell = idx.filter(F.col("vec_id") >= 400).select("cell").first().cell
-    pruned = read_pq_index(spark, base_dir, cells=[some_cell], path=streamed)
-    assert {r.cell for r in pruned.select("cell").distinct().collect()} == {some_cell}
-
-    # kill-replay: drop the last commit marker and restart the SAME
-    # checkpoint — the batch re-executes and must converge bit-identically
-    replayed = _drop_last_commit(ckpt)
-    q2 = stream_append_to_pq_index(spark, base_dir, source(), str(ckpt), path=streamed)
-    q2.awaitTermination(300)
-    q2.stop()
-    assert contents(streamed) == want, f"replay of batch {replayed} changed the index"
-
-
 def test_manifest_stream_append_txn_idempotent(spark, tmp_path):
-    """Streaming ingest under the MANIFEST protocol: streamed (vec_id,
-    codes, cell) must equal a manifest_append of the same delta (same
-    frozen artifacts), every batch commit must be transactional — the
+    """Streaming ANN-index ingest: vectors streamed in two micro-batches
+    must land with (vec_id, codes, cell) sets bit-IDENTICAL to a batch
+    append_to_pq_index of the same delta (same frozen artifacts), the
+    probe's file-level pruning must hold over the mixed build + streamed
+    files, every batch commit must be transactional — the
     manifest records streams[stream_id]=batch_id — and the at-least-once
     worst case (kill between the MANIFEST commit and the CHECKPOINT
     commit) must be absorbed by the txn record: the replayed batch is
@@ -584,12 +496,11 @@ def test_manifest_stream_append_txn_idempotent(spark, tmp_path):
     from dbt_parquet_spark.operators.index_manifest import (
         MANIFEST,
         _ifs,
-        manifest_append,
-        manifest_read,
-        manifest_snapshot,
+        append_to_pq_index,
+        build_pq_index,
         manifest_stream_append,
+        read_pq_index,
     )
-    from dbt_parquet_spark.operators.similarity import build_pq_index
     from dbt_parquet_spark.sources.readers import load_table
 
     from .conftest import SF_ORACLE
@@ -601,8 +512,6 @@ def test_manifest_stream_append_txn_idempotent(spark, tmp_path):
     cat = FilesystemCatalog(f"file://{tmp_path}/db")
     streamed = build_pq_index(spark, base_dir, catalog=cat, rel=cat.relation("m_stream"))
     batched = build_pq_index(spark, base_dir, catalog=cat, rel=cat.relation("m_batch"))
-    manifest_snapshot(streamed)
-    manifest_snapshot(batched)
 
     delta = emb.filter(F.col("vec_id") >= 400)
     halves = [
@@ -632,18 +541,24 @@ def test_manifest_stream_append_txn_idempotent(spark, tmp_path):
     q.stop()
 
     for pdf in halves:
-        manifest_append(spark, base_dir, batched, spark.createDataFrame(pdf))
+        append_to_pq_index(spark, base_dir, spark.createDataFrame(pdf), path=batched)
 
     def contents(path):
         return {
             (r.vec_id, tuple(r.codes), r.cell)
-            for r in manifest_read(spark, path).collect()
+            for r in read_pq_index(spark, base_dir, path=path).collect()
         }
 
     want = contents(batched)
     got = contents(streamed)
     assert len(got) == 400 + 2 * len(halves[0])
-    assert got == want  # streamed == batch manifest_append, bit-identical
+    assert got == want  # streamed == batch append, bit-identical
+
+    # pruning still holds over the mixed (build + streamed) files
+    idx = read_pq_index(spark, base_dir, path=streamed)
+    some_cell = idx.filter(F.col("vec_id") >= 400).select("cell").first().cell
+    pruned = read_pq_index(spark, base_dir, cells=[some_cell], path=streamed)
+    assert {r.cell for r in pruned.select("cell").distinct().collect()} == {some_cell}
 
     cfs, root = _ifs(streamed)
     with cfs.open_input(cfs.join(root, MANIFEST)) as fh:

@@ -565,20 +565,21 @@ def test_put_json_if_absent_race_one_winner(tmp_path):
 
 def test_legacy_versions_json_migrates_into_commit_log(spark, vt):
     """A table whose root predates the OCC log (only _versions.json) loads
-    correctly, and its next commit seeds _commits/ from the cached state."""
-    from dbt_parquet_spark.commitlog import COMMITS_DIR
-    from dbt_parquet_spark.versioned import _load_manifest
+    correctly, and its next commit seeds the commit log from the cached
+    state."""
+    from dbt_parquet_spark.commitlog import log_dir
+    from dbt_parquet_spark.versioned import VERSIONS_MANIFEST, _load_manifest
 
     catalog, rel = vt
     write_versioned(spark, catalog, rel, spark.range(5))
     io = catalog.io
     root = catalog.fs_path(rel)
-    io.rmtree(io.join(root, COMMITS_DIR))  # simulate a pre-OCC table
+    io.rmtree(io.join(root, log_dir(VERSIONS_MANIFEST)))  # simulate a pre-OCC table
     assert _ids(read_versioned(spark, catalog, rel)) == list(range(5))
     v2 = write_versioned(spark, catalog, rel, spark.range(5, 8), mode="append")
     assert v2 == 2
     m = _load_manifest(catalog, rel)
-    assert m["gen"] == 2 and io.isdir(io.join(root, COMMITS_DIR))
+    assert m["gen"] == 2 and io.isdir(io.join(root, log_dir(VERSIONS_MANIFEST)))
     assert _ids(read_versioned(spark, catalog, rel)) == list(range(8))
 
 
@@ -1164,7 +1165,7 @@ def test_snapshot_resolution_survives_lost_cache_refresh(spark, vt):
     assert set(_ids(read_versioned(spark, catalog, rel))) == set(range(8)) - {3}
     # pointer beyond the pruned tail: delete its commit file, expect LIST path
     io.put_json_atomic(io.join(root, VERSIONS_MANIFEST), stale_cache)
-    io.remove_any(commit_path(io, root, 1))
+    io.remove_any(commit_path(io, root, VERSIONS_MANIFEST, 1))
     m = _load_manifest(catalog, rel)
     assert m["gen"] == 3 and m["current"] == 3
 

@@ -150,19 +150,21 @@ def ivf() -> None:
     the shipped test scales, always clamps to IVF_MIN_CELLS and so had
     never executed outside arithmetic: fitted cells must GROW past the
     clamp at 10x/100x vectors, every occupied cell is a partition dir, and
-    a probed read's executed scan opens exactly the probed dirs
-    (numFiles == files in probed dirs), so the probe FRACTION shrinks as
-    the corpus grows. Writes IVF_SWEEP.json next to this repo's
+    a probed read's executed scan opens exactly the probed cells' files
+    (numFiles == the manifest's files of the probed cells), so the probe
+    FRACTION shrinks as the corpus grows. Writes IVF_SWEEP.json next to this repo's
     BLOCKING_SWEEP.json."""
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    import glob as _glob
-
+    from dbt_parquet_spark.operators.index_manifest import (
+        _ifs,
+        _load,
+        build_pq_index,
+        read_pq_index,
+    )
     from dbt_parquet_spark.operators.similarity import (
         IVF_MIN_CELLS,
-        build_pq_index,
         ivf_cells,
         ivf_nprobe,
-        read_pq_index,
         train_ivf_quantizer,
     )
     from dbt_parquet_spark.session import get_spark
@@ -187,21 +189,15 @@ def ivf() -> None:
         t0 = time.time()
         path = build_pq_index(spark, sf_dir)
         t_build = time.time() - t0
-        root = path[len("file:"):] if path.startswith("file:") else path
-        occupied = len(_glob.glob(os.path.join(root, "cell=*")))
+        cell_files = _load(*_ifs(path))["cells"]  # the committed snapshot
+        occupied = len(cell_files)
         probe = list(range(1, nprobe + 1))
         probed_files = scan_num_files(read_pq_index(spark, sf_dir, cells=probe))
-        # a cell DIR can hold several part files (parallel CTAS write);
-        # pruning is per-directory, so the gate is: the executed scan
-        # opened exactly the files living under the probed dirs, no more
-        files_in_probed = sum(
-            len([e for e in os.listdir(os.path.join(root, f"cell={c}")) if e.endswith(".parquet")])
-            for c in probe
-            if os.path.isdir(os.path.join(root, f"cell={c}"))
-        )
-        total_files = len(
-            [f for f in _glob.glob(os.path.join(root, "cell=*", "*.parquet"))]
-        )
+        # a cell can hold several files (appends add one per touched
+        # cell); the gate is: the executed scan opened exactly the
+        # committed files of the probed cells, no more
+        files_in_probed = sum(len(cell_files.get(str(c), [])) for c in probe)
+        total_files = sum(len(files) for files in cell_files.values())
         out[label] = {
             "n_vectors": n,
             "fitted_cells": len(cents),
