@@ -162,16 +162,36 @@ class FilesystemCatalog:
         Detection asks ``commitlog.committed``, which also finds a root whose
         cache write was lost after its first commit — such a root must not
         bypass the maintenance guards and fall back to a directory scan."""
-        from . import commitlog
         from .versioned import VERSIONS_MANIFEST
+
+        return self._committed(rel, VERSIONS_MANIFEST)
+
+    def is_pq_index(self, rel: Relation) -> bool:
+        """True when the relation root is a manifest-committed ANN index
+        (``operators.index_manifest.build_pq_index(catalog=, rel=)``). Like a
+        versioned root it also holds retired, staged and orphaned files, so
+        a view must resolve it through the index manifest."""
+        from .operators.index_manifest import MANIFEST
+
+        return self._committed(rel, MANIFEST)
+
+    def _committed(self, rel: Relation, cache: str) -> bool:
+        """True when the relation root is a directory holding a commit of
+        the manifest publisher whose cache file is ``cache``."""
+        from . import commitlog
 
         p = self.fs_path(rel)
         if not self.io.isdir(p):
             return False
-        return commitlog.committed(self.io, p, VERSIONS_MANIFEST)
+        return commitlog.committed(self.io, p, cache)
 
     # -- views (reference relation.py:115-122, connections.py:79-88) ------
     def register_view(self, spark: SparkSession, rel: Relation) -> DataFrame:
+        """Register the relation's rows as a temp view. Versioned tables and
+        ANN indexes resolve through their manifests (committed rows only);
+        an index is probed only when the directory read shows the ``cell``
+        partition column every index carries, so plain tables pay no extra
+        metadata call."""
         from .sources.readers import read_parquet
 
         if self.is_versioned(rel):
@@ -180,6 +200,10 @@ class FilesystemCatalog:
             df = read_versioned(spark, self, rel)  # CURRENT snapshot only
         else:
             df = read_parquet(spark, rel.path)
+            if "cell" in df.columns and self.is_pq_index(rel):
+                from .operators.index_manifest import read_pq_index
+
+                df = read_pq_index(spark, None, path=rel.path)
         df.createOrReplaceTempView(rel.view_name)
         return df
 

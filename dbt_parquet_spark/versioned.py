@@ -35,10 +35,18 @@ gs://, hdfs:// (CI drives the scheme-prefixed path via file://).
 
 Row counts in the manifest come from the staged parquet FOOTERS (pure
 metadata — no second scan), so ``version_history`` is exact and free.
+
+Row-level mutations (merge, delete, apply-changes) share one commit,
+``_mutate``, in one of two shapes: copy-on-write (CoW) rewrites the
+candidate files; merge-on-read (MoR) rewrites nothing and records the
+removed rows' (file, row) coordinates in a deletion-vector (DV) sidecar.
+Every version entry, whatever the op, is built by ``_new_version``.
 """
 
 from __future__ import annotations
 
+import datetime
+import time
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -108,6 +116,51 @@ def _commit_manifest(
     commitlog.commit(catalog.io, _root(catalog, rel), VERSIONS_MANIFEST, m, expect_gen)
 
 
+def _new_version(
+    m: dict,
+    op: str,
+    files: list[str],
+    rows: int,
+    columns: list[str],
+    dtypes: dict[str, str],
+    evolved: bool,
+    parent: int | None = None,
+    dv: list[str] | None = None,
+    stats: dict | None = None,
+    **extra,
+) -> int:
+    """Add the next version entry to ``m`` and make it current; the caller
+    commits. ``parent`` defaults to the version current before (None for a
+    table's first commit). ``dv`` is recorded only when non-empty, ``stats``
+    ({file: {col: [min, max]}}) merges into the manifest's skipping stats,
+    and ``extra`` adds fields to the entry. Returns the new version id."""
+    version = m["current"] + 1
+    entry = {
+        "files": list(files),
+        "op": op,
+        "parent": parent if parent is not None else (m["current"] or None),
+        "rows": rows,
+        "columns": list(columns),
+        "dtypes": dict(dtypes),
+        "evolved": bool(evolved),
+        "ts": time.time(),
+        **extra,
+    }
+    if dv:
+        entry["dv"] = list(dv)
+    m["versions"][str(version)] = entry
+    m["current"] = version
+    if stats:
+        m.setdefault("stats", {}).update(stats)
+    return version
+
+
+def _check_mode(mode: str, allowed: tuple[str, ...]) -> None:
+    """Refuse an unknown ``mode`` (unlike an assert, also under -O)."""
+    if mode not in allowed:
+        raise ValueError(f"mode must be one of {allowed}, got {mode!r}")
+
+
 # Parquet-safe type widenings accepted under evolve=True (the Delta type-
 # widening feature): the stored narrow values read losslessly at the wider
 # type, and Spark 4's parquet reader upcasts when handed the wider schema
@@ -174,34 +227,24 @@ def _snapshot_read(
     scan's _metadata coordinates, so deleted rows never surface; a pruned
     subset applies the same full DV set (pairs for unread files simply
     never match). ``keep_pos=True`` retains the (_dv_file, _dv_pos)
-    helper columns — the MoR delete path uses them to address new rows."""
+    helper columns — the MoR commit (``_mutate``) addresses rows with them."""
     dv = entry.get("dv") or []
-    need_pos = keep_pos or (bool(dv) and bool(names))
     dtypes = entry.get("dtypes")
     cols = list(entry["columns"])
-    if dtypes:
-        ddl = ", ".join(f"`{c}` {dtypes[c]}" for c in cols)
-        if not names:
-            out = spark.createDataFrame([], ddl)
-            need_pos = False
-        else:
-            out = spark.read.schema(ddl).parquet(
-                *[io.spark_url(_fpath(io, root, f)) for f in names]
-            )
-            if need_pos:
-                out = _with_pos(out)
+    ddl = ", ".join(f"`{c}` {dtypes[c]}" for c in cols) if dtypes else None
+    reader = spark.read.schema(ddl) if ddl else spark.read
+    if not ddl and entry.get("evolved"):
+        reader = reader.option("mergeSchema", "true")
+    if names:
+        out = reader.parquet(*[io.spark_url(_fpath(io, root, f)) for f in names])
+        if keep_pos or dv:
+            out = _with_pos(out)
+    elif ddl:
+        out = spark.createDataFrame([], ddl)
     else:
-        reader = spark.read
-        if entry.get("evolved"):
-            reader = reader.option("mergeSchema", "true")
-        if not names:
-            all_files = [io.spark_url(_fpath(io, root, f)) for f in entry["files"]]
-            out = reader.parquet(*all_files).limit(0)
-            need_pos = False
-        else:
-            out = reader.parquet(*[io.spark_url(_fpath(io, root, f)) for f in names])
-            if need_pos:
-                out = _with_pos(out)
+        all_files = [io.spark_url(_fpath(io, root, f)) for f in entry["files"]]
+        out = reader.parquet(*all_files).limit(0)
+    if not ddl:
         for c in cols:
             if c not in out.columns:
                 out = out.withColumn(c, F.lit(None).cast("string"))
@@ -262,15 +305,19 @@ def _footer_meta(
 
 
 def _stage_files(
-    spark: SparkSession, catalog: FilesystemCatalog, rel: Relation, df: DataFrame,
-    version: int, stats_cols: tuple[str, ...] = (), prefix: str = "v",
+    spark: SparkSession, catalog: FilesystemCatalog, rel: Relation,
+    df: DataFrame | None, version: int, stats_cols: tuple[str, ...] = (),
+    prefix: str = "v",
 ) -> tuple[list[str], int, dict]:
     """Write df's part files into the table root under fresh unique names
     WITHOUT committing them (invisible to manifest readers until the
     commit — ``commitlog.stage``). Returns (names, rows,
-    {file: {col: [min, max]}}), all from the staged footers. ``prefix``
-    distinguishes data files (``v``) from deletion-vector sidecars
-    (``dv``) — both live under the same orphan/vacuum discipline."""
+    {file: {col: [min, max]}}), all from the staged footers; a None df
+    stages nothing. ``prefix`` distinguishes data files (``v``) from
+    deletion-vector sidecars (``dv``) — both live under the same
+    orphan/vacuum discipline."""
+    if df is None:
+        return [], 0, {}
     io = catalog.io
     root = _root(catalog, rel)
     io.makedirs(root)
@@ -289,6 +336,27 @@ def _stage_files(
         f"{prefix}{version:06d}", on_move=footer,
     )
     return sorted(names), rows, file_stats
+
+
+def _unstage(catalog: FilesystemCatalog, rel: Relation, names: list[str]) -> None:
+    """Remove staged files no commit will reference."""
+    root = _root(catalog, rel)
+    for f in names:
+        catalog.io.remove_any(catalog.io.join(root, f))
+
+
+def _stage_dv(
+    spark: SparkSession, catalog: FilesystemCatalog, rel: Relation,
+    pairs: DataFrame, version: int,
+) -> tuple[list[str], int]:
+    """Stage (file, pos) pairs as a deletion-vector sidecar. Returns
+    (names, n_pairs); an empty sidecar is removed at once and returns
+    ([], 0)."""
+    names, n_pairs, _ = _stage_files(spark, catalog, rel, pairs, version, prefix="dv")
+    if n_pairs == 0:
+        _unstage(catalog, rel, names)
+        return [], 0
+    return names, n_pairs
 
 
 class ConstraintViolationError(ValueError):
@@ -448,7 +516,7 @@ def write_versioned(
     versions keeps the old shape and old types (each version entry carries
     its own dtypes). ``optimize_versioned`` rewrites an evolved lineage
     uniform again."""
-    assert mode in ("replace", "append"), mode
+    _check_mode(mode, ("replace", "append"))
     df_columns = list(df.columns)
     df_dtypes = _dtypes(df)
 
@@ -514,34 +582,16 @@ def write_versioned(
     names, rows_staged, file_stats = _stage_files(
         spark, catalog, rel, df, m["current"] + 1, effective_stats_cols
     )
-    import time
-
     while True:
-        version = m["current"] + 1
-        dv: list[str] = []
-        if mode == "append" and m["current"]:
-            parent = m["versions"][str(m["current"])]
+        parent = m["versions"].get(str(m["current"])) if mode == "append" else None
+        files, rows, dv = names, rows_staged, None
+        if parent:
             files = parent["files"] + names
             rows = parent["rows"] + rows_staged
-            dv = list(parent.get("dv", []))  # MoR deletes carry forward
-        else:
-            files = names
-            rows = rows_staged
-        m["versions"][str(version)] = {
-            "files": files,
-            "op": mode,
-            "parent": m["current"] or None,
-            "rows": rows,
-            "columns": columns,
-            "dtypes": dtypes,
-            "evolved": evolved,
-            "ts": time.time(),
-        }
-        if dv:
-            m["versions"][str(version)]["dv"] = dv
-        m["current"] = version
-        if file_stats:
-            m.setdefault("stats", {}).update(file_stats)
+            dv = parent.get("dv")  # MoR deletes carry forward
+        version = _new_version(
+            m, mode, files, rows, columns, dtypes, evolved, dv=dv, stats=file_stats
+        )
         if txn is not None:
             m.setdefault("streams", {})[txn[0]] = txn[1]
         if before_commit is not None:
@@ -609,22 +659,11 @@ def rollback_versioned(
     commit: the new version's file list is the target's (no data IO)."""
     m = _load_manifest(catalog, rel)
     target = m["versions"][str(version)]
-    new_version = m["current"] + 1
-    import time
-
-    m["versions"][str(new_version)] = {
-        "files": list(target["files"]),
-        "op": "rollback",
-        "parent": version,
-        "rows": target["rows"],
-        "columns": list(target["columns"]),
-        "dtypes": dict(target.get("dtypes", {})),
-        "evolved": bool(target.get("evolved")),
-        "ts": time.time(),
-    }
-    if target.get("dv"):
-        m["versions"][str(new_version)]["dv"] = list(target["dv"])
-    m["current"] = new_version
+    new_version = _new_version(
+        m, "rollback", target["files"], target["rows"], target["columns"],
+        target.get("dtypes", {}), target.get("evolved"),
+        parent=version, dv=target.get("dv"),
+    )
     _commit_manifest(catalog, rel, m)
     return new_version
 
@@ -677,34 +716,22 @@ def clone_versioned(
             return name  # clone of a clone: keep the original reference
         return EXTERNAL_PREFIX + io.join(src_root, name)
 
-    files = [_ref(f) for f in entry["files"]]
-    import time
-
-    new = {
-        "files": files,
-        "op": "clone",
-        "parent": None,
-        "clone_of": {"table": src.view_name, "version": v},
-        "rows": entry["rows"],
-        "columns": list(entry["columns"]),
-        "dtypes": dict(entry.get("dtypes", {})),
-        "evolved": bool(entry.get("evolved")),
-        "ts": time.time(),
-    }
-    if entry.get("dv"):
-        new["dv"] = [_ref(f) for f in entry["dv"]]
-    m = {"current": 1, "versions": {"1": new}, "gen": dst_m.get("gen", 0)}
+    m = {"current": 0, "versions": {}, "gen": dst_m.get("gen", 0)}
     if src_m.get("stats_cols"):
         m["stats_cols"] = list(src_m["stats_cols"])
-    src_stats = src_m.get("stats", {})
-    stats = {_ref(f): src_stats[f] for f in entry["files"] if f in src_stats}
-    if stats:
-        m["stats"] = stats
     if src_m.get("constraints"):
         m["constraints"] = dict(src_m["constraints"])
+    src_stats = src_m.get("stats", {})
+    new_version = _new_version(
+        m, "clone", [_ref(f) for f in entry["files"]], entry["rows"],
+        entry["columns"], entry.get("dtypes", {}), entry.get("evolved"),
+        dv=[_ref(f) for f in entry.get("dv", [])],
+        stats={_ref(f): src_stats[f] for f in entry["files"] if f in src_stats},
+        clone_of={"table": src.view_name, "version": v},
+    )
     io.makedirs(_root(catalog, dst))
     _commit_manifest(catalog, dst, m)
-    return 1
+    return new_version
 
 
 def version_at_timestamp(
@@ -721,8 +748,6 @@ def version_at_timestamp(
         if float(m["versions"][k].get("ts", float("inf"))) <= ts:
             best = int(k)
     if best is None:
-        import datetime
-
         first = min(
             float(e.get("ts", float("inf"))) for e in m["versions"].values()
         )
@@ -732,6 +757,27 @@ def version_at_timestamp(
             "no snapshot existed then"
         )
     return best
+
+
+def _pruned(m: dict, names: list[str], where: dict | None) -> list[str]:
+    """``names`` without the files whose recorded [min, max] cannot meet
+    every ``where`` range ({col: (lo, hi)}; None bounds are open-ended), in
+    their order. Conservative: a file without stats for a column is kept."""
+    if not where:
+        return list(names)
+    stats = m.get("stats", {})
+
+    def survives(name: str) -> bool:
+        fstats = stats.get(name, {})
+        for col, (lo, hi) in where.items():
+            rng = fstats.get(col)
+            if rng is None:
+                continue
+            if (hi is not None and rng[0] > hi) or (lo is not None and rng[1] < lo):
+                return False
+        return True
+
+    return [f for f in names if survives(f)]
 
 
 def read_versioned(
@@ -768,23 +814,7 @@ def read_versioned(
     v = m["current"] if version is None else version
     entry = m["versions"][str(v)]
     root = _root(catalog, rel)
-    names = entry["files"]
-    if where:
-        stats = m.get("stats", {})
-
-        def survives(name: str) -> bool:
-            fstats = stats.get(name, {})
-            for col, (lo, hi) in where.items():
-                rng = fstats.get(col)
-                if rng is None:
-                    continue  # no stats recorded: conservative keep
-                if (hi is not None and rng[0] > hi) or (
-                    lo is not None and rng[1] < lo
-                ):
-                    return False
-            return True
-
-        names = [f for f in names if survives(f)]
+    names = _pruned(m, entry["files"], where)
     # pinned-schema scan: the version's recorded (columns, dtypes) are the
     # read schema, so evolved snapshots null-fill/upcast per file and a
     # pruned subset that happens to predate an evolution still resolves
@@ -792,47 +822,171 @@ def read_versioned(
     return _snapshot_read(spark, io, root, names, entry)
 
 
+def _dv_pairs(
+    spark: SparkSession, io, root: str, entry: dict, files: list[str]
+) -> DataFrame | None:
+    """The version's deletion-vector (file, pos) pairs that address
+    ``files``; None when the version carries no DVs or ``files`` is empty."""
+    dv = entry.get("dv") or []
+    if not dv or not files:
+        return None
+    dvdf = spark.read.parquet(*[io.spark_url(_fpath(io, root, f)) for f in dv])
+    return dvdf.filter(F.col("file").isin([_basename(f) for f in files]))
+
+
 def _dv_prune(
     spark: SparkSession, catalog: FilesystemCatalog, rel: Relation,
     cur: dict, untouched: list[str], version: int,
 ) -> list[str]:
-    """Re-stage the parent's deletion vectors keeping only pairs that
-    address files STILL in the new version's list (CoW rewrites retire
-    the rest — their files left the list, so their pairs could never
-    match again but would otherwise ride every future version as dead
-    weight until an optimize). One small job over sidecar bytes; returns
-    the new sidecar names ([] when nothing survives). The parent's
-    sidecars stay referenced by the parent version and vacuum with it."""
+    """Re-stage the parent's DV pairs that address files still listed
+    after a CoW rewrite (pairs for rewritten files could never match again
+    but would ride every later version until an optimize). One small job;
+    returns the new sidecar names ([] when none survive). The parent's
+    sidecars stay with the parent version and vacuum with it."""
+    pairs = _dv_pairs(spark, catalog.io, _root(catalog, rel), cur, untouched)
+    return [] if pairs is None else _stage_dv(spark, catalog, rel, pairs, version)[0]
+
+
+def _key_candidates(
+    spark: SparkSession, m: dict, key: str, keys: DataFrame
+) -> list[str]:
+    """The current files that may hold one of ``keys``' ``key`` values, sorted.
+    One pass of the keys against a BROADCAST |files|-row interval table
+    built from the manifest stats: a file is a candidate iff some key falls
+    inside its recorded [min, max] (stat-less files always are).
+    Distributed and key-set-exact, so keys far outside a file's range never
+    make it a candidate (an envelope check over all keys would)."""
+    stats = m.get("stats", {})
+    files = m["versions"][str(m["current"])]["files"]
+    intervals = [
+        (name, rng[0], rng[1])
+        for name in files
+        if (rng := stats.get(name, {}).get(key)) is not None
+    ]
+    no_stats = [f for f in files if key not in stats.get(f, {})]
+    touched: set[str] = set()
+    if intervals:
+        ivdf = spark.createDataFrame(intervals, ["_file", "_lo", "_hi"])
+        touched = {
+            r["_file"]
+            for r in keys.select(F.col(key).alias("_k"))
+            .join(
+                F.broadcast(ivdf),
+                (F.col("_k") >= F.col("_lo")) & (F.col("_k") <= F.col("_hi")),
+            )
+            .select("_file")
+            .distinct()
+            .collect()
+        }
+    return sorted(touched | set(no_stats))
+
+
+def _rows(df: DataFrame, match, matched: bool) -> DataFrame:
+    """``df``'s rows that ``match`` names (``matched=True``) or all the
+    others. ``match`` is a one-column DataFrame of keys (a semi/anti join
+    on that column) or a boolean Column, where only TRUE matches: a row
+    whose predicate is NULL is kept, as SQL DELETE keeps it."""
+    if isinstance(match, DataFrame):
+        return df.join(match, match.columns[0], "left_semi" if matched else "left_anti")
+    return df.filter(match if matched else ~F.coalesce(match, F.lit(False)))
+
+
+def _mutate(
+    spark: SparkSession,
+    catalog: FilesystemCatalog,
+    rel: Relation,
+    m: dict,
+    op: str,
+    mode: str,
+    candidates: list[str],
+    match,
+    upserts: DataFrame | None = None,
+) -> int | None:
+    """The one row-level mutation commit: remove the rows of the current
+    snapshot's ``candidates`` that ``match`` names (see ``_rows``), add
+    ``upserts``, and commit the result as version op ``op``. Other files
+    carry over by reference. Upserts pass the CHECK constraints first;
+    deletes add no rows and are never gated.
+
+    ``mode='cow'`` rewrites the candidates: their unmatched rows plus the
+    upserts stage as new files, and ``_dv_prune`` drops the parent's DV
+    pairs for rewritten files. Read-optimal, but a 10-row delete in a 1 GB
+    file rewrites the gigabyte.
+
+    ``mode='mor'`` (the Delta/Iceberg deletion-vector shape) rewrites ZERO
+    data files: the matched rows' (file, row-index) coordinates stage as a
+    DV sidecar, the upserts as new files, and readers anti-join the DVs
+    (``_snapshot_read``). Write cost is O(upserts + matched coordinates);
+    ``optimize_versioned`` later folds DVs and small files away.
+
+    Candidates are read DV-applied, so no row is removed twice, and row
+    counts come from the staged footers. A mutation that removes and adds
+    no row removes what it staged and returns None without committing;
+    otherwise the version commits once (never retried: the result depends
+    on the snapshot read) and its id is returned. The evolved flag carries
+    over unless a CoW rewrite leaves no untouched file."""
     io = catalog.io
     root = _root(catalog, rel)
-    dv = cur.get("dv") or []
-    if not dv or not untouched:
-        return []
-    pairs = spark.read.parquet(
-        *[io.spark_url(_fpath(io, root, f)) for f in dv]
-    ).filter(F.col("file").isin([_basename(f) for f in untouched]))
-    names, n_pairs, _ = _stage_files(
-        spark, catalog, rel, pairs, version, (), prefix="dv"
+    cur = m["versions"][str(m["current"])]
+    version = m["current"] + 1
+    stats_cols = tuple(m.get("stats_cols", ()))
+    if upserts is not None:
+        _enforce_constraints(
+            upserts, m.get("constraints", {}), f"{rel.view_name} {op}"
+        )
+    if mode == "mor":
+        dv_names, removed = [], 0
+        if candidates:
+            cand = _snapshot_read(spark, io, root, candidates, cur, keep_pos=True)
+            pairs = _rows(cand, match, True).select(
+                F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
+            )
+            dv_names, removed = _stage_dv(spark, catalog, rel, pairs, version)
+        names, added, file_stats = _stage_files(
+            spark, catalog, rel, upserts, version, stats_cols
+        )
+        if removed == 0 and added == 0:
+            _unstage(catalog, rel, names)
+            return None
+        files = list(cur["files"]) + names
+        dv = list(cur.get("dv", [])) + dv_names
+        evolved = bool(cur.get("evolved"))
+        rows = cur["rows"] - removed + added
+    else:
+        untouched = [f for f in cur["files"] if f not in set(candidates)]
+        kept, cand_rows = upserts, 0
+        if candidates:
+            # pinned-schema read: an evolved lineage whose candidates are
+            # ALL pre-evolution (narrow) files still resolves the full
+            # column set; DV-applied, so the live candidate rows are the
+            # footer rows minus the candidates' dead DV rows (a DV pair is
+            # unique per (file, pos), so COUNT is exact)
+            cand = _snapshot_read(spark, io, root, candidates, cur)
+            kept = _rows(cand, match, False)
+            if upserts is not None:
+                kept = kept.unionByName(upserts)
+            dead = _dv_pairs(spark, io, root, cur, candidates)
+            cand_rows = sum(
+                _footer_meta(io, _fpath(io, root, f))[0] for f in candidates
+            ) - (0 if dead is None else dead.count())
+        names, rows_new, file_stats = _stage_files(
+            spark, catalog, rel, kept, version, stats_cols
+        )
+        if upserts is None and rows_new == cand_rows:
+            _unstage(catalog, rel, names)
+            return None
+        files = sorted(untouched) + names
+        dv = _dv_prune(spark, catalog, rel, cur, untouched, version)
+        # untouched files keep their original (possibly pre-evolution)
+        # schema; rewritten files carry the current one
+        evolved = bool(cur.get("evolved")) and bool(untouched)
+        rows = cur["rows"] - cand_rows + rows_new
+    _new_version(
+        m, op, files, rows, cur["columns"], cur.get("dtypes", {}), evolved,
+        dv=dv, stats=file_stats,
     )
-    if n_pairs == 0:
-        for f in names:
-            io.remove_any(io.join(root, f))
-        return []
-    return names
-
-
-def _dv_dead_rows(
-    spark: SparkSession, io, root: str, entry: dict, files: list[str]
-) -> int:
-    """How many of ``files``' footer rows are dead under the version's
-    deletion vectors — one small aggregation over the DV sidecars (a DV
-    pair is unique per (file, pos) by construction, so COUNT is exact).
-    Zero when the version carries no DVs."""
-    dv = entry.get("dv") or []
-    if not dv or not files:
-        return 0
-    dvdf = spark.read.parquet(*[io.spark_url(_fpath(io, root, f)) for f in dv])
-    return dvdf.filter(F.col("file").isin([_basename(f) for f in files])).count()
+    _commit_manifest(catalog, rel, m)
+    return version
 
 
 def merge_versioned(
@@ -845,29 +999,14 @@ def merge_versioned(
 ) -> int:
     """MERGE (upsert): rows whose ``key`` matches an update are replaced,
     unmatched update rows are inserted, everything else is untouched — at
-    FILE granularity, the Delta merge shape. The skipping stats pick the
-    candidate files (those whose [min, max] on ``key`` can intersect the
-    updates' key range — conservative: stat-less files are always
-    candidates).
-
-    ``mode='cow'``: ONLY candidates are rewritten (their unmatched rows +
-    all updates), every other file is carried into the new version by
-    reference. On a range-clustered table with declared stats a narrow
-    update rewrites a narrow slice of the data, never the table.
-
-    ``mode='mor'`` (r13): rewrites ZERO existing files — the matched rows'
-    (file, row-index) coordinates commit as a deletion-vector sidecar
-    (exactly delete_versioned(mode='mor')) and ALL update rows stage as
-    NEW files appended to the file list; readers see old-minus-matched
-    plus updates. Write cost is O(updates + matched-coordinate scan), not
-    O(candidate bytes) — the upsert shape for frequent narrow updates at
-    100 TB; optimize_versioned later folds DVs and small update files
-    away.
-
-    ``updates`` must be key-unique and share the table's schema. Single
-    mutator at a time (the standing rule); history stays addressable."""
-    assert mode in ("cow", "mor"), mode
-    io = catalog.io
+    FILE granularity, the Delta merge shape. ``_key_candidates`` picks the
+    files whose skipping stats can hold an update key and ``_mutate``
+    commits: ``mode='cow'`` rewrites only those (op ``merge``), so a narrow
+    update on a range-clustered table rewrites a narrow slice;
+    ``mode='mor'`` rewrites none (op ``merge-mor``). ``updates`` must be
+    key-unique and share the table's schema; an empty update set commits
+    nothing. Single mutator at a time (the standing rule)."""
+    _check_mode(mode, ("cow", "mor"))
     m = _load_manifest(catalog, rel)
     cur = m["versions"][str(m["current"])]
     if list(updates.columns) != cur["columns"]:
@@ -894,124 +1033,13 @@ def merge_versioned(
         updates = updates.select(
             *[F.col(c).cast(cur_dtypes[c]).alias(c) for c in cur["columns"]]
         )
-    root = _root(catalog, rel)
-    stats = m.get("stats", {})
     if updates.limit(1).count() == 0:  # empty update set: no version churn
         return m["current"]
-    _enforce_constraints(
-        updates, m.get("constraints", {}), f"{rel.view_name} merge"
+    keys = updates.select(key)
+    return _mutate(
+        spark, catalog, rel, m, "merge" if mode == "cow" else "merge-mor", mode,
+        _key_candidates(spark, m, key, keys), keys, updates,
     )
-    # Exact file-granular candidate selection: one pass of the update keys
-    # against a BROADCAST |files|-row interval table built from the
-    # manifest stats — a file is a candidate iff some update key falls
-    # inside its recorded [min, max] (stat-less files are always
-    # candidates). Distributed and key-set-exact, so disjoint inserts far
-    # outside a file's range never force its rewrite (an envelope check
-    # would).
-    intervals = [
-        (name, rng[0], rng[1])
-        for name in cur["files"]
-        if (rng := stats.get(name, {}).get(key)) is not None
-    ]
-    no_stats = [f for f in cur["files"] if key not in stats.get(f, {})]
-    touched: set[str] = set()
-    if intervals:
-        ivdf = spark.createDataFrame(intervals, ["_file", "_lo", "_hi"])
-        touched = {
-            r["_file"]
-            for r in updates.select(F.col(key).alias("_k"))
-            .join(
-                F.broadcast(ivdf),
-                (F.col("_k") >= F.col("_lo")) & (F.col("_k") <= F.col("_hi")),
-            )
-            .select("_file")
-            .distinct()
-            .collect()
-        }
-    candidates = sorted(touched | set(no_stats))
-    untouched = [f for f in cur["files"] if f not in set(candidates)]
-    version = m["current"] + 1
-    if mode == "mor":
-        import time
-
-        if candidates:
-            cand = _snapshot_read(spark, io, root, candidates, cur, keep_pos=True)
-            matches = cand.join(updates.select(key), key, "left_semi").select(
-                F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
-            )
-            dv_names, n_matched, _ = _stage_files(
-                spark, catalog, rel, matches, version, (), prefix="dv"
-            )
-        else:
-            dv_names, n_matched = [], 0
-        if n_matched == 0:
-            for f in dv_names:  # empty staged sidecars are instant orphans
-                io.remove_any(io.join(root, f))
-            dv_names = []
-        upd_names, n_upd, upd_stats = _stage_files(
-            spark, catalog, rel, updates, version, tuple(m.get("stats_cols", ()))
-        )
-        m["versions"][str(version)] = {
-            "files": list(cur["files"]) + upd_names,  # zero rewrites
-            "op": "merge-mor",
-            "evolved": bool(cur.get("evolved")),
-            "parent": m["current"],
-            "rows": cur["rows"] - n_matched + n_upd,
-            "columns": list(cur["columns"]),
-            "dtypes": dict(cur.get("dtypes", {})),
-            "ts": time.time(),
-        }
-        dv_all = list(cur.get("dv", [])) + dv_names
-        if dv_all:
-            m["versions"][str(version)]["dv"] = dv_all
-        m["current"] = version
-        if upd_stats:
-            m.setdefault("stats", {}).update(upd_stats)
-        _commit_manifest(catalog, rel, m)
-        return version
-    if candidates:
-        # pinned-schema read: an evolved lineage whose candidates are ALL
-        # pre-evolution (narrow) files still resolves the full column set
-        # (null-fill/upcast) — the r11 UNRESOLVED_COLUMN advice bug.
-        # DV-carrying snapshots read DV-applied, so already-deleted rows
-        # never re-enter, and the LIVE candidate rows are footer rows
-        # minus the candidates' dead DV rows.
-        cand = _snapshot_read(spark, io, root, candidates, cur)
-        merged = cand.join(updates.select(key), key, "left_anti").unionByName(
-            updates
-        )
-        cand_rows = sum(
-            _footer_meta(io, _fpath(io, root, f))[0] for f in candidates
-        ) - _dv_dead_rows(spark, io, root, cur, candidates)
-    else:
-        merged = updates
-        cand_rows = 0
-    names, rows_new, file_stats = _stage_files(
-        spark, catalog, rel, merged, version, tuple(m.get("stats_cols", ()))
-    )
-    import time
-
-    m["versions"][str(version)] = {
-        "files": sorted(untouched) + names,
-        "op": "merge",
-        # untouched files keep their original (possibly pre-evolution)
-        # schema; rewritten files carry the current one — mixed iff any
-        # untouched file remains on an evolved lineage
-        "evolved": bool(cur.get("evolved")) and bool(untouched),
-        "parent": m["current"],
-        "rows": cur["rows"] - cand_rows + rows_new,
-        "columns": list(cur["columns"]),
-        "dtypes": dict(cur.get("dtypes", {})),
-        "ts": time.time(),
-    }
-    dv_kept = _dv_prune(spark, catalog, rel, cur, untouched, version)
-    if dv_kept:
-        m["versions"][str(version)]["dv"] = dv_kept
-    m["current"] = version
-    if file_stats:
-        m.setdefault("stats", {}).update(file_stats)
-    _commit_manifest(catalog, rel, m)
-    return version
 
 
 def delete_versioned(
@@ -1022,116 +1050,24 @@ def delete_versioned(
     prune: dict | None = None,
     mode: str = "cow",
 ) -> int:
-    """DELETE the rows matching ``condition`` (a Column predicate) as a
-    new committed version. ``prune={col: (lo, hi)}`` bounds the candidate
-    files via the skipping stats — files outside the range provably hold
-    no matching rows and carry into the new version by reference (the
-    caller asserts the predicate is confined to the range; without
-    ``prune`` every file is a candidate). Same manifest commit, history,
-    and vacuum story as merge.
-
-    ``mode='cow'`` (copy-on-write) rewrites every candidate file's
-    surviving rows — read-optimal, but write-amplified: a 10-row delete in
-    a 1 GB file rewrites the gigabyte.
-
-    ``mode='mor'`` (merge-on-read, r13 — the Delta/Iceberg deletion-vector
-    shape) rewrites ZERO data files: the matching rows' (file, row-index)
-    coordinates — off the scan's _metadata, no extra pass — are staged as
-    a small DV sidecar parquet, and the new version references parent
-    files + the sidecar. Readers anti-join the DVs at scan time
-    (``_snapshot_read``), so the cost moves from write (O(candidate
-    bytes)) to read (one small anti-join) — the right trade for frequent
-    narrow deletes at 100 TB, where CoW write amplification is the known
-    killer. ``optimize_versioned`` compacts DVs away (its rewrite goes
-    through the DV-applied read and commits a clean file list). Chained
-    MoR deletes compose: each new sidecar is computed on the DV-applied
-    scan, so a row is never double-counted."""
-    assert mode in ("cow", "mor"), mode
-    io = catalog.io
+    """DELETE the rows where ``condition`` (a Column predicate) is TRUE as
+    a new committed version; a row whose predicate is NULL stays.
+    ``prune={col: (lo, hi)}`` bounds the candidate files via the skipping
+    stats (the caller asserts the predicate is confined to the range;
+    without ``prune`` every file is a candidate). ``_mutate`` commits:
+    ``mode='cow'`` rewrites the candidates' surviving rows (op ``delete``),
+    ``mode='mor'`` records the deleted rows in a deletion vector (op
+    ``delete-mor``) — the trade for frequent narrow deletes at 100 TB. A
+    delete that matches no row commits nothing and returns the current
+    version."""
+    _check_mode(mode, ("cow", "mor"))
     m = _load_manifest(catalog, rel)
     cur = m["versions"][str(m["current"])]
-    root = _root(catalog, rel)
-    stats = m.get("stats", {})
-
-    def survives_prune(name: str) -> bool:
-        if not prune:
-            return True
-        fstats = stats.get(name, {})
-        for col, (lo, hi) in prune.items():
-            rng = fstats.get(col)
-            if rng is None:
-                continue
-            if (hi is not None and rng[0] > hi) or (lo is not None and rng[1] < lo):
-                return False
-        return True
-
-    candidates = [f for f in cur["files"] if survives_prune(f)]
-    untouched = [f for f in cur["files"] if not survives_prune(f)]
-    version = m["current"] + 1
-    import time
-
-    if mode == "mor":
-        if candidates:
-            cand = _snapshot_read(spark, io, root, candidates, cur, keep_pos=True)
-            matches = cand.filter(condition).select(
-                F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos")
-            )
-            dv_names, n_deleted, _ = _stage_files(
-                spark, catalog, rel, matches, version, (), prefix="dv"
-            )
-        else:
-            dv_names, n_deleted = [], 0
-        if n_deleted == 0:  # nothing matched: no version churn
-            for f in dv_names:  # empty staged sidecars are instant orphans
-                io.remove_any(io.join(root, f))
-            return m["current"]
-        m["versions"][str(version)] = {
-            "files": list(cur["files"]),  # ZERO data files rewritten
-            "op": "delete-mor",
-            "dv": list(cur.get("dv", [])) + dv_names,
-            "evolved": bool(cur.get("evolved")),
-            "parent": m["current"],
-            "rows": cur["rows"] - n_deleted,
-            "columns": list(cur["columns"]),
-            "dtypes": dict(cur.get("dtypes", {})),
-            "ts": time.time(),
-        }
-        m["current"] = version
-        _commit_manifest(catalog, rel, m)
-        return version
-
-    if candidates:
-        # pinned-schema read (see merge_versioned): all-narrow candidate
-        # sets on an evolved lineage resolve the full column set; DV-
-        # carrying snapshots read DV-applied (live rows only)
-        cand = _snapshot_read(spark, io, root, candidates, cur)
-        remaining = cand.filter(~condition)
-        cand_rows = sum(
-            _footer_meta(io, _fpath(io, root, f))[0] for f in candidates
-        ) - _dv_dead_rows(spark, io, root, cur, candidates)
-        names, rows_new, file_stats = _stage_files(
-            spark, catalog, rel, remaining, version, tuple(m.get("stats_cols", ()))
-        )
-    else:
-        names, rows_new, file_stats, cand_rows = [], 0, {}, 0
-    m["versions"][str(version)] = {
-        "files": sorted(untouched) + names,
-        "op": "delete",
-        "evolved": bool(cur.get("evolved")) and bool(untouched),
-        "parent": m["current"],
-        "rows": cur["rows"] - cand_rows + rows_new,
-        "columns": list(cur["columns"]),
-        "dtypes": dict(cur.get("dtypes", {})),
-        "ts": time.time(),
-    }
-    dv_kept = _dv_prune(spark, catalog, rel, cur, untouched, version)
-    if dv_kept:
-        m["versions"][str(version)]["dv"] = dv_kept
-    m["current"] = version
-    if file_stats:
-        m.setdefault("stats", {}).update(file_stats)
-    _commit_manifest(catalog, rel, m)
-    return version
+    version = _mutate(
+        spark, catalog, rel, m, "delete" if mode == "cow" else "delete-mor", mode,
+        _pruned(m, cur["files"], prune), condition,
+    )
+    return m["current"] if version is None else version
 
 
 def optimize_versioned(
@@ -1192,26 +1128,15 @@ def optimize_versioned(
         )
     else:
         df = df.coalesce(n_out)
-    version = m["current"] + 1
     names, rows, file_stats = _stage_files(
-        spark, catalog, rel, df, version, tuple(m.get("stats_cols", ()))
+        spark, catalog, rel, df, m["current"] + 1, tuple(m.get("stats_cols", ()))
     )
     assert rows == cur["rows"], (rows, cur["rows"])  # lossless by construction
-    import time
-
-    m["versions"][str(version)] = {
-        "files": names,
-        "op": "optimize",
-        "evolved": False,  # the rewrite makes the file schemas uniform again
-        "parent": m["current"],
-        "rows": rows,
-        "columns": list(cur["columns"]),
-        "dtypes": _dtypes(df),
-        "ts": time.time(),
-    }
-    m["current"] = version
-    if file_stats:
-        m.setdefault("stats", {}).update(file_stats)
+    # the rewrite makes the file schemas uniform again: not evolved
+    version = _new_version(
+        m, "optimize", names, rows, cur["columns"], _dtypes(df), False,
+        stats=file_stats,
+    )
     _commit_manifest(catalog, rel, m)
     return version
 
@@ -1266,22 +1191,22 @@ def read_versioned_changes(
     #     HIGH: the one-directional name-level diff silently dropped these).
     dv_a, dv_b = set(a.get("dv", [])), set(b.get("dv", []))
     if dv_a != dv_b and shared:
+        shared_df = spark.createDataFrame(
+            [(_basename(f),) for f in sorted(shared)], "file string"
+        )
+
         def _pairs(names: set) -> DataFrame | None:
+            """The sidecars' (file, pos) pairs on shared files."""
             if not names:
                 return None
             return spark.read.parquet(
                 *[io.spark_url(_fpath(io, root, f)) for f in sorted(names)]
-            ).select("file", "pos")
+            ).select("file", "pos").join(F.broadcast(shared_df), "file", "left_semi")
 
-        shared_df = spark.createDataFrame(
-            [(_basename(f),) for f in sorted(shared)], "file string"
-        )
-        pa = _pairs(dv_a)
-        pb = _pairs(dv_b)
-        if pa is not None:
-            pa = pa.join(F.broadcast(shared_df), "file", "left_semi")
-        if pb is not None:
-            pb = pb.join(F.broadcast(shared_df), "file", "left_semi")
+        def _minus(x: DataFrame | None, y: DataFrame | None) -> DataFrame | None:
+            if x is None or y is None:
+                return x
+            return x.join(y, ["file", "pos"], "left_anti")
 
         def _dead_rows(delta: DataFrame, entry: dict) -> DataFrame:
             """Rows of the shared files, read at `entry`'s DV state, whose
@@ -1296,15 +1221,13 @@ def read_versioned_changes(
                 "left_semi",
             ).select(*entry["columns"])
 
-        killed_pairs = (
-            pb if pa is None else pb.join(pa, ["file", "pos"], "left_anti")
-        ) if pb is not None else None
+        pa = _pairs(dv_a)
+        pb = _pairs(dv_b)
+        killed_pairs = _minus(pb, pa)
         if killed_pairs is not None:
             # read at a's DV state: these rows were alive at `from`
             del_df = del_df.unionByName(_dead_rows(killed_pairs, a))
-        res_pairs = (
-            pa if pb is None else pa.join(pb, ["file", "pos"], "left_anti")
-        ) if pa is not None else None
+        res_pairs = _minus(pa, pb)
         if res_pairs is not None:
             # read at b's DV state: these rows are alive again at `to`
             ins_df = ins_df.unionByName(_dead_rows(res_pairs, b))
@@ -1368,9 +1291,10 @@ def apply_changes_versioned(
     commit an update surfaces as delete+insert, so insert wins the tie) —
     a key whose final action is 'insert' upserts its final row, a key
     whose final action is 'delete' is removed. The apply is ONE
-    merge-on-read commit on dst: every net-affected key's current rows DV
-    out (skipping-stats candidate selection, zero file rewrites) and the
-    upsert rows append as new files. Source rows must be key-unique.
+    merge-on-read ``_mutate`` commit on dst (op ``apply-changes``): every
+    net-affected key's current rows DV out (``_key_candidates`` picks the
+    files, zero rewrites) and the upsert rows append as new files. Source
+    rows must be key-unique.
 
     EXACTLY-ONCE: the replica manifest records the last applied source
     version per source table (``cdc`` — the streaming ``txn`` discipline);
@@ -1380,7 +1304,6 @@ def apply_changes_versioned(
     schema to equal the feed's row schema."""
     src_m = _load_manifest(catalog, src)
     to_v = src_m["current"] if to_version is None else to_version
-    io = catalog.io
     m = _load_manifest(catalog, dst)
     if not m["current"]:
         raise ValueError(
@@ -1393,10 +1316,10 @@ def apply_changes_versioned(
     cur = m["versions"][str(m["current"])]
     cols = list(cur["columns"])
     feed = read_versioned_changes_feed(spark, catalog, src, from_version, to_v)
-    if [c for c in feed.columns if not c.startswith("_")] != cols:
+    feed_cols = [c for c in feed.columns if not c.startswith("_")]
+    if feed_cols != cols:
         raise ValueError(
-            f"{dst.view_name}: replica schema {cols} != source feed schema "
-            f"{[c for c in feed.columns if not c.startswith('_')]}"
+            f"{dst.view_name}: replica schema {cols} != source feed schema {feed_cols}"
         )
     from pyspark.sql import Window
 
@@ -1406,80 +1329,17 @@ def apply_changes_versioned(
     )
     net = feed.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
     upserts = net.filter(F.col("_change_type") == "insert").select(*cols)
-    affected = net.select(F.col(key).alias("_k")).distinct()
-    _enforce_constraints(
-        upserts, m.get("constraints", {}), f"{dst.view_name} apply-changes"
+    keys = net.select(key).distinct()
+    # the marker rides the version commit, or commits alone when the net
+    # change is empty (e.g. an append and its rollback cancel)
+    m.setdefault("cdc", {})[src.view_name] = to_v
+    version = _mutate(
+        spark, catalog, dst, m, "apply-changes", "mor",
+        _key_candidates(spark, m, key, keys), keys, upserts,
     )
-    root = _root(catalog, dst)
-    stats = m.get("stats", {})
-    # candidate files: skipping-stats interval join against the affected
-    # keys (merge_versioned's exact file-granular selection)
-    intervals = [
-        (name, rng[0], rng[1])
-        for name in cur["files"]
-        if (rng := stats.get(name, {}).get(key)) is not None
-    ]
-    no_stats = [f for f in cur["files"] if key not in stats.get(f, {})]
-    touched: set[str] = set()
-    if intervals:
-        ivdf = spark.createDataFrame(intervals, ["_file", "_lo", "_hi"])
-        touched = {
-            r["_file"]
-            for r in affected.join(
-                F.broadcast(ivdf),
-                (F.col("_k") >= F.col("_lo")) & (F.col("_k") <= F.col("_hi")),
-            )
-            .select("_file")
-            .distinct()
-            .collect()
-        }
-    candidates = sorted(touched | set(no_stats))
-    version = m["current"] + 1
-    import time
-
-    if candidates:
-        cand = _snapshot_read(spark, io, root, candidates, cur, keep_pos=True)
-        matches = cand.join(
-            affected, cand[key] == affected["_k"], "left_semi"
-        ).select(F.col("_dv_file").alias("file"), F.col("_dv_pos").alias("pos"))
-        dv_names, n_matched, _ = _stage_files(
-            spark, catalog, dst, matches, version, (), prefix="dv"
-        )
-        if n_matched == 0:
-            for f in dv_names:
-                io.remove_any(io.join(root, f))
-            dv_names = []
-    else:
-        dv_names, n_matched = [], 0
-    upd_names, n_upd, upd_stats = _stage_files(
-        spark, catalog, dst, upserts, version, tuple(m.get("stats_cols", ()))
-    )
-    if n_matched == 0 and n_upd == 0:
-        # empty net change (e.g. append+rollback cancel): metadata-only
-        # commit advancing the exactly-once marker
-        for f in upd_names:
-            io.remove_any(io.join(root, f))
-        m.setdefault("cdc", {})[src.view_name] = to_v
+    if version is None:
         _commit_manifest(catalog, dst, m)
         return m["current"]
-    m["versions"][str(version)] = {
-        "files": list(cur["files"]) + upd_names,  # zero rewrites (MoR)
-        "op": "apply-changes",
-        "evolved": bool(cur.get("evolved")),
-        "parent": m["current"],
-        "rows": cur["rows"] - n_matched + n_upd,
-        "columns": cols,
-        "dtypes": dict(cur.get("dtypes", {})),
-        "ts": time.time(),
-    }
-    dv_all = list(cur.get("dv", [])) + dv_names
-    if dv_all:
-        m["versions"][str(version)]["dv"] = dv_all
-    m["current"] = version
-    if upd_stats:
-        m.setdefault("stats", {}).update(upd_stats)
-    m.setdefault("cdc", {})[src.view_name] = to_v
-    _commit_manifest(catalog, dst, m)
     return version
 
 
@@ -1543,8 +1403,6 @@ def vacuum_versions(
     abandoned. Files referenced by DROPPED versions were committed — the
     manifest prune is what retires them — so the grace never delays real
     history reaping. Set 0.0 only when all writers are known quiescent."""
-    import time
-
     io = catalog.io
     root = _root(catalog, rel)
     m = _load_manifest(catalog, rel)
@@ -1733,6 +1591,21 @@ def q_versioned_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 MERGE_INSERT_OFFSET = 20_000_000
 
 
+def _clustered_docs(
+    spark: SparkSession, sf_dir: str, catalog: FilesystemCatalog, rel: Relation
+) -> DataFrame:
+    """Commit the documents table's (doc_id, source, n_chars) as ``rel``'s
+    base version, range-clustered into 8 files with doc_id skipping stats,
+    and return that frame: the mutation fixtures derive their changes
+    from it."""
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "source", "n_chars")
+    write_versioned(
+        spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
+        mode="replace", stats_cols=("doc_id",),
+    )
+    return docs
+
+
 def _merge_table(
     spark: SparkSession, sf_dir: str, mode: str = "cow"
 ) -> tuple[FilesystemCatalog, Relation]:
@@ -1742,13 +1615,7 @@ def _merge_table(
     deletion-vector sidecar plus appended update files."""
 
     def fill(catalog: FilesystemCatalog, rel: Relation) -> None:
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars"
-        )
-        write_versioned(
-            spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
-            mode="replace", stats_cols=("doc_id",),
-        )
+        docs = _clustered_docs(spark, sf_dir, catalog, rel)
         updates = (
             docs.filter(F.col("doc_id") % 10 == 0)
             .select("doc_id", F.lit("merged").alias("source"), "n_chars")
@@ -1828,13 +1695,7 @@ def _delete_table(
     lo, hi = (MOR_LO, MOR_HI) if mode == "mor" else (DELETE_LO, DELETE_HI)
 
     def fill(catalog: FilesystemCatalog, rel: Relation) -> None:
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars"
-        )
-        write_versioned(
-            spark, catalog, rel, docs.repartitionByRange(8, "doc_id"),
-            mode="replace", stats_cols=("doc_id",),
-        )
+        docs = _clustered_docs(spark, sf_dir, catalog, rel)
         delete_versioned(
             spark, catalog, rel, F.col("doc_id").between(lo, hi),
             prune={"doc_id": (lo, hi)}, mode=mode,
@@ -2058,13 +1919,7 @@ def _cdc_tables(
 
     def fill(catalog: FilesystemCatalog, dst: Relation) -> None:
         src = catalog.relation("docs_src", "vt")
-        docs = load_table(spark, sf_dir, "documents").select(
-            "doc_id", "source", "n_chars"
-        )
-        write_versioned(
-            spark, catalog, src, docs.repartitionByRange(8, "doc_id"),
-            mode="replace", stats_cols=("doc_id",),
-        )  # v1
+        docs = _clustered_docs(spark, sf_dir, catalog, src)  # v1
         delete_versioned(
             spark, catalog, src, F.col("doc_id") % 7 == 3, mode="mor"
         )  # v2: MoR delete, zero rewrites
@@ -2192,20 +2047,21 @@ def sample_versioned_files(
     trade is estimator variance driven by between-file variance — on
     range-clustered tables stratify (sample within cluster ranges) or
     widen the digit set."""
-    import hashlib
-
     m = _load_manifest(catalog, rel)
     v = m["current"] if version is None else version
     entry = m["versions"][str(v)]
-    digits = set(hex_digits.lower())
-    picked = [
-        f
-        for f in entry["files"]
-        if hashlib.md5(_basename(f).encode()).hexdigest()[0] in digits
-    ]
-    w = 16.0 / len(digits)
+    picked = _sampled_files(entry["files"], hex_digits)
+    w = 16.0 / len(set(hex_digits.lower()))
     df = _snapshot_read(spark, catalog.io, _root(catalog, rel), picked, entry)
     return df.withColumn("_sample_weight", F.lit(w).cast("double"))
+
+
+def _sampled_files(files: list[str], hex_digits: str) -> list[str]:
+    """The files whose md5(basename) starts with one of ``hex_digits``."""
+    import hashlib
+
+    digits = set(hex_digits.lower())
+    return [f for f in files if hashlib.md5(_basename(f).encode()).hexdigest()[0] in digits]
 
 
 @register(
@@ -2229,13 +2085,7 @@ def q_versioned_file_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows_sampled"),
         F.sum("_sample_weight").cast("bigint").alias("est_total_rows"),
     )
-    import hashlib
-
-    n_picked = sum(
-        1
-        for f in entry["files"]
-        if hashlib.md5(_basename(f).encode()).hexdigest()[0] in set("01234567")
-    )
+    n_picked = len(_sampled_files(entry["files"], "01234567"))
     return agg.select(
         F.lit(len(entry["files"])).cast("bigint").alias("n_files_total"),
         F.lit(n_picked).cast("bigint").alias("n_files_sampled"),

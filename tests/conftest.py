@@ -82,6 +82,7 @@ SLOW_TESTS = frozenset(
     "test_graph.py::test_star_components_match_propagation_on_random_graphs",  # 15.6s
     "test_graph.py::test_star_converges_where_propagation_cannot",  # 16.7s
     "test_grouped_stateful.py::test_stateful_user_profiles",  # 16.0s
+    "test_index_manifest.py::test_catalog_view_of_index_reads_committed_rows_only",  # 24.6s
     "test_index_manifest.py::test_compact_keeps_append_committed_mid_compact",  # 27s
     "test_index_manifest.py::test_index_manifest_resolution_is_o1",  # 22.9s
     "test_index_manifest.py::test_manifest_append_staged_invisible_then_committed",  # 16.0s

@@ -383,3 +383,21 @@ def test_index_manifest_resolution_is_o1(spark, tmp_path):
             fh.write(_json.dumps(stale).encode())
         m2 = _load(cfs, root)
         assert int(m2["gen"]) == int(m["gen"])
+
+
+def test_catalog_view_of_index_reads_committed_rows_only(spark, tmp_path):
+    """A catalog view over an index relation resolves through the index
+    manifest: after an append and a compaction the root also holds retired
+    files, which a plain directory view would read a second time."""
+    from dbt_parquet_spark.catalog import FilesystemCatalog
+
+    base_dir, path, emb = _mk_index(spark, tmp_path)
+    append_to_pq_index(spark, base_dir, emb.filter(F.col("vec_id") >= 400), path=path)
+    compact_pq_index(spark, base_dir, max_files_per_cell=1, path=path)
+    assert _manifest(path)["retired"]  # uncommitted files sit in the root
+    committed = read_pq_index(spark, base_dir, path=path).count()
+    cat = FilesystemCatalog(f"file://{tmp_path}/db")
+    assert [r.view_name for r in cat.register_all_views(spark)] == ["midx"]
+    view = spark.table("midx")
+    assert view.count() == committed
+    assert view.select("vec_id").distinct().count() == committed

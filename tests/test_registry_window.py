@@ -31,55 +31,54 @@ CONTRACT_QUERIES = {
     "q_schema_introspect",
 }
 
-# r15 ROTATION (the r12 verdict's standing policy): the permanent 18
-# contract slots plus 32 oracle-backed queries the driver never
-# value-hash-checked in rounds 1-14. Rotated-out queries (the r14 window's
-# versioned-lake/materialization/edge-semantics set, ...) remain registered
-# and remain bit-exact-checked locally by tests/test_oracle_parity.py —
-# rotation widens the driver's CUMULATIVE coverage. The r15 picks are
-# biased toward the paths this optimization round rewrote (components/
-# release loop, dedup/winnow evidence, BM25/serving compositions, banded
-# cumsum consumers) so the driver itself certifies the rewrites.
+# ROTATION (the r12 verdict's standing policy): the permanent 18 contract
+# slots plus 32 rotating slots. This rotation holds every oracle-backed
+# query that no committed CORRECTNESS_r*.json value-hash-checked (30 of
+# them; the other 2 slots go to the least recently checked scalar queries,
+# q_arg_minmax and q_bool_agg, which are not pinned here). The 30 include
+# q_row_lineage and q_stream_cdc_follow, which read the versioned lake's
+# row-level mutation path, so the driver certifies it. Rotated-out queries
+# (the r15 window's components/dedup/LM/serving set, ...) remain
+# registered and remain bit-exact-checked locally by
+# tests/test_oracle_parity.py — rotation widens the driver's CUMULATIVE
+# coverage. With this rotation the never-checked pool is empty, so the
+# next rotation needs a new rule (ROADMAP D5).
 ROTATION_IN_WINDOW = {
-    # components / release compositions (r15 graph-loop changes)
-    "q_embedding_dedup_components",
-    "q_canonical_docs",
-    "q_dedup_components_star",
-    "q_corpus_release",
-    "q_release_substring_scrub",
-    # dedup / winnow / text evidence family
-    "q_substring_evidence",
-    "q_substring_scrub",
-    "q_winnow_overlap",
-    "q_cooccurrence_capped",
-    "q_inverted_index",
-    "q_term_saliency",
-    # LM family
-    "q_kneser_ney",
-    "q_kn_doc_score",
-    "q_lm_doc_score",
-    "q_vocab_coverage",
-    # similarity / serving
-    "q_knn_eval",
-    "q_retrieval_eval_hybrid",
-    "q_context_pack_batch",
-    "q_text_chunks",
-    "q_embedding_quantize",
-    # selection / audit / sketches
-    "q_profile_table",
-    "q_mixture_budget",
-    "q_priority_sample",
-    "q_semantic_decontamination",
-    "q_source_overlap",
-    "q_heavy_hitters",
-    # SQL surface / windows round-out
-    "q_explode",
-    "q_date_spine",
-    "q_listagg_distinct",
-    "q_window_range_frame",
-    "q_struct_reshape",
-    "q_bitwise_agg",
+    "q_quality_rules",
+    "q_embedding_cosine_dedup_exact",
+    "q_sketch_distinct",
+    "q_embedding_gram",
+    "q_ann_filtered",
+    "q_histogram",
+    "q_stratified_sample",
+    "q_cluster_sample",
+    "q_join_size_estimate",
+    "q_multimodal_meta",
+    "q_multimodal_frames",
+    "q_media_dedup",
+    "q_text_normalize",
+    "q_corpus_manifest",
+    "q_corpus_mix",
+    "q_training_shards",
+    "q_epoch_order",
+    "q_curriculum_order",
+    "q_salted_join",
+    "q_window_ignore_nulls",
+    "q_try_casts",
+    "q_array_funcs2",
+    "q_string_distance",
+    "q_window_tumbling",
+    "q_window_sliding",
+    "q_window_dedup",
+    "q_stream_dedup_ingest",
+    "q_stream_expectations",
+    "q_stream_cdc_follow",
+    "q_row_lineage",
 }
+
+# DuckDB type ids of output columns the driver's pandas value hash cannot
+# sort (a list, map or struct cell is unhashable)
+NESTED_TYPE_IDS = {"list", "array", "map", "struct", "union"}
 
 
 def _ever_driver_checked() -> set[str]:
@@ -112,11 +111,20 @@ def test_rotation_targets_never_checked_queries():
     assert not (ROTATION_IN_WINDOW & checked), sorted(ROTATION_IN_WINDOW & checked)
 
 
-def test_driver_window_is_fully_oracle_backed():
+def test_driver_window_is_fully_oracle_backed(oracle_con):
     specs = load_all()
     window = list(specs.values())[:DRIVER_WINDOW]
     missing = [s.name for s in window if s.oracle is None]
     assert not missing, f"rows-only queries inside the driver window: {missing}"
+    # and every window oracle's output columns are scalar (a static DuckDB
+    # LIMIT 0 pass over the driver's sf0.01 tables: no rows, no Spark)
+    nested = {}
+    for s in window:
+        types = oracle_con.sql(f"SELECT * FROM ({s.oracle}) LIMIT 0").types
+        bad = [str(t) for t in types if t.id in NESTED_TYPE_IDS]
+        if bad:
+            nested[s.name] = bad
+    assert not nested, f"nested output columns inside the driver window: {nested}"
 
 
 def test_contract_and_rotation_queries_inside_window():

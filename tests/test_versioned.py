@@ -2006,3 +2006,56 @@ def test_optimize_zorder_three_dimensions(spark, vt):
 
     with pytest.raises(ValueError, match="2-4 columns"):
         zorder_column(df, "a", "b", "c", "id", "id")
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_delete_keeps_null_predicate_rows_and_empty_delete_commits_nothing(
+    spark, vt, mode
+):
+    """SQL DELETE removes only the rows whose predicate is TRUE, so both
+    commit shapes keep the rows where it is NULL and leave the same rows.
+    A delete that matches no row commits no version and leaves no staged
+    file behind in the table root."""
+    from pyspark.sql import functions as F
+
+    from dbt_parquet_spark.commitlog import log_dir
+    from dbt_parquet_spark.versioned import _load_manifest, delete_versioned
+
+    catalog, rel = vt
+    rows = [(i, None if i % 3 == 0 else i) for i in range(12)]  # 4 NULL v
+    write_versioned(
+        spark, catalog, rel,
+        spark.createDataFrame(rows, "id bigint, v bigint").repartition(2, "id"),
+    )
+    assert delete_versioned(spark, catalog, rel, F.col("v") > 5, mode=mode) == 2
+    kept = sorted(i for i, v in rows if v is None or v <= 5)
+    assert len(kept) == 8
+    assert _ids(read_versioned(spark, catalog, rel)) == kept
+    assert version_history(catalog, rel)[-1]["rows"] == 8
+    assert delete_versioned(spark, catalog, rel, F.col("v") > 100, mode=mode) == 2
+    m = _load_manifest(catalog, rel)
+    assert m["current"] == 2
+    referenced = {f for e in m["versions"].values() for f in e["files"] + e.get("dv", [])}
+    io = catalog.io
+    on_disk = set(io.listdir(catalog.fs_path(rel)))
+    assert on_disk - referenced == {VERSIONS_MANIFEST, log_dir(VERSIONS_MANIFEST)}
+
+
+@pytest.mark.parametrize("mutator", ["write", "merge", "delete"])
+def test_unknown_mode_raises_value_error(spark, vt, mutator):
+    """An unknown ``mode`` is refused with ValueError (not an assert, which
+    ``python -O`` strips) before anything is staged or committed."""
+    from pyspark.sql import functions as F
+
+    from dbt_parquet_spark.versioned import delete_versioned, merge_versioned
+
+    catalog, rel = vt
+    write_versioned(spark, catalog, rel, spark.range(3))
+    call = {
+        "write": lambda: write_versioned(spark, catalog, rel, spark.range(3), mode="upsert"),
+        "merge": lambda: merge_versioned(spark, catalog, rel, spark.range(3), "id", mode="upsert"),
+        "delete": lambda: delete_versioned(spark, catalog, rel, F.col("id") > 1, mode="upsert"),
+    }[mutator]
+    with pytest.raises(ValueError, match="mode must be one of"):
+        call()
+    assert [h["version"] for h in version_history(catalog, rel)] == [1]
