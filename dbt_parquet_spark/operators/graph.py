@@ -4,8 +4,11 @@ duplicate-cluster assignment (north-star training-data pipeline surface).
 A dedup pipeline that stops at PAIRS under-removes: if A~B and B~C, the
 cluster {A,B,C} must keep one representative, which requires the transitive
 closure. The reference's engine (DuckDB) expresses this with WITH RECURSIVE;
-Spark has no recursive CTE, so the operator below runs the classic
-distributed iterative algorithm instead — the honest 100 TB shape.
+Spark has no recursive CTE, so ``connected_components`` runs one distributed
+iterative algorithm instead — the honest 100 TB shape: min-label
+propagation with Shiloach–Vishkin hooking and shortcutting, which converges
+in O(log n) rounds on long chains and in 1-3 rounds on near-dup blobs.
+Every components query in this module runs it.
 """
 
 from __future__ import annotations
@@ -59,17 +62,27 @@ def _static_loop_plans(spark: SparkSession, width: int):
 
 
 def connected_components(
-    edges: DataFrame, vertex_col: str = "id", max_iter: int = 20
+    edges: DataFrame, vertex_col: str = "id", max_iter: int = 50
 ) -> DataFrame:
-    """Min-label propagation over an undirected edge list (d1, d2) →
+    """Connected components of an undirected edge list (d1, d2) →
     (id, component) where component = the smallest vertex id reachable.
+    Every vertex named by an edge is labeled, including a vertex whose only
+    edge is a self-loop (it is its own component, as in the recursive-CTE
+    oracle).
 
-    Each round every vertex adopts min(own label, neighbors' labels) — one
-    shuffle per round (join on src + groupBy on dst), converging in
-    graph-diameter rounds. Near-dup clusters have tiny diameters (they are
-    dense blobs of mutually-similar docs), so 2-4 rounds suffice; for
-    long-chain graphs swap in the large-star/small-star contraction, which
-    converges in O(log diameter) — the round structure here is the same.
+    Each round every vertex v takes the minimum over three candidate legs,
+    all computed from the previous round's labels L:
+    - propagation: m(v) = min(L(v), L(u) for every neighbor u);
+    - hook: the vertex L(v) takes m(v) — a label takes the minimum its
+      members see;
+    - shortcut: L(L(v)) — pointer jumping.
+    This is Shiloach–Vishkin-style hooking and shortcutting. Every candidate
+    is a vertex of v's component, so labels only decrease, and a chain
+    converges in O(log n) rounds instead of diameter rounds (measured: 10
+    rounds on a 400-link path and 13 with shuffled ids, where propagation
+    alone needs about 400). Both extra legs are needed: shortcutting alone
+    does not finish the shuffled 400-link path in 20 rounds. Near-dup
+    clusters are dense low-diameter blobs and converge in 1-3 rounds.
 
     The driver-side loop holds only a convergence COUNTER (one long per
     round), never data; labels stay distributed across rounds.
@@ -142,6 +155,7 @@ def connected_components(
     # exact at any vertex count; the collect below is also what
     # materializes the lazy checkpoint (sym ckpt + labels in one chain).
     label_sum = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
+    label_type = labels.schema["component"].dataType
     prev_sum = labels.agg(label_sum).collect()[0].s
     # sym_ckpt is materialized now, so its AQE-final partition count is
     # known for free — the DATA-derived shuffle width for the loop (the
@@ -165,22 +179,52 @@ def connected_components(
         new_sum = prev_sum
         converged = False
         # Per-round plans are fixed-shape (cached pre-partitioned edges ⋈
-        # labels → union → groupBy(min)) with known operand sizes — run
-        # them non-adaptively at the edge cache's own data-derived width:
-        # one Spark job per round instead of one per exchange per round
-        # (_static_loop_plans docstring has the measurements).
+        # labels → union → two groupBy(min), plus the shortcut's labels
+        # self-join) with known operand sizes — run them non-adaptively at
+        # the edge cache's own data-derived width: one Spark job per round
+        # instead of one per exchange per round (_static_loop_plans
+        # docstring has the measurements).
         with _static_loop_plans(spark, sym_parts):
             for _ in range(max_iter):
-                # One round = min(own label, neighbors' labels), expressed
+                # Propagation = min(own label, neighbors' labels), expressed
                 # as union + one aggregation instead of join + groupBy +
                 # LEFT join back (r14): each vertex's own (v, label) row
                 # rides the union, so vertices with no lower neighbor keep
                 # their label without the third exchange the join-back form
-                # paid. Same result; the only per-round shuffles move
-                # LABEL-sized rows.
+                # paid. The own row also carries L(v) as `own`, so the same
+                # aggregation yields the hook's target: (L(v), m(v)) is a
+                # vertex-sized row, where hooking per edge as
+                # (L(dst), L(src)) would shuffle the edge list by dst every
+                # round to look up L(dst).
                 contrib = sym.join(labels, sym.src == F.col(vertex_col)).select(
-                    F.col("dst").alias(vertex_col), F.col("component")
+                    F.col("dst").alias(vertex_col),
+                    F.col("component"),
+                    F.lit(None).cast(label_type).alias("own"),
                 )
+                seen = (
+                    labels.withColumn("own", F.col("component"))
+                    .unionByName(contrib)
+                    .groupBy(vertex_col)
+                    .agg(F.min("component").alias("m"), F.max("own").alias("own"))
+                )
+                propagate_and_hook = seen.select(
+                    F.explode(
+                        F.array(
+                            F.struct(F.col(vertex_col), F.col("m").alias("component")),
+                            F.struct(
+                                F.col("own").alias(vertex_col),
+                                F.col("m").alias("component"),
+                            ),
+                        )
+                    ).alias("c")
+                ).select("c.*")
+                parent = labels.select(
+                    F.col(vertex_col).alias("parent"),
+                    F.col("component").alias("grandparent"),
+                )
+                shortcut = labels.join(
+                    parent, F.col("component") == F.col("parent")
+                ).select(vertex_col, F.col("grandparent").alias("component"))
                 # The coalesce (same width — a narrow pass-through) erases
                 # the checkpoint's recorded output partitioning. Without it
                 # a NON-adaptive materialization records the final
@@ -195,7 +239,7 @@ def connected_components(
                 # materializations recorded UnknownPartitioning, which is
                 # why the r14 loop never hit this.)
                 new_labels = (
-                    labels.unionByName(contrib)
+                    propagate_and_hook.unionByName(shortcut)
                     .groupBy(vertex_col)
                     .agg(F.min("component").alias("component"))
                     .coalesce(sym_parts)
@@ -213,120 +257,21 @@ def connected_components(
         sym.unpersist()
     if not converged:
         # Labels were still moving when the iteration budget ran out — the
-        # result would be silently wrong for any component whose diameter
-        # exceeds max_iter+1 (the exact-closure oracles would flag it as a
-        # graded mismatch with no local signal). Fail loudly instead.
+        # result would be silently wrong for the unfinished components (the
+        # exact-closure oracles would flag it as a graded mismatch with no
+        # local signal). Fail loudly instead.
         raise RuntimeError(
             f"connected_components did not converge within max_iter={max_iter} "
             f"rounds (label sum still decreasing: {prev_sum} -> {new_sum}); "
-            "the graph has a component with diameter > max_iter+1 — raise "
-            "max_iter or switch to large-star/small-star contraction "
-            "(O(log d) rounds)."
+            "hooking and shortcutting need O(log n) rounds for n vertices in "
+            "a component — raise max_iter."
         )
     return labels
 
 
-def connected_components_star(
-    edges: DataFrame, vertex_col: str = "id", max_iter: int = 50
-) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    contraction (Kiveris et al. 2014, "Connected Components in MapReduce
-    and Beyond" — public algorithm): converges in O(log² n) rounds
-    regardless of component DIAMETER, where min-label propagation
-    (connected_components above) needs diameter rounds. Same output
-    contract: (vertex_col, component = smallest reachable id); isolated
-    vertices (no edges) don't appear, matching the propagation form.
-
-    Use this when duplicate chains can be long — e.g. span-level or
-    transitive boilerplate chains at web scale, where a 10⁴-link chain
-    would need 10⁴ propagation rounds but ~15 star rounds.
-
-    Shapes: both star operations are the join-back discipline (groupBy(u)
-    min + equi-join back to the adjacency rows — AQE-skew-splittable; a
-    window-by-u would put a hub's whole neighborhood in one task). Each
-    round is 2 groupBys + 2 joins + a distinct; every round's edge set is
-    localCheckpoint'ed (the iterative-lineage trap, see above). The driver
-    holds only the convergence fingerprint (count + exact hash sum).
-    """
-    e = (
-        edges.filter(F.col("d1") != F.col("d2"))
-        .select(
-            F.least("d1", "d2").alias("a"), F.greatest("d1", "d2").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    if not e.take(1):
-        schema_src = edges.select(F.col("d1").alias(vertex_col))
-        return schema_src.limit(0).withColumn("component", F.col(vertex_col))
-
-    def fingerprint(df: DataFrame):
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.xxhash64("a", "b").cast("decimal(38,0)")).alias("h"),
-        ).collect()[0]
-        return (row.n, row.h)
-
-    prev = fingerprint(e)
-    converged = False
-    for _ in range(max_iter):
-        # large-star: over the symmetric adjacency, attach every neighbor
-        # LARGER than u to m(u) = min(neighborhood(u) ∪ {u}).
-        sym = e.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("a").alias("u"), F.col("b").alias("v")),
-                    F.struct(F.col("b").alias("u"), F.col("a").alias("v")),
-                )
-            ).alias("p")
-        ).select("p.u", "p.v")
-        m_large = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("mv"))
-            .select("u", F.least("mv", "u").alias("m"))
-        )
-        ls = (
-            sym.join(m_large, "u")
-            .filter(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .filter(F.col("a") != F.col("b"))
-        )
-        # small-star: direct every edge to its smaller endpoint; attach u and
-        # all its smaller neighbors to m(u) = min of those neighbors.
-        d = ls.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        m_small = d.groupBy("u").agg(F.min("v").alias("m"))
-        joined = d.join(m_small, "u")
-        ss = (
-            joined.select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .union(joined.select(F.col("m").alias("a"), F.col("u").alias("b")))
-            .filter(F.col("a") != F.col("b"))
-        )
-        new_e = (
-            ss.select(F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        cur = fingerprint(new_e)
-        e = new_e
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge within max_iter={max_iter} "
-            "rounds — raise max_iter (expected O(log² n) rounds)."
-        )
-    # Fixed point ⇒ star forest: every edge is (component_min, member).
-    labels = e.select(F.col("b").alias(vertex_col), F.col("a").alias("component")).union(
-        e.select(F.col("a").alias(vertex_col), F.col("a").alias("component"))
-    )
-    return labels.groupBy(vertex_col).agg(F.min("component").alias("component"))
-
-
-@register(
-    "q_dedup_components",
-    oracle=f"""
+# The exact closure as a DuckDB recursive CTE: the oracle of both names of
+# the n-gram duplicate clusters.
+_NGRAM_COMPONENTS_ORACLE = f"""
     WITH RECURSIVE {NGRAM_PAIRS_CTES},
     sym AS (
         SELECT d1 AS src, d2 AS dst FROM ngram_pairs
@@ -345,7 +290,12 @@ def connected_components_star(
     SELECT doc_id, component_id,
            COUNT(*) OVER (PARTITION BY component_id) AS component_size
     FROM comp
-    """,
+    """
+
+
+@register(
+    "q_dedup_components",
+    oracle=_NGRAM_COMPONENTS_ORACLE,
     tags=("dedup", "graph", "components"),
 )
 def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -517,41 +467,13 @@ def q_canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_components_star",
-    oracle=f"""
-    WITH RECURSIVE {NGRAM_PAIRS_CTES},
-    sym AS (
-        SELECT d1 AS src, d2 AS dst FROM ngram_pairs
-        UNION
-        SELECT d2, d1 FROM ngram_pairs
-    ),
-    reach(src, dst) AS (
-        SELECT src, dst FROM sym
-        UNION
-        SELECT r.src, s.dst FROM reach r JOIN sym s ON r.dst = s.src
-    ),
-    comp AS (
-        SELECT src AS doc_id, LEAST(src, MIN(dst)) AS component_id
-        FROM reach GROUP BY src
-    )
-    SELECT doc_id, component_id,
-           COUNT(*) OVER (PARTITION BY component_id) AS component_size
-    FROM comp
-    """,
+    oracle=_NGRAM_COMPONENTS_ORACLE,
     tags=("dedup", "graph", "components", "star"),
 )
 def q_dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """q_dedup_components computed by large-star/small-star contraction
-    instead of min-label propagation — same exact-closure oracle, so the
-    two algorithms are BOTH graded against the recursive CTE and against
-    each other transitively. Propagation wins on the dense low-diameter
-    blobs near-dup graphs usually are (fewer fixed costs/round); the star
-    form is the insurance for high-diameter chain components, converging
-    in O(log² n) rounds where propagation needs diameter rounds
-    (demonstrated on a 400-link path in tests/test_graph.py)."""
-    pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("d1", "d2")
-    comp = connected_components_star(pairs, vertex_col="doc_id")
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("component_size"))
-    return (
-        comp.join(sizes, "component")
-        .select("doc_id", F.col("component").alias("component_id"), "component_size")
-    )
+    """Duplicate-cluster assignment under its second registered name: the
+    q_dedup_components path and the same recursive-CTE oracle. The
+    large-star/small-star contraction this name used to run is gone:
+    hooking and shortcutting give connected_components the same O(log n)
+    bound on chains in fewer Spark jobs (ROADMAP D4 has the counts)."""
+    return q_dedup_components(spark, sf_dir)

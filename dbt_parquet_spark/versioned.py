@@ -1682,7 +1682,9 @@ def q_versioned_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 DELETE_LO, DELETE_HI = 300, 399  # the CoW-deleted doc_id window
-MOR_LO, MOR_HI = 500, 599  # the MoR-deleted doc_id window
+# The MoR-deleted doc_id window: inside the documents table's 0..499 at
+# sf0.001 and sf0.01, and disjoint from the CoW window.
+MOR_LO, MOR_HI = 100, 199
 
 
 def _delete_table(
@@ -2036,9 +2038,12 @@ def sample_versioned_files(
 ) -> DataFrame:
     """Physical TABLESAMPLE SYSTEM over a versioned snapshot: pick whole
     FILES — the unit object storage actually serves — by the first hex
-    digit of md5(file basename) (``len(hex_digits)/16`` of the file
-    population, deterministic across runs and engines), scan ONLY those,
-    and attach ``_sample_weight`` = 16/len(hex_digits), the
+    digit of md5 of the file's origin (``_file_origins``: the version that
+    first referenced it and its position there; ``len(hex_digits)/16`` of
+    the file population). The pick repeats for the same committed history
+    in any process; staged base names carry random uuids, so hashing them
+    would not. Scan ONLY those files, and attach
+    ``_sample_weight`` = 16/len(hex_digits), the
     Horvitz-Thompson scale-up (every file lands in exactly one hex
     bucket, so bucket estimates average to the exact total — pinned in
     tests). At 100 TB this is the only sample whose COST is proportional
@@ -2050,18 +2055,35 @@ def sample_versioned_files(
     m = _load_manifest(catalog, rel)
     v = m["current"] if version is None else version
     entry = m["versions"][str(v)]
-    picked = _sampled_files(entry["files"], hex_digits)
+    picked = _sampled_files(m, entry["files"], hex_digits)
     w = 16.0 / len(set(hex_digits.lower()))
     df = _snapshot_read(spark, catalog.io, _root(catalog, rel), picked, entry)
     return df.withColumn("_sample_weight", F.lit(w).cast("double"))
 
 
-def _sampled_files(files: list[str], hex_digits: str) -> list[str]:
-    """The files whose md5(basename) starts with one of ``hex_digits``."""
+def _file_origins(m: dict) -> dict[str, tuple[int, int]]:
+    """{file base name: (version, position)} — the version whose commit
+    first referenced the file and the file's position in that version's
+    file list. Files are immutable, so first reference over the ascending
+    history is exact."""
+    origins: dict[str, tuple[int, int]] = {}
+    for k in sorted(m["versions"], key=int):
+        for i, f in enumerate(m["versions"][k]["files"]):
+            origins.setdefault(_basename(f), (int(k), i))
+    return origins
+
+
+def _sampled_files(m: dict, files: list[str], hex_digits: str) -> list[str]:
+    """The ``files`` whose md5("version:position" of their origin) starts
+    with one of ``hex_digits``."""
     import hashlib
 
+    origins = _file_origins(m)
     digits = set(hex_digits.lower())
-    return [f for f in files if hashlib.md5(_basename(f).encode()).hexdigest()[0] in digits]
+    return [
+        f for f in files
+        if hashlib.md5(b"%d:%d" % origins[_basename(f)]).hexdigest()[0] in digits
+    ]
 
 
 @register(
@@ -2070,8 +2092,8 @@ def _sampled_files(files: list[str], hex_digits: str) -> list[str]:
 )
 def q_versioned_file_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-granular TABLESAMPLE over the versioned lifecycle table: scan
-    the ~half of the snapshot's files whose name-hash falls in the low
-    hex range, and report (n_files_total, n_files_sampled, n_rows_sampled,
+    the snapshot's files whose origin hash falls in the low hex range
+    (half of them in expectation; 1 of the 8 at sf0.01), and report (n_files_total, n_files_sampled, n_rows_sampled,
     est_total_rows = weighted row count). Rows-only by necessity — which
     rows land in which staged file is Spark's partitioning, not SQL — so
     the estimator identities (HT unbiasedness across all 16 hex buckets,
@@ -2085,7 +2107,7 @@ def q_versioned_file_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_rows_sampled"),
         F.sum("_sample_weight").cast("bigint").alias("est_total_rows"),
     )
-    n_picked = len(_sampled_files(entry["files"], "01234567"))
+    n_picked = len(_sampled_files(m, entry["files"], "01234567"))
     return agg.select(
         F.lit(len(entry["files"])).cast("bigint").alias("n_files_total"),
         F.lit(n_picked).cast("bigint").alias("n_files_sampled"),
@@ -2115,14 +2137,11 @@ def read_versioned_lineage(
     m = _load_manifest(catalog, rel)
     v = m["current"] if version is None else version
     entry = m["versions"][str(v)]
-    first_ref: dict[str, int] = {}
-    for k in sorted(m["versions"], key=int):
-        for f in m["versions"][k]["files"]:
-            first_ref.setdefault(_basename(f), int(k))
+    origins = _file_origins(m)
     root = _root(catalog, rel)
     scan = _snapshot_read(spark, io, root, entry["files"], entry, keep_pos=True)
     lineage = spark.createDataFrame(
-        [(b, first_ref[b]) for b in sorted(
+        [(b, origins[b][0]) for b in sorted(
             {_basename(f) for f in entry["files"]}
         )],
         "_lf string, _file_version bigint",

@@ -59,54 +59,33 @@ def test_components_nonconvergence_raises(spark):
         connected_components(edges, vertex_col="id", max_iter=1)
 
 
-def test_star_components_match_propagation_on_random_graphs(spark):
-    """large-star/small-star must produce the identical (vertex -> min id)
-    labeling as min-label propagation on seeded random graphs."""
+def test_components_converge_on_long_path(spark):
+    """A 400-link path has diameter 400, far past the default iteration
+    budget for min-label propagation alone; hooking and shortcutting must
+    label it as one component within the default max_iter — with ids in
+    path order and with seeded shuffled ids (the case shortcutting alone
+    fails)."""
     import random
 
-    from dbt_parquet_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    for seed in (7, 41):
-        rng = random.Random(seed)
-        edges = [(rng.randrange(150), rng.randrange(150)) for _ in range(220)]
-        e = spark.createDataFrame(edges, "d1 long, d2 long")
-        a = {r[0]: r[1] for r in connected_components(e, "id").collect()}
-        b = {r[0]: r[1] for r in connected_components_star(e, "id").collect()}
-        assert a == b and len(a) > 0
+    ids = list(range(401))
+    shuffled = ids[:]
+    random.Random(5).shuffle(shuffled)
+    for order in (ids, shuffled):
+        path = spark.createDataFrame(
+            [(order[i], order[i + 1]) for i in range(400)], "d1 long, d2 long"
+        )
+        labels = {r[0]: r[1] for r in connected_components(path, "id").collect()}
+        assert labels == {v: 0 for v in ids}
 
 
-def test_star_converges_where_propagation_cannot(spark):
-    """A 400-link path has diameter 400: propagation's 20-round budget must
-    fail loudly (the r5 convergence contract) while the star contraction
-    finishes in O(log² n) rounds with the correct single component."""
-    import pytest as _pytest
-
-    from dbt_parquet_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
-
-    path = spark.createDataFrame([(i, i + 1) for i in range(400)], "d1 long, d2 long")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, "id", max_iter=20)
-    labels = {r[0]: r[1] for r in connected_components_star(path, "id").collect()}
-    assert len(labels) == 401 and set(labels.values()) == {0}
-
-
-def test_both_component_algorithms_match_union_find_ground_truth(spark):
-    """Propagation AND star contraction validated against an independent
-    pure-Python union-find (path compression + union by min) on seeded
-    random graphs — ground truth that shares no code or execution engine
-    with either distributed implementation."""
+def test_components_match_union_find_ground_truth(spark):
+    """Connected components validated against an independent pure-Python
+    union-find (path compression + union by min) on seeded random graphs
+    and on a graph with a self-loop-only vertex — ground truth that shares
+    no code or execution engine with the distributed implementation. Every
+    vertex named by any edge is labeled, self-loop-only ones included (the
+    recursive-CTE oracle labels them too)."""
     import random
-
-    from dbt_parquet_spark.operators.graph import (
-        connected_components,
-        connected_components_star,
-    )
 
     def union_find_labels(edges):
         parent: dict[int, int] = {}
@@ -127,16 +106,15 @@ def test_both_component_algorithms_match_union_find_ground_truth(spark):
                 parent[hi] = lo
         return {x: find(x) for x in parent}
 
+    graphs = []
     for seed, n, m in ((3, 120, 90), (11, 80, 200), (23, 300, 150)):
         rng = random.Random(seed)
-        edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
-        truth = union_find_labels([(u, v) for u, v in edges if u != v])
+        graphs.append([(rng.randrange(n), rng.randrange(n)) for _ in range(m)])
+    # 5 has only its self-loop; 9's self-loop rides beside a real edge
+    graphs.append([(5, 5), (9, 9), (9, 7), (2, 3)])
+    for edges in graphs:
+        truth = union_find_labels(edges)
         e = spark.createDataFrame(edges, "d1 long, d2 long")
-        prop = {r[0]: r[1] for r in connected_components(e, "id").collect()}
-        star = {r[0]: r[1] for r in connected_components_star(e, "id").collect()}
-        # distributed forms omit vertices with only self-loop edges
-        truth = {k: v for k, v in truth.items() if any(
-            (u == k or v == k) and u != v for u, v in edges
-        )}
-        assert prop == truth, f"propagation != union-find (seed {seed})"
-        assert star == truth, f"star != union-find (seed {seed})"
+        got = {r[0]: r[1] for r in connected_components(e, "id").collect()}
+        assert got == truth, f"components != union-find on {edges[:4]}..."
+    assert truth == {5: 5, 9: 7, 7: 7, 2: 2, 3: 2}

@@ -1213,6 +1213,30 @@ def test_mor_delete_rewrites_zero_data_files(spark, vt):
     ) == list(range(20))
 
 
+def test_mor_delete_fixture_carries_deletion_vectors(spark):
+    """q_versioned_delete_mor must delete rows at the driver's scale: the
+    fixture's current version at sf0.01 carries a non-empty DV sidecar
+    holding exactly the MoR window's rows."""
+    from dbt_parquet_spark.versioned import (
+        MOR_HI,
+        MOR_LO,
+        _delete_table,
+        _fpath,
+        _load_manifest,
+        _root,
+    )
+
+    from .conftest import SF_ORACLE
+
+    catalog, rel = _delete_table(spark, SF_ORACLE, mode="mor")
+    m = _load_manifest(catalog, rel)
+    entry = m["versions"][str(m["current"])]
+    assert entry["op"] == "delete-mor" and entry["dv"]
+    io, root = catalog.io, _root(catalog, rel)
+    dv = spark.read.parquet(*[io.spark_url(_fpath(io, root, f)) for f in entry["dv"]])
+    assert dv.count() == MOR_HI - MOR_LO + 1
+
+
 def test_mor_chained_deletes_and_optimize_compacts(spark, vt):
     """Chained MoR deletes compose on the DV-applied scan (a row never
     double-subtracts, an already-deleted row never re-matches);
@@ -1837,14 +1861,12 @@ def test_sample_versioned_files_ht_identity(spark, vt):
     exactly the selected files' footer rows) and Horvitz-Thompson
     unbiasedness — every file lands in exactly one md5 hex bucket, so the
     16 single-digit bucket estimates average to the exact total."""
-    import hashlib
-
     from dbt_parquet_spark.versioned import (
-        _basename,
         _footer_meta,
         _fpath,
         _load_manifest,
         _root,
+        _sampled_files,
         sample_versioned_files,
     )
 
@@ -1860,19 +1882,41 @@ def test_sample_versioned_files_ht_identity(spark, vt):
     }
     total = sum(rows_by_file.values())
     assert total == 200
-    est_sum = 0.0
+    est_sum, n_picked = 0.0, 0
     for d in "0123456789abcdef":
         s = sample_versioned_files(spark, catalog, rel, hex_digits=d)
         got = s.agg(
             __import__("pyspark.sql.functions", fromlist=["F"]).count("*")
         ).first()[0]
-        picked = [
-            f for f in entry["files"]
-            if hashlib.md5(_basename(f).encode()).hexdigest()[0] == d
-        ]
+        picked = _sampled_files(m, entry["files"], d)
         assert got == sum(rows_by_file[f] for f in picked)  # whole files
+        n_picked += len(picked)
         est_sum += 16.0 * got
     assert est_sum / 16.0 == total  # HT identity: bucket estimates average exact
+    assert n_picked == len(entry["files"])  # every file in exactly one bucket
+
+
+def test_file_sample_pick_ignores_staged_names():
+    """The file sample's pick depends on the committed history only, never
+    on the random uuids in staged base names, so it repeats in every
+    process; a file keeps its pick in later versions that carry it."""
+    from dbt_parquet_spark.versioned import _sampled_files
+
+    def manifest(tag: str) -> dict:
+        v1 = [f"part-{tag}{i}.parquet" for i in range(8)]
+        v2 = v1 + [f"part-{tag}{i}.parquet" for i in range(8, 12)]
+        return {"current": 2, "versions": {"1": {"files": v1}, "2": {"files": v2}}}
+
+    a, b = manifest("uuid1-"), manifest("uuid2-")
+    for digits in ("01234567", "89abcdef", "0", "f"):
+        picks = []
+        for m in (a, b):
+            files = m["versions"]["2"]["files"]
+            picked = _sampled_files(m, files, digits)
+            picks.append([files.index(f) for f in picked])
+            v1 = m["versions"]["1"]["files"]
+            assert set(_sampled_files(m, v1, digits)) == set(picked) & set(v1)
+        assert picks[0] == picks[1]
 
 
 def test_apply_changes_candidate_pruning(spark, vt):
