@@ -18,14 +18,16 @@ util.py:9-44, README.md:28-31) with two deliberate extensions:
   storage, with Spark reading the same URLs through its Hadoop connectors.
 
 All listing here is driver-side metadata work, exactly as in the reference
-(PyFilesystem listings, no SQL) — it never touches executors, and each
-listing is a single non-recursive LIST call on object stores.
+(PyFilesystem listings, no SQL) — it never touches executors. Which files
+hold a relation's rows has one answer, ``resolve`` (``snapshot``), under
+stats, docs, source fingerprints and the DuckDB bridge alike.
 """
 
 from __future__ import annotations
 
 import posixpath
 from dataclasses import dataclass
+from typing import Iterable, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -33,6 +35,84 @@ from pyspark.sql import types as T
 from .fs import CatalogFS, resolve_database
 
 DEFAULT_SCHEMA = ""  # files directly under the database root (reference util.py:13-16)
+
+
+@dataclass(frozen=True)
+class Snapshot:
+    """The files that hold a relation's current rows, as fs paths: the data
+    ``files`` a reader opens, the deletion-vector sidecars ``dv``, the
+    manifest's live row count ``rows`` and a versioned snapshot's pinned
+    ``columns`` ({name: Spark type}) — the last two None without a manifest."""
+
+    files: tuple[str, ...] = ()
+    dv: tuple[str, ...] = ()
+    rows: int | None = None
+    columns: dict[str, str] | None = None
+
+
+def _hidden(name: str) -> bool:
+    # what Spark's reader skips: _SUCCESS, .crc, .stage_*, _temporary, logs
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def resolve(io: CatalogFS, path: str) -> Snapshot:
+    """Which files hold the rows of the relation at ``path``, by its kind:
+    a single file is itself; a versioned root, its current version
+    (``versioned.current_snapshot``); an ANN index root, its committed
+    ``cell=`` files; any other directory, every ``*.parquet`` under it, hive
+    ``k=v/`` directories included, less what Spark's reader skips. Metadata
+    only: one GET and one LIST, plus a recursive LIST when the directory has
+    subdirectories or the manifest load for a manifest root."""
+    from . import commitlog
+
+    if io.isfile(path):
+        return Snapshot((path,))
+    top = io.walk(path)
+
+    def holds(cache: str) -> bool:
+        log = commitlog.log_dir(cache)
+        return cache in top or (log in top and commitlog.committed(io, path, cache))
+
+    from .operators.index_manifest import MANIFEST, committed_files
+    from .versioned import VERSIONS_MANIFEST, current_snapshot
+
+    if holds(VERSIONS_MANIFEST):
+        return current_snapshot(io, path)
+    if holds(MANIFEST):
+        return Snapshot(tuple(committed_files(io, path)))
+    if any(is_dir and not _hidden(e) for e, is_dir in top.items()):
+        top = io.walk(path, recursive=True)
+    return Snapshot(tuple(sorted(
+        io.join(path, e) for e, is_dir in top.items()
+        if not is_dir and e.endswith(".parquet") and not any(map(_hidden, e.split("/")))
+    )))
+
+
+class Footer(NamedTuple):
+    path: str
+    bytes: int
+    rows: int
+    row_groups: int
+
+
+def footers(io: CatalogFS, files: Iterable[str]) -> list[Footer]:
+    """Each file's size, rows and row groups from its parquet footer alone
+    (one GET per file: the size comes with the open)."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for f in files:
+        with io.open_input(f) as fh:
+            md = pq.ParquetFile(fh).metadata
+            out.append(Footer(f, fh.size(), md.num_rows, md.num_row_groups))
+    return out
+
+
+class RelationStats(NamedTuple):
+    rows: int
+    files: int
+    bytes: int
+    row_groups: int
 
 
 @dataclass(frozen=True)
@@ -78,6 +158,21 @@ class FilesystemCatalog:
 
     def exists(self, rel: Relation) -> bool:
         return self.io.exists(self.fs_path(rel))
+
+    def snapshot(self, rel: Relation) -> Snapshot:
+        """The files that hold the relation's current rows (``resolve``)."""
+        return resolve(self.io, self.fs_path(rel))
+
+    def stats(self, rel: Relation) -> RelationStats:
+        """The snapshot's rows, data files, bytes and row groups from its
+        footers; rows are the manifest's live count where one exists.
+        Deletion-vector sidecars are not counted."""
+        snap = self.snapshot(rel)
+        fts = footers(self.io, snap.files)
+        rows = snap.rows if snap.rows is not None else sum(f.rows for f in fts)
+        return RelationStats(
+            rows, len(fts), sum(f.bytes for f in fts), sum(f.row_groups for f in fts)
+        )
 
     # -- listings (reference util.py:9-44) ---------------------------------
     def list_schemas(self) -> list[str]:
@@ -256,49 +351,19 @@ class FilesystemCatalog:
         """dbt-docs ``catalog.json``-shaped artifact (the consumer of the
         reference's catalog macro, reference macros/catalog.sql:5-31): one
         node per relation with column name/index/type plus row-count and
-        byte-size stats. Everything comes from parquet FOOTERS — driver-side
+        byte-size stats. The stats come from ``stats``: the parquet FOOTERS
+        of the files ``snapshot`` resolves — every partition's files of a
+        hive-partitioned table, only the current version's of a versioned
+        one, whose row count is the manifest's live count. Driver-side
         metadata reads, no Spark job, so generating docs over a 100 TB lake
-        costs one footer read per table, not a scan.
+        costs one footer read per data file, not a scan.
         """
         import json
-
-        import pyarrow.parquet as pq
-
-        def footer_stats(fs_path: str) -> tuple[int, int]:
-            if self.io.isdir(fs_path):
-                files = [
-                    self.io.join(fs_path, e)
-                    for e in self.io.listdir(fs_path)
-                    if e.endswith(".parquet")
-                ]
-            else:
-                files = [fs_path]
-            rows = 0
-            nbytes = 0
-            for f in files:
-                with self.io.open_input(f) as fh:
-                    rows += pq.ParquetFile(fh).metadata.num_rows
-                nbytes += self.io.getsize(f)
-            return rows, nbytes
 
         nodes: dict = {}
         for schema in self.list_schemas():
             for rel in self.list_relations(schema):
-                if self.is_versioned(rel):
-                    # manifest metadata is exact and already footer-derived;
-                    # a directory walk would double-count retained versions
-                    from .versioned import _fpath, _load_manifest
-
-                    m = _load_manifest(self, rel)
-                    entry = m["versions"][str(m["current"])]
-                    root = self.fs_path(rel)
-                    n_rows = entry["rows"]
-                    n_bytes = sum(
-                        self.io.getsize(_fpath(self.io, root, f))
-                        for f in entry["files"]
-                    )
-                else:
-                    n_rows, n_bytes = footer_stats(self.fs_path(rel))
+                st = self.stats(rel)
                 columns = {
                     fld.name: {
                         "type": fld.dataType.simpleString(),
@@ -323,13 +388,13 @@ class FilesystemCatalog:
                         "num_rows": {
                             "id": "num_rows",
                             "label": "# Rows",
-                            "value": n_rows,
+                            "value": st.rows,
                             "include": True,
                         },
                         "num_bytes": {
                             "id": "num_bytes",
                             "label": "Approximate Size",
-                            "value": n_bytes,
+                            "value": st.bytes,
                             "include": True,
                         },
                     },

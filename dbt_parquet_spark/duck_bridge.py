@@ -15,9 +15,11 @@ Two directions, both Arrow-mediated (zero-copy columnar, no row pickling):
 
 from __future__ import annotations
 
+import posixpath
+
 from pyspark.sql import DataFrame, SparkSession
 
-from .catalog import FilesystemCatalog
+from .catalog import FilesystemCatalog, Snapshot
 
 
 def duckdb_query(
@@ -41,82 +43,52 @@ def duckdb_query(
     return spark.createDataFrame(con.execute(sql).arrow())
 
 
-# Spark simpleString -> DuckDB type, for the zero-file versioned-view edge
-_DUCK_TYPES = {
-    "tinyint": "TINYINT", "smallint": "SMALLINT", "int": "INTEGER",
-    "bigint": "BIGINT", "float": "FLOAT", "double": "DOUBLE",
-    "string": "VARCHAR", "boolean": "BOOLEAN", "date": "DATE",
-    "timestamp": "TIMESTAMP", "binary": "BLOB",
-}
-
-
 def register_catalog_views(con, catalog: FilesystemCatalog) -> list[str]:
-    """Register every catalog relation as a DuckDB view over its parquet
-    path — the reference's connect-time view registration (reference
-    connections.py:79-88). Returns the registered view names.
+    """Register every catalog relation as a DuckDB view — the reference's
+    connect-time view registration (reference connections.py:79-88).
+    Returns the registered view names.
 
-    Versioned roots (manifest-committed tables) physically hold every
-    retained version's files plus staged orphans, so their views are built
-    over the CURRENT snapshot's explicit file list from the manifest (r12
-    advice: a directory glob would union duplicate and stale rows)."""
+    Each view scans the file list ``catalog.snapshot`` resolves (hive
+    ``k=v/`` columns kept; a versioned root's CURRENT version only, its
+    deletion vectors anti-joined as ``versioned._snapshot_read`` does). A
+    relation with no files is an empty view. Remote schemes need the
+    matching DuckDB extension (httpfs for s3://) loaded."""
     names = []
     for schema in catalog.list_schemas():
         for rel in catalog.list_relations(schema):
-            if catalog.is_versioned(rel):
-                from .versioned import EXTERNAL_PREFIX, _load_manifest
-
-                m = _load_manifest(catalog, rel)
-                entry = m["versions"].get(str(m["current"]), {"files": []})
-
-                def _p(f: str) -> str:
-                    # shallow-clone external references resolve to their
-                    # recorded absolute path (versioned._fpath's rule)
-                    if f.startswith(EXTERNAL_PREFIX):
-                        return f[len(EXTERNAL_PREFIX):]
-                    return f"{rel.path}/{f}"
-
-                files = [_p(f) for f in entry["files"]]
-                dv = [_p(f) for f in entry.get("dv", [])]
-                if files and dv:
-                    # merge-on-read snapshot: anti-join the deletion-vector
-                    # sidecars' (file, pos) pairs, the same semantics
-                    # versioned._snapshot_read applies Spark-side
-                    lst = ", ".join(f"'{f}'" for f in files)
-                    dvl = ", ".join(f"'{f}'" for f in dv)
-                    cols = ", ".join(f't."{c}"' for c in entry["columns"])
-                    body = (
-                        f"SELECT {cols} FROM parquet_scan([{lst}], "
-                        "filename=1, file_row_number=1) t "
-                        f"WHERE NOT EXISTS (SELECT 1 FROM parquet_scan([{dvl}]) d "
-                        "WHERE d.file = regexp_extract(t.filename, '[^/]+$') "
-                        "AND d.pos = t.file_row_number)"
-                    )
-                elif files:
-                    lst = ", ".join(f"'{f}'" for f in files)
-                    body = f"SELECT * FROM parquet_scan([{lst}])"
-                else:  # zero-file snapshot: pinned-schema empty view
-                    cols = ", ".join(
-                        f'CAST(NULL AS {_DUCK_TYPES.get(entry.get("dtypes", {}).get(c, "string"), "VARCHAR")}) AS "{c}"'
-                        for c in entry.get("columns", [])
-                    ) or "NULL AS _empty"
-                    body = f"SELECT {cols} WHERE FALSE"
-                con.execute(
-                    f'CREATE OR REPLACE VIEW "{rel.view_name}" AS {body}'
-                )
-                names.append(rel.view_name)
-                continue
-            # Directory check through the catalog FS (works for URL-rooted
-            # databases too); DuckDB itself reads rel.path, so remote
-            # schemes additionally need the matching DuckDB extension
-            # (httpfs for s3://) loaded in the session.
-            is_dir = catalog.io.isdir(catalog.fs_path(rel))
-            path = rel.path + ("/*.parquet" if is_dir else "")
+            snap = catalog.snapshot(rel)
             con.execute(
                 f'CREATE OR REPLACE VIEW "{rel.view_name}" AS '
-                f"SELECT * FROM parquet_scan('{path}')"
+                f"{_view_sql(catalog, snap)}"
             )
             names.append(rel.view_name)
     return names
+
+
+def _view_sql(catalog: FilesystemCatalog, snap: Snapshot) -> str:
+    """The SELECT behind one relation's DuckDB view."""
+    if not snap.files:
+        # DuckDB reads Spark's simple type names; anything else is VARCHAR
+        cols = ", ".join(
+            f'CAST(NULL AS {t if t.isalpha() else "VARCHAR"}) AS "{c}"'
+            for c, t in (snap.columns or {}).items()
+        ) or "NULL AS _empty"
+        return f"SELECT {cols} WHERE FALSE"
+
+    def scan(files, *opts: str) -> str:
+        lst = ", ".join("'" + catalog.io.spark_url(f).replace("'", "''") + "'" for f in files)
+        return f"parquet_scan([{lst}]{''.join(', ' + o for o in opts)})"
+
+    if not snap.dv:
+        hive = any("=" in posixpath.basename(posixpath.dirname(f)) for f in snap.files)
+        return f"SELECT * FROM {scan(snap.files, f'hive_partitioning={str(hive).lower()}')}"
+    cols = ", ".join(f't."{c}"' for c in snap.columns)
+    return (
+        f"SELECT {cols} FROM {scan(snap.files, 'filename=1', 'file_row_number=1')} t "
+        f"WHERE NOT EXISTS (SELECT 1 FROM {scan(snap.dv)} d "
+        "WHERE d.file = regexp_extract(t.filename, '[^/]+$') "
+        "AND d.pos = t.file_row_number)"
+    )
 
 
 def interactive_shell(catalog: FilesystemCatalog, in_stream=None, out_stream=None) -> int:

@@ -105,6 +105,18 @@ class CatalogFS:
         sel = pafs.FileSelector(path, recursive=False)
         return sorted(posixpath.basename(i.path) for i in self.fs.get_file_info(sel))
 
+    def walk(self, path: str, recursive: bool = False) -> dict[str, bool]:
+        """Entries under ``path`` from one LIST call, keyed by their path
+        relative to ``path``; the value is True for a directory. A missing
+        ``path`` lists as empty. ``recursive`` lists the whole tree (one
+        delimiter-free, paginated LIST on object stores)."""
+        sel = pafs.FileSelector(path, recursive=recursive, allow_not_found=True)
+        n = len(path.rstrip("/")) + 1
+        return {
+            i.path[n:]: i.type == pafs.FileType.Directory
+            for i in self.fs.get_file_info(sel)
+        }
+
     def makedirs(self, path: str) -> None:
         self.fs.create_dir(path, recursive=True)
 

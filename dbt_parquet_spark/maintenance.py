@@ -48,8 +48,7 @@ def compact(
     (write-to-temp + rename) so readers never see a half-compacted table.
     """
     _refuse_versioned(catalog, rel, "compact")
-    size = _path_bytes(catalog, rel)
-    n_files = max(1, round(size / target_file_bytes))
+    n_files = max(1, round(catalog.stats(rel).bytes / target_file_bytes))
     df = read_parquet(spark, rel.path).repartition(n_files)
     return create_table_as(spark, catalog, rel, df, single_file=False)
 
@@ -114,8 +113,7 @@ def cluster_by(
     OPTIMIZE ZORDER semantics on plain parquet).
     """
     _refuse_versioned(catalog, rel, "cluster_by")
-    size = _path_bytes(catalog, rel)
-    n_files = max(1, round(size / target_file_bytes))
+    n_files = max(1, round(catalog.stats(rel).bytes / target_file_bytes))
     df = read_parquet(spark, rel.path)
     if zorder and len(cols) > 1:
         df = (
@@ -139,7 +137,7 @@ def row_group_stats(
 
     out = []
     io = catalog.io
-    for f in _table_files(catalog, rel):
+    for f in catalog.snapshot(rel).files:
         with io.open_input(f) as fh:
             md = pq.ParquetFile(fh).metadata
             names = {md.schema.column(i).name: i for i in range(md.num_columns)}
@@ -148,19 +146,6 @@ def row_group_stats(
                 st = md.row_group(g).column(ci).statistics
                 out.append((f, g, st.min if st else None, st.max if st else None))
     return out
-
-
-def _table_files(catalog: FilesystemCatalog, rel: Relation) -> list[str]:
-    """The relation's parquet data files, as fs paths (single file or the
-    part files of a directory table)."""
-    io, fs_path = catalog.io, catalog.fs_path(rel)
-    if io.isdir(fs_path):
-        return [io.join(fs_path, f) for f in io.listdir(fs_path) if f.endswith(".parquet")]
-    return [fs_path]
-
-
-def _path_bytes(catalog: FilesystemCatalog, rel: Relation) -> int:
-    return sum(catalog.io.getsize(f) for f in _table_files(catalog, rel))
 
 
 STATS_SCHEMA = T.StructType(
@@ -179,23 +164,15 @@ def table_stats(spark: SparkSession, catalog: FilesystemCatalog) -> DataFrame:
     """Row counts / file counts / sizes / row-group counts for every
     relation, from parquet FOOTERS ONLY — no data scan (the metadata the
     optimizer wants for broadcast decisions, and the lake-health dashboard
-    wants for compaction scheduling). Driver-side metadata walk, same as
+    wants for compaction scheduling). Each row is ``catalog.stats``: a
+    hive-partitioned table counts the files of every partition, a versioned
+    table only its current version's files, with the manifest's live row
+    count (deletion vectors applied). Driver-side metadata walk, same as
     the reference's catalog macro (reference macros/catalog.sql:1-36)."""
-    import pyarrow.parquet as pq
-
-    io = catalog.io
     rows = []
     for schema in catalog.list_schemas():
         for rel in catalog.list_relations(schema):
-            files = _table_files(catalog, rel)
-            n_rows = n_groups = total = 0
-            for f in files:
-                with io.open_input(f) as fh:
-                    md = pq.ParquetFile(fh).metadata
-                n_rows += md.num_rows
-                n_groups += md.num_row_groups
-                total += io.getsize(f)
-            rows.append((schema, rel.table, n_rows, len(files), total, n_groups))
+            rows.append((schema, rel.table, *catalog.stats(rel)))
     return spark.createDataFrame(rows, STATS_SCHEMA)
 
 

@@ -98,10 +98,12 @@ def connected_components(
     executor loss during the (short) loop must be survivable.
 
     Checkpoints are LAZY (r14, guide §1/§2 job-count diet): the per-round
-    convergence collect is the action that materializes the checkpoint —
-    one Spark job per round instead of two (eager checkpoint job + sum
-    job). SparkContext.runJob completes rdd.doCheckpoint() after the
-    collect, so round N+1 still plans against a truncated leaf.
+    convergence collect is the action that materializes the checkpoint, so
+    no round pays a separate checkpoint job. SparkContext.runJob completes
+    rdd.doCheckpoint() after the collect, so round N+1 still plans against
+    a truncated leaf. A round is still 2-4 Spark jobs, not one: the loop
+    plans non-adaptively, so each join against the small labels is planned
+    as a broadcast, and each broadcast is a job of its own.
     """
     # Symmetrize in ONE scan: explode each edge into both directions. The
     # unionAll-of-two-selects form evaluates the (possibly expensive)
@@ -168,23 +170,26 @@ def connected_components(
     # subset of the grouping key satisfies the aggregation's distribution,
     # so no extra exchange — and min-label propagation is multiset-tolerant,
     # so the result is unchanged by construction.
-    sym = (
-        sym_ckpt.repartition(sym_parts, "src")
-        .dropDuplicates(["src", "dst"])
-        .sortWithinPartitions("src")
-        .persist()
-    )
+    # It is planned non-adaptively: an adaptive cache plan hides its
+    # partitioning until filled, and round 1 re-shuffled it (plan-gated).
+    #
+    # Per-round plans are fixed-shape (cached pre-partitioned edges ⋈
+    # labels → union → two groupBy(min), plus the shortcut's labels
+    # self-join) with known operand sizes — run them non-adaptively at the
+    # edge cache's own data-derived width: the collect plus one job per
+    # labels broadcast, instead of one per exchange per round
+    # (_static_loop_plans docstring has the measurements).
     spark = sym_ckpt.sparkSession
-    try:
-        new_sum = prev_sum
-        converged = False
-        # Per-round plans are fixed-shape (cached pre-partitioned edges ⋈
-        # labels → union → two groupBy(min), plus the shortcut's labels
-        # self-join) with known operand sizes — run them non-adaptively at
-        # the edge cache's own data-derived width: one Spark job per round
-        # instead of one per exchange per round (_static_loop_plans
-        # docstring has the measurements).
-        with _static_loop_plans(spark, sym_parts):
+    with _static_loop_plans(spark, sym_parts):
+        sym = (
+            sym_ckpt.repartition(sym_parts, "src")
+            .dropDuplicates(["src", "dst"])
+            .sortWithinPartitions("src")
+            .persist()
+        )
+        try:
+            new_sum = prev_sum
+            converged = False
             for _ in range(max_iter):
                 # Propagation = min(own label, neighbors' labels), expressed
                 # as union + one aggregation instead of join + groupBy +
@@ -251,10 +256,10 @@ def connected_components(
                     converged = True
                     break
                 prev_sum = new_sum
-    finally:
-        # The returned labels are already materialized (checkpointed) by
-        # their convergence collect — the edge cache is loop-scoped.
-        sym.unpersist()
+        finally:
+            # The returned labels are already materialized (checkpointed) by
+            # their convergence collect — the edge cache is loop-scoped.
+            sym.unpersist()
     if not converged:
         # Labels were still moving when the iteration budget ran out — the
         # result would be silently wrong for the unfinished components (the

@@ -93,6 +93,24 @@ def _artifacts(cfs: CatalogFS, root: str, m: dict):
     return a["centroids"], a["codebooks"]
 
 
+def _cell_files(cfs: CatalogFS, root: str, m: dict, cells=None) -> list[str]:
+    """The fs paths of the files ``m`` commits, by ascending cell; ``cells``
+    keeps only those cells."""
+    wanted = {str(int(c)) for c in cells} if cells is not None else set(m["cells"])
+    return [
+        cfs.join(root, f"cell={c}", f)
+        for c in sorted(m["cells"], key=int)
+        if c in wanted
+        for f in m["cells"][c]
+    ]
+
+
+def committed_files(cfs: CatalogFS, root: str) -> list[str]:
+    """The fs paths of every file the committed index at ``root`` holds
+    (what ``catalog.resolve`` resolves an index root to)."""
+    return _cell_files(cfs, root, _load(cfs, root))
+
+
 def _scan(
     spark: SparkSession, cfs: CatalogFS, root: str, m: dict, cells=None
 ) -> DataFrame:
@@ -100,13 +118,7 @@ def _scan(
     selects probed cells — file-level pruning with zero LIST calls),
     ``basePath`` so the hive ``cell=`` column survives, and the cell cast
     back to the long the probe produces so downstream joins are unchanged."""
-    wanted = {str(int(c)) for c in cells} if cells is not None else set(m["cells"])
-    files = [
-        cfs.spark_url(cfs.join(root, f"cell={c}", f))
-        for c in sorted(m["cells"], key=int)
-        if c in wanted
-        for f in m["cells"][c]
-    ]
+    files = [cfs.spark_url(f) for f in _cell_files(cfs, root, m, cells)]
     reader = spark.read.option("basePath", cfs.spark_url(root))
     if not files:
         # empty selection: an empty frame with the index schema, read from

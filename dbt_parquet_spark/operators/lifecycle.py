@@ -305,7 +305,7 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     3 directories; no footer of any other partition is opened. Combines
     with parquet row-group pruning (q_zorder_layout) inside the selected
     partitions."""
-    from ..sources.readers import read_partitioned
+    from ..sources.readers import read_parquet
 
     docs = load_table(spark, sf_dir, "documents")
     if docs.limit(1).isEmpty():
@@ -314,7 +314,7 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         # read — the flat table is the identical relation in that case
         df = docs
     else:
-        df = read_partitioned(spark, partitioned_documents(spark, sf_dir))
+        df = read_parquet(spark, partitioned_documents(spark, sf_dir))
     df = df.filter(F.col("source").isin("src0", "src1", "src2"))
     return df.groupBy("source", "lang").agg(
         F.count(F.lit(1)).alias("n_docs"),

@@ -18,11 +18,12 @@ from __future__ import annotations
 
 import graphlib
 import os
+import posixpath
 import re
 from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from .catalog import DEFAULT_SCHEMA, FilesystemCatalog, Relation
 from .materialize import create_table_as
@@ -121,17 +122,17 @@ class RunResult:
 @dataclass
 class ExternalSource:
     """A ``source()`` declaration that points OUTSIDE the catalog — at an
-    existing parquet file or a hive-partitioned lake directory (dbt's
-    sources.yml external-location shape). ``partitioned=True`` resolves
-    through read_partitioned, so a model's WHERE on the partition column
-    prunes whole directories at the scan (PartitionFilters — the layout
-    every existing lake hands this engine first; the reference is
-    restricted to single-file tables, reference README.md:49)."""
+    existing parquet file, part-file directory or hive-partitioned lake
+    directory (dbt's sources.yml external-location shape). It reads through
+    read_parquet, whose partition discovery turns ``k=v/`` directories into
+    columns, so a model's WHERE on a partition column prunes whole
+    directories at the scan (PartitionFilters — the layout every existing
+    lake hands this engine first; the reference is restricted to
+    single-file tables, reference README.md:49)."""
 
     schema: str
     table: str
     path: str
-    partitioned: bool = False
 
 
 class Project:
@@ -142,15 +143,11 @@ class Project:
         self.models: dict[str, Model] = {m.name: m for m in (models or [])}
         self.external_sources: dict[tuple[str, str], ExternalSource] = {}
 
-    def add_source(
-        self, schema: str, table: str, path: str, partitioned: bool = False
-    ) -> None:
+    def add_source(self, schema: str, table: str, path: str) -> None:
         """Declare an external location for ``{{ source(schema, table) }}``:
         models referencing it read the given path directly (partition-
-        discovering when ``partitioned``) instead of a catalog relation."""
-        self.external_sources[(schema, table)] = ExternalSource(
-            schema, table, path, partitioned
-        )
+        discovering) instead of a catalog relation."""
+        self.external_sources[(schema, table)] = ExternalSource(schema, table, path)
 
     @classmethod
     def from_dir(cls, catalog: FilesystemCatalog, models_dir: str, schema: str = DEFAULT_SCHEMA) -> "Project":
@@ -184,25 +181,6 @@ class Project:
     def _model_relation(self, name: str) -> Relation:
         model = self.models[name]
         return self.catalog.relation(model.name, model.schema)
-
-    def _register_model_view(
-        self, spark: SparkSession, model: Model, rel: Relation
-    ) -> DataFrame | None:
-        """(Re-)register a model's view honoring its materialization: a
-        versioned model's view must read the manifest's CURRENT snapshot
-        (explicit file list) — a plain directory view over its root would
-        union every retained version's files."""
-        if model.materialized == "versioned":
-            from . import commitlog
-            from .versioned import VERSIONS_MANIFEST, read_versioned
-
-            root = self.catalog.fs_path(rel)
-            if not commitlog.committed(self.catalog.io, root, VERSIONS_MANIFEST):
-                return None  # not built yet (first run builds + registers)
-            df = read_versioned(spark, self.catalog, rel)
-            df.createOrReplaceTempView(rel.view_name)
-            return df
-        return self.catalog.register_view(spark, rel)
 
     def dag_order(self) -> list[str]:
         ts = graphlib.TopologicalSorter(
@@ -265,57 +243,38 @@ class Project:
             fh.write(json.dumps(state, indent=1, sort_keys=True).encode())
 
     def _source_fingerprint(self, schema: str, table: str) -> str:
-        """Byte-level fingerprint of a source table: sorted (file, size,
-        footer row count) triples, hashed. Row counts come from parquet
-        footers (metadata-only reads), so a same-size rewrite with
-        different content is still caught when its row count moves; a
-        same-size same-count in-place edit is the accepted blind spot
-        (dbt's source freshness has the same shape)."""
+        """Byte-level fingerprint of a source: the files ``catalog.resolve``
+        gives (every partition's; a versioned table's current version, so a
+        rollback changes it) as sorted (file, size, footer row count)
+        triples, plus its deletion vectors and live row count, hashed. An
+        external source resolves on its own filesystem
+        (``fs.resolve_database``). Row counts come from parquet footers, so
+        a same-size rewrite is still caught when its row count moves; a
+        same-size same-count in-place edit is the accepted blind spot (dbt's
+        source freshness has the same shape)."""
         import hashlib
         import json
 
-        import pyarrow.parquet as pq
+        from .catalog import footers, resolve
+        from .fs import resolve_database
 
         ext = self.external_sources.get((schema, table))
         if ext is not None:
-            # external lake path (possibly a nested partition tree): walk
-            # recursively with the same (relpath, size, footer rows) triples
-            entries_ext: list[tuple[str, int, int]] = []
-            if os.path.isfile(ext.path):
-                files_ext = [(os.path.basename(ext.path), ext.path)]
-            else:
-                files_ext = [
-                    (os.path.relpath(os.path.join(r, fn), ext.path), os.path.join(r, fn))
-                    for r, _, fns in os.walk(ext.path)
-                    for fn in fns
-                    if fn.endswith(".parquet")
-                ]
-            if not files_ext:
-                return "absent"
-            for name, f in sorted(files_ext):
-                entries_ext.append(
-                    (name, os.path.getsize(f), pq.ParquetFile(f).metadata.num_rows)
-                )
-            return hashlib.md5(json.dumps(entries_ext).encode()).hexdigest()
-
-        io = self.catalog.io
-        path = self.catalog.fs_path(Relation(self.catalog.database, schema, table))
-        entries: list[tuple[str, int, int]] = []
-        if io.isdir(path):
-            files = [
-                (e, io.join(path, e))
-                for e in io.listdir(path)
-                if e.endswith(".parquet")
-            ]
-        elif io.isfile(path):
-            files = [(table, path)]
+            io = resolve_database(ext.path)
+            path = io.root
         else:
+            io = self.catalog.io
+            path = self.catalog.fs_path(Relation(self.catalog.database, schema, table))
+        snap = resolve(io, path)
+        if not snap.files and snap.rows is None:
             return "absent"
-        for name, f in sorted(files):
-            with io.open_input(f) as fh:
-                n_rows = pq.ParquetFile(fh).metadata.num_rows
-            entries.append((name, io.getsize(f), n_rows))
-        return hashlib.md5(json.dumps(entries).encode()).hexdigest()
+
+        def name(f: str) -> str:
+            return f[len(path) + 1:] if f.startswith(path + "/") else posixpath.basename(f)
+
+        entries = sorted((name(f.path), f.bytes, f.rows) for f in footers(io, snap.files))
+        state = [entries, sorted(name(f) for f in snap.dv), snap.rows]
+        return hashlib.md5(json.dumps(state).encode()).hexdigest()
 
     def _state_hashes(self, names: list[str]) -> dict[str, str]:
         """Current Merkle state hash per model, for ``names`` and all their
@@ -376,24 +335,13 @@ class Project:
             raise ValueError(f"unsupported state mode: {state!r}")
         register_duckdb_compat(spark)  # DuckDB-dialect model SQL runs unchanged
         self.catalog.register_all_views(spark)
-        # versioned models' roots hold EVERY version's files — the plain
-        # directory view register_all_views just made would read them all.
-        # Re-register those views over the manifest's CURRENT snapshot, so
-        # refs to unselected versioned models resolve correctly.
-        for m in self.models.values():
-            rel = self._model_relation(m.name)
-            if m.materialized == "versioned" and self.catalog.exists(rel):
-                self._register_model_view(spark, m, rel)
         # external source() declarations resolve to views over their lake
         # paths; a temp view is just a named plan, so partition pruning and
         # filter pushdown reach the scan through it unchanged (plan-gated)
-        from .sources.readers import read_parquet, read_partitioned
+        from .sources.readers import read_parquet
 
         for src in self.external_sources.values():
-            df = (read_partitioned if src.partitioned else read_parquet)(
-                spark, src.path
-            )
-            df.createOrReplaceTempView(
+            read_parquet(spark, src.path).createOrReplaceTempView(
                 Relation(self.catalog.database, src.schema, src.table).view_name
             )
 
@@ -416,7 +364,7 @@ class Project:
                 and self.catalog.exists(rel)
             ):
                 # fresh: keep the table, just (re-)register its view
-                self._register_model_view(spark, model, rel)
+                self.catalog.register_view(spark, rel)
                 return RunResult(model=name, relation=rel, rows=-1, skipped=True)
             if model.schema != DEFAULT_SCHEMA:
                 self.catalog.create_schema(model.schema)
@@ -426,7 +374,7 @@ class Project:
                 write_versioned(
                     spark, self.catalog, rel, spark.sql(self.compile_sql(model))
                 )
-                self._register_model_view(spark, model, rel)
+                self.catalog.register_view(spark, rel)
                 # row count is free: it came from the staged parquet footers
                 rows = version_history(self.catalog, rel)[-1]["rows"]
                 return RunResult(model=name, relation=rel, rows=rows)

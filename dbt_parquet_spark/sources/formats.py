@@ -71,10 +71,6 @@ def write_partitioned(df: DataFrame, dest: str, partition_by: list[str]) -> None
     )
 
 
-def read_partitioned(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
 def write_sorted(df: DataFrame, dest: str, sort_cols: list[str], files: int = 0) -> None:
     """Write parquet ordered by ``sort_cols`` within each file.
 

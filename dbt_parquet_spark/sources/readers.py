@@ -107,26 +107,22 @@ def _ns_timestamp_columns_uncached(path: str) -> list[str]:
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
+    from ..catalog import resolve
+    from ..fs import CatalogFS
+
     try:
         if "://" in path:
             uri = path.replace("s3a://", "s3://", 1)
             fs, fpath = pafs.FileSystem.from_uri(uri)
         else:
             fs, fpath = pafs.LocalFileSystem(), path
-        info = fs.get_file_info(fpath)
-        if info.type == pafs.FileType.Directory:
-            # recursive: hive-partitioned sources nest their part files
-            # under col=value/ directories (read_partitioned)
-            sel = pafs.FileSelector(fpath, recursive=True)
-            parts = sorted(
-                i.path for i in fs.get_file_info(sel) if i.path.endswith(".parquet")
-            )
-            if not parts:
-                return []
-            fpath = parts[0]
-        with fs.open_input_file(fpath) as f:
-            pf = pq.ParquetFile(f)
-            return _ns_cols_of(pf)
+        # a directory probes its first data file as the catalog resolves it
+        # (hive partition directories included, markers and staging skipped)
+        files = resolve(CatalogFS(fs, fpath), fpath).files
+        if not files:
+            return []
+        with fs.open_input_file(files[0]) as f:
+            return _ns_cols_of(pq.ParquetFile(f))
     except (OSError, pa.lib.ArrowException):
         # ArrowException covers ArrowInvalid AND ArrowNotImplementedError —
         # from_uri raises the latter for schemes without compiled filesystem
@@ -154,6 +150,10 @@ def _ns_cols_of(pf) -> list[str]:
 
 def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
     """Parquet scan with timestamp normalization (ns and NTZ).
+
+    A hive ``col=value/`` directory tree reads with partition discovery: a
+    filter on the partition column becomes PartitionFilters at the scan and
+    unselected directories are never opened (plan-gated in test_plans.py).
 
     ``merge_schema=True`` unions the schemas of all part files (columns
     absent in older files read as NULL) — the read side of append-time
@@ -187,36 +187,6 @@ def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> 
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    for c, t in df.dtypes:
-        if t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
-
-
-def read_partitioned(spark: SparkSession, path: str, base_path: str | None = None) -> DataFrame:
-    """Read an externally-produced hive-partitioned parquet directory
-    (``col=value/.../part-*.parquet``) — the layout every existing lake
-    hands this engine first. Spark's partition discovery turns the directory
-    names into a real column, and any filter on it becomes PartitionFilters
-    at the scan: unselected directories are never opened, not even their
-    footers (plan-gated in tests/test_plans.py). The reference cannot read
-    these at all (single-file tables, reference README.md:49).
-
-    ``base_path`` pins partition-column discovery when ``path`` points
-    INSIDE the partition tree (e.g. reading one ``date=2024-01-01/``
-    subtree while keeping ``date`` as a column). Timestamp normalization
-    (ns/NTZ) matches read_parquet — the probe walks the tree recursively."""
-    from pyspark.sql import functions as F
-
-    ns_cols = _ns_timestamp_columns(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.read
-    if base_path is not None:
-        reader = reader.option("basePath", base_path)
     df = reader.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

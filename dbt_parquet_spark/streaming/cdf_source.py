@@ -230,18 +230,14 @@ class VersionedCDFDataSource(DataSource):
 
     def schema(self) -> str:
         from ..catalog import FilesystemCatalog
-        from ..versioned import _load_manifest
+        from ..versioned import current_snapshot
 
         catalog = FilesystemCatalog(self.options["database"])
         rel = catalog.relation(
             self.options["table"], self.options.get("schemaname", "") or ""
         )
-        m = _load_manifest(catalog, rel)
-        entry = m["versions"][str(m["current"])]
-        dtypes = entry.get("dtypes", {})
-        cols = ", ".join(
-            f"`{c}` {dtypes.get(c, 'string')}" for c in entry["columns"]
-        )
+        columns = current_snapshot(catalog.io, catalog.fs_path(rel)).columns
+        cols = ", ".join(f"`{c}` {t}" for c, t in columns.items())
         return f"{cols}, `_change_type` string, `_commit_version` bigint"
 
     def streamReader(self, schema):

@@ -53,7 +53,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import commitlog, memo
-from .catalog import FilesystemCatalog, Relation
+from .catalog import FilesystemCatalog, Relation, Snapshot
 from .fs import ConcurrentWriteError  # noqa: F401 — re-exported (public API)
 from .registry import register
 from .sources.readers import load_table
@@ -101,6 +101,23 @@ def _load_manifest(catalog: FilesystemCatalog, rel: Relation) -> dict:
     table with nothing committed loads as an empty manifest at gen 0."""
     m = commitlog.load(catalog.io, _root(catalog, rel), VERSIONS_MANIFEST)
     return m if m is not None else {"current": 0, "versions": {}, "gen": 0}
+
+
+def current_snapshot(io, root: str) -> Snapshot:
+    """The table at ``root``'s current version as a catalog ``Snapshot``:
+    files and deletion vectors as fs paths (``ref://`` names resolved), the
+    live row count and the pinned columns (untyped legacy ones as strings)."""
+    m = commitlog.load(io, root, VERSIONS_MANIFEST)
+    entry = m["versions"].get(str(m["current"])) if m else None
+    if entry is None:
+        return Snapshot(rows=0, columns={})
+    dtypes = entry.get("dtypes") or {}
+    return Snapshot(
+        tuple(_fpath(io, root, f) for f in entry["files"]),
+        tuple(_fpath(io, root, f) for f in entry.get("dv", [])),
+        entry["rows"],
+        {c: dtypes.get(c, "string") for c in entry["columns"]},
+    )
 
 
 def _commit_manifest(

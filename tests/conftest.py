@@ -131,6 +131,7 @@ SLOW_TESTS = frozenset(
     "test_oracle_parity.py::test_rows_only_query_runs[q_quality_classifier]",  # 7.1s
     "test_pca.py::test_gram_and_pca_match_numpy",  # 2.1s
     "test_plans.py::test_blocked_candidates_equi_join_in_hyperplane_mode",  # 2.2s
+    "test_plans.py::test_components_rounds_read_edge_cache_without_exchange",  # 7.8s
     "test_project.py::test_check_relations_equal",  # 6.8s
     "test_project.py::test_concurrent_independent_models",  # 14.4s
     "test_project.py::test_config_block_with_extra_args_and_unknown_keys",  # 7.1s
@@ -138,6 +139,8 @@ SLOW_TESTS = frozenset(
     "test_project.py::test_external_partitioned_source_through_runner",  # 2.2s
     "test_project.py::test_generic_tests",  # 7.5s
     "test_project.py::test_incremental_run_rebuilds_dropped_table",  # 7.1s
+    "test_project.py::test_incremental_run_sees_source_snapshot_change[partitioned]",  # 3.2s
+    "test_project.py::test_incremental_run_sees_source_snapshot_change[rollback]",  # 2.5s
     "test_project.py::test_incremental_run_skips_unmodified",  # 20.4s
     "test_project.py::test_model_with_duckdb_star_exclude",  # 7.2s
     "test_project.py::test_model_with_qualify",  # 6.4s

@@ -45,12 +45,21 @@ def test_duckdb_query_over_catalog(spark, tmp_path):
 
 
 def test_duckdb_query_multipart_table(spark, tmp_path):
+    """Part-file directories, flat or hive-partitioned, register as views
+    over their resolved files; a partitioned table keeps its partition
+    column and does not break the views of the other tables."""
     db = FilesystemCatalog(str(tmp_path))
     create_table_as(
         spark, db, db.relation("multi"), spark.range(1000).select("id"), single_file=False
     )
+    create_table_as(
+        spark, db, db.relation("parts"),
+        spark.range(100).withColumn("p", F.col("id") % 4), partition_by=["p"],
+    )
     out = duckdb_query(spark, "SELECT COUNT(*) AS n FROM multi", db)
     assert out.first().n == 1000
+    out = duckdb_query(spark, "SELECT COUNT(*) AS n, SUM(p) AS s FROM parts", db)
+    assert (out.first().n, out.first().s) == (100, 150)
 
 
 def test_to_duckdb_roundtrip(spark):

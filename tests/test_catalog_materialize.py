@@ -199,6 +199,11 @@ def test_docs_artifact_shape(spark, tmp_path):
         os.path.join(db, "t1.parquet"),
     )
     cat = FilesystemCatalog(db)
+    # hive-partitioned: the part files sit one level down, in p=<v>/
+    create_table_as(
+        spark, cat, cat.relation("parts"),
+        spark.range(100).withColumn("p", F.col("id") % 3), partition_by=["p"],
+    )
     out = str(tmp_path / "catalog.json")
     artifact = cat.docs_artifact(spark, out)
     assert artifact["metadata"]["dbt_schema_version"].endswith("catalog/v1.json")
@@ -207,6 +212,9 @@ def test_docs_artifact_shape(spark, tmp_path):
     assert node["columns"]["x"]["type"] == "bigint"
     assert node["columns"]["s"]["index"] == 1
     assert node["stats"]["num_rows"]["value"] == 3
+    parts = artifact["nodes"]["model.dbt_parquet_spark.parts"]
+    assert parts["stats"]["num_rows"]["value"] == 100
+    assert parts["stats"]["num_bytes"]["value"] > 0
     with open(out) as fh:
         assert json.load(fh) == artifact
 

@@ -36,12 +36,20 @@ def test_table_stats_from_footers(spark, db):
     create_table_as(spark, db, db.relation("t1"), spark.range(1234), single_file=True)
     db.create_schema("s")
     create_table_as(spark, db, db.relation("t2", "s"), spark.range(10).repartition(4), single_file=False)
+    # hive-partitioned: the part files sit one level down, in p=<v>/
+    create_table_as(
+        spark, db, db.relation("t3"), spark.range(100).withColumn("p", F.col("id") % 3),
+        partition_by=["p"],
+    )
     stats = {(r.table_schema, r.table_name): r for r in table_stats(spark, db).collect()}
     assert stats[("", "t1")].n_rows == 1234
     assert stats[("", "t1")].n_files == 1
     assert stats[("s", "t2")].n_rows == 10
     assert stats[("s", "t2")].n_files == 4
     assert stats[("s", "t2")].total_bytes > 0
+    assert stats[("", "t3")].n_rows == 100
+    assert stats[("", "t3")].n_files >= 3
+    assert stats[("", "t3")].total_bytes > 0
 
 
 def test_stream_merge_upserts(spark, db, tmp_path):

@@ -132,6 +132,58 @@ def test_components_rounds_have_leaf_plans(spark):
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
 
 
+def _exchange_over_cache(plan) -> bool:
+    """True when an Exchange reads an InMemoryTableScan through nothing but
+    single-child pass-through nodes (filter, projection, codegen glue)."""
+    passthrough = ("Filter", "Project", "InputAdapter", "ColumnarToRow", "WholeStageCodegen")
+
+    def nodes(p):
+        yield p
+        for i in range(p.children().size()):
+            yield from nodes(p.children().apply(i))
+
+    for node in nodes(plan):
+        if node.nodeName() != "Exchange":
+            continue
+        child = node.children().apply(0)
+        while child.nodeName().startswith(passthrough) and child.children().size() == 1:
+            child = child.children().apply(0)
+        if child.nodeName() == "InMemoryTableScan":
+            return True
+    return False
+
+
+def test_components_rounds_read_edge_cache_without_exchange(spark, monkeypatch):
+    """With the label join not broadcast, every round's sort-merge join must
+    consume the edge cache as it is partitioned (by src): no Exchange
+    directly above the cache's scan. Each round's plan is captured as it is
+    checkpointed, inside the loop's non-adaptive block."""
+    from dbt_parquet_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(30)], "d1 long, d2 long"
+    ).repartition(4)
+    plans = []
+    checkpoint = type(edges).localCheckpoint
+
+    def capture(df, *args, **kwargs):
+        plans.append(df._jdf.queryExecution().executedPlan())
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(type(edges), "localCheckpoint", capture)
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        labels = connected_components(edges)
+        assert {r.component for r in labels.collect()} == {0}
+    finally:
+        spark.conf.set(key, old)
+    rounds = [p for p in plans if "InMemoryTableScan" in p.toString()]
+    assert rounds
+    assert not any(_exchange_over_cache(p) for p in rounds)
+
+
 def test_blocked_candidates_equi_join_in_hyperplane_mode(spark):
     """Round-5 gate: at hyperplane widths (bits > 16, corpus beyond the
     raw-dim ceiling) the candidate generator must still be a posting-key
@@ -560,14 +612,14 @@ def test_pq_index_probe_prunes_partitions(spark):
 
 
 def test_partitioned_source_scan_prunes(spark):
-    """read_partitioned + a partition-column filter must prune at the
+    """read_parquet + a partition-column filter must prune at the
     DIRECTORY level: the scan's PartitionFilters carries the source IN
     list, and the executed scan opens only the 3 selected partitions'
     files out of 20 (numFiles metric, not inputFiles — see the PQ gate)."""
     from pyspark.sql import functions as F
 
     from dbt_parquet_spark.operators.lifecycle import partitioned_documents
-    from dbt_parquet_spark.sources.readers import read_partitioned
+    from dbt_parquet_spark.sources.readers import read_parquet
 
     path = partitioned_documents(spark, SF_ORACLE)
 
@@ -576,10 +628,10 @@ def test_partitioned_source_scan_prunes(spark):
         scan = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
         return scan.metrics().apply("numFiles").value()
 
-    full = read_partitioned(spark, path)
+    full = read_parquet(spark, path)
     n_all = scan_num_files(full)
     assert n_all >= 20  # one+ file per source partition
-    pruned = read_partitioned(spark, path).filter(
+    pruned = read_parquet(spark, path).filter(
         F.col("source").isin("src0", "src1", "src2")
     )
     n_pruned = scan_num_files(pruned)

@@ -323,6 +323,52 @@ def test_incremental_run_rebuilds_dropped_table(spark, db):
     assert spark.table("m").count() == 4
 
 
+def _rewrite_partitioned(spark, db, rel):
+    """A partitioned source rewritten from 100 to 500 rows."""
+    def write(n):
+        df = spark.range(n).withColumn("p", F.col("id") % 4)
+        create_table_as(spark, db, rel, df, partition_by=["p"])
+
+    write(100)
+    return lambda: write(500), 500
+
+
+def _rollback_versioned(spark, db, rel):
+    """A versioned source cut from 100 to 50 rows by a copy-on-write delete,
+    then rolled back to its first version (no file name, size or footer
+    changes on disk)."""
+    from dbt_parquet_spark.versioned import (
+        delete_versioned,
+        rollback_versioned,
+        write_versioned,
+    )
+
+    write_versioned(spark, db, rel, spark.range(100))
+    delete_versioned(spark, db, rel, F.col("id") >= 50)
+    return lambda: rollback_versioned(db, rel, 1), 100
+
+
+@pytest.mark.parametrize(
+    "change", [_rewrite_partitioned, _rollback_versioned], ids=["partitioned", "rollback"]
+)
+def test_incremental_run_sees_source_snapshot_change(spark, db, change):
+    """state="modified" fingerprints a source by the files that hold its
+    current rows: a partitioned source's part files one level down, and a
+    versioned source's current version, so a rewrite or a rollback makes
+    its reader stale."""
+    db.create_schema("raw")
+    rel = db.relation("ev", "raw")
+    apply_change, n_after = change(spark, db, rel)
+    project = Project(db)
+    project.add(Model("n", "SELECT COUNT(*) AS n FROM {{ source('raw', 'ev') }}"))
+    project.run(spark, state="modified")
+    assert spark.table("n").first().n != n_after
+    assert project.run(spark, state="modified")["n"].skipped
+    apply_change()
+    assert not project.run(spark, state="modified")["n"].skipped
+    assert spark.table("n").first().n == n_after
+
+
 def test_plain_run_always_rebuilds_but_primes_state(spark, db):
     """state=None keeps the old always-rebuild contract, yet records state
     so a later state="modified" run can skip."""
@@ -339,15 +385,15 @@ def test_plain_run_always_rebuilds_but_primes_state(spark, db):
 
 def test_external_partitioned_source_through_runner(spark, db, tmp_path):
     """A source() declaration pointing at an existing hive-partitioned
-    lake directory (add_source(partitioned=True)) resolves through
-    read_partitioned: the model's WHERE on the partition column prunes
+    lake directory resolves through read_parquet's partition discovery:
+    the model's WHERE on the partition column prunes
     whole DIRECTORIES at the executed scan (numFiles), results match a
     direct read, and state:modified sees external file changes."""
     import glob
     import shutil
 
     from dbt_parquet_spark.operators.lifecycle import partitioned_documents
-    from dbt_parquet_spark.sources.readers import read_partitioned
+    from dbt_parquet_spark.sources.readers import read_parquet
 
     from .conftest import SF_SMALL
 
@@ -358,7 +404,7 @@ def test_external_partitioned_source_through_runner(spark, db, tmp_path):
     shutil.copytree(src_local, lake)
 
     project = Project(db)
-    project.add_source("lake", "docs", lake, partitioned=True)
+    project.add_source("lake", "docs", lake)
     project.add(
         Model(
             "lake_stats",
@@ -372,7 +418,7 @@ def test_external_partitioned_source_through_runner(spark, db, tmp_path):
     # results match an independent direct read of the lake
     direct = {
         (r.lang, r.n)
-        for r in read_partitioned(spark, lake)
+        for r in read_parquet(spark, lake)
         .filter(F.col("source").isin("src0", "src1", "src2"))
         .groupBy("lang")
         .agg(F.count("*").alias("n"))
@@ -405,7 +451,7 @@ def test_external_partitioned_source_through_runner(spark, db, tmp_path):
 
     compiled = spark.sql(project.compile_sql(project.models["lake_stats"]))
     n_pruned = scan_num_files(compiled)
-    n_all = scan_num_files(read_partitioned(spark, lake))
+    n_all = scan_num_files(read_parquet(spark, lake))
     assert n_pruned * 6 <= n_all, (n_pruned, n_all)  # 3 of 20 source dirs
     plan = compiled._jdf.queryExecution().executedPlan().toString()
     pf = next(l for l in plan.splitlines() if "PartitionFilters" in l)
@@ -501,8 +547,7 @@ def test_versioned_incremental_skip_and_materialization_change(spark, db):
     r3 = project.run(spark, state="modified")
     assert r3["m"].skipped
     assert spark.table("m").count() == 4
-    view = project._register_model_view(spark, project.models["m"], rel)
-    assert view is not None and view.count() == 4
+    assert db.register_view(spark, rel).count() == 4
 
 
 def test_config_block_with_extra_args_and_unknown_keys(spark, db):

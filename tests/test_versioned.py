@@ -820,8 +820,16 @@ def test_generic_catalog_surfaces_respect_versioned_roots(spark, vt):
     must resolve the CURRENT snapshot through the manifest (a directory
     view unions every retained version's files — duplicate rows), and
     maintain's compact/cluster_by must refuse (they would rewrite files
-    committed manifests reference)."""
-    from dbt_parquet_spark.maintenance import cluster_by, compact
+    committed manifests reference). Footer stats (table_stats, docs) count
+    the current snapshot's live rows and files only."""
+    from pyspark.sql import functions as F
+
+    from dbt_parquet_spark.maintenance import cluster_by, compact, table_stats
+    from dbt_parquet_spark.versioned import (
+        _load_manifest,
+        delete_versioned,
+        merge_versioned,
+    )
 
     catalog, rel = vt
     write_versioned(spark, catalog, rel, spark.range(10))
@@ -842,6 +850,20 @@ def test_generic_catalog_surfaces_respect_versioned_roots(spark, vt):
         f"model.dbt_parquet_spark.{rel.view_name}"
     ]
     assert node["stats"]["num_rows"]["value"] == 10
+    # footer stats resolve the current snapshot too, after a CoW merge (the
+    # rewritten files stay on disk) and a MoR delete (a DV sidecar lands in
+    # the root): live rows, current data files only
+    merge_versioned(spark, catalog, rel, spark.range(5, 15), key="id")  # ids 0..14
+    delete_versioned(spark, catalog, rel, F.col("id") < 3, mode="mor")  # 12 live
+    m = _load_manifest(catalog, rel)
+    assert m["versions"][str(m["current"])].get("dv")
+    st = {(r.table_schema, r.table_name): r for r in table_stats(spark, catalog).collect()}
+    assert st[(rel.schema, rel.table)].n_rows == 12
+    assert st[(rel.schema, rel.table)].n_files == len(m["versions"][str(m["current"])]["files"])
+    node = catalog.docs_artifact(spark)["nodes"][
+        f"model.dbt_parquet_spark.{rel.view_name}"
+    ]
+    assert node["stats"]["num_rows"]["value"] == 12
     # maintenance refuses, pointing at the manifest-aware path
     with pytest.raises(ValueError, match="manifest-versioned"):
         compact(spark, catalog, rel)
