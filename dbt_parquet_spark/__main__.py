@@ -454,8 +454,9 @@ def main(argv: list[str] | None = None) -> int:
         name = args.name or os.path.splitext(os.path.basename(args.csv))[0]
         if args.schema:
             catalog.create_schema(args.schema)
-        df = load_seed(spark, catalog, args.csv, catalog.relation(name, args.schema))
-        print(f"OK seed {name}: {df.count()} rows")
+        rel = catalog.relation(name, args.schema)
+        load_seed(spark, catalog, args.csv, rel)
+        print(f"OK seed {name}: {catalog.stats(rel).rows} rows")
     elif args.cmd == "docs":
         for row in catalog.catalog_df(spark).collect():
             print(
@@ -566,12 +567,13 @@ def main(argv: list[str] | None = None) -> int:
         rel = catalog.relation(args.table, args.schema)
         if args.cluster_by:
             cols = [c.strip() for c in args.cluster_by.split(",") if c.strip()]
-            df = cluster_by(spark, catalog, rel, cols, zorder=args.zorder)
+            cluster_by(spark, catalog, rel, cols, zorder=args.zorder)
             order = "zorder" if args.zorder and len(cols) > 1 else "sorted"
-            print(f"OK cluster {rel.view_name} by {','.join(cols)} ({order}): {df.count()} rows")
+            rows = catalog.stats(rel).rows
+            print(f"OK cluster {rel.view_name} by {','.join(cols)} ({order}): {rows} rows")
         elif args.compact:
-            df = compact(spark, catalog, rel)
-            print(f"OK compact {rel.view_name}: {df.count()} rows")
+            compact(spark, catalog, rel)
+            print(f"OK compact {rel.view_name}: {catalog.stats(rel).rows} rows")
         else:
             print("maintain: pass --stats, --compact, or --cluster-by COLS", file=sys.stderr)
             return 2

@@ -286,7 +286,9 @@ class FilesystemCatalog:
         ANN indexes resolve through their manifests (committed rows only);
         an index is probed only when the directory read shows the ``cell``
         partition column every index carries, so plain tables pay no extra
-        metadata call."""
+        metadata call. No Spark job: a Spark-written relation's schema comes
+        from one parquet footer (``read_parquet``), a versioned one's from
+        its manifest; a file another tool wrote keeps Spark's inference."""
         from .sources.readers import read_parquet
 
         if self.is_versioned(rel):
@@ -316,9 +318,11 @@ class FilesystemCatalog:
     # -- introspection (reference impl.py:97-103, macros/catalog.sql) ------
     def get_columns(self, spark: SparkSession, rel: Relation) -> T.StructType:
         """Footer-only schema read — the Spark analog of the reference's
-        `SELECT * … LIMIT 0 → arrow schema` probe (reference impl.py:97-103).
-        Versioned roots resolve through the manifest (the current version's
-        pinned schema), never a directory glob over mixed-version files."""
+        `SELECT * … LIMIT 0 → arrow schema` probe (reference impl.py:97-103):
+        one footer GET by pyarrow and no Spark job for a Spark-written
+        relation (``read_parquet``). Versioned roots resolve through the
+        manifest (the current version's pinned schema), never a directory
+        glob over mixed-version files."""
         from .sources.readers import read_parquet
 
         if self.is_versioned(rel):
@@ -354,9 +358,11 @@ class FilesystemCatalog:
         byte-size stats. The stats come from ``stats``: the parquet FOOTERS
         of the files ``snapshot`` resolves — every partition's files of a
         hive-partitioned table, only the current version's of a versioned
-        one, whose row count is the manifest's live count. Driver-side
-        metadata reads, no Spark job, so generating docs over a 100 TB lake
-        costs one footer read per data file, not a scan.
+        one, whose row count is the manifest's live count. The columns come
+        from ``get_columns``. Metadata reads by pyarrow, no Spark job for
+        Spark-written relations (pinned in tests/test_footer_schema.py), so
+        generating docs over a 100 TB lake costs one footer read per data
+        file, not a scan.
         """
         import json
 

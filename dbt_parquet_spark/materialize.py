@@ -74,7 +74,10 @@ def create_table_as(
     """CTAS (reference macros/adapters.sql:10): execute → write parquet →
     register view. Writes go to a temp name then swap (atomic publish per
     reference impl.py:75-85 rename pattern) so a failed write never clobbers
-    the previous table version.
+    the previous table version. Returns the written table as
+    ``read_parquet`` reads it (the registered view's DataFrame when
+    ``register``): its schema comes from the footer, so no job runs after
+    the write.
 
     ``partition_by`` writes a hive-partitioned directory layout
     (``col=value/part-*.parquet``) — the scale lever for selective reads:
@@ -100,7 +103,9 @@ def create_table_as(
         _swap_into_place(io, fs_tmp, fs_dest)
     if register:
         return catalog.register_view(spark, rel)
-    return spark.read.parquet(rel.path)
+    from .sources.readers import read_parquet
+
+    return read_parquet(spark, rel.path)
 
 
 # -- seeds (reference impl.py:151-163, 185-208) -----------------------------

@@ -319,9 +319,16 @@ class Project:
     ) -> dict[str, RunResult]:
         """Materialize every model (or the ``select``-ed subset) in DAG
         order, parallelizing independent models across ``threads``
-        (reference threads semantics). Source views are registered up front
-        (reference connections.py:79-88 registers all existing parquet on
-        connect).
+        (reference threads semantics). Every relation's view is registered
+        once, up front (reference connections.py:79-88 registers all
+        existing parquet on connect); a rebuilt model re-registers its own.
+        Spark jobs run only to write models: a Spark-written relation's
+        view schema comes from its footer (``read_parquet``; a source
+        another tool wrote still costs Spark's inference job) and each
+        ``RunResult.rows`` from the written files' footers
+        (``FilesystemCatalog.stats``). Model threads inherit the caller's
+        local properties (job group, scheduler pool), so a caller's job
+        group covers the run's jobs.
 
         ``state="modified"`` enables incremental runs: a model whose table
         exists and whose Merkle state hash (compiled SQL + upstream hashes
@@ -355,7 +362,14 @@ class Project:
         current = self._state_hashes(names)
         recorded = self._load_state() if state == "modified" else {}
 
+        # model threads run under a copy of the caller's local properties
+        # (job group, scheduler pool), as a JVM child thread would; one copy
+        # per model, since a query sets its execution id in its own copy
+        jsc = spark.sparkContext._jsc.sc()
+        props = jsc.getLocalProperties().clone()
+
         def execute(name: str) -> RunResult:
+            jsc.setLocalProperties(props.clone())
             model = self.models[name]
             rel = self._model_relation(name)
             if (
@@ -363,8 +377,7 @@ class Project:
                 and recorded.get(name) == current[name]
                 and self.catalog.exists(rel)
             ):
-                # fresh: keep the table, just (re-)register its view
-                self.catalog.register_view(spark, rel)
+                # fresh: keep the table; register_all_views registered it
                 return RunResult(model=name, relation=rel, rows=-1, skipped=True)
             if model.schema != DEFAULT_SCHEMA:
                 self.catalog.create_schema(model.schema)
@@ -378,10 +391,10 @@ class Project:
                 # row count is free: it came from the staged parquet footers
                 rows = version_history(self.catalog, rel)[-1]["rows"]
                 return RunResult(model=name, relation=rel, rows=rows)
-            df = create_table_as(
+            create_table_as(
                 spark, self.catalog, rel, self.compile_sql(model), single_file=single_file
             )
-            return RunResult(model=name, relation=rel, rows=df.count())
+            return RunResult(model=name, relation=rel, rows=self.catalog.stats(rel).rows)
 
         futures: dict = {}
         with ThreadPoolExecutor(max_workers=threads) as pool:

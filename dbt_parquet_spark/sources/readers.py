@@ -8,6 +8,7 @@ declarative ``spark.read`` keeps projection pruning / predicate pushdown free.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -81,28 +82,37 @@ def _stat_key(path: str):
 # Footer-probe memo — metadata, never data: load_table re-probes the SAME
 # immutable file on every call (each query build, each bench rep), and the
 # pyarrow open+footer-parse is a few ms of pure Python per table per call.
-_NS_COLS_MEMO: dict[str, tuple] = {}
+# Each entry holds the probe's (ns columns, Spark schema JSON).
+_FOOTER_MEMO: dict[str, tuple] = {}
+
+# Spark writes its exact write schema into every parquet footer under this
+# key-value metadata key, and its own non-merge schema inference prefers it
+# to converting the parquet schema (ParquetFileFormat.readSchemaFromFooter).
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _ns_timestamp_columns(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — footer-only probe.
+def _footer_probe(path: str) -> tuple[list[str], str | None]:
+    """(columns stored as parquet TIMESTAMP(NANOS), Spark's write-schema
+    JSON or None) from one footer — a directory's first data file as the
+    catalog resolves it.
 
     Resolves through pyarrow.fs so the probe works on any path spelling the
     engine reads (bare local path, file://, s3a://...); an unreachable or
-    unlistable location degrades to "no nanos columns" rather than failing
-    the read — Spark itself will surface a real IO error with context."""
+    unlistable location degrades to "no nanos columns, no schema" rather
+    than failing the read — Spark itself will surface a real IO error with
+    context."""
     sk = _stat_key(path)
     if sk is not None:
-        hit = _memo_get(_NS_COLS_MEMO, path, sk)
+        hit = _memo_get(_FOOTER_MEMO, path, sk)
         if hit is not None:
             return hit
-    out = _ns_timestamp_columns_uncached(path)
+    out = _footer_probe_uncached(path)
     if sk is not None:
-        _memo_put(_NS_COLS_MEMO, path, sk, out)
+        _memo_put(_FOOTER_MEMO, path, sk, out)
     return out
 
 
-def _ns_timestamp_columns_uncached(path: str) -> list[str]:
+def _footer_probe_uncached(path: str) -> tuple[list[str], str | None]:
     import pyarrow as pa
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
@@ -120,15 +130,18 @@ def _ns_timestamp_columns_uncached(path: str) -> list[str]:
         # (hive partition directories included, markers and staging skipped)
         files = resolve(CatalogFS(fs, fpath), fpath).files
         if not files:
-            return []
+            return [], None
         with fs.open_input_file(files[0]) as f:
-            return _ns_cols_of(pq.ParquetFile(f))
+            pf = pq.ParquetFile(f)
+            kv = pf.metadata.metadata or {}
+            schema = kv.get(SPARK_SCHEMA_KEY)
+            return _ns_cols_of(pf), schema.decode() if schema else None
     except (OSError, pa.lib.ArrowException):
         # ArrowException covers ArrowInvalid AND ArrowNotImplementedError —
         # from_uri raises the latter for schemes without compiled filesystem
         # support (hdfs:// without libhdfs, gs:// without gcsfs); the probe
         # must defer to Spark's own reader there, not crash the read.
-        return []
+        return [], None
 
 
 def _ns_cols_of(pf) -> list[str]:
@@ -150,6 +163,16 @@ def _ns_cols_of(pf) -> list[str]:
 
 def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
     """Parquet scan with timestamp normalization (ns and NTZ).
+
+    The schema is read by pyarrow from ONE footer, the one
+    ``_footer_probe`` opens (a directory's first data file as
+    ``catalog.resolve`` lists it). Spark writes its exact write schema into
+    that footer, and its own non-merge inference reads that same JSON from
+    one footer, but through a Spark job; handing the JSON to
+    ``spark.read.schema`` gives the same schema with no job. Hive partition
+    columns are still discovered from the directory names and appended.
+    Files written by other tools (pyarrow, DuckDB) carry no such key and
+    keep Spark's inference, as do ``merge_schema=True`` reads.
 
     A hive ``col=value/`` directory tree reads with partition discovery: a
     filter on the partition column becomes PartitionFilters at the scan and
@@ -180,13 +203,16 @@ def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> 
     shifts the rendering under non-UTC sessions).
     """
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-    ns_cols = _ns_timestamp_columns(path)
+    ns_cols, spark_schema = _footer_probe(path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.read
     if merge_schema:
         reader = reader.option("mergeSchema", "true")
+    elif spark_schema is not None:
+        reader = reader.schema(T.StructType.fromJson(json.loads(spark_schema)))
     df = reader.parquet(path)
     for c in ns_cols:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))

@@ -226,6 +226,15 @@ def _with_pos(df: DataFrame) -> DataFrame:
     ).withColumn("_dv_pos", F.col("_metadata.row_index"))
 
 
+def _read_dv(spark: SparkSession, io, root: str, names) -> DataFrame:
+    """The (file, pos) pairs of deletion-vector sidecars, read with their
+    fixed schema (``_stage_dv`` writes ``_with_pos``'s columns), so no
+    schema-inference job runs."""
+    return spark.read.schema("file STRING, pos BIGINT").parquet(
+        *[io.spark_url(_fpath(io, root, f)) for f in names]
+    )
+
+
 def _snapshot_read(
     spark: SparkSession, io, root: str, names: list[str], entry: dict,
     keep_pos: bool = False,
@@ -266,9 +275,7 @@ def _snapshot_read(
             if c not in out.columns:
                 out = out.withColumn(c, F.lit(None).cast("string"))
     if dv and names:
-        dvdf = spark.read.parquet(
-            *[io.spark_url(_fpath(io, root, f)) for f in dv]
-        ).select("file", "pos")
+        dvdf = _read_dv(spark, io, root, dv)
         out = out.join(
             dvdf,
             (out["_dv_file"] == dvdf["file"]) & (out["_dv_pos"] == dvdf["pos"]),
@@ -847,7 +854,7 @@ def _dv_pairs(
     dv = entry.get("dv") or []
     if not dv or not files:
         return None
-    dvdf = spark.read.parquet(*[io.spark_url(_fpath(io, root, f)) for f in dv])
+    dvdf = _read_dv(spark, io, root, dv)
     return dvdf.filter(F.col("file").isin([_basename(f) for f in files]))
 
 
@@ -1216,9 +1223,9 @@ def read_versioned_changes(
             """The sidecars' (file, pos) pairs on shared files."""
             if not names:
                 return None
-            return spark.read.parquet(
-                *[io.spark_url(_fpath(io, root, f)) for f in sorted(names)]
-            ).select("file", "pos").join(F.broadcast(shared_df), "file", "left_semi")
+            return _read_dv(spark, io, root, sorted(names)).join(
+                F.broadcast(shared_df), "file", "left_semi"
+            )
 
         def _minus(x: DataFrame | None, y: DataFrame | None) -> DataFrame | None:
             if x is None or y is None:

@@ -75,6 +75,7 @@ SLOW_TESTS = frozenset(
     "test_dedup_similarity.py::test_simhash_near_dup_properties",  # 3.3s
     "test_dialect.py::test_reference_animals_model_verbatim",  # 6.5s
     "test_eval_buckets.py::test_perplexity_buckets_match_python_ntile",  # 2.0s
+    "test_footer_schema.py::test_footer_schema_equals_inferred[ann_index]",  # 23.6s
     "test_gates.py::test_bm25_batch_matches_single_query",  # 3.6s
     "test_gates.py::test_context_pack_batch_boundary_every_query",  # 2.7s
     "test_gates.py::test_context_pack_budget_boundary",  # 2.5s
@@ -144,6 +145,7 @@ SLOW_TESTS = frozenset(
     "test_project.py::test_incremental_run_skips_unmodified",  # 20.4s
     "test_project.py::test_model_with_duckdb_star_exclude",  # 7.2s
     "test_project.py::test_model_with_qualify",  # 6.4s
+    "test_project.py::test_noop_run_views_read_footer_rows",  # 2.8s
     "test_project.py::test_plain_run_always_rebuilds_but_primes_state",  # 7.5s
     "test_project.py::test_rerun_swaps_table_contents",  # 6.4s
     "test_project.py::test_select_runs_only_chosen_models",  # 7.9s

@@ -1,0 +1,244 @@
+"""Schemas and row counts from parquet footers on the dbt lifecycle path.
+
+Spark records its exact write schema in every parquet footer
+(``readers.SPARK_SCHEMA_KEY``). ``read_parquet`` hands that schema to
+``spark.read.schema`` instead of letting Spark infer it with a job, so the
+catalog's views, columns and docs run no Spark job, and ``Project.run`` runs
+only its models' writes. Files written by other tools keep Spark's
+inference. Jobs are counted by job group."""
+
+from __future__ import annotations
+
+import os
+import uuid
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from pyspark.errors import AnalysisException
+from pyspark.sql import functions as F
+
+from dbt_parquet_spark.catalog import FilesystemCatalog
+from dbt_parquet_spark.materialize import create_table_as, load_seed
+from dbt_parquet_spark.sources.readers import _footer_probe, read_parquet
+
+from .conftest import SF_ORACLE, SF_SMALL
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _jobs(spark, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn`` runs, in a fresh job group."""
+    sc = spark.sparkContext
+    group = f"footer-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_jobs(spark, last: int = 64) -> dict[int, int]:
+    """job id -> SQL execution id, for the jobs of the ``last`` retained SQL
+    executions that write files."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    n = store.executionsCount()
+    execs = store.executionsList(max(0, n - last), min(n, last))
+    out = {}
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if "InsertIntoHadoopFsRelationCommand" not in e.physicalPlanDescription():
+            continue
+        ids = e.jobs().keys().iterator()
+        while ids.hasNext():
+            out[int(ids.next())] = e.executionId()
+    return out
+
+
+def _inferred(spark, path, ns=()):
+    """Spark's own schema inference, normalised as ``read_parquet``
+    normalises it (ns longs to micros, TIMESTAMP_NTZ to TIMESTAMP)."""
+    df = spark.read.parquet(path)
+    for c in ns:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    for c, t in df.dtypes:
+        if t == "timestamp_ntz":
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df.schema
+
+
+# each case function writes one relation into the catalog and returns it
+def _single_file(spark, cat, tmp_path):
+    rel = cat.relation("single")
+    create_table_as(spark, cat, rel, spark.sql(
+        "SELECT 1 AS i, 'a' AS s, 2.5D AS d, CAST(3.25 AS DECIMAL(10,2)) AS dec, "
+        "DATE'2024-01-02' AS dt, TIMESTAMP'2024-01-02 03:04:05' AS ts, "
+        "array(1, 2) AS arr, map('k', 1L) AS m, named_struct('a', 1, 'b', 'x') AS st, "
+        "CAST(NULL AS STRING) AS n"), single_file=True)
+    return rel
+
+
+def _part_files(spark, cat, tmp_path):
+    rel = cat.relation("parts")
+    create_table_as(spark, cat, rel, spark.range(20).repartition(3).withColumn(
+        "s", F.col("id").cast("string")))
+    return rel
+
+
+def _hive_partitioned(spark, cat, tmp_path):
+    rel = cat.relation("hive")
+    create_table_as(spark, cat, rel, spark.range(30).selectExpr(
+        "id", "id % 3 AS p", "CAST('2024-01-01 10:00:00' AS TIMESTAMP_NTZ) AS ntz"),
+        partition_by=["p"])
+    return rel
+
+
+def _seed_with_time(spark, cat, tmp_path):
+    csv = tmp_path / "shifts.csv"
+    csv.write_text("id,shift_start,at\n1,09:30:00,2024-01-01 10:00:00\n2,17:45:10,2024-01-02 11:00:00\n")
+    rel = cat.relation("shifts")
+    load_seed(spark, cat, str(csv), rel)
+    return rel
+
+
+def _ntz_model(spark, cat, tmp_path):
+    rel = cat.relation("ntz_model")
+    create_table_as(spark, cat, rel, "SELECT 1 AS id, TIMESTAMP_NTZ'2024-01-01 10:00:00' AS t")
+    return rel
+
+
+def _ann_index(spark, cat, tmp_path):
+    from dbt_parquet_spark.operators.index_manifest import build_pq_index
+    from dbt_parquet_spark.sources.readers import load_table
+
+    base_dir = str(tmp_path / "corpus")
+    load_table(spark, SF_ORACLE, "embeddings").select("vec_id", "embedding").filter(
+        F.col("vec_id") < 400).write.parquet(f"{base_dir}/embeddings.parquet")
+    rel = cat.relation("midx")
+    build_pq_index(spark, base_dir, catalog=cat, rel=rel)
+    return rel
+
+
+SPARK_WRITTEN = {
+    "single_file": _single_file,
+    "part_files": _part_files,
+    "hive_partitioned": _hive_partitioned,
+    "seed_with_time": _seed_with_time,
+    "ntz_model": _ntz_model,
+    "ann_index": _ann_index,
+}
+
+
+@pytest.mark.parametrize("case", list(SPARK_WRITTEN))
+def test_footer_schema_equals_inferred(spark, tmp_path, case):
+    """For every layout Spark writes, the footer schema is the schema Spark
+    infers, normalised the same way, and reading it runs no job."""
+    cat = FilesystemCatalog(str(tmp_path / "db"))
+    rel = SPARK_WRITTEN[case](spark, cat, tmp_path)
+    assert _footer_probe(rel.path)[1] is not None
+    jobs = _jobs(spark, lambda: read_parquet(spark, rel.path).schema)
+    got = read_parquet(spark, rel.path).schema
+    assert got == _inferred(spark, rel.path)
+    assert jobs == []
+    types = dict((f.name, f.dataType.simpleString()) for f in got.fields)
+    if case == "hive_partitioned":
+        assert list(types) == ["id", "ntz", "p"]  # partition column appended
+        assert types["ntz"] == "timestamp"
+    elif case == "seed_with_time":
+        assert types == {"id": "int", "shift_start": "string", "at": "timestamp"}
+    elif case == "ntz_model":
+        assert types["t"] == "timestamp"
+    elif case == "ann_index":
+        assert "cell" in types and cat.is_pq_index(rel)
+
+
+def test_pyarrow_file_keeps_inference(spark, tmp_path):
+    """A file another tool wrote carries no Spark schema, so the read falls
+    back to Spark's inference plus the TIMESTAMP(NANOS) conversion."""
+    path = str(tmp_path / "ns.parquet")
+    pq.write_table(pa.table({
+        "id": pa.array([1, 2], pa.int64()),
+        "ts": pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_000],
+                       pa.timestamp("ns", tz="UTC")),
+    }), path)
+    assert _footer_probe(path) == (["ts"], None)
+    got = read_parquet(spark, path).schema
+    assert got == _inferred(spark, path, ns=("ts",))
+    assert got["ts"].dataType.simpleString() == "timestamp"
+
+
+def test_merge_schema_still_unions_evolved_append(spark, tmp_path):
+    from dbt_parquet_spark.incremental import incremental_append
+
+    cat = FilesystemCatalog(str(tmp_path / "db"))
+    rel = cat.relation("evolving")
+    incremental_append(spark, cat, rel, spark.range(5).select("id", F.lit("a").alias("source")))
+    incremental_append(spark, cat, rel, spark.range(5, 8).select(
+        "id", F.lit("b").alias("source"), F.lit(0.5).alias("quality")), schema_evolution=True)
+    merged = read_parquet(spark, rel.path, merge_schema=True)
+    assert set(merged.columns) == {"id", "source", "quality"}
+    assert merged.filter(F.col("quality").isNull()).count() == 5
+
+
+def test_empty_directory_raises_spark_inference_error(spark, tmp_path):
+    """No data file, no footer: the read raises Spark's own error."""
+    path = tmp_path / "empty.parquet"
+    path.mkdir()
+    with pytest.raises(AnalysisException) as ours:
+        read_parquet(spark, str(path))
+    with pytest.raises(AnalysisException) as spark_own:
+        spark.read.parquet(str(path))
+    assert ours.value.getCondition() == spark_own.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+    assert str(ours.value) == str(spark_own.value)
+
+
+def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
+    """Over Spark-written plain, part-file, hive-partitioned and versioned
+    (with a deletion vector) tables, registering views, ``get_columns`` and
+    ``docs_artifact`` are footer and manifest reads only."""
+    from dbt_parquet_spark.versioned import delete_versioned, write_versioned
+
+    cat = FilesystemCatalog(str(tmp_path / "db"))
+    _single_file(spark, cat, tmp_path)
+    _part_files(spark, cat, tmp_path)
+    _hive_partitioned(spark, cat, tmp_path)
+    vrel = cat.relation("versioned")
+    write_versioned(spark, cat, vrel, spark.range(10))
+    delete_versioned(spark, cat, vrel, F.col("id") < 3, mode="mor")
+    rels = [r for s in cat.list_schemas() for r in cat.list_relations(s)]
+    assert len(rels) == 4
+
+    assert _jobs(spark, lambda: cat.register_all_views(spark)) == []
+    assert _jobs(spark, lambda: [cat.get_columns(spark, r) for r in rels]) == []
+    docs = {}
+    assert _jobs(spark, lambda: docs.update(cat.docs_artifact(spark))) == []
+    node = docs["nodes"]["model.dbt_parquet_spark.versioned"]
+    assert node["stats"]["num_rows"]["value"] == 7
+    assert list(node["columns"]) == ["id"]
+    assert spark.table("versioned").count() == 7
+
+
+def test_project_run_jobs_are_model_writes_only(spark, tmp_path):
+    """Job-count gate for ``Project.run`` over examples/analytics/models:
+    no count job and no schema-inference job, only the four models'
+    writes (12 jobs: adaptive execution runs each write's shuffle stages as
+    jobs of their own). A no-op ``state="modified"`` rerun runs none."""
+    from dbt_parquet_spark.project import Project
+
+    cat = FilesystemCatalog(str(tmp_path / "db"))
+    # the source goes through Spark too, so its view needs no inference job
+    create_table_as(spark, cat, cat.relation("events"),
+                    read_parquet(spark, os.path.join(SF_SMALL, "events.parquet")),
+                    single_file=True)
+    project = Project.from_dir(cat, os.path.join(REPO, "examples/analytics/models"))
+    results = {}
+    jobs = _jobs(spark, lambda: results.update(project.run(spark, threads=4)))
+    writes = _write_jobs(spark)
+    assert [j for j in jobs if j not in writes] == []
+    assert len({writes[j] for j in jobs}) == len(results) == 4
+    assert len(jobs) == 12
+    for name, r in results.items():
+        assert r.rows == spark.table(name).count()
+    assert _jobs(spark, lambda: project.run(spark, threads=4, state="modified")) == []

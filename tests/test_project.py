@@ -255,6 +255,29 @@ def test_analytics_example_project(spark, tmp_path):
     assert top.groupBy("user_id").count().agg(F.max("count")).collect()[0][0] <= 3
 
 
+def test_noop_run_views_read_footer_rows(spark, db):
+    """A state="modified" run that skips every model still leaves each
+    model's view registered (once, by register_all_views), reading the rows
+    its footers hold — part files, a schema subdirectory and a versioned
+    root alike."""
+    _seed_source(spark, db)
+    project = Project(db)
+    project.add(Model("legs", "SELECT * FROM {{ source('source_schema', 'animals') }} WHERE n_legs < 10"))
+    project.add(Model("few", "SELECT n_legs FROM {{ ref('legs') }} WHERE n_legs < 5", schema="marts"))
+    project.add(Model(
+        "names", "{{ config(materialized='versioned') }}\nSELECT animals FROM {{ ref('legs') }}"
+    ))
+    built = project.run(spark, threads=2)
+    for r in built.values():
+        assert r.rows == db.stats(r.relation).rows
+        spark.catalog.dropTempView(r.relation.view_name)
+    results = project.run(spark, threads=2, state="modified")
+    assert set(results) == {"legs", "few", "names"}
+    for r in results.values():
+        assert r.skipped
+        assert spark.table(r.relation.view_name).count() == db.stats(r.relation).rows > 0
+
+
 def test_incremental_run_skips_unmodified(spark, db):
     """state="modified": the second run executes ZERO models; editing an
     upstream cascades to its descendants and leaves siblings skipped;
