@@ -42,12 +42,15 @@ class Snapshot:
     """The files that hold a relation's current rows, as fs paths: the data
     ``files`` a reader opens, the deletion-vector sidecars ``dv``, the
     manifest's live row count ``rows`` and a versioned snapshot's pinned
-    ``columns`` ({name: Spark type}) — the last two None without a manifest."""
+    ``columns`` ({name: Spark type}) — the last two None without a manifest
+    — and the relation's ``kind``: ``"file"``, ``"directory"``,
+    ``"versioned"`` or ``"index"``."""
 
     files: tuple[str, ...] = ()
     dv: tuple[str, ...] = ()
     rows: int | None = None
     columns: dict[str, str] | None = None
+    kind: str = "directory"
 
 
 def _hidden(name: str) -> bool:
@@ -66,7 +69,7 @@ def resolve(io: CatalogFS, path: str) -> Snapshot:
     from . import commitlog
 
     if io.isfile(path):
-        return Snapshot((path,))
+        return Snapshot((path,), kind="file")
     top = io.walk(path)
 
     def holds(cache: str) -> bool:
@@ -79,7 +82,7 @@ def resolve(io: CatalogFS, path: str) -> Snapshot:
     if holds(VERSIONS_MANIFEST):
         return current_snapshot(io, path)
     if holds(MANIFEST):
-        return Snapshot(tuple(committed_files(io, path)))
+        return Snapshot(tuple(committed_files(io, path)), kind="index")
     if any(is_dir and not _hidden(e) for e, is_dir in top.items()):
         top = io.walk(path, recursive=True)
     return Snapshot(tuple(sorted(
@@ -249,58 +252,46 @@ class FilesystemCatalog:
     def is_versioned(self, rel: Relation) -> bool:
         """True when the relation root is a manifest-versioned table
         (versioned.write_versioned). Such roots physically hold EVERY
-        retained version's files plus staged orphans, so generic
-        directory-scan surfaces must resolve them through the manifest —
-        a plain directory view would union duplicate/stale rows, and a
-        file rewrite would corrupt committed history.
+        retained version's files plus staged orphans, so a generic file
+        rewrite would corrupt committed history (the maintenance guard);
+        reads resolve them through ``snapshot`` instead.
 
         Detection asks ``commitlog.committed``, which also finds a root whose
         cache write was lost after its first commit — such a root must not
-        bypass the maintenance guards and fall back to a directory scan."""
+        bypass the maintenance guards."""
+        from . import commitlog
         from .versioned import VERSIONS_MANIFEST
 
-        return self._committed(rel, VERSIONS_MANIFEST)
-
-    def is_pq_index(self, rel: Relation) -> bool:
-        """True when the relation root is a manifest-committed ANN index
-        (``operators.index_manifest.build_pq_index(catalog=, rel=)``). Like a
-        versioned root it also holds retired, staged and orphaned files, so
-        a view must resolve it through the index manifest."""
-        from .operators.index_manifest import MANIFEST
-
-        return self._committed(rel, MANIFEST)
-
-    def _committed(self, rel: Relation, cache: str) -> bool:
-        """True when the relation root is a directory holding a commit of
-        the manifest publisher whose cache file is ``cache``."""
-        from . import commitlog
-
         p = self.fs_path(rel)
-        if not self.io.isdir(p):
-            return False
-        return commitlog.committed(self.io, p, cache)
+        return self.io.isdir(p) and commitlog.committed(self.io, p, VERSIONS_MANIFEST)
 
     # -- views (reference relation.py:115-122, connections.py:79-88) ------
-    def register_view(self, spark: SparkSession, rel: Relation) -> DataFrame:
-        """Register the relation's rows as a temp view. Versioned tables and
-        ANN indexes resolve through their manifests (committed rows only);
-        an index is probed only when the directory read shows the ``cell``
-        partition column every index carries, so plain tables pay no extra
-        metadata call. No Spark job: a Spark-written relation's schema comes
-        from one parquet footer (``read_parquet``), a versioned one's from
-        its manifest; a file another tool wrote keeps Spark's inference."""
-        from .sources.readers import read_parquet
-
-        if self.is_versioned(rel):
+    def read(self, spark: SparkSession, rel: Relation) -> DataFrame:
+        """The relation's current rows — the reference reads every relation
+        as ``parquet_scan(path)`` (reference relation.py:115-122). One
+        ``snapshot`` decides the kind and the files: a versioned root reads
+        its current version through the manifest (``read_versioned``), an
+        ANN index root its committed cells (``read_pq_index``); anything
+        else is a scan of its path whose schema comes from the footer of
+        the first resolved file, opened through ``io`` (``readers.scan``).
+        No Spark job for a Spark-written relation; a file another tool
+        wrote keeps Spark's inference."""
+        snap = self.snapshot(rel)
+        if snap.kind == "versioned":
             from .versioned import read_versioned
 
-            df = read_versioned(spark, self, rel)  # CURRENT snapshot only
-        else:
-            df = read_parquet(spark, rel.path)
-            if "cell" in df.columns and self.is_pq_index(rel):
-                from .operators.index_manifest import read_pq_index
+            return read_versioned(spark, self, rel)
+        if snap.kind == "index":
+            from .operators.index_manifest import read_pq_index
 
-                df = read_pq_index(spark, None, path=rel.path)
+            return read_pq_index(spark, None, path=rel.path)
+        from .sources.readers import normalize_timestamps, scan
+
+        return normalize_timestamps(*scan(spark, rel.path, self.io, snap))
+
+    def register_view(self, spark: SparkSession, rel: Relation) -> DataFrame:
+        """Register the relation's rows (``read``) as a temp view."""
+        df = self.read(spark, rel)
         df.createOrReplaceTempView(rel.view_name)
         return df
 
@@ -317,19 +308,11 @@ class FilesystemCatalog:
 
     # -- introspection (reference impl.py:97-103, macros/catalog.sql) ------
     def get_columns(self, spark: SparkSession, rel: Relation) -> T.StructType:
-        """Footer-only schema read — the Spark analog of the reference's
-        `SELECT * … LIMIT 0 → arrow schema` probe (reference impl.py:97-103):
-        one footer GET by pyarrow and no Spark job for a Spark-written
-        relation (``read_parquet``). Versioned roots resolve through the
-        manifest (the current version's pinned schema), never a directory
-        glob over mixed-version files."""
-        from .sources.readers import read_parquet
-
-        if self.is_versioned(rel):
-            from .versioned import read_versioned
-
-            return read_versioned(spark, self, rel).schema
-        return read_parquet(spark, rel.path).schema
+        """The relation's schema as ``read`` gives it — the Spark analog of
+        the reference's `SELECT * … LIMIT 0 → arrow schema` probe (reference
+        impl.py:97-103): one footer GET for a Spark-written table, the
+        pinned schema of a versioned root's current version."""
+        return self.read(spark, rel).schema
 
     def catalog_df(self, spark: SparkSession, schemas: list[str] | None = None) -> DataFrame:
         """(schema, table, column, index, type) over every relation — the

@@ -75,7 +75,7 @@ def create_table_as(
     register view. Writes go to a temp name then swap (atomic publish per
     reference impl.py:75-85 rename pattern) so a failed write never clobbers
     the previous table version. Returns the written table as
-    ``read_parquet`` reads it (the registered view's DataFrame when
+    ``catalog.read`` reads it (the registered view's DataFrame when
     ``register``): its schema comes from the footer, so no job runs after
     the write.
 
@@ -103,9 +103,7 @@ def create_table_as(
         _swap_into_place(io, fs_tmp, fs_dest)
     if register:
         return catalog.register_view(spark, rel)
-    from .sources.readers import read_parquet
-
-    return read_parquet(spark, rel.path)
+    return catalog.read(spark, rel)
 
 
 # -- seeds (reference impl.py:151-163, 185-208) -----------------------------

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..sources.readers import load_table
+from ..sources.readers import load_table, read_parquet
 from .corpus import QUALITY_PPM_SQL
 
 N_SHARD_HEX = 1  # manifest-query fanout: 16 shards (16^1)
@@ -135,9 +135,8 @@ def write_training_shards(
         .parquet(io.spark_url(fs_tmp))
     )
     _swap_into_place(io, fs_tmp, fs_dest)
-    catalog.register_view(spark, rel)
+    written = catalog.register_view(spark, rel).drop("shard_id")
     manifest_rel = catalog.relation(f"{rel.table}_manifest", schema=rel.schema)
-    written = spark.read.parquet(io.spark_url(fs_dest)).drop("shard_id")
     return create_table_as(
         spark, catalog, manifest_rel, shard_manifest(written, hex_width), single_file=True
     )
@@ -194,7 +193,7 @@ def append_delta_to_shards(
         .partitionBy("shard_id")
         .parquet(io.spark_url(fs_tmp))
     )
-    staged = spark.read.parquet(io.spark_url(fs_tmp)).drop("shard_id")
+    staged = read_parquet(spark, io.spark_url(fs_tmp)).drop("shard_id")
     delta_manifest_rows = shard_manifest(staged, hex_width).collect()  # fanout-sized
     for entry in io.listdir(fs_tmp):
         if not entry.startswith("shard_id="):
@@ -209,7 +208,7 @@ def append_delta_to_shards(
     io.rmtree(fs_tmp)
     catalog.register_view(spark, rel)
     manifest_rel = catalog.relation(f"{rel.table}_manifest", schema=rel.schema)
-    old = spark.read.parquet(manifest_rel.path)
+    old = catalog.read(spark, manifest_rel)
     merged = (
         old.unionByName(spark.createDataFrame(delta_manifest_rows, old.schema))
         .groupBy("shard_id")

@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from .catalog import FilesystemCatalog, Relation
 from .materialize import create_table_as
 from .registry import register
-from .sources.readers import load_table, read_parquet
+from .sources.readers import load_table
 
 VALID_FROM, VALID_TO = "dbt_valid_from", "dbt_valid_to"
 
@@ -66,7 +66,7 @@ def snapshot(
         )
         return create_table_as(spark, catalog, rel, first, single_file=False)
 
-    hist = read_parquet(spark, rel.path)
+    hist = catalog.read(spark, rel)
     closed = hist.filter(F.col(VALID_TO).isNotNull())
     current = hist.filter(F.col(VALID_TO).isNull())
 
@@ -136,10 +136,10 @@ def snapshot_scd2(
             F.lit(None).cast(vto_type).alias(VALID_TO),
         )
 
-    if not catalog.io.exists(catalog.fs_path(rel)):
+    if not catalog.exists(rel):
         return create_table_as(spark, catalog, rel, _open(source_df))
 
-    old = spark.read.parquet(rel.path)
+    old = catalog.read(spark, rel)
     cur = old.filter(F.col(VALID_TO).isNull())
     hist = old.filter(F.col(VALID_TO).isNotNull())
 

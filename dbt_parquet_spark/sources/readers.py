@@ -13,6 +13,9 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..catalog import Snapshot, resolve
+from ..fs import CatalogFS, resolve_database
+
 # The driver's testdata tables (TESTDATA.md).
 TESTDATA_TABLES = (
     "region",
@@ -82,7 +85,8 @@ def _stat_key(path: str):
 # Footer-probe memo — metadata, never data: load_table re-probes the SAME
 # immutable file on every call (each query build, each bench rep), and the
 # pyarrow open+footer-parse is a few ms of pure Python per table per call.
-# Each entry holds the probe's (ns columns, Spark schema JSON).
+# Single local files only (a directory's mtime does not see nested partition
+# writes); each entry holds the probe's (ns columns, Spark schema JSON).
 _FOOTER_MEMO: dict[str, tuple] = {}
 
 # Spark writes its exact write schema into every parquet footer under this
@@ -91,57 +95,52 @@ _FOOTER_MEMO: dict[str, tuple] = {}
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def _footer_probe(path: str) -> tuple[list[str], str | None]:
-    """(columns stored as parquet TIMESTAMP(NANOS), Spark's write-schema
-    JSON or None) from one footer — a directory's first data file as the
-    catalog resolves it.
-
-    Resolves through pyarrow.fs so the probe works on any path spelling the
-    engine reads (bare local path, file://, s3a://...); an unreachable or
-    unlistable location degrades to "no nanos columns, no schema" rather
-    than failing the read — Spark itself will surface a real IO error with
+def resolve_path(path: str) -> tuple[CatalogFS | None, Snapshot]:
+    """The filesystem that owns ``path`` (``fs.resolve_database``) and the
+    ``catalog.resolve`` snapshot of ``path`` there (a directory's hive
+    partitions included, markers and staging skipped). An unreachable or
+    unsupported location gives (None, an empty snapshot): the read then
+    defers to Spark's own inference, which surfaces a real IO error with
     context."""
-    sk = _stat_key(path)
-    if sk is not None:
-        hit = _memo_get(_FOOTER_MEMO, path, sk)
-        if hit is not None:
-            return hit
-    out = _footer_probe_uncached(path)
-    if sk is not None:
-        _memo_put(_FOOTER_MEMO, path, sk, out)
-    return out
+    import pyarrow as pa
+
+    try:
+        io = resolve_database(path)
+        return io, resolve(io, io.root)
+    except (OSError, pa.lib.ArrowException):
+        # ArrowException covers ArrowNotImplementedError, raised for schemes
+        # without compiled filesystem support (hdfs:// without libhdfs)
+        return None, Snapshot()
 
 
-def _footer_probe_uncached(path: str) -> tuple[list[str], str | None]:
+def _footer_probe(io: CatalogFS | None, snap: Snapshot) -> tuple[list[str], str | None]:
+    """(columns stored as parquet TIMESTAMP(NANOS), Spark's write-schema
+    JSON or None) from the footer of the snapshot's first file, opened
+    through ``io``; nothing to probe, or a footer that cannot be read, gives
+    ([], None)."""
     import pyarrow as pa
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
-    from ..catalog import resolve
-    from ..fs import CatalogFS
-
-    try:
-        if "://" in path:
-            uri = path.replace("s3a://", "s3://", 1)
-            fs, fpath = pafs.FileSystem.from_uri(uri)
-        else:
-            fs, fpath = pafs.LocalFileSystem(), path
-        # a directory probes its first data file as the catalog resolves it
-        # (hive partition directories included, markers and staging skipped)
-        files = resolve(CatalogFS(fs, fpath), fpath).files
-        if not files:
-            return [], None
-        with fs.open_input_file(files[0]) as f:
-            pf = pq.ParquetFile(f)
-            kv = pf.metadata.metadata or {}
-            schema = kv.get(SPARK_SCHEMA_KEY)
-            return _ns_cols_of(pf), schema.decode() if schema else None
-    except (OSError, pa.lib.ArrowException):
-        # ArrowException covers ArrowInvalid AND ArrowNotImplementedError —
-        # from_uri raises the latter for schemes without compiled filesystem
-        # support (hdfs:// without libhdfs, gs:// without gcsfs); the probe
-        # must defer to Spark's own reader there, not crash the read.
+    if io is None or not snap.files:
         return [], None
+    first = snap.files[0]
+    local = snap.kind == "file" and isinstance(io.fs, pafs.LocalFileSystem)
+    sk = _stat_key(first) if local else None
+    if sk is not None:
+        hit = _memo_get(_FOOTER_MEMO, first, sk)
+        if hit is not None:
+            return hit
+    try:
+        with io.open_input(first) as f:
+            pf = pq.ParquetFile(f)
+            schema = (pf.metadata.metadata or {}).get(SPARK_SCHEMA_KEY)
+            out = _ns_cols_of(pf), schema.decode() if schema else None
+    except (OSError, pa.lib.ArrowException):
+        return [], None
+    if sk is not None:
+        _memo_put(_FOOTER_MEMO, first, sk, out)
+    return out
 
 
 def _ns_cols_of(pf) -> list[str]:
@@ -161,18 +160,78 @@ def _ns_cols_of(pf) -> list[str]:
     ]
 
 
-def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
-    """Parquet scan with timestamp normalization (ns and NTZ).
+def scan(
+    spark: SparkSession,
+    path: str,
+    io: CatalogFS | None,
+    snap: Snapshot,
+    merge_schema: bool = False,
+) -> tuple[DataFrame, list[str]]:
+    """The Spark scan of ``path`` (the Spark URL that ``snap`` resolves on
+    ``io``), before ``normalize_timestamps``, and the columns stored as
+    TIMESTAMP(NANOS) that it reads as raw longs.
 
-    The schema is read by pyarrow from ONE footer, the one
-    ``_footer_probe`` opens (a directory's first data file as
-    ``catalog.resolve`` lists it). Spark writes its exact write schema into
-    that footer, and its own non-merge inference reads that same JSON from
-    one footer, but through a Spark job; handing the JSON to
-    ``spark.read.schema`` gives the same schema with no job. Hive partition
-    columns are still discovered from the directory names and appended.
-    Files written by other tools (pyarrow, DuckDB) carry no such key and
-    keep Spark's inference, as do ``merge_schema=True`` reads.
+    The schema is read by pyarrow from ONE footer, the snapshot's first file.
+    Spark writes its exact write schema into that footer, and its own
+    non-merge inference reads that same JSON from one footer, but through a
+    Spark job; handing the JSON to ``spark.read.schema`` gives the same
+    schema with no job. Hive partition columns are still discovered from
+    the directory names and appended. Files written by other tools
+    (pyarrow, DuckDB) carry no such key and keep Spark's inference, as do
+    ``merge_schema=True`` reads.
+
+    Spark 4 rejects parquet TIMESTAMP(NANOS) outright; with the
+    ``nanosAsLong`` escape hatch, set here on the caller's session, it
+    surfaces as a raw long."""
+    from pyspark.sql import types as T
+
+    ns_cols, spark_schema = _footer_probe(io, snap)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    elif spark_schema is not None:
+        reader = reader.schema(T.StructType.fromJson(json.loads(spark_schema)))
+    return reader.parquet(path), ns_cols
+
+
+def normalize_timestamps(df: DataFrame, ns_cols: list[str]) -> DataFrame:
+    """The one timestamp normalization every parquet scan gets, batch or
+    stream: ``ns_cols`` (TIMESTAMP(NANOS) read as raw longs) become
+    TimestampType and any TIMESTAMP_NTZ column becomes TIMESTAMP.
+
+    ns→µs integer-divides — exactly DuckDB's ns→µs truncation, so oracle
+    comparisons are well-defined (SURVEY §7 risk register). Integer
+    ``div``, NOT ``/``: float division loses precision at ns-since-epoch
+    magnitudes.
+
+    Spark 4 infers parquet timestamps without ``isAdjustedToUTC`` as
+    TIMESTAMP_NTZ (``spark.sql.parquet.inferTimestampNTZ.enabled`` defaults
+    true), and NTZ columns reject ``withWatermark`` / ``cast(long)``. The
+    engine cannot assume its own session configs (callers pass their own
+    SparkSession), so NTZ columns are cast to TIMESTAMP. The cast interprets
+    the naive wall clock in the session timezone and the naive rendering
+    the oracle harness compares converts back in the same timezone —
+    wall-clock-preserving under ANY session tz (unlike disabling NTZ
+    inference, which reinterprets stored micros as UTC instants and shifts
+    the rendering under non-UTC sessions)."""
+    from pyspark.sql import functions as F
+
+    for c in ns_cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    for c, t in df.dtypes:
+        if t == "timestamp_ntz":
+            df = df.withColumn(c, F.col(c).cast("timestamp"))
+    return df
+
+
+def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
+    """Parquet scan of a path (file or directory) with the schema from its
+    first resolved footer (``scan``) and normalized timestamps
+    (``normalize_timestamps``). Catalog relations read through
+    ``FilesystemCatalog.read``, which resolves on the catalog's own
+    filesystem; this resolves ``path`` on the filesystem that owns it.
 
     A hive ``col=value/`` directory tree reads with partition discovery: a
     filter on the partition column becomes PartitionFilters at the scan and
@@ -182,44 +241,8 @@ def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> 
     absent in older files read as NULL) — the read side of append-time
     schema evolution (incremental.incremental_append). Off by default:
     schema merging footer-reads every file, which is wasted work on
-    stable-schema tables.
-
-    Spark 4 rejects parquet TIMESTAMP(NANOS) outright; with the
-    ``nanosAsLong`` escape hatch it surfaces as a raw long. We convert to
-    TimestampType by integer-dividing to µs — exactly DuckDB's ns→µs
-    truncation, so oracle comparisons are well-defined (SURVEY §7 risk
-    register). Integer ``div``, NOT ``/``: float division loses precision at
-    ns-since-epoch magnitudes.
-
-    Spark 4 also infers parquet timestamps without ``isAdjustedToUTC`` as
-    TIMESTAMP_NTZ (``spark.sql.parquet.inferTimestampNTZ.enabled`` defaults
-    true), and NTZ columns reject ``withWatermark`` / ``cast(long)``. The
-    engine cannot assume its own session configs (callers pass their own
-    SparkSession), so this reader casts any NTZ column to TIMESTAMP. The
-    cast interprets the naive wall clock in the session timezone and the
-    naive rendering the oracle harness compares converts back in the same
-    timezone — wall-clock-preserving under ANY session tz (unlike disabling
-    NTZ inference, which reinterprets stored micros as UTC instants and
-    shifts the rendering under non-UTC sessions).
-    """
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    ns_cols, spark_schema = _footer_probe(path)
-    if ns_cols:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.read
-    if merge_schema:
-        reader = reader.option("mergeSchema", "true")
-    elif spark_schema is not None:
-        reader = reader.schema(T.StructType.fromJson(json.loads(spark_schema)))
-    df = reader.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    for c, t in df.dtypes:
-        if t == "timestamp_ntz":
-            df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df
+    stable-schema tables."""
+    return normalize_timestamps(*scan(spark, path, *resolve_path(path), merge_schema))
 
 
 # Resolved-DataFrame memo for load_table — the guide §6 file-listing/

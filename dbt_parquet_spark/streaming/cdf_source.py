@@ -35,8 +35,10 @@ data file), classified by the manifest's recorded op:
   stream-followed tables; that is what they are for.
 
 Executors read with pyarrow directly (the partition payload is explicit
-file paths + sidecar paths): at 1000-executor scale each partition touches
-one file's bytes — O(changed bytes) per microbatch, never O(table).
+fs paths of data files + sidecars, opened through the catalog's own
+``CatalogFS``, resolved from the ``database`` option): at 1000-executor
+scale each partition touches one file's bytes — O(changed bytes) per
+microbatch, never O(table).
 
 Scale note: a single commit's changed files become that batch's
 parallelism. DV row addressing uses (file basename, 0-based row index),
@@ -55,20 +57,10 @@ from pyspark.sql.datasource import (
 )
 
 
-def _fs_for(path: str):
-    import pyarrow.fs as pafs
-
-    if "://" in path:
-        fs, p = pafs.FileSystem.from_uri(path)
-        return fs, p
-    return pafs.LocalFileSystem(), path
-
-
-def _read_parquet(path: str):
+def _read_parquet(io, path: str):
     import pyarrow.parquet as papq
 
-    fs, p = _fs_for(path)
-    with fs.open_input_file(p) as fh:
+    with io.open_input(path) as fh:
         return papq.ParquetFile(fh).read()
 
 
@@ -94,10 +86,10 @@ class _CDFPartition(InputPartition):
     columns: tuple
 
 
-def _pairs_for(paths, base: str) -> set:
+def _pairs_for(io, paths, base: str) -> set:
     out = set()
     for p in paths:
-        t = _read_parquet(p)
+        t = _read_parquet(io, p)
         files = t.column("file").to_pylist()
         pos = t.column("pos").to_pylist()
         out |= {(f, i) for f, i in zip(files, pos) if f == base}
@@ -193,10 +185,13 @@ class _CDFStreamReader(DataSourceStreamReader):
 
     # -- execution (executor side, pure pyarrow) ------------------------
     def read(self, partition: _CDFPartition):
+        from ..fs import resolve_database
+
+        io = resolve_database(self._database)  # the catalog's filesystem
         base = _basename(partition.data_path)
         if partition.kind == "insert-file":
-            dead = _pairs_for(partition.new_dv_paths, base)
-            table = _read_parquet(partition.data_path)
+            dead = _pairs_for(io, partition.new_dv_paths, base)
+            table = _read_parquet(io, partition.data_path)
             cols = [table.column(c).to_pylist() for c in partition.columns]
             for i in range(table.num_rows):
                 if (base, i) in dead:
@@ -205,12 +200,12 @@ class _CDFStreamReader(DataSourceStreamReader):
                     partition.change, partition.commit_version,
                 )
         else:  # dv-delta: rows dead under NEW minus dead under OLD
-            was = _pairs_for(partition.old_dv_paths, base)
-            now = _pairs_for(partition.new_dv_paths, base)
+            was = _pairs_for(io, partition.old_dv_paths, base)
+            now = _pairs_for(io, partition.new_dv_paths, base)
             delta = {i for (_, i) in (now - was)}
             if not delta:
                 return
-            table = _read_parquet(partition.data_path)
+            table = _read_parquet(io, partition.data_path)
             cols = [table.column(c).to_pylist() for c in partition.columns]
             for i in sorted(delta):
                 yield tuple(c[i] for c in cols) + (

@@ -30,36 +30,33 @@ from pyspark.sql import functions as F
 
 from .. import memo
 from ..functions.exact import dec
-from ..sources.readers import read_parquet, table_path
+from ..sources.readers import normalize_timestamps, read_parquet, resolve_path, scan, table_path
 
 WATERMARK = "2 hours"
 
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table. Schema comes from a batch
-    footer probe (streams need explicit schemas); the ns-timestamp column
-    gets the same µs normalization as the batch reader."""
-    path = table_path(sf_dir, "events")
-    batch = read_parquet(spark, path)  # sets nanosAsLong conf + gives schema
-    raw_schema = spark.read.parquet(path).schema
+def _file_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over one parquet table (file or directory). Streams
+    need explicit schemas: the batch scan of the same path gives it
+    (``readers.scan``, which also sets the nanosAsLong conf the stream then
+    reads under), and the stream gets the batch reader's timestamp
+    normalization."""
+    raw, ns_cols = scan(spark, path, *resolve_path(path))
+    source = spark.readStream.schema(raw.schema)
     if os.path.isdir(path):
-        stream = spark.readStream.schema(raw_schema).parquet(path)
+        stream = source.parquet(path)
     else:
         # File sources must be directories: stream the parent dir filtered to
         # this one file (single-file reference layout, catalog.py).
-        stream = (
-            spark.readStream.schema(raw_schema)
-            .option("pathGlobFilter", os.path.basename(path))
-            .parquet(os.path.dirname(path))
+        stream = source.option("pathGlobFilter", os.path.basename(path)).parquet(
+            os.path.dirname(path)
         )
-    if dict(batch.dtypes).get("ts") == "timestamp" and dict(stream.dtypes).get("ts") == "bigint":
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    # NTZ guard (mirrors read_parquet): withWatermark rejects TIMESTAMP_NTZ
-    # event-time columns, so normalize any NTZ column to TIMESTAMP.
-    for c, t in stream.dtypes:
-        if t == "timestamp_ntz":
-            stream = stream.withColumn(c, F.col(c).cast("timestamp"))
-    return stream
+    return normalize_timestamps(stream, ns_cols)
+
+
+def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """File-source stream over the events table."""
+    return _file_stream(spark, table_path(sf_dir, "events"))
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -172,15 +169,7 @@ def read_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents table — the ingest feed for
     streaming corpus curation (no event-time column; dedup-flag plans below
     are stateless joins, so no watermark is needed)."""
-    path = table_path(sf_dir, "documents")
-    raw_schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        return spark.readStream.schema(raw_schema).parquet(path)
-    return (
-        spark.readStream.schema(raw_schema)
-        .option("pathGlobFilter", os.path.basename(path))
-        .parquet(os.path.dirname(path))
-    )
+    return _file_stream(spark, table_path(sf_dir, "documents"))
 
 
 def streaming_dedup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:

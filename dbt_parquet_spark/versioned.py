@@ -110,13 +110,14 @@ def current_snapshot(io, root: str) -> Snapshot:
     m = commitlog.load(io, root, VERSIONS_MANIFEST)
     entry = m["versions"].get(str(m["current"])) if m else None
     if entry is None:
-        return Snapshot(rows=0, columns={})
+        return Snapshot(rows=0, columns={}, kind="versioned")
     dtypes = entry.get("dtypes") or {}
     return Snapshot(
         tuple(_fpath(io, root, f) for f in entry["files"]),
         tuple(_fpath(io, root, f) for f in entry.get("dv", [])),
         entry["rows"],
         {c: dtypes.get(c, "string") for c in entry["columns"]},
+        "versioned",
     )
 
 

@@ -167,9 +167,11 @@ SLOW_TESTS = frozenset(
     "test_shards.py::test_append_delta_manifest_additivity",  # 4.4s
     "test_shards.py::test_manifest_describes_written_bytes_for_nondeterministic_input",  # 4.4s
     "test_shards.py::test_shard_manifest_rerun_deterministic",  # 2.2s
+    "test_shards.py::test_shard_write_and_append_job_counts",  # 6.3s
     "test_shards.py::test_written_shards_match_manifest_and_cover_corpus",  # 2.1s
     "test_snapshot_property.py::test_snapshot_invariants",  # 13.8s
     "test_snapshots.py::test_snapshot_accretes_versions_and_is_idempotent",  # 6.3s
+    "test_snapshots.py::test_scd2_pass_job_count",  # 3.4s
     "test_snapshots.py::test_snapshot_equal_timestamp_is_not_a_change",  # 2.5s
     "test_snapshots_robustness.py::test_queries_survive_empty_inputs",  # 13.9s
     "test_snapshots_robustness.py::test_scd2_snapshot_lifecycle",  # 4.0s
@@ -238,6 +240,21 @@ def pytest_collection_modifyitems(config, items):
 @pytest.fixture(scope="session")
 def spark():
     return get_spark("dbt_parquet_spark_tests")
+
+
+def spark_jobs(spark, fn) -> list[int]:
+    """The ids of the Spark jobs ``fn`` runs, in a fresh job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture(scope="session")

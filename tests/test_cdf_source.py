@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from dbt_parquet_spark.catalog import FilesystemCatalog
-from dbt_parquet_spark.streaming.cdf_source import register_cdf_source
+from dbt_parquet_spark.streaming.cdf_source import _CDFStreamReader, register_cdf_source
 from dbt_parquet_spark.versioned import (
     delete_versioned,
     merge_versioned,
@@ -152,3 +152,73 @@ def test_stream_matches_batch_feed_on_mor_history(spark, vt):
         .collect()
     )
     assert got == want
+
+
+class _RecordingFS:
+    """A filesystem that delegates to ``base`` and records every file
+    opened for reading."""
+
+    def __init__(self, base):
+        self.base, self.opened = base, []
+
+    def open_input_file(self, path):
+        self.opened.append(path)
+        return self.base.open_input_file(path)
+
+    def __getattr__(self, name):
+        return getattr(self.base, name)
+
+
+def test_partitions_and_read_open_through_catalog_fs(tmp_path, monkeypatch):
+    """No Spark: with the database mapped to a recording filesystem whose
+    fs paths carry no scheme and are not local paths (an object store's
+    ``bucket/key`` shape), planning and reading a merge-on-read history open
+    every data and deletion-vector file through the catalog's ``CatalogFS``."""
+    import pyarrow as pa
+    import pyarrow.fs as pafs
+    import pyarrow.parquet as pq
+
+    from dbt_parquet_spark import catalog as catalog_mod
+    from dbt_parquet_spark import commitlog, fs
+    from dbt_parquet_spark.versioned import VERSIONS_MANIFEST
+
+    rec = _RecordingFS(pafs.SubTreeFileSystem(str(tmp_path), pafs.LocalFileSystem()))
+
+    def resolve_database(database):
+        assert database == "lake://db"
+        return fs.CatalogFS(rec, "bucket/db", spark_prefix=None)
+
+    monkeypatch.setattr(fs, "resolve_database", resolve_database)
+    monkeypatch.setattr(catalog_mod, "resolve_database", resolve_database)
+    io = resolve_database("lake://db")
+    root = io.join(io.root, "t.parquet")
+    io.makedirs(root)
+    for name, cols in {
+        "a.parquet": {"id": list(range(6))},
+        "b.parquet": {"id": [10, 11]},
+        "dv2.parquet": {"file": ["a.parquet", "a.parquet"], "pos": [1, 4]},
+    }.items():
+        with io.open_output(io.join(root, name)) as fh:
+            pq.write_table(pa.table(cols), fh)
+    entry = {"columns": ["id"], "dtypes": {"id": "bigint"}}
+    commitlog.commit(io, root, VERSIONS_MANIFEST, {"current": 3, "versions": {
+        "1": {**entry, "op": "append", "files": ["a.parquet"], "rows": 6},
+        "2": {**entry, "op": "delete-mor", "files": ["a.parquet"],
+              "dv": ["dv2.parquet"], "rows": 4},
+        "3": {**entry, "op": "append", "files": ["a.parquet", "b.parquet"],
+              "dv": ["dv2.parquet"], "rows": 6},
+    }})
+
+    reader = _CDFStreamReader({"database": "lake://db", "table": "t"})
+    rec.opened.clear()
+    rows = sorted(
+        (row[2], row[1], row[0])
+        for p in reader.partitions(reader.initialOffset(), reader.latestOffset())
+        for row in reader.read(p)
+    )
+    assert rows == [(1, "insert", i) for i in range(6)] + [
+        (2, "delete", 1), (2, "delete", 4), (3, "insert", 10), (3, "insert", 11),
+    ]
+    assert {p for p in rec.opened if p.endswith(".parquet")} == {
+        io.join(root, n) for n in ("a.parquet", "b.parquet", "dv2.parquet")
+    }

@@ -10,9 +10,9 @@ inference. Jobs are counted by job group."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pyarrow as pa
+import pyarrow.fs as pafs
 import pyarrow.parquet as pq
 import pytest
 from pyspark.errors import AnalysisException
@@ -20,24 +20,12 @@ from pyspark.sql import functions as F
 
 from dbt_parquet_spark.catalog import FilesystemCatalog
 from dbt_parquet_spark.materialize import create_table_as, load_seed
-from dbt_parquet_spark.sources.readers import _footer_probe, read_parquet
+from dbt_parquet_spark.sources import readers
+from dbt_parquet_spark.sources.readers import _footer_probe, read_parquet, resolve_path
 
-from .conftest import SF_ORACLE, SF_SMALL
+from .conftest import SF_ORACLE, SF_SMALL, spark_jobs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _jobs(spark, fn) -> list[int]:
-    """The ids of the Spark jobs ``fn`` runs, in a fresh job group."""
-    sc = spark.sparkContext
-    group = f"footer-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc._jsc.clearJobGroup()
-    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job starts reach the tracker
-    return sorted(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _write_jobs(spark, last: int = 64) -> dict[int, int]:
@@ -137,8 +125,8 @@ def test_footer_schema_equals_inferred(spark, tmp_path, case):
     infers, normalised the same way, and reading it runs no job."""
     cat = FilesystemCatalog(str(tmp_path / "db"))
     rel = SPARK_WRITTEN[case](spark, cat, tmp_path)
-    assert _footer_probe(rel.path)[1] is not None
-    jobs = _jobs(spark, lambda: read_parquet(spark, rel.path).schema)
+    assert _footer_probe(*resolve_path(rel.path))[1] is not None
+    jobs = spark_jobs(spark, lambda: read_parquet(spark, rel.path).schema)
     got = read_parquet(spark, rel.path).schema
     assert got == _inferred(spark, rel.path)
     assert jobs == []
@@ -151,7 +139,7 @@ def test_footer_schema_equals_inferred(spark, tmp_path, case):
     elif case == "ntz_model":
         assert types["t"] == "timestamp"
     elif case == "ann_index":
-        assert "cell" in types and cat.is_pq_index(rel)
+        assert "cell" in types and cat.snapshot(rel).kind == "index"
 
 
 def test_pyarrow_file_keeps_inference(spark, tmp_path):
@@ -163,7 +151,7 @@ def test_pyarrow_file_keeps_inference(spark, tmp_path):
         "ts": pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_000],
                        pa.timestamp("ns", tz="UTC")),
     }), path)
-    assert _footer_probe(path) == (["ts"], None)
+    assert _footer_probe(*resolve_path(path)) == (["ts"], None)
     got = read_parquet(spark, path).schema
     assert got == _inferred(spark, path, ns=("ts",))
     assert got["ts"].dataType.simpleString() == "timestamp"
@@ -210,14 +198,48 @@ def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
     rels = [r for s in cat.list_schemas() for r in cat.list_relations(s)]
     assert len(rels) == 4
 
-    assert _jobs(spark, lambda: cat.register_all_views(spark)) == []
-    assert _jobs(spark, lambda: [cat.get_columns(spark, r) for r in rels]) == []
+    assert spark_jobs(spark, lambda: cat.register_all_views(spark)) == []
+    assert spark_jobs(spark, lambda: [cat.get_columns(spark, r) for r in rels]) == []
     docs = {}
-    assert _jobs(spark, lambda: docs.update(cat.docs_artifact(spark))) == []
+    assert spark_jobs(spark, lambda: docs.update(cat.docs_artifact(spark))) == []
     node = docs["nodes"]["model.dbt_parquet_spark.versioned"]
     assert node["stats"]["num_rows"]["value"] == 7
     assert list(node["columns"]) == ["id"]
     assert spark.table("versioned").count() == 7
+
+
+class _RecordingFS(pafs.LocalFileSystem):
+    """A local filesystem that records the files opened through it."""
+
+    def __init__(self):
+        super().__init__()
+        self.opened: list[str] = []
+
+    def open_input_file(self, path):
+        self.opened.append(path)
+        return super().open_input_file(path)
+
+
+def test_footer_probes_open_through_catalog_io(spark, tmp_path):
+    """The footer that ``get_columns``, a view and a docs node probe is
+    opened through ``catalog.io``, so a counting filesystem there sees it:
+    each relation's first resolved file once, plus every file's footer for
+    the docs stats."""
+    cat = FilesystemCatalog(str(tmp_path / "db"))
+    rels = [case(spark, cat, tmp_path) for case in (_single_file, _part_files, _hive_partitioned)]
+    firsts = sorted(cat.snapshot(r).files[0] for r in rels)
+    every = sorted(f for r in rels for f in cat.snapshot(r).files)
+    fs = cat.io.fs = _RecordingFS()
+
+    def opened(fn) -> list[str]:
+        readers._FOOTER_MEMO.clear()  # a memo hit opens nothing
+        fs.opened.clear()
+        fn()
+        return sorted(fs.opened)
+
+    assert opened(lambda: [cat.get_columns(spark, r) for r in rels]) == firsts
+    assert opened(lambda: cat.register_all_views(spark)) == firsts
+    assert opened(lambda: cat.docs_artifact(spark)) == sorted(every + firsts)
 
 
 def test_project_run_jobs_are_model_writes_only(spark, tmp_path):
@@ -234,11 +256,11 @@ def test_project_run_jobs_are_model_writes_only(spark, tmp_path):
                     single_file=True)
     project = Project.from_dir(cat, os.path.join(REPO, "examples/analytics/models"))
     results = {}
-    jobs = _jobs(spark, lambda: results.update(project.run(spark, threads=4)))
+    jobs = spark_jobs(spark, lambda: results.update(project.run(spark, threads=4)))
     writes = _write_jobs(spark)
     assert [j for j in jobs if j not in writes] == []
     assert len({writes[j] for j in jobs}) == len(results) == 4
     assert len(jobs) == 12
     for name, r in results.items():
         assert r.rows == spark.table(name).count()
-    assert _jobs(spark, lambda: project.run(spark, threads=4, state="modified")) == []
+    assert spark_jobs(spark, lambda: project.run(spark, threads=4, state="modified")) == []

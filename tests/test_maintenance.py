@@ -12,7 +12,7 @@ from dbt_parquet_spark.materialize import create_table_as
 from dbt_parquet_spark.sources.readers import read_parquet
 from dbt_parquet_spark.streaming.stream_ops import read_events_stream, stream_to_table
 
-from .conftest import SF_SMALL
+from .conftest import SF_ORACLE, SF_SMALL, spark_jobs
 
 
 @pytest.fixture()
@@ -80,6 +80,16 @@ def test_stream_to_table_materializes(spark, db, tmp_path):
     want = read_parquet(spark, os.path.join(SF_SMALL, "events.parquet"))
     assert out.count() == want.count()
     assert relations_equal(want, out)
+
+
+def test_events_stream_build_runs_one_job(spark):
+    """Building the events stream infers its schema once, in the batch scan
+    it shares with ``read_parquet`` (the events file carries no Spark
+    schema), and still normalizes ``ts`` to TIMESTAMP."""
+    built = []
+    jobs = spark_jobs(spark, lambda: built.append(read_events_stream(spark, SF_ORACLE)))
+    assert len(jobs) == 1
+    assert dict(built[0].dtypes)["ts"] == "timestamp"
 
 
 def test_cluster_by_makes_row_groups_selective(spark, tmp_path):
@@ -191,7 +201,7 @@ def test_cleanup_artifacts_finds_and_removes_orphans(spark, tmp_path):
     from dbt_parquet_spark.materialize import create_table_as
     from dbt_parquet_spark.sources.readers import load_table
 
-    from .conftest import SF_SMALL
+    from .conftest import SF_ORACLE, SF_SMALL, spark_jobs
 
     cat = FilesystemCatalog(str(tmp_path))
     docs = load_table(spark, SF_SMALL, "documents").limit(5)

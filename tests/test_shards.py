@@ -14,7 +14,7 @@ from dbt_parquet_spark.operators.shards import (
 )
 from dbt_parquet_spark.sources.readers import load_table
 
-from .conftest import SF_SMALL
+from .conftest import SF_SMALL, spark_jobs
 
 
 def _manifest_rows(df):
@@ -138,7 +138,7 @@ def test_manifest_describes_written_bytes_for_nondeterministic_input(spark, tmp_
     )
     from dbt_parquet_spark.sources.readers import load_table
 
-    from .conftest import SF_SMALL
+    from .conftest import SF_SMALL, spark_jobs
 
     @F.udf(StringType(), useArrow=True)
     def fresh_uuid() -> str:
@@ -226,3 +226,21 @@ def test_curriculum_order_interleaves_sources_within_bands(spark):
         srcs_in_band = {s for _, s in entries}
         head = [s for _, s in sorted(entries)[: len(srcs_in_band)]]
         assert len(set(head)) == len(srcs_in_band), band  # perfect interleave
+
+
+def test_shard_write_and_append_job_counts(spark, tmp_path):
+    """Job-count gate: the manifest is computed from the table the view
+    registration returns and the delta from its staged files, each with its
+    footer schema, so no schema-inference job runs (a write: 4 jobs, an
+    append: 6; adaptive execution runs shuffle stages as jobs of their own)."""
+    from dbt_parquet_spark.operators.shards import append_delta_to_shards
+
+    cat = FilesystemCatalog(str(tmp_path))
+    rel = cat.relation("job_shards")
+    docs = load_table(spark, SF_SMALL, "documents")
+    assert len(spark_jobs(spark, lambda: write_training_shards(
+        spark, cat, rel, docs.filter(F.col("doc_id") % 2 == 0)))) == 4
+    assert len(spark_jobs(spark, lambda: append_delta_to_shards(
+        spark, cat, rel, docs.filter(F.col("doc_id") % 2 == 1)))) == 6
+    assert _manifest_rows(spark.table("job_shards_manifest")) == _manifest_rows(
+        shard_manifest(spark.table("job_shards").drop("shard_id")))

@@ -8,6 +8,8 @@ import pytest
 from dbt_parquet_spark.catalog import FilesystemCatalog
 from dbt_parquet_spark.snapshots import snapshot_scd2
 
+from .conftest import spark_jobs
+
 
 @pytest.fixture()
 def db(tmp_path):
@@ -101,3 +103,16 @@ def test_pit_join_exactly_one_version_per_event_and_self_consistent(spark):
     assert len({r.event_id for r in rows}) == len(events)
     for r in rows:
         assert r.state_at_event == events[r.event_id], r.event_id
+
+
+def test_scd2_pass_job_count(spark, db):
+    """Job-count gate: a pass over existing history reads it through the
+    catalog with its footer schema, so no schema-inference job runs (7 jobs:
+    the write, whose shuffle stages adaptive execution runs as jobs)."""
+    rel = db.relation("jobs_snapshot")
+    snapshot_scd2(spark, db, rel, _src(spark, [(1, "a", 100), (2, "b", 100)]), "id", "updated_at")
+    s2 = _src(spark, [(1, "A", 200), (2, "b", 100), (3, "c", 150)])
+    assert len(spark_jobs(spark, lambda: snapshot_scd2(spark, db, rel, s2, "id", "updated_at"))) == 7
+    assert _state(spark, rel) == {
+        (1, 100, 200): "a", (1, 200, None): "A", (2, 100, None): "b", (3, 150, None): "c",
+    }
