@@ -456,7 +456,7 @@ def main(argv: list[str] | None = None) -> int:
             catalog.create_schema(args.schema)
         rel = catalog.relation(name, args.schema)
         load_seed(spark, catalog, args.csv, rel)
-        print(f"OK seed {name}: {catalog.stats(rel).rows} rows")
+        print(f"OK seed {name}: {catalog.stats(catalog.snapshot(rel)).rows} rows")
     elif args.cmd == "docs":
         for row in catalog.catalog_df(spark).collect():
             print(
@@ -569,11 +569,11 @@ def main(argv: list[str] | None = None) -> int:
             cols = [c.strip() for c in args.cluster_by.split(",") if c.strip()]
             cluster_by(spark, catalog, rel, cols, zorder=args.zorder)
             order = "zorder" if args.zorder and len(cols) > 1 else "sorted"
-            rows = catalog.stats(rel).rows
+            rows = catalog.stats(catalog.snapshot(rel)).rows
             print(f"OK cluster {rel.view_name} by {','.join(cols)} ({order}): {rows} rows")
         elif args.compact:
             compact(spark, catalog, rel)
-            print(f"OK compact {rel.view_name}: {catalog.stats(rel).rows} rows")
+            print(f"OK compact {rel.view_name}: {catalog.stats(catalog.snapshot(rel)).rows} rows")
         else:
             print("maintain: pass --stats, --compact, or --cluster-by COLS", file=sys.stderr)
             return 2

@@ -20,7 +20,7 @@ util.py:9-44, README.md:28-31) with two deliberate extensions:
 All listing here is driver-side metadata work, exactly as in the reference
 (PyFilesystem listings, no SQL) — it never touches executors. Which files
 hold a relation's rows has one answer, ``resolve`` (``snapshot``), under
-stats, docs, source fingerprints and the DuckDB bridge alike.
+the Spark scan, stats, docs, source fingerprints and the DuckDB bridge alike.
 """
 
 from __future__ import annotations
@@ -42,15 +42,17 @@ class Snapshot:
     """The files that hold a relation's current rows, as fs paths: the data
     ``files`` a reader opens, the deletion-vector sidecars ``dv``, the
     manifest's live row count ``rows`` and a versioned snapshot's pinned
-    ``columns`` ({name: Spark type}) — the last two None without a manifest
-    — and the relation's ``kind``: ``"file"``, ``"directory"``,
-    ``"versioned"`` or ``"index"``."""
+    ``columns`` ({name: Spark type}, None for a legacy entry's untyped
+    columns) — the last two None without a manifest — the relation's
+    ``kind``: ``"file"``, ``"directory"``, ``"versioned"`` or ``"index"``,
+    and its ``root``, the path it resolved."""
 
     files: tuple[str, ...] = ()
     dv: tuple[str, ...] = ()
     rows: int | None = None
-    columns: dict[str, str] | None = None
+    columns: dict[str, str | None] | None = None
     kind: str = "directory"
+    root: str = ""
 
 
 def _hidden(name: str) -> bool:
@@ -69,26 +71,26 @@ def resolve(io: CatalogFS, path: str) -> Snapshot:
     from . import commitlog
 
     if io.isfile(path):
-        return Snapshot((path,), kind="file")
+        return Snapshot((path,), kind="file", root=path)
     top = io.walk(path)
 
     def holds(cache: str) -> bool:
         log = commitlog.log_dir(cache)
         return cache in top or (log in top and commitlog.committed(io, path, cache))
 
-    from .operators.index_manifest import MANIFEST, committed_files
+    from .operators.index_manifest import MANIFEST, committed_snapshot
     from .versioned import VERSIONS_MANIFEST, current_snapshot
 
     if holds(VERSIONS_MANIFEST):
         return current_snapshot(io, path)
     if holds(MANIFEST):
-        return Snapshot(tuple(committed_files(io, path)), kind="index")
+        return committed_snapshot(io, path)
     if any(is_dir and not _hidden(e) for e, is_dir in top.items()):
         top = io.walk(path, recursive=True)
     return Snapshot(tuple(sorted(
         io.join(path, e) for e, is_dir in top.items()
         if not is_dir and e.endswith(".parquet") and not any(map(_hidden, e.split("/")))
-    )))
+    )), root=path)
 
 
 class Footer(NamedTuple):
@@ -166,11 +168,10 @@ class FilesystemCatalog:
         """The files that hold the relation's current rows (``resolve``)."""
         return resolve(self.io, self.fs_path(rel))
 
-    def stats(self, rel: Relation) -> RelationStats:
-        """The snapshot's rows, data files, bytes and row groups from its
-        footers; rows are the manifest's live count where one exists.
-        Deletion-vector sidecars are not counted."""
-        snap = self.snapshot(rel)
+    def stats(self, snap: Snapshot) -> RelationStats:
+        """A relation's rows, data files, bytes and row groups from the
+        footers of its ``snapshot``; rows are the manifest's live count
+        where one exists. Deletion-vector sidecars are not counted."""
         fts = footers(self.io, snap.files)
         rows = snap.rows if snap.rows is not None else sum(f.rows for f in fts)
         return RelationStats(
@@ -266,32 +267,25 @@ class FilesystemCatalog:
         return self.io.isdir(p) and commitlog.committed(self.io, p, VERSIONS_MANIFEST)
 
     # -- views (reference relation.py:115-122, connections.py:79-88) ------
-    def read(self, spark: SparkSession, rel: Relation) -> DataFrame:
+    def read(
+        self, spark: SparkSession, rel: Relation, snap: Snapshot | None = None
+    ) -> DataFrame:
         """The relation's current rows — the reference reads every relation
-        as ``parquet_scan(path)`` (reference relation.py:115-122). One
-        ``snapshot`` decides the kind and the files: a versioned root reads
-        its current version through the manifest (``read_versioned``), an
-        ANN index root its committed cells (``read_pq_index``); anything
-        else is a scan of its path whose schema comes from the footer of
-        the first resolved file, opened through ``io`` (``readers.scan``).
-        No Spark job for a Spark-written relation; a file another tool
-        wrote keeps Spark's inference."""
-        snap = self.snapshot(rel)
-        if snap.kind == "versioned":
-            from .versioned import read_versioned
-
-            return read_versioned(spark, self, rel)
-        if snap.kind == "index":
-            from .operators.index_manifest import read_pq_index
-
-            return read_pq_index(spark, None, path=rel.path)
+        as ``parquet_scan(path)`` (reference relation.py:115-122); here every
+        relation is the scan (``readers.scan``) of its ``snapshot``, which a
+        caller that already resolved it passes as ``snap``. No Spark job for
+        a Spark-written relation."""
         from .sources.readers import normalize_timestamps, scan
 
-        return normalize_timestamps(*scan(spark, rel.path, self.io, snap))
+        return normalize_timestamps(
+            *scan(spark, self.io, self.snapshot(rel) if snap is None else snap)
+        )
 
-    def register_view(self, spark: SparkSession, rel: Relation) -> DataFrame:
+    def register_view(
+        self, spark: SparkSession, rel: Relation, snap: Snapshot | None = None
+    ) -> DataFrame:
         """Register the relation's rows (``read``) as a temp view."""
-        df = self.read(spark, rel)
+        df = self.read(spark, rel, snap)
         df.createOrReplaceTempView(rel.view_name)
         return df
 
@@ -341,8 +335,9 @@ class FilesystemCatalog:
         byte-size stats. The stats come from ``stats``: the parquet FOOTERS
         of the files ``snapshot`` resolves — every partition's files of a
         hive-partitioned table, only the current version's of a versioned
-        one, whose row count is the manifest's live count. The columns come
-        from ``get_columns``. Metadata reads by pyarrow, no Spark job for
+        one, whose row count is the manifest's live count. The columns are
+        the schema ``read`` gives over the same snapshot, so each relation
+        resolves once. Metadata reads by pyarrow, no Spark job for
         Spark-written relations (pinned in tests/test_footer_schema.py), so
         generating docs over a 100 TB lake costs one footer read per data
         file, not a scan.
@@ -352,7 +347,8 @@ class FilesystemCatalog:
         nodes: dict = {}
         for schema in self.list_schemas():
             for rel in self.list_relations(schema):
-                st = self.stats(rel)
+                snap = self.snapshot(rel)
+                st = self.stats(snap)
                 columns = {
                     fld.name: {
                         "type": fld.dataType.simpleString(),
@@ -360,7 +356,7 @@ class FilesystemCatalog:
                         "name": fld.name,
                         "comment": None,
                     }
-                    for idx, fld in enumerate(self.get_columns(spark, rel).fields)
+                    for idx, fld in enumerate(self.read(spark, rel, snap).schema.fields)
                 }
                 unique_id = f"model.dbt_parquet_spark.{rel.view_name}"
                 nodes[unique_id] = {

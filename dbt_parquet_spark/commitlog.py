@@ -77,8 +77,10 @@ def load(io: CatalogFS, root: str, cache: str) -> dict | None:
     A root with a cache but no log (written before the log existed) loads
     from the cache at its recorded generation (0 when it has none); its next
     commit seeds the log."""
-    cache_path = io.join(root, cache)
-    cached = io.get_json(cache_path) if io.exists(cache_path) else None
+    try:
+        cached = io.get_json(io.join(root, cache))
+    except FileNotFoundError:
+        cached = None
     if cached is not None and int(cached.get("gen", 0)) >= 1:
         g = int(cached["gen"])
         if io.exists(commit_path(io, root, cache, g)):

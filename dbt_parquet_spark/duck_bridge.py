@@ -50,8 +50,8 @@ def register_catalog_views(con, catalog: FilesystemCatalog) -> list[str]:
 
     Each view scans the file list ``catalog.snapshot`` resolves (hive
     ``k=v/`` columns kept; a versioned root's CURRENT version only, its
-    deletion vectors anti-joined as ``versioned._snapshot_read`` does). A
-    relation with no files is an empty view. Remote schemes need the
+    deletion vectors anti-joined as the Spark scan ``readers.scan`` does).
+    A relation with no files is an empty view. Remote schemes need the
     matching DuckDB extension (httpfs for s3://) loaded."""
     names = []
     for schema in catalog.list_schemas():
@@ -70,7 +70,7 @@ def _view_sql(catalog: FilesystemCatalog, snap: Snapshot) -> str:
     if not snap.files:
         # DuckDB reads Spark's simple type names; anything else is VARCHAR
         cols = ", ".join(
-            f'CAST(NULL AS {t if t.isalpha() else "VARCHAR"}) AS "{c}"'
+            f'CAST(NULL AS {t if t and t.isalpha() else "VARCHAR"}) AS "{c}"'
             for c, t in (snap.columns or {}).items()
         ) or "NULL AS _empty"
         return f"SELECT {cols} WHERE FALSE"

@@ -14,7 +14,6 @@ from pyspark.sql import types as T
 
 from .catalog import FilesystemCatalog, Relation
 from .materialize import create_table_as
-from .sources.readers import read_parquet
 
 TARGET_FILE_BYTES = 128 * 1024 * 1024  # the canonical HDFS/parquet sweet spot
 
@@ -48,8 +47,9 @@ def compact(
     (write-to-temp + rename) so readers never see a half-compacted table.
     """
     _refuse_versioned(catalog, rel, "compact")
-    n_files = max(1, round(catalog.stats(rel).bytes / target_file_bytes))
-    df = read_parquet(spark, rel.path).repartition(n_files)
+    snap = catalog.snapshot(rel)
+    n_files = max(1, round(catalog.stats(snap).bytes / target_file_bytes))
+    df = catalog.read(spark, rel, snap).repartition(n_files)
     return create_table_as(spark, catalog, rel, df, single_file=False)
 
 
@@ -113,8 +113,9 @@ def cluster_by(
     OPTIMIZE ZORDER semantics on plain parquet).
     """
     _refuse_versioned(catalog, rel, "cluster_by")
-    n_files = max(1, round(catalog.stats(rel).bytes / target_file_bytes))
-    df = read_parquet(spark, rel.path)
+    snap = catalog.snapshot(rel)
+    n_files = max(1, round(catalog.stats(snap).bytes / target_file_bytes))
+    df = catalog.read(spark, rel, snap)
     if zorder and len(cols) > 1:
         df = (
             df.withColumn("__zkey", zorder_key(cols))
@@ -172,7 +173,7 @@ def table_stats(spark: SparkSession, catalog: FilesystemCatalog) -> DataFrame:
     rows = []
     for schema in catalog.list_schemas():
         for rel in catalog.list_relations(schema):
-            rows.append((schema, rel.table, *catalog.stats(rel)))
+            rows.append((schema, rel.table, *catalog.stats(catalog.snapshot(rel))))
     return spark.createDataFrame(rows, STATS_SCHEMA)
 
 

@@ -70,14 +70,13 @@ def create_table_as(
     single_file: bool = False,
     register: bool = True,
     partition_by: list[str] | None = None,
-) -> DataFrame:
+) -> DataFrame | None:
     """CTAS (reference macros/adapters.sql:10): execute → write parquet →
     register view. Writes go to a temp name then swap (atomic publish per
     reference impl.py:75-85 rename pattern) so a failed write never clobbers
-    the previous table version. Returns the written table as
-    ``catalog.read`` reads it (the registered view's DataFrame when
-    ``register``): its schema comes from the footer, so no job runs after
-    the write.
+    the previous table version. Returns the registered view's DataFrame:
+    its schema comes from the footer, so no job runs after the write.
+    ``register=False`` only writes and returns None.
 
     ``partition_by`` writes a hive-partitioned directory layout
     (``col=value/part-*.parquet``) — the scale lever for selective reads:
@@ -101,9 +100,7 @@ def create_table_as(
     else:
         df.write.mode("overwrite").parquet(spark_tmp)
         _swap_into_place(io, fs_tmp, fs_dest)
-    if register:
-        return catalog.register_view(spark, rel)
-    return catalog.read(spark, rel)
+    return catalog.register_view(spark, rel) if register else None
 
 
 # -- seeds (reference impl.py:151-163, 185-208) -----------------------------
@@ -114,7 +111,7 @@ def load_seed(
     rel: Relation,
     single_file: bool = True,
     register: bool = True,
-) -> DataFrame:
+) -> DataFrame | None:
     """CSV → typed parquet table. ``inferSchema`` reproduces the reference's
     agate-driven inference (reference impl.py:185-208): ints stay integral,
     any decimal → double, ISO dates/timestamps → date/timestamp, bools →

@@ -18,8 +18,9 @@ The manifest holds:
   so codes and artifacts swap in the same commit;
 - ``streams``: the last committed micro-batch id per streaming ingest.
 
-READERS resolve the manifest to an explicit file list and scan exactly
-those files (``basePath`` keeps the hive ``cell=`` column). A probe opens
+READERS resolve the manifest to a catalog ``Snapshot`` of explicit files
+and scan exactly those files (``readers.scan``; ``basePath`` keeps the
+hive ``cell=`` column). A probe opens
 only the probed cells' files and never LISTs the index; staged, orphaned
 and retired files are invisible, so no reader observes a half-published
 state, an absent cell or a duplicate row.
@@ -56,8 +57,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import commitlog, memo
+from ..catalog import Snapshot
 from ..fs import CatalogFS, ConcurrentWriteError, resolve_database
-from ..sources.readers import load_table
+from ..sources.readers import load_table, scan
 from .kmeans import assign_udf
 
 MANIFEST = "_manifest.json"  # commit-log cache
@@ -93,42 +95,26 @@ def _artifacts(cfs: CatalogFS, root: str, m: dict):
     return a["centroids"], a["codebooks"]
 
 
-def _cell_files(cfs: CatalogFS, root: str, m: dict, cells=None) -> list[str]:
-    """The fs paths of the files ``m`` commits, by ascending cell; ``cells``
-    keeps only those cells."""
+def _snapshot(cfs: CatalogFS, root: str, m: dict, cells=None) -> Snapshot:
+    """The snapshot ``m`` commits, its files by ascending cell; ``cells``
+    keeps only those cells' files (file-level pruning, zero LIST calls)."""
     wanted = {str(int(c)) for c in cells} if cells is not None else set(m["cells"])
-    return [
-        cfs.join(root, f"cell={c}", f)
-        for c in sorted(m["cells"], key=int)
-        if c in wanted
-        for f in m["cells"][c]
-    ]
+    return Snapshot(
+        files=tuple(
+            cfs.join(root, f"cell={c}", f)
+            for c in sorted(m["cells"], key=int)
+            if c in wanted
+            for f in m["cells"][c]
+        ),
+        kind="index",
+        root=root,
+    )
 
 
-def committed_files(cfs: CatalogFS, root: str) -> list[str]:
-    """The fs paths of every file the committed index at ``root`` holds
-    (what ``catalog.resolve`` resolves an index root to)."""
-    return _cell_files(cfs, root, _load(cfs, root))
-
-
-def _scan(
-    spark: SparkSession, cfs: CatalogFS, root: str, m: dict, cells=None
-) -> DataFrame:
-    """Scan the snapshot ``m`` commits: an explicit file list (``cells``
-    selects probed cells — file-level pruning with zero LIST calls),
-    ``basePath`` so the hive ``cell=`` column survives, and the cell cast
-    back to the long the probe produces so downstream joins are unchanged."""
-    files = [cfs.spark_url(f) for f in _cell_files(cfs, root, m, cells)]
-    reader = spark.read.option("basePath", cfs.spark_url(root))
-    if not files:
-        # empty selection: an empty frame with the index schema, read from
-        # any one committed file
-        c, names = next(iter(m["cells"].items()))
-        one = cfs.spark_url(cfs.join(root, f"cell={c}", names[0]))
-        df = reader.parquet(one).limit(0)
-    else:
-        df = reader.parquet(*files)
-    return df.withColumn("cell", F.col("cell").cast("long"))
+def committed_snapshot(cfs: CatalogFS, root: str) -> Snapshot:
+    """The committed index at ``root`` (what ``catalog.resolve`` resolves
+    an index root to)."""
+    return _snapshot(cfs, root, _load(cfs, root))
 
 
 def _encode(rows: DataFrame, cents, books) -> DataFrame:
@@ -301,7 +287,8 @@ def read_pq_index(
     tests/test_plans.py). Default target is the IMMUTABLE base index (what
     the registered queries read); pass the ``path`` handle returned by
     build/append/compact to read another index."""
-    return _scan(spark, *_open(spark, sf_dir, path), cells)
+    cfs, root, m = _open(spark, sf_dir, path)
+    return scan(spark, cfs, _snapshot(cfs, root, m, cells))[0]
 
 
 def manifest_artifacts(spark: SparkSession, sf_dir: str, path: str | None = None):
@@ -391,9 +378,9 @@ def compact_pq_index(
             if len(files) <= max_files_per_cell:
                 continue
             cell_dir = cfs.join(root, f"cell={cell}")
-            df = spark.read.parquet(
-                *[cfs.spark_url(cfs.join(cell_dir, f)) for f in files]
-            )
+            # the cell's rows without the partition column: the replacement
+            # is written straight into the cell directory
+            df = scan(spark, cfs, _snapshot(cfs, root, m, [cell]))[0].drop("cell")
             cells[cell] = sorted(commitlog.stage(
                 cfs,
                 root,
@@ -455,7 +442,8 @@ def rebuild_pq_index(
         prev = _load(cfs, root)
         # persist barrier: the retrain + encode pipeline reads this frame many
         # times (count, init collect, Lloyd rounds, codebook rounds, encode)
-        rows = _scan(spark, cfs, root, prev).select("vec_id", "embedding").persist()
+        rows = scan(spark, cfs, _snapshot(cfs, root, prev))[0]
+        rows = rows.select("vec_id", "embedding").persist()
         rows.count()
         try:
             # spread (farthest-point) inits: the rebuild exists BECAUSE the

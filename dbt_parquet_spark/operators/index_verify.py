@@ -91,7 +91,10 @@ def verify_pq_index(
     - ``manifest_coverage`` on-disk data files are committed or retired
                            (orphans → warn: vacuum's job, not corruption)
     """
-    from .index_manifest import _artifacts, _open
+    from dataclasses import replace
+
+    from ..sources.readers import scan
+    from .index_manifest import _artifacts, _open, _snapshot
     from .kmeans import assign_udf
     from .similarity import PQ_K, PQ_M, _books_literal, _pq_encode
 
@@ -107,24 +110,14 @@ def verify_pq_index(
     # checks' job). Committed-but-missing files are the data-loss case
     # manifest_files reports; the scan must survive them, so it reads the
     # existing subset rather than read_pq_index's strict file list.
-    present = {
-        (c, f)
-        for c, files in m["cells"].items()
-        for f in files
-        if cfs.exists(cfs.join(root, f"cell={c}", f))
-    }
-    if not present:  # total data loss: nothing left to scan
+    snap = _snapshot(cfs, root, m)
+    snap = replace(snap, files=tuple(f for f in snap.files if cfs.exists(f)))
+    if not snap.files:  # total data loss: nothing left to scan
         rows = [_report_row("row_count", False, 0, None, "index rows scanned")]
         rows.append(_verify_sidecar(cents, books))
-        rows.extend(_verify_manifest(cfs, root, m, present))
+        rows.extend(_verify_manifest(cfs, root, m, 0))
         return spark.createDataFrame(rows, REPORT_SCHEMA)
-    idx = (
-        spark.read.option("basePath", cfs.spark_url(root))
-        .parquet(*[
-            cfs.spark_url(cfs.join(root, f"cell={c}", f)) for c, f in sorted(present)
-        ])
-        .withColumn("cell", F.col("cell").cast("long"))
-    )
+    idx = scan(spark, cfs, snap)[0]
     renamed = idx.select(
         "vec_id",
         "embedding",
@@ -206,7 +199,7 @@ def verify_pq_index(
         ),
     ]
     rows.append(_verify_sidecar(cents, books))
-    rows.extend(_verify_manifest(cfs, root, m, present))
+    rows.extend(_verify_manifest(cfs, root, m, len(snap.files)))
     return spark.createDataFrame(rows, REPORT_SCHEMA)
 
 
@@ -230,13 +223,13 @@ def _verify_sidecar(cents, books):
     )
 
 
-def _verify_manifest(cfs, root: str, m: dict, present: set):
-    """``present``: the committed (cell, file) pairs found on disk."""
+def _verify_manifest(cfs, root: str, m: dict, present: int):
+    """``present``: how many committed files were found on disk."""
     committed = {
         (c, f) for c, files in m["cells"].items() for f in files
     }
     retired = {(c, f) for c, f in m.get("retired", [])}
-    missing = committed - present
+    missing = len(committed) - present
     on_disk = set()
     for entry in cfs.listdir(root):
         if not entry.startswith("cell="):
@@ -250,7 +243,7 @@ def _verify_manifest(cfs, root: str, m: dict, present: set):
         _report_row(
             "manifest_files",
             not missing,
-            len(committed) - len(missing),
+            present,
             len(committed),
             "committed files present on disk — a miss means data loss",
         ),

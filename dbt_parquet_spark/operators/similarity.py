@@ -19,8 +19,8 @@ from pyspark.sql.types import ArrayType, DoubleType, LongType
 from .. import memo
 from ..functions.vector import cosine, dot, norm
 from ..registry import register
-from ..sources.readers import load_table, table_row_count
-from .index_manifest import _artifacts, _open, _scan, read_pq_index
+from ..sources.readers import load_table, scan, table_row_count
+from .index_manifest import _artifacts, _open, _snapshot, read_pq_index
 
 TOP_K = 5
 N_QUERIES = 3  # vec_id < 3 are the query vectors
@@ -850,7 +850,7 @@ def index_recall_audit(
     # one manifest load: the panel, the probed scan and the artifacts all
     # come from the same committed generation
     cfs, root, m = _open(spark, sf_dir, path)
-    idx = _scan(spark, cfs, root, m)
+    idx = scan(spark, cfs, _snapshot(cfs, root, m))[0]
     cents, books = _artifacts(cfs, root, m)
     adc = _adc_udf(books)
     q = idx.filter(
@@ -863,7 +863,7 @@ def index_recall_audit(
         F.explode(probe_udf(cents, ivf_nprobe(len(cents)))(F.col("qe"))).alias("cell"),
     )
     probed = sorted({r.cell for r in probes.select("cell").distinct().collect()})
-    pruned = _scan(spark, cfs, root, m, probed)
+    pruned = scan(spark, cfs, _snapshot(cfs, root, m, probed))[0]
     scanned = (
         pruned.select("vec_id", "codes", "cell")
         .join(F.broadcast(probes), "cell")

@@ -382,19 +382,22 @@ class Project:
             if model.schema != DEFAULT_SCHEMA:
                 self.catalog.create_schema(model.schema)
             if model.materialized == "versioned":
-                from .versioned import version_history, write_versioned
+                from .versioned import write_versioned
 
                 write_versioned(
                     spark, self.catalog, rel, spark.sql(self.compile_sql(model))
                 )
-                self.catalog.register_view(spark, rel)
-                # row count is free: it came from the staged parquet footers
-                rows = version_history(self.catalog, rel)[-1]["rows"]
-                return RunResult(model=name, relation=rel, rows=rows)
-            create_table_as(
-                spark, self.catalog, rel, self.compile_sql(model), single_file=single_file
-            )
-            return RunResult(model=name, relation=rel, rows=self.catalog.stats(rel).rows)
+            else:
+                create_table_as(
+                    spark, self.catalog, rel, self.compile_sql(model),
+                    single_file=single_file, register=False,
+                )
+            # one resolve serves the view and the row count: a versioned
+            # root's manifest count, else the footers
+            snap = self.catalog.snapshot(rel)
+            self.catalog.register_view(spark, rel, snap)
+            rows = snap.rows if snap.rows is not None else self.catalog.stats(snap).rows
+            return RunResult(model=name, relation=rel, rows=rows)
 
         futures: dict = {}
         with ThreadPoolExecutor(max_workers=threads) as pool:

@@ -99,9 +99,9 @@ def resolve_path(path: str) -> tuple[CatalogFS | None, Snapshot]:
     """The filesystem that owns ``path`` (``fs.resolve_database``) and the
     ``catalog.resolve`` snapshot of ``path`` there (a directory's hive
     partitions included, markers and staging skipped). An unreachable or
-    unsupported location gives (None, an empty snapshot): the read then
-    defers to Spark's own inference, which surfaces a real IO error with
-    context."""
+    unsupported location gives (None, an empty snapshot rooted at ``path``
+    as given): the read then defers to Spark's own inference, which
+    surfaces a real IO error with context."""
     import pyarrow as pa
 
     try:
@@ -110,7 +110,7 @@ def resolve_path(path: str) -> tuple[CatalogFS | None, Snapshot]:
     except (OSError, pa.lib.ArrowException):
         # ArrowException covers ArrowNotImplementedError, raised for schemes
         # without compiled filesystem support (hdfs:// without libhdfs)
-        return None, Snapshot()
+        return None, Snapshot(root=path)
 
 
 def _footer_probe(io: CatalogFS | None, snap: Snapshot) -> tuple[list[str], str | None]:
@@ -162,38 +162,69 @@ def _ns_cols_of(pf) -> list[str]:
 
 def scan(
     spark: SparkSession,
-    path: str,
     io: CatalogFS | None,
     snap: Snapshot,
     merge_schema: bool = False,
 ) -> tuple[DataFrame, list[str]]:
-    """The Spark scan of ``path`` (the Spark URL that ``snap`` resolves on
-    ``io``), before ``normalize_timestamps``, and the columns stored as
-    TIMESTAMP(NANOS) that it reads as raw longs.
+    """The one Spark scan of a ``catalog.resolve`` snapshot on ``io``
+    (None: ``snap.root`` is a Spark path read as given), before
+    ``normalize_timestamps``, and its columns stored as TIMESTAMP(NANOS),
+    read as raw longs (Spark 4 rejects them without the ``nanosAsLong``
+    escape hatch, set here on the caller's session).
 
-    The schema is read by pyarrow from ONE footer, the snapshot's first file.
-    Spark writes its exact write schema into that footer, and its own
-    non-merge inference reads that same JSON from one footer, but through a
-    Spark job; handing the JSON to ``spark.read.schema`` gives the same
-    schema with no job. Hive partition columns are still discovered from
-    the directory names and appended. Files written by other tools
-    (pyarrow, DuckDB) carry no such key and keep Spark's inference, as do
-    ``merge_schema=True`` reads.
+    A file or directory hands Spark its root: Spark lists it and discovers
+    hive partitions. A versioned or index snapshot hands Spark its explicit
+    ``files``, with ``basePath`` at the root when all lie under it, so an
+    index keeps its ``cell=`` column, read as the long its probes produce.
 
-    Spark 4 rejects parquet TIMESTAMP(NANOS) outright; with the
-    ``nanosAsLong`` escape hatch, set here on the caller's session, it
-    surfaces as a raw long."""
+    The schema is the typed pinned ``columns``; else, for untyped ones (a
+    legacy versioned entry) or ``merge_schema=True``, the merged schema of
+    all files; else the Spark write schema in the first file's footer,
+    read by pyarrow through ``io`` (Spark's own inference reads the same
+    JSON with a job); else Spark's inference, for files other tools wrote.
+    Pinned columns a file lacks read as NULL; deletion-vector sidecars
+    ``dv`` are anti-joined on (file, row index)."""
+    from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    ns_cols, spark_schema = _footer_probe(io, snap)
+    url = io.spark_url if io is not None else str
+    cols = snap.columns
+    typed = bool(cols) and None not in cols.values()
+    ddl = ", ".join(f"`{c}` {t or 'string'}" for c, t in (cols or {}).items())
+    ns_cols, spark_schema = ([], None) if typed else _footer_probe(io, snap)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.read
-    if merge_schema:
+    listed = snap.kind in ("versioned", "index")
+    if listed and all(f.startswith(snap.root + "/") for f in snap.files):
+        reader = reader.option("basePath", url(snap.root))
+    if typed:
+        reader = reader.schema(ddl)
+    elif merge_schema or cols:
         reader = reader.option("mergeSchema", "true")
     elif spark_schema is not None:
         reader = reader.schema(T.StructType.fromJson(json.loads(spark_schema)))
-    return reader.parquet(path), ns_cols
+    if not listed:
+        df = reader.parquet(url(snap.root))
+    elif snap.files:
+        df = reader.parquet(*[url(f) for f in snap.files])
+    elif typed:
+        df = spark.createDataFrame([], ddl)
+    else:  # an empty selection of an untyped snapshot: the root's schema
+        df = reader.parquet(url(snap.root)).limit(0)
+    if snap.dv and snap.files:
+        from ..versioned import _read_dv, _with_pos
+
+        df, dv = _with_pos(df), _read_dv(spark, io, snap.dv)
+        df = df.join(
+            dv, (df["_dv_file"] == dv["file"]) & (df["_dv_pos"] == dv["pos"]), "left_anti"
+        )
+    if cols is not None:
+        have = set(df.columns)
+        df = df.select(*[c if c in have else F.lit(None).cast("string").alias(c) for c in cols])
+    if snap.kind == "index":
+        df = df.withColumn("cell", F.col("cell").cast("long"))
+    return df, ns_cols
 
 
 def normalize_timestamps(df: DataFrame, ns_cols: list[str]) -> DataFrame:
@@ -227,11 +258,11 @@ def normalize_timestamps(df: DataFrame, ns_cols: list[str]) -> DataFrame:
 
 
 def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> DataFrame:
-    """Parquet scan of a path (file or directory) with the schema from its
-    first resolved footer (``scan``) and normalized timestamps
+    """The scan (``scan``) of what ``path`` resolves to on the filesystem
+    that owns it (``resolve_path``), with normalized timestamps
     (``normalize_timestamps``). Catalog relations read through
     ``FilesystemCatalog.read``, which resolves on the catalog's own
-    filesystem; this resolves ``path`` on the filesystem that owns it.
+    filesystem.
 
     A hive ``col=value/`` directory tree reads with partition discovery: a
     filter on the partition column becomes PartitionFilters at the scan and
@@ -242,7 +273,7 @@ def read_parquet(spark: SparkSession, path: str, merge_schema: bool = False) -> 
     schema evolution (incremental.incremental_append). Off by default:
     schema merging footer-reads every file, which is wasted work on
     stable-schema tables."""
-    return normalize_timestamps(*scan(spark, path, *resolve_path(path), merge_schema))
+    return normalize_timestamps(*scan(spark, *resolve_path(path), merge_schema))
 
 
 # Resolved-DataFrame memo for load_table — the guide §6 file-listing/

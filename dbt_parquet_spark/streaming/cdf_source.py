@@ -232,7 +232,7 @@ class VersionedCDFDataSource(DataSource):
             self.options["table"], self.options.get("schemaname", "") or ""
         )
         columns = current_snapshot(catalog.io, catalog.fs_path(rel)).columns
-        cols = ", ".join(f"`{c}` {t}" for c, t in columns.items())
+        cols = ", ".join(f"`{c}` {t or 'string'}" for c, t in columns.items())
         return f"{cols}, `_change_type` string, `_commit_version` bigint"
 
     def streamReader(self, schema):

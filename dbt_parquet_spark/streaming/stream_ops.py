@@ -41,7 +41,7 @@ def _file_stream(spark: SparkSession, path: str) -> DataFrame:
     (``readers.scan``, which also sets the nanosAsLong conf the stream then
     reads under), and the stream gets the batch reader's timestamp
     normalization."""
-    raw, ns_cols = scan(spark, path, *resolve_path(path))
+    raw, ns_cols = scan(spark, *resolve_path(path))
     source = spark.readStream.schema(raw.schema)
     if os.path.isdir(path):
         stream = source.parquet(path)

@@ -103,22 +103,30 @@ def _load_manifest(catalog: FilesystemCatalog, rel: Relation) -> dict:
     return m if m is not None else {"current": 0, "versions": {}, "gen": 0}
 
 
+def _entry_snapshot(io, root: str, entry: dict, names: list[str] | None = None) -> Snapshot:
+    """Version ``entry`` of the table at ``root`` as a catalog ``Snapshot``:
+    its files (``names``, a pruned subset, when given) and deletion vectors
+    as fs paths (``ref://`` names resolved), its live row count and its
+    pinned columns (None types for a legacy entry's untyped ones)."""
+    dtypes = entry.get("dtypes") or {}
+    return Snapshot(
+        files=tuple(_fpath(io, root, f) for f in (entry["files"] if names is None else names)),
+        dv=tuple(_fpath(io, root, f) for f in entry.get("dv", [])),
+        rows=entry["rows"],
+        columns={c: dtypes.get(c) for c in entry["columns"]},
+        kind="versioned",
+        root=root,
+    )
+
+
 def current_snapshot(io, root: str) -> Snapshot:
-    """The table at ``root``'s current version as a catalog ``Snapshot``:
-    files and deletion vectors as fs paths (``ref://`` names resolved), the
-    live row count and the pinned columns (untyped legacy ones as strings)."""
+    """The table at ``root``'s current version as a catalog ``Snapshot``
+    (``_entry_snapshot``)."""
     m = commitlog.load(io, root, VERSIONS_MANIFEST)
     entry = m["versions"].get(str(m["current"])) if m else None
     if entry is None:
-        return Snapshot(rows=0, columns={}, kind="versioned")
-    dtypes = entry.get("dtypes") or {}
-    return Snapshot(
-        tuple(_fpath(io, root, f) for f in entry["files"]),
-        tuple(_fpath(io, root, f) for f in entry.get("dv", [])),
-        entry["rows"],
-        {c: dtypes.get(c, "string") for c in entry["columns"]},
-        "versioned",
-    )
+        return Snapshot(rows=0, columns={}, kind="versioned", root=root)
+    return _entry_snapshot(io, root, entry)
 
 
 def _commit_manifest(
@@ -227,12 +235,12 @@ def _with_pos(df: DataFrame) -> DataFrame:
     ).withColumn("_dv_pos", F.col("_metadata.row_index"))
 
 
-def _read_dv(spark: SparkSession, io, root: str, names) -> DataFrame:
-    """The (file, pos) pairs of deletion-vector sidecars, read with their
-    fixed schema (``_stage_dv`` writes ``_with_pos``'s columns), so no
-    schema-inference job runs."""
+def _read_dv(spark: SparkSession, io, paths) -> DataFrame:
+    """The (file, pos) pairs of the deletion-vector sidecars at fs
+    ``paths``, read with their fixed schema (``_stage_dv`` writes
+    ``_with_pos``'s columns), so no schema-inference job runs."""
     return spark.read.schema("file STRING, pos BIGINT").parquet(
-        *[io.spark_url(_fpath(io, root, f)) for f in names]
+        *[io.spark_url(p) for p in paths]
     )
 
 
@@ -240,55 +248,26 @@ def _snapshot_read(
     spark: SparkSession, io, root: str, names: list[str], entry: dict,
     keep_pos: bool = False,
 ) -> DataFrame:
-    """Read a snapshot's (possibly pruned) file list pinned to the
-    version's recorded schema. Entries carry per-column dtypes, so the read
-    hands Spark an EXPLICIT schema: files missing evolved columns null-fill
-    them and files written before a type widening upcast — both cases where
-    mergeSchema either crashes (a pruned subset that lacks the column
-    entirely: the r11 UNRESOLVED_COLUMN advice bug) or refuses (int vs
-    bigint cannot merge). Legacy entries without dtypes fall back to
-    mergeSchema plus typeless null-fill.
+    """Scan (``readers.scan``) a version's possibly pruned file list
+    ``names``, pinned to the version's recorded schema and with its
+    deletion vectors applied (a pruned subset applies the full DV set:
+    pairs for unread files never match). A legacy entry without dtypes
+    pruned to no file takes its schema from all of its files.
+    ``keep_pos=True`` adds the (_dv_file, _dv_pos) coordinates of each
+    surviving row — the merge-on-read commit (``_mutate``) addresses rows
+    with them; a read of no file gets typed NULLs."""
+    from .sources.readers import scan
 
-    Versions carrying DELETION VECTORS (``entry['dv']`` — merge-on-read
-    deletes, r13) anti-join the sidecar's (file, pos) pairs against the
-    scan's _metadata coordinates, so deleted rows never surface; a pruned
-    subset applies the same full DV set (pairs for unread files simply
-    never match). ``keep_pos=True`` retains the (_dv_file, _dv_pos)
-    helper columns — the MoR commit (``_mutate``) addresses rows with them."""
-    dv = entry.get("dv") or []
-    dtypes = entry.get("dtypes")
-    cols = list(entry["columns"])
-    ddl = ", ".join(f"`{c}` {dtypes[c]}" for c in cols) if dtypes else None
-    reader = spark.read.schema(ddl) if ddl else spark.read
-    if not ddl and entry.get("evolved"):
-        reader = reader.option("mergeSchema", "true")
+    if not names and entry["files"] and not entry.get("dtypes"):
+        return _snapshot_read(spark, io, root, entry["files"], entry, keep_pos).limit(0)
+    out = scan(spark, io, _entry_snapshot(io, root, entry, names))[0]
+    if not keep_pos:
+        return out
     if names:
-        out = reader.parquet(*[io.spark_url(_fpath(io, root, f)) for f in names])
-        if keep_pos or dv:
-            out = _with_pos(out)
-    elif ddl:
-        out = spark.createDataFrame([], ddl)
-    else:
-        all_files = [io.spark_url(_fpath(io, root, f)) for f in entry["files"]]
-        out = reader.parquet(*all_files).limit(0)
-    if not ddl:
-        for c in cols:
-            if c not in out.columns:
-                out = out.withColumn(c, F.lit(None).cast("string"))
-    if dv and names:
-        dvdf = _read_dv(spark, io, root, dv)
-        out = out.join(
-            dvdf,
-            (out["_dv_file"] == dvdf["file"]) & (out["_dv_pos"] == dvdf["pos"]),
-            "left_anti",
-        )
-    if keep_pos and "_dv_file" not in out.columns:
-        # empty-names branches never ran _with_pos (r13 advice: selecting
-        # the helpers would raise); a zero-row frame gets typed NULLs.
-        out = out.withColumn("_dv_file", F.lit(None).cast("string")).withColumn(
-            "_dv_pos", F.lit(None).cast("bigint")
-        )
-    return out.select(*(cols + (["_dv_file", "_dv_pos"] if keep_pos else [])))
+        return _with_pos(out)
+    return out.withColumn("_dv_file", F.lit(None).cast("string")).withColumn(
+        "_dv_pos", F.lit(None).cast("bigint")
+    )
 
 
 def _footer_meta(
@@ -767,7 +746,11 @@ def version_at_timestamp(
     resolution rule). Pure manifest metadata, no data IO. Raises
     ValueError when ts predates the first commit (there was no table
     then — resolving to v1 would silently misdate an audit query)."""
-    m = _load_manifest(catalog, rel)
+    return _version_at(_load_manifest(catalog, rel), rel, ts)
+
+
+def _version_at(m: dict, rel: Relation, ts: float) -> int:
+    """``version_at_timestamp`` over the loaded manifest ``m``."""
     best: int | None = None
     for k in sorted(m["versions"], key=int):
         if float(m["versions"][k].get("ts", float("inf"))) <= ts:
@@ -829,22 +812,21 @@ def read_versioned(
 
     ``as_of_ts`` time-travels by POSIX timestamp instead of version id
     (``TIMESTAMP AS OF``): the snapshot that was current at that instant,
-    via version_at_timestamp. Mutually exclusive with ``version``."""
-    if as_of_ts is not None:
-        if version is not None:
-            raise ValueError("pass version OR as_of_ts, not both")
-        version = version_at_timestamp(catalog, rel, as_of_ts)
-    io = catalog.io
+    via version_at_timestamp, over the same one manifest load. Mutually
+    exclusive with ``version``."""
+    if as_of_ts is not None and version is not None:
+        raise ValueError("pass version OR as_of_ts, not both")
     m = _load_manifest(catalog, rel)
-    v = m["current"] if version is None else version
-    entry = m["versions"][str(v)]
-    root = _root(catalog, rel)
-    names = _pruned(m, entry["files"], where)
+    if as_of_ts is not None:
+        version = _version_at(m, rel, as_of_ts)
+    entry = m["versions"][str(m["current"] if version is None else version)]
     # pinned-schema scan: the version's recorded (columns, dtypes) are the
     # read schema, so evolved snapshots null-fill/upcast per file and a
     # pruned subset that happens to predate an evolution still resolves
     # every column (the mergeSchema-over-pruned-subset crash this replaces)
-    return _snapshot_read(spark, io, root, names, entry)
+    return _snapshot_read(
+        spark, catalog.io, _root(catalog, rel), _pruned(m, entry["files"], where), entry
+    )
 
 
 def _dv_pairs(
@@ -855,7 +837,7 @@ def _dv_pairs(
     dv = entry.get("dv") or []
     if not dv or not files:
         return None
-    dvdf = _read_dv(spark, io, root, dv)
+    dvdf = _read_dv(spark, io, [_fpath(io, root, f) for f in dv])
     return dvdf.filter(F.col("file").isin([_basename(f) for f in files]))
 
 
@@ -941,7 +923,7 @@ def _mutate(
     ``mode='mor'`` (the Delta/Iceberg deletion-vector shape) rewrites ZERO
     data files: the matched rows' (file, row-index) coordinates stage as a
     DV sidecar, the upserts as new files, and readers anti-join the DVs
-    (``_snapshot_read``). Write cost is O(upserts + matched coordinates);
+    (``readers.scan``). Write cost is O(upserts + matched coordinates);
     ``optimize_versioned`` later folds DVs and small files away.
 
     Candidates are read DV-applied, so no row is removed twice, and row
@@ -1224,7 +1206,7 @@ def read_versioned_changes(
             """The sidecars' (file, pos) pairs on shared files."""
             if not names:
                 return None
-            return _read_dv(spark, io, root, sorted(names)).join(
+            return _read_dv(spark, io, [_fpath(io, root, f) for f in sorted(names)]).join(
                 F.broadcast(shared_df), "file", "left_semi"
             )
 

@@ -104,7 +104,7 @@ def test_duckdb_view_over_versioned_root_is_snapshot_exact(spark, tmp_path):
 
 def test_duckdb_view_applies_deletion_vectors(spark, tmp_path):
     """A merge-on-read snapshot's DuckDB view anti-joins the DV sidecars
-    (file_row_number + filename), matching versioned._snapshot_read."""
+    (file_row_number + filename), matching readers.scan."""
     from pyspark.sql import functions as F
 
     from dbt_parquet_spark.versioned import delete_versioned, write_versioned

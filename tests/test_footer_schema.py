@@ -128,7 +128,13 @@ def test_footer_schema_equals_inferred(spark, tmp_path, case):
     assert _footer_probe(*resolve_path(rel.path))[1] is not None
     jobs = spark_jobs(spark, lambda: read_parquet(spark, rel.path).schema)
     got = read_parquet(spark, rel.path).schema
-    assert got == _inferred(spark, rel.path)
+    if case == "ann_index":
+        # an index root reads its committed cells, the cell as a long
+        committed = cat.snapshot(rel).files
+        assert got == spark.read.option("basePath", rel.path).parquet(*committed).withColumn(
+            "cell", F.col("cell").cast("long")).schema
+    else:
+        assert got == _inferred(spark, rel.path)
     assert jobs == []
     types = dict((f.name, f.dataType.simpleString()) for f in got.fields)
     if case == "hive_partitioned":
@@ -183,9 +189,10 @@ def test_empty_directory_raises_spark_inference_error(spark, tmp_path):
 
 
 def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
-    """Over Spark-written plain, part-file, hive-partitioned and versioned
-    (with a deletion vector) tables, registering views, ``get_columns`` and
-    ``docs_artifact`` are footer and manifest reads only."""
+    """Over Spark-written plain, part-file, hive-partitioned, versioned
+    (with a deletion vector) and ANN index relations, registering views,
+    ``get_columns`` and ``docs_artifact`` are footer and manifest reads
+    only."""
     from dbt_parquet_spark.versioned import delete_versioned, write_versioned
 
     cat = FilesystemCatalog(str(tmp_path / "db"))
@@ -195,8 +202,9 @@ def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
     vrel = cat.relation("versioned")
     write_versioned(spark, cat, vrel, spark.range(10))
     delete_versioned(spark, cat, vrel, F.col("id") < 3, mode="mor")
+    irel = _ann_index(spark, cat, tmp_path)
     rels = [r for s in cat.list_schemas() for r in cat.list_relations(s)]
-    assert len(rels) == 4
+    assert len(rels) == 5
 
     assert spark_jobs(spark, lambda: cat.register_all_views(spark)) == []
     assert spark_jobs(spark, lambda: [cat.get_columns(spark, r) for r in rels]) == []
@@ -206,18 +214,51 @@ def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
     assert node["stats"]["num_rows"]["value"] == 7
     assert list(node["columns"]) == ["id"]
     assert spark.table("versioned").count() == 7
+    assert cat.get_columns(spark, irel)["cell"].dataType.simpleString() == "bigint"
+    node = docs["nodes"]["model.dbt_parquet_spark.midx"]
+    assert node["columns"]["cell"]["type"] == "bigint"
+    assert node["stats"]["num_rows"]["value"] == spark.table("midx").count() == 400
 
 
 class _RecordingFS(pafs.LocalFileSystem):
-    """A local filesystem that records the files opened through it."""
+    """A local filesystem that records the files opened through it and
+    counts its calls as object-store GETs and LISTs."""
 
     def __init__(self):
         super().__init__()
         self.opened: list[str] = []
+        self.gets = self.lists = 0
+
+    def get_file_info(self, paths_or_selector):
+        if isinstance(paths_or_selector, pafs.FileSelector):
+            self.lists += 1
+        else:
+            self.gets += len(paths_or_selector) if isinstance(paths_or_selector, list) else 1
+        return super().get_file_info(paths_or_selector)
 
     def open_input_file(self, path):
         self.opened.append(path)
+        self.gets += 1
         return super().open_input_file(path)
+
+    def open_input_stream(self, path, *args, **kwargs):
+        self.gets += 1
+        return super().open_input_stream(path, *args, **kwargs)
+
+
+def test_versioned_view_loads_manifest_once(spark, tmp_path):
+    """A versioned relation's view scans the snapshot ``resolve`` gives, so
+    its manifest loads once: the resolve's type probe and its one LIST,
+    then the cache GET and the two commit-log probes of one load."""
+    from dbt_parquet_spark.versioned import write_versioned
+
+    cat = FilesystemCatalog(str(tmp_path / "db"))
+    rel = cat.relation("versioned")
+    write_versioned(spark, cat, rel, spark.range(10))
+    fs = cat.io.fs = _RecordingFS()
+    cat.register_view(spark, rel)
+    assert (fs.gets, fs.lists) == (4, 1)
+    assert spark.table("versioned").count() == 10
 
 
 def test_footer_probes_open_through_catalog_io(spark, tmp_path):

@@ -1,8 +1,8 @@
 """Static guard on the read path, no Spark: ``fs.py`` is the only module
 that turns a path into a pyarrow filesystem (``resolve_database``), and
-parquet data is read through ``sources.readers`` (``read_parquet``,
-``scan``) or ``FilesystemCatalog.read``, so every read gets the footer
-schema and the timestamp normalization. A direct ``spark.read…parquet(``
+parquet data is read through ``sources.readers.scan`` (directly, or by
+way of ``read_parquet`` and ``FilesystemCatalog.read``), so every read gets
+the footer schema and the timestamp normalization. A direct ``spark.read…parquet(``
 call is allowed only where the list below says why."""
 
 from __future__ import annotations
@@ -15,17 +15,11 @@ PACKAGE = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__)
 # (module, function) pairs that may call spark.read…parquet( themselves,
 # each under the reason it may
 ALLOWED_READS = {
-    # the one footer-schema scan everything else routes through
+    # the one scan of a catalog Snapshot: plain files and directories,
+    # versioned snapshots and ANN index cells alike
     ("sources/readers.py", "scan"),
-    # versioned snapshots: the version's pinned schema over its explicit
-    # file list, and deletion-vector sidecars with their fixed schema
-    ("versioned.py", "_snapshot_read"),
+    # deletion-vector sidecars, read with their fixed (file, pos) schema
     ("versioned.py", "_read_dv"),
-    # ANN index: explicit lists of committed cell files (scan, compaction,
-    # and the verifier's scan of the files still present)
-    ("operators/index_manifest.py", "_scan"),
-    ("operators/index_manifest.py", "compact_pq_index"),
-    ("operators/index_verify.py", "verify_pq_index"),
 }
 
 
