@@ -46,39 +46,13 @@ def compact(
     computed from actual on-disk size; the rewrite republishes atomically
     (write-to-temp + rename) so readers never see a half-compacted table.
     """
+    from .operators.layout import file_count
+
     _refuse_versioned(catalog, rel, "compact")
     snap = catalog.snapshot(rel)
-    n_files = max(1, round(catalog.stats(snap).bytes / target_file_bytes))
+    n_files = file_count(catalog.stats(snap).bytes, target_file_bytes)
     df = catalog.read(spark, rel, snap).repartition(n_files)
     return create_table_as(spark, catalog, rel, df, single_file=False)
-
-
-def zorder_key(cols: list[str], bits_per_col: int = 16):
-    """Bit-interleaved (Morton) key over integer columns — the multi-key
-    clustering order. Sorting by column A then B gives B no locality at
-    all; sorting by the interleaved key gives EVERY key column row-group
-    locality simultaneously (each column contributes alternating bits, so
-    nearby z-values agree on the high bits of all columns). Pure column
-    expressions (shifts/masks) — map-side, codegen'd, no UDF.
-
-    Columns are masked to ``bits_per_col`` low bits (16 default → 64k
-    distinct cluster cells per column; raise for finer keys). For
-    non-integer keys, hash or bucketize to ints first. For keys whose
-    VALUES exceed the bit budget (timestamps, wide surrogate ids), use the
-    min/max-quantized curve in operators/layout.py (the oracle-checked
-    q_zorder_layout expression) instead of low-bit masking.
-    """
-    from pyspark.sql import functions as F
-
-    key = F.lit(0).cast("long")
-    for ci, c in enumerate(cols):
-        v = F.col(c).cast("long")
-        for j in range(bits_per_col):
-            bit = F.shiftright(v, j).bitwiseAND(F.lit(1).cast("long"))
-            key = key.bitwiseXOR(  # disjoint target bits → XOR == OR
-                F.shiftleft(bit, j * len(cols) + ci)
-            )
-    return key
 
 
 def cluster_by(
@@ -98,33 +72,28 @@ def cluster_by(
     written in arrival order every row group spans the whole key domain and
     nothing is skipped. After clustering, a point/range predicate on the
     cluster key touches O(1) of the files instead of all of them — the
-    plain-parquet analog of Delta/Iceberg OPTIMIZE ZORDER (single-key
-    linear clustering here; compose keys hierarchically for multi-key).
+    plain-parquet analog of Delta/Iceberg OPTIMIZE ZORDER.
 
     repartitionByRange gives globally disjoint key ranges per file (range
     exchange on a sampled key distribution), sortWithinPartitions orders
     within each file so row groups inside a file are disjoint too. Atomic
     republish via the standard write-then-swap.
 
-    ``zorder=True`` clusters on the bit-interleaved ``zorder_key(cols)``
-    instead of the lexicographic (col1, col2, …) order: lexicographic
-    clustering makes only the FIRST column selective; z-order gives every
-    listed column simultaneous row-group locality (Delta/Iceberg
-    OPTIMIZE ZORDER semantics on plain parquet).
+    ``zorder=True`` with 2-4 columns clusters on their Z-order curve
+    position (``layout.zorder_column``: each column quantized from the
+    table's MIN/MAX, one aggregate job, then bit-interleaved) instead of
+    the lexicographic (col1, col2, …) order: lexicographic clustering makes
+    only the FIRST column selective; z-order gives every listed column
+    simultaneous row-group locality (Delta/Iceberg OPTIMIZE ZORDER
+    semantics on plain parquet). More than 4 z-order columns raise
+    ValueError. The rewrite step is ``layout.cluster``.
     """
+    from .operators.layout import cluster, file_count
+
     _refuse_versioned(catalog, rel, "cluster_by")
     snap = catalog.snapshot(rel)
-    n_files = max(1, round(catalog.stats(snap).bytes / target_file_bytes))
-    df = catalog.read(spark, rel, snap)
-    if zorder and len(cols) > 1:
-        df = (
-            df.withColumn("__zkey", zorder_key(cols))
-            .repartitionByRange(n_files, "__zkey")
-            .sortWithinPartitions("__zkey")
-            .drop("__zkey")
-        )
-    else:
-        df = df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
+    n_files = file_count(catalog.stats(snap).bytes, target_file_bytes)
+    df = cluster(catalog.read(spark, rel, snap), n_files, cols, zorder)
     return create_table_as(spark, catalog, rel, df, single_file=False)
 
 

@@ -9,28 +9,28 @@ Delta/Iceberg OPTIMIZE ZORDER) gives every file a narrow min/max range on
 BOTH dimensions, so selective predicates on either column (or both) skip
 most files. ``q_zorder_layout`` computes the curve position as a pure
 integer column expression (exact in any engine — the registered oracle
-replays it in DuckDB); ``write_zordered`` materializes a table range-
-partitioned and sorted by it. ``tests/test_layout.py`` proves the payoff
-from parquet footers alone: under a customer-range predicate the
-Z-ordered layout's overlapping-file count is a fraction of a date-sorted
-layout's.
+replays it in DuckDB). ``tests/test_layout.py`` proves the payoff from
+parquet footers alone: under a customer-range predicate the Z-ordered
+layout's overlapping-file count is a fraction of a date-sorted layout's.
 
-Layering vs maintenance.py: ``maintenance.cluster_by(zorder=True)`` is the
-CATALOG rewrite path (table in, atomically republished table out) and its
-``zorder_key`` interleaves the low bits of already-small integer keys.
-This module is the driver-verified QUERY surface for the same idea, and
-its curve quantizes each dimension from the table's MIN/MAX first — so
-keys of any magnitude (timestamps, wide surrogate ids) use the full 16-bit
-grid instead of aliasing through a low-bit mask.
+This module owns the clustered rewrite: ``zorder_column`` is the one curve
+(each dimension quantized from the table's MIN/MAX first, so keys of any
+magnitude — timestamps, wide surrogate ids — use the full grid instead of
+aliasing), ``cluster`` the one range-partition + in-file sort step, and
+``file_count`` the one output-sizing rule. ``maintenance.cluster_by`` /
+``compact`` (catalog rewrites, atomically republished) and
+``versioned.optimize_versioned`` (a new committed version) call them.
 
 Scale: the curve value is a map-only expression; the only extra cost at
 write time is the range exchange + in-partition sort Spark already needs
 to produce sorted files. Quantization bounds come from one MIN/MAX
-aggregate (four scalars on the driver — KB-scale, the convergence-scalar
+aggregate (2n scalars on the driver — KB-scale, the convergence-scalar
 discipline).
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -42,19 +42,6 @@ ZBITS = 16  # bits per dimension -> 32-bit curve positions
 _EPOCH = "1992-01-01"  # TPC-H order-date epoch for day numbering
 
 
-def _interleave_sql(xi: str, yi: str, div: str, bits: int = ZBITS) -> str:
-    """Bit-interleave two quantized dims as engine-portable integer
-    arithmetic: bit j of x lands at position 2j, of y at 2j+1. Uses only
-    integer divide ('div' in Spark SQL, '//' in DuckDB), %, *, + — no
-    shift operators, so ONE formula renders in both engines."""
-    terms = []
-    for j in range(bits):
-        p = 1 << j
-        terms.append(f"((({xi}) {div} {p}) % 2) * {1 << (2 * j)}")
-        terms.append(f"((({yi}) {div} {p}) % 2) * {1 << (2 * j + 1)}")
-    return "(" + " + ".join(terms) + ")"
-
-
 def _quantize(col: str, lo: str, hi: str, div: str, grid: int = 65535) -> str:
     """Map col from [lo, hi] onto the integer grid [0, grid] with exact
     integer arithmetic (inputs are BIGINT in both engines)."""
@@ -62,9 +49,10 @@ def _quantize(col: str, lo: str, hi: str, div: str, grid: int = 65535) -> str:
 
 
 def _interleave_n_sql(quantized: list[str], div: str, bits: int) -> str:
-    """N-dimensional bit interleave (r14): bit j of dimension i lands at
-    position j*n + i — the general Morton curve. Same engine-portable
-    integer arithmetic as the 2-dim form (divide/%/*/+, no shifts).
+    """N-dimensional bit interleave: bit j of dimension i lands at
+    position j*n + i — the general Morton curve. Engine-portable integer
+    arithmetic: integer divide ('div' in Spark SQL, '//' in DuckDB), %, *,
+    + — no shift operators, so ONE formula renders in both engines.
     Curve width = bits * n, kept under 63 by the caller's bits choice."""
     n = len(quantized)
     terms = []
@@ -87,10 +75,13 @@ _ZORDER_ORACLE = f"""
         FROM orders
     )
     SELECT o_orderkey,
-           CAST({_interleave_sql(
-               _quantize("CAST(o_custkey AS BIGINT)", "b.cmin", "b.cmax", "//"),
-               _quantize(f"CAST({_DUCK_DAY} AS BIGINT)", "b.dmin", "b.dmax", "//"),
+           CAST({_interleave_n_sql(
+               [
+                   _quantize("CAST(o_custkey AS BIGINT)", "b.cmin", "b.cmax", "//"),
+                   _quantize(f"CAST({_DUCK_DAY} AS BIGINT)", "b.dmin", "b.dmax", "//"),
+               ],
                "//",
+               ZBITS,
            )} AS BIGINT) AS zval
     FROM orders, b
 """
@@ -100,10 +91,13 @@ def zorder_expr(cmin: int, cmax: int, dmin: int, dmax: int):
     """The Spark curve-position column for orders over (o_custkey,
     order-day), with the quantization bounds baked in as literals."""
     return F.expr(
-        _interleave_sql(
-            _quantize("o_custkey", str(cmin), str(cmax), "div"),
-            _quantize(_SPARK_DAY, str(dmin), str(dmax), "div"),
+        _interleave_n_sql(
+            [
+                _quantize("o_custkey", str(cmin), str(cmax), "div"),
+                _quantize(_SPARK_DAY, str(dmin), str(dmax), "div"),
+            ],
             "div",
+            ZBITS,
         )
     ).cast("long")
 
@@ -131,7 +125,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(o_orderkey, zval): every order's Z-order curve position over
     (o_custkey, order-day), both quantized to 16 bits from the table's
     MIN/MAX. Pure integer arithmetic, so the oracle value-matches exactly;
-    write_zordered clusters the physical layout by this column."""
+    ``cluster`` on this column clusters the physical layout by it."""
     orders = load_table(spark, sf_dir, "orders")
     cmin, cmax, dmin, dmax = _orders_bounds(orders)
     return orders.select(
@@ -144,12 +138,10 @@ def zorder_column(df: DataFrame, *cols: str):
     df, each quantized from the df's own MIN/MAX (one scalar aggregate —
     2n driver scalars) onto a per-dimension grid sized so the interleaved
     curve fits a signed long (16 bits/dim at n<=3, 15 at n=4). The
-    reusable form of zorder_expr for arbitrary tables;
-    optimize_versioned(zorder_by=...) uses it to re-cluster a versioned
-    snapshot so every rewritten file covers a narrow min/max box on EVERY
-    listed dimension and the manifest's per-file skipping stats prune on
-    any predicate column (the Delta OPTIMIZE ZORDER role, n-axis since
-    r14)."""
+    reusable form of zorder_expr for arbitrary tables; ``cluster`` sorts
+    by it so every rewritten file covers a narrow min/max box on EVERY
+    listed dimension and footer or manifest skipping stats prune on any
+    predicate column (the Delta OPTIMIZE ZORDER role)."""
     if not 2 <= len(cols) <= 4:
         raise ValueError(f"zorder takes 2-4 columns, got {list(cols)}")
     bits = min(ZBITS, 62 // len(cols))
@@ -175,19 +167,26 @@ def zorder_column(df: DataFrame, *cols: str):
     return F.expr(_interleave_n_sql(quantized, "div", bits)).cast("long")
 
 
-def write_zordered(
-    df: DataFrame, zcol: str, path: str, n_files: int = 16
-) -> None:
-    """Materialize df clustered by the curve column: range-partition into
-    n_files contiguous curve segments, sort within each, write one file
-    per segment. Each file then covers a narrow min/max box on BOTH
-    underlying dimensions — parquet footer stats skip it for selective
-    predicates on either column. (At cluster scale n_files follows from
-    target file size; the exchange is the same one any sorted write pays.)
-    """
-    (
-        df.repartitionByRange(n_files, F.col(zcol))
-        .sortWithinPartitions(zcol)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+def file_count(total_bytes: int, target_bytes: int) -> int:
+    """How many files a rewrite of ``total_bytes`` writes: enough that none
+    exceeds ``target_bytes`` on average, and at least one."""
+    return max(1, -(-total_bytes // target_bytes))
+
+
+def cluster(
+    df: DataFrame, n_files: int, cols: Sequence[str], zorder: bool = False
+) -> DataFrame:
+    """df range-partitioned into ``n_files`` contiguous key ranges and
+    sorted within each, so every written file — and every row group in it —
+    covers a narrow min/max range and footer stats skip it for selective
+    predicates. The key is ``cols`` in lexicographic order, which makes
+    only the first column selective; with ``zorder`` and 2-4 columns it is
+    their ``zorder_column`` curve position, which makes every listed column
+    selective (more than 4 raise ValueError; one column is its own order).
+    The range exchange samples the key distribution; the in-file sort is
+    the one any sorted write pays."""
+    if zorder and len(cols) > 1:
+        z = "__zorder"
+        df = df.withColumn(z, zorder_column(df, *cols))
+        return df.repartitionByRange(n_files, z).sortWithinPartitions(z).drop(z)
+    return df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)

@@ -3,25 +3,31 @@
 SURVEY §2B Scans/Sinks rows list "no JSON/ORC/JDBC" as reference gaps;
 these are the Spark-native extensions a real pipeline needs).
 
-All writers follow the same write-to-temp + atomic-rename publish as
+All writers follow the same write-to-temp + swap publish as
 materialize.create_table_as.
 """
 
 from __future__ import annotations
 
-import os
-import shutil
+import posixpath
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..fs import resolve_database
+from ..materialize import _swap_into_place
+
 
 def _atomic_publish(df_writer, dest: str) -> None:
-    tmp = os.path.join(os.path.dirname(dest), f".tmp_{os.path.basename(dest)}_{uuid.uuid4().hex[:8]}")
-    df_writer(tmp)
-    if os.path.exists(dest):
-        shutil.rmtree(dest) if os.path.isdir(dest) else os.remove(dest)
-    os.rename(tmp, dest)
+    """Write through ``df_writer`` into a ``.tmp_`` sibling of ``dest``, then
+    publish it with ``materialize._swap_into_place`` on the filesystem that
+    owns ``dest``'s parent: at every moment ``dest`` holds the old version
+    or the new one, and no ``.tmp_``/``.old_`` sibling outlives a success."""
+    io = resolve_database(posixpath.dirname(dest))
+    name = posixpath.basename(dest)
+    tmp = io.join(io.root, f".tmp_{name}_{uuid.uuid4().hex[:8]}")
+    df_writer(io.spark_url(tmp))
+    _swap_into_place(io, tmp, io.join(io.root, name))
 
 
 def write_csv(df: DataFrame, dest: str, header: bool = True) -> None:
@@ -56,30 +62,3 @@ def write_orc(df: DataFrame, dest: str) -> None:
 
 def read_orc(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.orc(path)
-
-
-def write_partitioned(df: DataFrame, dest: str, partition_by: list[str]) -> None:
-    """Hive-style partitioned parquet table (dest/col=val/part-*.parquet).
-
-    THE 100 TB layout: partition pruning turns predicates on the partition
-    columns into directory listing, so a day-filter over years of data
-    touches only that day's files. The reference explicitly cannot do this
-    (single file per table, reference README.md:49).
-    """
-    _atomic_publish(
-        lambda p: df.write.mode("overwrite").partitionBy(*partition_by).parquet(p), dest
-    )
-
-
-def write_sorted(df: DataFrame, dest: str, sort_cols: list[str], files: int = 0) -> None:
-    """Write parquet ordered by ``sort_cols`` within each file.
-
-    Ordering is what makes row-group min/max statistics selective: a range
-    predicate on the sort column then skips whole row groups at scan time
-    (the poor man's index — at 100 TB, sorting a time-series table by ts
-    before writing is often a 10-100× read win for range queries).
-    tests/test_formats_incremental.py asserts disjoint row-group stats.
-    """
-    out = df.repartitionByRange(files, *sort_cols) if files else df
-    out = out.sortWithinPartitions(*sort_cols)
-    _atomic_publish(lambda p: out.write.mode("overwrite").parquet(p), dest)

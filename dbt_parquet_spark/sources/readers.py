@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..catalog import Snapshot, resolve
+from ..catalog import Snapshot, footers, resolve
 from ..fs import CatalogFS, resolve_database
 
 # The driver's testdata tables (TESTDATA.md).
@@ -51,7 +51,7 @@ def table_names(sf_dir: str) -> list[str]:
 # FIFO eviction (insertion order) — metadata for a 100k-table warehouse
 # must not live in driver dicts forever.
 _MEMO_MAX = 4096
-memo_hits = 0  # valid entries served by _memo_get, across all three memos
+memo_hits = 0  # valid entries served by _memo_get, across both memos
 
 
 def _memo_get(memo: dict, path: str, stat_key):
@@ -317,31 +317,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-# Footer row-count memo — same path-keyed stat discipline as the probes
-# above. Sizing decisions (e.g. the near-dup chunk width, which is derived
-# from ceil(log2 N)) only need parquet's footer num_rows; running a Spark
-# count() job for it costs a driver round-trip + scheduling wave per query
-# build. Single local files read the footer once per stat-key; directories
-# and remote paths fall back to a distributed count — at warehouse scale a
-# footer-walk on the driver would be the wrong tool.
-_ROW_COUNT_MEMO: dict[str, tuple] = {}
-
-
 def table_row_count(spark: SparkSession, sf_dir: str, name: str) -> int:
-    """Exact row count of a table, from the parquet footer when the table
-    is a single local file (memoized by stat key), else via a Spark count
-    job. Always equals ``load_table(...).count()``."""
+    """Exact row count of a table with no Spark job: the manifest's live
+    count of a versioned root, else the summed footer rows of the files its
+    ``resolve_path`` snapshot holds, for a single file and a part-file or
+    hive directory alike (one footer GET per file). Always equals
+    ``load_table(...).count()``; a missing table raises FileNotFoundError."""
     path = table_path(sf_dir, name)
-    sk = _stat_key(path)
-    if sk is not None:
-        hit = _memo_get(_ROW_COUNT_MEMO, path, sk)
-        if hit is None:
-            import pyarrow.parquet as pq
-
-            hit = pq.ParquetFile(path).metadata.num_rows
-            _memo_put(_ROW_COUNT_MEMO, path, sk, hit)
-        return hit
-    return load_table(spark, sf_dir, name).count()
+    io, snap = resolve_path(path)
+    if snap.rows is not None:
+        return snap.rows
+    if not snap.files and (io is None or not io.exists(snap.root)):
+        raise FileNotFoundError(path)
+    return sum(f.rows for f in footers(io, snap.files))
 
 
 def spread_small_scan(

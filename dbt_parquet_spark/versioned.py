@@ -1092,8 +1092,8 @@ def optimize_versioned(
     vacuum, and a reader mid-scan on the old file list is untouched
     (files are never mutated, only superseded).
 
-    ``cluster_by`` additionally RE-CLUSTERS the rewrite
-    (``repartitionByRange`` + in-file sort on the given columns — pass the
+    ``cluster_by`` additionally RE-CLUSTERS the rewrite (``layout.cluster``:
+    ``repartitionByRange`` + in-file sort on the given columns — pass the
     table's stats_cols): after append churn every file's [min, max] spans
     the whole key domain and manifest-side skipping decays to nothing;
     range-clustering restores disjoint per-file ranges, so
@@ -1108,6 +1108,8 @@ def optimize_versioned(
     Declare both columns in stats_cols. Without either knob the rewrite is
     a pure coalesce to ceil(bytes/target) tasks — cheaper (no shuffle),
     but arrival-ordered. Single mutator at a time."""
+    from .operators.layout import cluster, file_count
+
     if cluster_by and zorder_by:
         raise ValueError("pass cluster_by OR zorder_by, not both")
     if zorder_by is not None and not 2 <= len(zorder_by) <= 4:
@@ -1117,22 +1119,12 @@ def optimize_versioned(
     cur = m["versions"][str(m["current"])]
     root = _root(catalog, rel)
     total = sum(io.getsize(_fpath(io, root, f)) for f in cur["files"])
-    n_out = max(1, -(-total // target_bytes))
+    n_out = file_count(total, target_bytes)
     df = read_versioned(spark, catalog, rel)
-    if cluster_by:
-        df = df.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
-            *cluster_by
-        )
-    elif zorder_by:
-        from .operators.layout import zorder_column
-
-        zv = zorder_column(df, *zorder_by)
-        df = (
-            df.withColumn("__zv", zv)
-            .repartitionByRange(n_out, "__zv")
-            .sortWithinPartitions("__zv")
-            .drop("__zv")
-        )
+    if zorder_by:
+        df = cluster(df, n_out, zorder_by, zorder=True)
+    elif cluster_by:
+        df = cluster(df, n_out, cluster_by)
     else:
         df = df.coalesce(n_out)
     names, rows, file_stats = _stage_files(

@@ -15,8 +15,8 @@ from dbt_parquet_spark.sources.formats import (
     write_csv,
     write_json,
     write_orc,
-    write_partitioned,
 )
+from dbt_parquet_spark.materialize import create_table_as
 
 
 @pytest.fixture()
@@ -44,6 +44,16 @@ def test_json_roundtrip(spark, tmp_path):
     assert relations_equal(df, back)
 
 
+def test_json_overwrite_leaves_no_publish_siblings(spark, tmp_path):
+    """Overwriting an existing destination swaps the new version into
+    place and leaves neither the temp write nor the aside copy behind."""
+    dest = str(tmp_path / "out_json")
+    write_json(spark.range(5), dest)
+    write_json(spark.range(7), dest)
+    assert sorted(os.listdir(tmp_path)) == ["out_json"]
+    assert read_json(spark, dest).count() == 7
+
+
 def test_orc_roundtrip(spark, tmp_path):
     df = spark.range(100).select("id", (F.col("id") % 7).alias("m"), F.lit("t").alias("s"))
     dest = str(tmp_path / "out_orc")
@@ -55,8 +65,10 @@ def test_partitioned_write_prunes(spark, tmp_path):
     df = spark.range(1000).select(
         "id", (F.col("id") % 5).alias("bucket"), (F.col("id") * 3).alias("v")
     )
-    dest = str(tmp_path / "part_table")
-    write_partitioned(df, dest, ["bucket"])
+    catalog = FilesystemCatalog(str(tmp_path))
+    rel = catalog.relation("part_table")
+    create_table_as(spark, catalog, rel, df, partition_by=["bucket"], register=False)
+    dest = rel.path
     assert os.path.isdir(os.path.join(dest, "bucket=0"))
     back = spark.read.parquet(dest)
     q = back.filter(F.col("bucket") == 2)

@@ -10,8 +10,8 @@ from pyspark.sql import functions as F
 
 from dbt_parquet_spark.operators.layout import (
     _orders_bounds,
+    cluster,
     q_zorder_layout,
-    write_zordered,
     zorder_expr,
 )
 from dbt_parquet_spark.sources.readers import load_table
@@ -79,7 +79,7 @@ def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
     z = orders.withColumn("zval", zorder_expr(cmin, cmax, dmin, dmax))
 
     zdir, ddir = str(tmp_path / "z"), str(tmp_path / "bydate")
-    write_zordered(z, "zval", zdir, n_files=64)
+    cluster(z, 64, ["zval"]).write.parquet(zdir)
     (
         orders.repartitionByRange(64, F.col("o_orderdate"))
         .sortWithinPartitions("o_orderdate")

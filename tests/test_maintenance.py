@@ -190,6 +190,45 @@ def test_zorder_cluster_makes_both_columns_selective(spark, tmp_path):
     assert zo_a <= zo_n * 3 // 4, f"z-order a not selective: {zo_a}/{zo_n}"
 
 
+def test_zorder_cluster_keeps_wide_keys_selective(spark, tmp_path):
+    """A z-order key whose values are multiples of 65536 keeps its
+    row-group locality: the curve quantizes each column from its MIN/MAX,
+    so wide keys do not alias onto one cell (a low-bit mask maps every
+    such value to 0 and leaves the column spanning every row group)."""
+    from dbt_parquet_spark.maintenance import cluster_by, row_group_stats
+
+    cat = FilesystemCatalog(str(tmp_path))
+    rel = cat.relation("wide")
+    df = (
+        spark.range(100_000)
+        .select(
+            (F.hash("id").bitwiseAND(F.lit(0x7FFF)) * 65536).alias("a"),
+            F.hash(F.col("id") + 1).bitwiseAND(F.lit(0x7FFF)).alias("b"),
+        )
+        .repartition(8)
+    )
+    create_table_as(spark, cat, rel, df, single_file=False)
+    cluster_by(spark, cat, rel, ["a", "b"], target_file_bytes=32 * 1024, zorder=True)
+    stats = row_group_stats(cat, rel, "a")
+    point = 0x4000 * 65536
+    hit = sum(1 for _, _, lo, hi in stats if lo is not None and lo <= point <= hi)
+    assert len(stats) > 4
+    assert hit <= len(stats) // 2, f"wide key a not selective: {hit}/{len(stats)}"
+
+
+def test_zorder_cluster_refuses_five_columns(spark, db):
+    """The curve interleaves at most 4 columns into a signed long; a fifth
+    z-order column raises instead of wrapping bit positions."""
+    from dbt_parquet_spark.maintenance import cluster_by
+
+    rel = db.relation("five")
+    df = spark.range(10).select(*[F.col("id").alias(c) for c in "abcde"])
+    create_table_as(spark, db, rel, df, single_file=False)
+    with pytest.raises(ValueError, match="2-4 columns"):
+        cluster_by(spark, db, rel, list("abcde"), zorder=True)
+    assert read_parquet(spark, rel.path).count() == 10
+
+
 def test_cleanup_artifacts_finds_and_removes_orphans(spark, tmp_path):
     """A crashed publish leaves .tmp_* (writer died) or .old_* (died between
     the swap renames) entries; cleanup must report exactly those, never a

@@ -6,8 +6,8 @@ from pyspark.sql import functions as F
 
 import json
 
+from dbt_parquet_spark.operators.layout import cluster
 from dbt_parquet_spark.operators.packing import SEQ_BUDGET, ffd_pack, q_sequence_packing
-from dbt_parquet_spark.sources.formats import write_sorted
 from dbt_parquet_spark.sources.readers import load_table
 
 from .conftest import SF_ORACLE
@@ -61,7 +61,7 @@ def test_sorted_write_produces_disjoint_rowgroup_stats(spark, tmp_path):
 
     events = load_table(spark, SF_ORACLE, "events").select("event_id", "ts", "value")
     dest = str(tmp_path / "events_sorted")
-    write_sorted(events, dest, ["event_id"], files=4)
+    cluster(events, 4, ["event_id"]).write.parquet(dest)
     ranges = []
     for f in sorted(os.listdir(dest)):
         if not f.endswith(".parquet"):

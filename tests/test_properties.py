@@ -86,14 +86,16 @@ def test_shingle_blocking_is_sound(spark, texts):
     assert got_pairs == expected_pairs
 
 
-def test_zorder_key_matches_reference_and_is_monotone(spark):
-    """zorder_key must equal the classic bit-interleave (python reference)
-    and be monotone in each coordinate (spreading bits is order-preserving)
-    — the property that makes min/max row-group pruning sound on every
-    z-ordered column."""
+def test_zorder_column_matches_reference_and_is_monotone(spark):
+    """zorder_column must equal the classic bit-interleave (python
+    reference) and be monotone in each coordinate (spreading bits is
+    order-preserving) — the property that makes min/max row-group pruning
+    sound on every z-ordered column. The pairs span [0, 65535] on both
+    axes, so the MIN/MAX quantization onto the 16-bit grid is the
+    identity."""
     import random
 
-    from dbt_parquet_spark.maintenance import zorder_key
+    from dbt_parquet_spark.operators.layout import zorder_column
 
     def ref_morton(a: int, b: int, bits: int = 16) -> int:
         out = 0
@@ -108,7 +110,7 @@ def test_zorder_key_matches_reference_and_is_monotone(spark):
     df = spark.createDataFrame(pairs, "a: long, b: long")
     got = {
         (r.a, r.b): r.z
-        for r in df.select("a", "b", zorder_key(["a", "b"]).alias("z")).collect()
+        for r in df.select("a", "b", zorder_column(df, "a", "b").alias("z")).collect()
     }
     for a, b in pairs:
         assert got[(a, b)] == ref_morton(a, b), (a, b)

@@ -16,7 +16,7 @@ from dbt_parquet_spark.sources.readers import (
     spread_small_scan,
 )
 
-from .conftest import SF_ORACLE, SF_SMALL
+from .conftest import SF_ORACLE, SF_SMALL, spark_jobs
 
 
 def test_load_table_memo_hits_and_invalidates(spark, tmp_path):
@@ -166,6 +166,18 @@ def test_table_row_count_matches_spark_count_and_invalidates(spark, tmp_path):
     papq.write_table(pa.table({"a": pa.array([7], pa.int64())}), p)
     os.utime(p, (os.path.getmtime(p) + 5, os.path.getmtime(p) + 5))
     assert table_row_count(spark, d, "t") == 1
+
+
+def test_table_row_count_of_part_file_directory_runs_no_job(spark, tmp_path):
+    """A part-file directory counts from its footers: no Spark job, and
+    the same count as a Spark count()."""
+    from dbt_parquet_spark.sources.readers import table_row_count
+
+    d = str(tmp_path)
+    spark.range(1000).repartition(4).write.parquet(os.path.join(d, "t.parquet"))
+    got = []
+    assert spark_jobs(spark, lambda: got.append(table_row_count(spark, d, "t"))) == []
+    assert got == [1000] == [load_table(spark, d, "t").count()]
 
 
 def test_connected_components_unpersists_edge_cache(spark, monkeypatch):
