@@ -74,9 +74,9 @@ def cluster_by(
     cluster key touches O(1) of the files instead of all of them — the
     plain-parquet analog of Delta/Iceberg OPTIMIZE ZORDER.
 
-    repartitionByRange gives globally disjoint key ranges per file (range
-    exchange on a sampled key distribution), sortWithinPartitions orders
-    within each file so row groups inside a file are disjoint too. Atomic
+    The rewrite step is ``layout.cluster``: a range exchange on a sampled
+    key distribution gives globally disjoint key ranges per file, and an
+    in-file sort makes the row groups inside a file disjoint too. Atomic
     republish via the standard write-then-swap.
 
     ``zorder=True`` with 2-4 columns clusters on their Z-order curve
@@ -86,7 +86,7 @@ def cluster_by(
     only the FIRST column selective; z-order gives every listed column
     simultaneous row-group locality (Delta/Iceberg OPTIMIZE ZORDER
     semantics on plain parquet). More than 4 z-order columns raise
-    ValueError. The rewrite step is ``layout.cluster``.
+    ValueError.
     """
     from .operators.layout import cluster, file_count
 

@@ -22,7 +22,9 @@ def _atomic_publish(df_writer, dest: str) -> None:
     """Write through ``df_writer`` into a ``.tmp_`` sibling of ``dest``, then
     publish it with ``materialize._swap_into_place`` on the filesystem that
     owns ``dest``'s parent: at every moment ``dest`` holds the old version
-    or the new one, and no ``.tmp_``/``.old_`` sibling outlives a success."""
+    or the new one, and no ``.tmp_``/``.old_`` sibling outlives a success.
+    A trailing slash on ``dest`` names the same destination."""
+    dest = dest.rstrip("/")
     io = resolve_database(posixpath.dirname(dest))
     name = posixpath.basename(dest)
     tmp = io.join(io.root, f".tmp_{name}_{uuid.uuid4().hex[:8]}")

@@ -1093,7 +1093,7 @@ def optimize_versioned(
     (files are never mutated, only superseded).
 
     ``cluster_by`` additionally RE-CLUSTERS the rewrite (``layout.cluster``:
-    ``repartitionByRange`` + in-file sort on the given columns — pass the
+    a range exchange + in-file sort on the given columns — pass the
     table's stats_cols): after append churn every file's [min, max] spans
     the whole key domain and manifest-side skipping decays to nothing;
     range-clustering restores disjoint per-file ranges, so

@@ -46,10 +46,11 @@ def test_json_roundtrip(spark, tmp_path):
 
 def test_json_overwrite_leaves_no_publish_siblings(spark, tmp_path):
     """Overwriting an existing destination swaps the new version into
-    place and leaves neither the temp write nor the aside copy behind."""
+    place and leaves neither the temp write nor the aside copy behind,
+    also when the destination is spelled with a trailing slash."""
     dest = str(tmp_path / "out_json")
     write_json(spark.range(5), dest)
-    write_json(spark.range(7), dest)
+    write_json(spark.range(7), dest + "/")
     assert sorted(os.listdir(tmp_path)) == ["out_json"]
     assert read_json(spark, dest).count() == 7
 
