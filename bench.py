@@ -46,6 +46,18 @@ R14_PRINTED = frozenset({
     "q_vocab_coverage", "q_vocabulary", "q_winnow_overlap", "q_winnowing",
 })
 
+# The 70 names on the ROUND-15 printed line (BENCH_r15.json): the r14 names
+# plus the 18 that joined them. These are the pins the trim below keeps, so
+# PERF compares every one of them round over round.
+R15_PRINTED = R14_PRINTED | frozenset({
+    "q_ann_filtered", "q_bigram_lm", "q_cluster_sample", "q_corpus_datasheet",
+    "q_embedding_gram", "q_embedding_pca", "q_event_transitions",
+    "q_json_extract", "q_multimodal_frames", "q_pit_join",
+    "q_quality_classifier", "q_quality_prune", "q_scd2_history",
+    "q_session_window", "q_token_budget_sample", "q_window_extras",
+    "q_window_rank", "q_window_running",
+})
+
 # Headline queries: the shuffle/join/window/extension-heavy subset.
 HEADLINE = [
     "q_agg_multi",
@@ -386,8 +398,8 @@ def main() -> None:
     # spin-canary seconds pre/post, msp/mss = median (steady) spread, nc =
     # non-converged count; `contended`/`noisy` keep their full names — they
     # are the machine-classification flags other rounds grep for), and the
-    # trim order PINS every name that reached the r14 printed line
-    # (R14_PRINTED) so a pinned query can never be trimmed — PERF can no
+    # trim order PINS every name that reached the r14 or r15 printed line
+    # (R15_PRINTED) so a pinned query can never be trimmed — PERF can no
     # longer manufacture a phantom "dropped_from_bench" row for a query
     # that merely got faster. Remaining space is filled with the SLOWEST
     # unpinned queries; the BENCH_DETAIL.json sidecar always carries every
@@ -436,15 +448,16 @@ def main() -> None:
     sel = list(timings)
     line = _encode(sel)
     if len(line) > 1950:
-        pinned = [n for n in timings if n in R14_PRINTED]
+        pinned = [n for n in timings if n in R15_PRINTED]
         others = sorted(
-            (n for n in timings if n not in R14_PRINTED), key=timings.get
+            (n for n in timings if n not in R15_PRINTED), key=timings.get
         )  # fastest first — popped first
         while len(line) > 1950 and others:
             others.pop(0)
             line = _encode(pinned + others)
-        # Degenerate last resort (pins alone exceed the window — cannot
-        # happen at current name lengths): fall back to trimming fastest.
+        # Degenerate last resort (pins alone exceed the window — the 70
+        # pins fit while their timings print as 4 characters, under 10 s):
+        # fall back to trimming the fastest pins.
         while len(line) > 1950 and len(out["queries"]) > 5:
             keep = sorted(pinned, key=timings.get)[1:]
             pinned = keep

@@ -28,6 +28,7 @@ from __future__ import annotations
 import posixpath
 from dataclasses import dataclass
 from typing import Iterable, NamedTuple
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -53,6 +54,15 @@ class Snapshot:
     columns: dict[str, str | None] | None = None
     kind: str = "directory"
     root: str = ""
+
+    @property
+    def partition_by(self) -> list[str]:
+        """A directory's hive partition columns, from the ``k=v/`` levels
+        between ``root`` and its first file ([] for any other snapshot)."""
+        if self.kind != "directory" or not self.files:
+            return []
+        levels = posixpath.relpath(self.files[0], self.root).split("/")[:-1]
+        return [unquote(d.split("=", 1)[0]) for d in levels if "=" in d]
 
 
 def _hidden(name: str) -> bool:

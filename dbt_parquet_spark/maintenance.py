@@ -45,14 +45,17 @@ def compact(
     appends both produce them; periodic compaction fixes it. File count is
     computed from actual on-disk size; the rewrite republishes atomically
     (write-to-temp + rename) so readers never see a half-compacted table.
+    A hive-partitioned table keeps its ``k=v/`` layout, one file per
+    partition directory.
     """
     from .operators.layout import file_count
 
     _refuse_versioned(catalog, rel, "compact")
     snap = catalog.snapshot(rel)
     n_files = file_count(catalog.stats(snap).bytes, target_file_bytes)
-    df = catalog.read(spark, rel, snap).repartition(n_files)
-    return create_table_as(spark, catalog, rel, df, single_file=False)
+    parts = snap.partition_by
+    df = catalog.read(spark, rel, snap).repartition(n_files, *parts)
+    return create_table_as(spark, catalog, rel, df, partition_by=parts)
 
 
 def cluster_by(
@@ -77,7 +80,9 @@ def cluster_by(
     The rewrite step is ``layout.cluster``: a range exchange on a sampled
     key distribution gives globally disjoint key ranges per file, and an
     in-file sort makes the row groups inside a file disjoint too. Atomic
-    republish via the standard write-then-swap.
+    republish via the standard write-then-swap. A hive-partitioned table
+    keeps its ``k=v/`` layout: the partition columns lead the in-file sort,
+    so each directory's files are clustered by ``cols`` as well.
 
     ``zorder=True`` with 2-4 columns clusters on their Z-order curve
     position (``layout.zorder_column``: each column quantized from the
@@ -93,8 +98,9 @@ def cluster_by(
     _refuse_versioned(catalog, rel, "cluster_by")
     snap = catalog.snapshot(rel)
     n_files = file_count(catalog.stats(snap).bytes, target_file_bytes)
-    df = cluster(catalog.read(spark, rel, snap), n_files, cols, zorder)
-    return create_table_as(spark, catalog, rel, df, single_file=False)
+    parts = snap.partition_by
+    df = cluster(catalog.read(spark, rel, snap), n_files, cols, zorder, within=parts)
+    return create_table_as(spark, catalog, rel, df, partition_by=parts)
 
 
 def row_group_stats(

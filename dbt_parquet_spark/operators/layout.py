@@ -174,7 +174,11 @@ def file_count(total_bytes: int, target_bytes: int) -> int:
 
 
 def cluster(
-    df: DataFrame, n_files: int, cols: Sequence[str], zorder: bool = False
+    df: DataFrame,
+    n_files: int,
+    cols: Sequence[str],
+    zorder: bool = False,
+    within: Sequence[str] = (),
 ) -> DataFrame:
     """df range-partitioned into ``n_files`` contiguous key ranges and
     sorted within each, so every written file — and every row group in it —
@@ -184,9 +188,11 @@ def cluster(
     their ``zorder_column`` curve position, which makes every listed column
     selective (more than 4 raise ValueError; one column is its own order).
     The range exchange samples the key distribution; the in-file sort is
-    the one any sorted write pays."""
+    the one any sorted write pays. ``within`` (a partitioned write's
+    partition columns) leads the in-file sort, so the write adds no sort
+    of its own."""
     if zorder and len(cols) > 1:
         z = "__zorder"
         df = df.withColumn(z, zorder_column(df, *cols))
-        return df.repartitionByRange(n_files, z).sortWithinPartitions(z).drop(z)
-    return df.repartitionByRange(n_files, *cols).sortWithinPartitions(*cols)
+        return df.repartitionByRange(n_files, z).sortWithinPartitions(*within, z).drop(z)
+    return df.repartitionByRange(n_files, *cols).sortWithinPartitions(*within, *cols)

@@ -322,10 +322,12 @@ class Project:
         (reference threads semantics). Every relation's view is registered
         once, up front (reference connections.py:79-88 registers all
         existing parquet on connect); a rebuilt model re-registers its own.
-        Spark jobs run only to write models: a Spark-written relation's
-        view schema comes from its footer (``read_parquet``; a source
-        another tool wrote still costs Spark's inference job) and each
-        ``RunResult.rows`` from the written files' footers
+        Spark jobs run only to write models: a relation's view schema
+        comes from its footer (``read_parquet``: the schema Spark wrote
+        there, or for a flat single file another tool wrote, the one Spark
+        would infer from its parquet schema; other foreign relations still
+        cost Spark's inference job) and each ``RunResult.rows`` from the
+        written files' footers
         (``FilesystemCatalog.stats``). Model threads inherit the caller's
         local properties (job group, scheduler pool), so a caller's job
         group covers the run's jobs.

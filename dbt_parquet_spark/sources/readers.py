@@ -12,6 +12,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..catalog import Snapshot, footers, resolve
 from ..fs import CatalogFS, resolve_database
@@ -86,13 +87,33 @@ def _stat_key(path: str):
 # immutable file on every call (each query build, each bench rep), and the
 # pyarrow open+footer-parse is a few ms of pure Python per table per call.
 # Single local files only (a directory's mtime does not see nested partition
-# writes); each entry holds the probe's (ns columns, Spark schema JSON).
+# writes); each entry holds the probe's three results, none of which
+# depends on a session conf.
 _FOOTER_MEMO: dict[str, tuple] = {}
 
 # Spark writes its exact write schema into every parquet footer under this
 # key-value metadata key, and its own non-merge schema inference prefers it
 # to converting the parquet schema (ParquetFileFormat.readSchemaFromFooter).
 SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+# Spark 4.1's inference of a flat parquet column under default confs
+# (ParquetToSparkSchemaConverter), as a JSON type name, by physical type and
+# pyarrow's logical type; INT64 timestamps are mapped in ``_inferred_type``.
+# "binary" and "timestamp_ntz" depend on session confs (``_foreign_schema``).
+_INFERRED = {
+    ("BOOLEAN", "None"): "boolean",
+    ("INT32", "None"): "integer",
+    ("INT32", "Int(bitWidth=8, isSigned=true)"): "byte",
+    ("INT32", "Int(bitWidth=16, isSigned=true)"): "short",
+    ("INT32", "Int(bitWidth=32, isSigned=true)"): "integer",
+    ("INT32", "Date"): "date",
+    ("INT64", "None"): "long",
+    ("INT64", "Int(bitWidth=64, isSigned=true)"): "long",
+    ("FLOAT", "None"): "float",
+    ("DOUBLE", "None"): "double",
+    ("BYTE_ARRAY", "String"): "string",
+    ("BYTE_ARRAY", "None"): "binary",
+}
 
 
 def resolve_path(path: str) -> tuple[CatalogFS | None, Snapshot]:
@@ -113,17 +134,20 @@ def resolve_path(path: str) -> tuple[CatalogFS | None, Snapshot]:
         return None, Snapshot(root=path)
 
 
-def _footer_probe(io: CatalogFS | None, snap: Snapshot) -> tuple[list[str], str | None]:
+def _footer_probe(
+    io: CatalogFS | None, snap: Snapshot
+) -> tuple[list[str], str | None, tuple | None]:
     """(columns stored as parquet TIMESTAMP(NANOS), Spark's write-schema
-    JSON or None) from the footer of the snapshot's first file, opened
+    JSON or None, and for a single file without that JSON its
+    ``_flat_columns``) from the footer of the snapshot's first file, opened
     through ``io``; nothing to probe, or a footer that cannot be read, gives
-    ([], None)."""
+    ([], None, None)."""
     import pyarrow as pa
     import pyarrow.fs as pafs
     import pyarrow.parquet as pq
 
     if io is None or not snap.files:
-        return [], None
+        return [], None, None
     first = snap.files[0]
     local = snap.kind == "file" and isinstance(io.fs, pafs.LocalFileSystem)
     sk = _stat_key(first) if local else None
@@ -135,9 +159,12 @@ def _footer_probe(io: CatalogFS | None, snap: Snapshot) -> tuple[list[str], str 
         with io.open_input(first) as f:
             pf = pq.ParquetFile(f)
             schema = (pf.metadata.metadata or {}).get(SPARK_SCHEMA_KEY)
-            out = _ns_cols_of(pf), schema.decode() if schema else None
+            if schema is not None:
+                out = _ns_cols_of(pf), schema.decode(), None
+            else:
+                out = _ns_cols_of(pf), None, _flat_columns(pf) if snap.kind == "file" else None
     except (OSError, pa.lib.ArrowException):
-        return [], None
+        return [], None, None
     if sk is not None:
         _memo_put(_FOOTER_MEMO, first, sk, out)
     return out
@@ -158,6 +185,59 @@ def _ns_cols_of(pf) -> list[str]:
         and f.type.unit == "ns"
         and physical.get(f.name) == "INT64"
     ]
+
+
+def _inferred_type(column) -> str | None:
+    """Spark's inferred type of one parquet leaf under default confs, or
+    None where ``_INFERRED`` does not map it. A TIMESTAMP(NANOS) column is
+    the long that ``scan``'s ``nanosAsLong`` reads; a millisecond or
+    microsecond timestamp is TIMESTAMP when adjusted to UTC, else NTZ."""
+    lt = column.logical_type
+    if lt.type != "TIMESTAMP":
+        return _INFERRED.get((column.physical_type, str(lt)))
+    ts = json.loads(lt.to_json())
+    if ts["is_from_converted_type"]:
+        return None
+    if ts["timeUnit"] == "nanoseconds":
+        return "long"
+    return "timestamp" if ts["isAdjustedToUTC"] else "timestamp_ntz"
+
+
+def _flat_columns(pf) -> tuple[tuple[str, str], ...] | None:
+    """Each column's (name, ``_inferred_type``) when every column is
+    top-level, mapped, without a field id and unique ignoring case; else
+    None, and Spark infers the schema itself, with its own rules and errors
+    (unsigned ints, decimals, INT96, fixed-length binary, TIME, lists,
+    structs, maps, field ids)."""
+    leaves = [pf.schema.column(i) for i in range(len(pf.schema))]
+    if not leaves or any(c.max_repetition_level or c.path != c.name for c in leaves):
+        return None
+    cols = tuple((c.name, _inferred_type(c)) for c in leaves)
+    if any(t is None for _, t in cols) or len({n.lower() for n, _ in cols}) < len(cols):
+        return None
+    if any(f.metadata and b"PARQUET:field_id" in f.metadata for f in pf.schema_arrow):
+        return None
+    return cols
+
+
+def _foreign_schema(spark: SparkSession, cols: tuple) -> StructType:
+    """The schema Spark infers for a file of ``_flat_columns`` ``cols``
+    under the caller's session confs, every field nullable: binary reads
+    as string under ``binaryAsString``, and a timestamp not adjusted to UTC
+    as TIMESTAMP when ``inferTimestampNTZ`` is off."""
+
+    def on(key: str) -> bool:
+        return spark.conf.get(key).strip().lower() == "true"
+
+    types = {t for _, t in cols}
+    swap = {}
+    if "binary" in types and on("spark.sql.parquet.binaryAsString"):
+        swap["binary"] = "string"
+    if "timestamp_ntz" in types and not on("spark.sql.parquet.inferTimestampNTZ.enabled"):
+        swap["timestamp_ntz"] = "timestamp"
+    return StructType.fromJson({"fields": [
+        {"name": n, "type": swap.get(t, t), "nullable": True, "metadata": {}} for n, t in cols
+    ]})
 
 
 def scan(
@@ -181,17 +261,19 @@ def scan(
     legacy versioned entry) or ``merge_schema=True``, the merged schema of
     all files; else the Spark write schema in the first file's footer,
     read by pyarrow through ``io`` (Spark's own inference reads the same
-    JSON with a job); else Spark's inference, for files other tools wrote.
-    Pinned columns a file lacks read as NULL; deletion-vector sidecars
+    JSON with a job); else, for a single file another tool wrote whose
+    columns are flat and of mapped types, the schema Spark would infer,
+    built on the driver from its footer (``_foreign_schema``); else
+    Spark's own inference, for directories and every other file. Pinned
+    columns a file lacks read as NULL; deletion-vector sidecars
     ``dv`` are anti-joined on (file, row index)."""
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
 
     url = io.spark_url if io is not None else str
     cols = snap.columns
     typed = bool(cols) and None not in cols.values()
     ddl = ", ".join(f"`{c}` {t or 'string'}" for c, t in (cols or {}).items())
-    ns_cols, spark_schema = ([], None) if typed else _footer_probe(io, snap)
+    ns_cols, spark_schema, flat = ([], None, None) if typed else _footer_probe(io, snap)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     reader = spark.read
@@ -203,7 +285,9 @@ def scan(
     elif merge_schema or cols:
         reader = reader.option("mergeSchema", "true")
     elif spark_schema is not None:
-        reader = reader.schema(T.StructType.fromJson(json.loads(spark_schema)))
+        reader = reader.schema(StructType.fromJson(json.loads(spark_schema)))
+    elif flat is not None:
+        reader = reader.schema(_foreign_schema(spark, flat))
     if not listed:
         df = reader.parquet(url(snap.root))
     elif snap.files:

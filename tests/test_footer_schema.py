@@ -2,10 +2,14 @@
 
 Spark records its exact write schema in every parquet footer
 (``readers.SPARK_SCHEMA_KEY``). ``read_parquet`` hands that schema to
-``spark.read.schema`` instead of letting Spark infer it with a job, so the
-catalog's views, columns and docs run no Spark job, and ``Project.run`` runs
-only its models' writes. Files written by other tools keep Spark's
-inference. Jobs are counted by job group."""
+``spark.read.schema`` instead of letting Spark infer it with a job. A single
+file another tool wrote (pyarrow, DuckDB) whose columns are flat and of
+mapped types gets the schema Spark would infer, built on the driver from
+its parquet schema under the caller's session confs. Either way the
+catalog's views, columns and docs run no Spark job, and ``Project.run``
+runs only its models' writes. Directories and every other foreign file
+keep Spark's inference, with its own errors. Jobs are counted by job
+group."""
 
 from __future__ import annotations
 
@@ -45,16 +49,21 @@ def _write_jobs(spark, last: int = 64) -> dict[int, int]:
     return out
 
 
-def _inferred(spark, path, ns=()):
-    """Spark's own schema inference, normalised as ``read_parquet``
-    normalises it (ns longs to micros, TIMESTAMP_NTZ to TIMESTAMP)."""
+def _inferred_read(spark, path, ns=()):
+    """A read with Spark's own schema inference, normalised as
+    ``read_parquet`` normalises it (ns longs to micros, TIMESTAMP_NTZ to
+    TIMESTAMP)."""
     df = spark.read.parquet(path)
     for c in ns:
         df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     for c, t in df.dtypes:
         if t == "timestamp_ntz":
             df = df.withColumn(c, F.col(c).cast("timestamp"))
-    return df.schema
+    return df
+
+
+def _inferred(spark, path, ns=()):
+    return _inferred_read(spark, path, ns).schema
 
 
 # each case function writes one relation into the catalog and returns it
@@ -148,19 +157,138 @@ def test_footer_schema_equals_inferred(spark, tmp_path, case):
         assert "cell" in types and cat.snapshot(rel).kind == "index"
 
 
-def test_pyarrow_file_keeps_inference(spark, tmp_path):
-    """A file another tool wrote carries no Spark schema, so the read falls
-    back to Spark's inference plus the TIMESTAMP(NANOS) conversion."""
+def test_pyarrow_file_reads_footer_schema(spark, tmp_path):
+    """A file another tool wrote carries no Spark schema: its schema comes
+    from its parquet schema on the driver, with no job, and equals Spark's
+    inference plus the TIMESTAMP(NANOS) conversion."""
     path = str(tmp_path / "ns.parquet")
     pq.write_table(pa.table({
         "id": pa.array([1, 2], pa.int64()),
         "ts": pa.array([1_700_000_000_123_456_789, 1_700_000_001_000_000_000],
                        pa.timestamp("ns", tz="UTC")),
     }), path)
-    assert _footer_probe(*resolve_path(path)) == (["ts"], None)
+    assert _footer_probe(*resolve_path(path)) == (["ts"], None, (("id", "long"), ("ts", "long")))
+    assert spark_jobs(spark, lambda: read_parquet(spark, path).schema) == []
     got = read_parquet(spark, path).schema
     assert got == _inferred(spark, path, ns=("ts",))
     assert got["ts"].dataType.simpleString() == "timestamp"
+
+
+# every type the footer mapping covers, as pyarrow writes it
+MAPPED = pa.table({
+    "bool": pa.array([True, None]),
+    "i8": pa.array([-1, 2], pa.int8()),
+    "i16": pa.array([-300, 2], pa.int16()),
+    "i32": pa.array([-70_000, 2], pa.int32()),
+    "i64": pa.array([-(2**40), 2], pa.int64()),
+    "day": pa.array([19_000, None], pa.date32()),
+    "ts_ms": pa.array([1_700_000_000_123, 0], pa.timestamp("ms")),
+    "ts_us": pa.array([1_700_000_000_123_456, 0], pa.timestamp("us")),
+    "ts_us_utc": pa.array([1_700_000_000_123_456, 0], pa.timestamp("us", tz="UTC")),
+    "ts_ms_utc": pa.array([1_700_000_000_123, 0], pa.timestamp("ms", tz="UTC")),
+    "ts_ns": pa.array([1_700_000_000_123_456_789, 0], pa.timestamp("ns")),
+    "f32": pa.array([1.5, None], pa.float32()),
+    "f64": pa.array([2.25, -0.0], pa.float64()),
+    "s": pa.array(["a", None]),
+    "b": pa.array([b"\x00\xff", b"x"]),
+    "Mixed Case.col": pa.array([1, 2], pa.int64()),
+})
+
+SESSION_CONFS = {
+    "default": {},
+    "ntz_off": {"spark.sql.parquet.inferTimestampNTZ.enabled": "false"},
+    "binary_as_string": {"spark.sql.parquet.binaryAsString": "true"},
+}
+
+
+def _with_confs(spark, confs, fn):
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        return fn()
+    finally:
+        for k in confs:
+            spark.conf.unset(k)
+
+
+def test_mapped_types_read_footer_schema_under_session_confs(spark, tmp_path):
+    """One pyarrow file of every mapped type, read under default confs,
+    with NTZ inference off and with binary read as string, in that order:
+    each read's schema and rows equal Spark's own inference under the same
+    confs and run no job, though the footer facts are memoised from the
+    first read."""
+    path = str(tmp_path / "mapped.parquet")
+    pq.write_table(MAPPED, path)
+    for confs in SESSION_CONFS.values():
+        def check():
+            jobs = spark_jobs(spark, lambda: read_parquet(spark, path).schema)
+            ours, theirs = read_parquet(spark, path), _inferred_read(spark, path, ns=("ts_ns",))
+            assert ours.schema == theirs.schema
+            assert sorted(map(repr, ours.collect())) == sorted(map(repr, theirs.collect()))
+            return jobs
+        assert _with_confs(spark, confs, check) == []
+    types = dict((f.name, f.dataType.simpleString()) for f in read_parquet(spark, path).schema)
+    assert types["i8"] == "tinyint" and types["i16"] == "smallint" and types["b"] == "binary"
+
+
+def test_duckdb_file_reads_footer_schema(spark, tmp_path):
+    """DuckDB annotates its integers (Int(32, signed), Int(64, signed)); the
+    file reads with no job and Spark's inferred schema."""
+    import duckdb
+
+    path = str(tmp_path / "duck.parquet")
+    duckdb.connect().execute(
+        "COPY (SELECT 1::INTEGER i, 2::BIGINT b, 3::TINYINT t, 4::SMALLINT s, 'x' v, "
+        "DATE '2024-01-01' d, TIMESTAMP '2024-01-01 10:00:00' ts, "
+        "TIMESTAMPTZ '2024-01-01 10:00:00+00' tz, 1.5::FLOAT f, 2.5::DOUBLE g, true bo, "
+        f"'ab'::BLOB bl) TO '{path}' (FORMAT PARQUET)")
+    assert spark_jobs(spark, lambda: read_parquet(spark, path).schema) == []
+    assert read_parquet(spark, path).schema == _inferred(spark, path)
+
+
+FALLBACK = {
+    "uint32": pa.array([1, 2], pa.uint32()),
+    "decimal": pa.array([1, 2], pa.decimal128(10, 2)),
+    "list": pa.array([[1], [2, 3]], pa.list_(pa.int64())),
+    "struct": pa.array([{"a": 1}, {"a": 2}], pa.struct([("a", pa.int64())])),
+    "fixed_binary": pa.array([b"ab", b"cd"], pa.binary(2)),
+}
+
+
+@pytest.mark.parametrize("kind", list(FALLBACK))
+def test_unmapped_types_keep_spark_inference(spark, tmp_path, kind):
+    """A column outside the mapping leaves the whole file to Spark's
+    inference, and the schema is Spark's."""
+    path = str(tmp_path / f"{kind}.parquet")
+    pq.write_table(pa.table({"id": pa.array([1, 2], pa.int64()), kind: FALLBACK[kind]}), path)
+    assert _footer_probe(*resolve_path(path))[2] is None
+    assert read_parquet(spark, path).schema == _inferred(spark, path)
+
+
+def test_field_ids_and_int96_keep_spark_inference(spark, tmp_path):
+    """Field ids (Spark carries them as field metadata) and INT96 timestamps
+    are left to Spark's inference too."""
+    ids = str(tmp_path / "ids.parquet")
+    schema = pa.schema([pa.field("a", pa.int64(), metadata={b"PARQUET:field_id": b"7"})])
+    pq.write_table(pa.table({"a": [1, 2]}, schema=schema), ids)
+    int96 = str(tmp_path / "int96.parquet")
+    pq.write_table(pa.table({"t": pa.array([1, 2], pa.timestamp("us"))}), int96,
+                   use_deprecated_int96_timestamps=True)
+    for path in (ids, int96):
+        assert _footer_probe(*resolve_path(path))[2] is None
+        assert read_parquet(spark, path).schema == _inferred(spark, path)
+
+
+def test_time_column_raises_spark_error(spark, tmp_path):
+    """A TIME column is not mapped, so the read raises the error Spark's
+    own inference raises."""
+    path = str(tmp_path / "time.parquet")
+    pq.write_table(pa.table({"t": pa.array([1, 2], pa.time64("us"))}), path)
+    with pytest.raises(AnalysisException) as ours:
+        read_parquet(spark, path)
+    with pytest.raises(AnalysisException) as spark_own:
+        spark.read.parquet(path)
+    assert ours.value.getCondition() == spark_own.value.getCondition() == "PARQUET_TYPE_ILLEGAL"
 
 
 def test_merge_schema_still_unions_evolved_append(spark, tmp_path):
@@ -190,9 +318,9 @@ def test_empty_directory_raises_spark_inference_error(spark, tmp_path):
 
 def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
     """Over Spark-written plain, part-file, hive-partitioned, versioned
-    (with a deletion vector) and ANN index relations, registering views,
-    ``get_columns`` and ``docs_artifact`` are footer and manifest reads
-    only."""
+    (with a deletion vector) and ANN index relations, and a flat file
+    pyarrow wrote, registering views, ``get_columns`` and ``docs_artifact``
+    are footer and manifest reads only."""
     from dbt_parquet_spark.versioned import delete_versioned, write_versioned
 
     cat = FilesystemCatalog(str(tmp_path / "db"))
@@ -203,8 +331,11 @@ def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
     write_versioned(spark, cat, vrel, spark.range(10))
     delete_versioned(spark, cat, vrel, F.col("id") < 3, mode="mor")
     irel = _ann_index(spark, cat, tmp_path)
+    # a flat file another tool wrote: its schema comes from its parquet schema
+    pq.write_table(pq.read_table(os.path.join(SF_SMALL, "events.parquet")),
+                   cat.relation("pa_events").path)
     rels = [r for s in cat.list_schemas() for r in cat.list_relations(s)]
-    assert len(rels) == 5
+    assert len(rels) == 6
 
     assert spark_jobs(spark, lambda: cat.register_all_views(spark)) == []
     assert spark_jobs(spark, lambda: [cat.get_columns(spark, r) for r in rels]) == []
@@ -218,6 +349,8 @@ def test_views_columns_and_docs_run_no_spark_job(spark, tmp_path):
     node = docs["nodes"]["model.dbt_parquet_spark.midx"]
     assert node["columns"]["cell"]["type"] == "bigint"
     assert node["stats"]["num_rows"]["value"] == spark.table("midx").count() == 400
+    assert spark.table("pa_events").schema == _inferred(
+        spark, cat.relation("pa_events").path)
 
 
 class _RecordingFS(pafs.LocalFileSystem):
@@ -284,17 +417,19 @@ def test_footer_probes_open_through_catalog_io(spark, tmp_path):
 
 
 def test_project_run_jobs_are_model_writes_only(spark, tmp_path):
-    """Job-count gate for ``Project.run`` over examples/analytics/models:
-    no count job and no schema-inference job, only the four models'
-    writes (12 jobs: adaptive execution runs each write's shuffle stages as
-    jobs of their own). A no-op ``state="modified"`` rerun runs none."""
+    """Job-count gate for ``Project.run`` over examples/analytics/models
+    with the pyarrow-written ``events`` as its source: no count job and no
+    schema-inference job, only the four models' writes (12 jobs: adaptive
+    execution runs each write's shuffle stages as jobs of their own). A
+    no-op ``state="modified"`` rerun runs none."""
+    import shutil
+
     from dbt_parquet_spark.project import Project
 
     cat = FilesystemCatalog(str(tmp_path / "db"))
-    # the source goes through Spark too, so its view needs no inference job
-    create_table_as(spark, cat, cat.relation("events"),
-                    read_parquet(spark, os.path.join(SF_SMALL, "events.parquet")),
-                    single_file=True)
+    os.makedirs(cat.database, exist_ok=True)
+    shutil.copy(os.path.join(SF_SMALL, "events.parquet"), cat.relation("events").path)
+    assert _footer_probe(*resolve_path(cat.relation("events").path))[1] is None
     project = Project.from_dir(cat, os.path.join(REPO, "examples/analytics/models"))
     results = {}
     jobs = spark_jobs(spark, lambda: results.update(project.run(spark, threads=4)))

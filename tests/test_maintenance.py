@@ -82,13 +82,14 @@ def test_stream_to_table_materializes(spark, db, tmp_path):
     assert relations_equal(want, out)
 
 
-def test_events_stream_build_runs_one_job(spark):
-    """Building the events stream infers its schema once, in the batch scan
-    it shares with ``read_parquet`` (the events file carries no Spark
-    schema), and still normalizes ``ts`` to TIMESTAMP."""
+def test_events_stream_build_runs_no_job(spark):
+    """Building the events stream takes its schema from the batch scan it
+    shares with ``read_parquet``, which builds it on the driver from the
+    pyarrow-written file's footer, so no job runs, and still normalizes
+    ``ts`` to TIMESTAMP."""
     built = []
     jobs = spark_jobs(spark, lambda: built.append(read_events_stream(spark, SF_ORACLE)))
-    assert len(jobs) == 1
+    assert jobs == []
     assert dict(built[0].dtypes)["ts"] == "timestamp"
 
 
@@ -227,6 +228,34 @@ def test_zorder_cluster_refuses_five_columns(spark, db):
     with pytest.raises(ValueError, match="2-4 columns"):
         cluster_by(spark, db, rel, list("abcde"), zorder=True)
     assert read_parquet(spark, rel.path).count() == 10
+
+
+def test_rewrites_keep_hive_partitions(spark, db):
+    """compact and cluster_by rewrite a hive-partitioned table with its
+    partition columns: after each, its ``bucket=*/`` directories and its
+    rows stay, and a filter on ``bucket`` prunes at the scan."""
+    import re
+
+    from dbt_parquet_spark.maintenance import cluster_by
+
+    rel = db.relation("bucketed")
+    df = spark.range(1000).select(
+        "id", (F.col("id") % 5).cast("int").alias("bucket"), (F.col("id") * 7 % 101).alias("v"))
+    create_table_as(spark, db, rel, df.repartition(8), partition_by=["bucket"])
+
+    def rows():
+        return sorted(read_parquet(spark, rel.path).select("id", "bucket", "v").collect())
+
+    before = rows()
+    for rewrite in (lambda: compact(spark, db, rel), lambda: cluster_by(spark, db, rel, ["v"])):
+        rewrite()
+        dirs = sorted(e for e in os.listdir(rel.path) if not e.startswith(("_", ".")))
+        assert dirs == [f"bucket={b}" for b in range(5)]
+        assert rows() == before
+        pruned = read_parquet(spark, rel.path).filter(F.col("bucket") == 2)
+        plan = pruned._jdf.queryExecution().executedPlan().toString()
+        assert "bucket" in re.search(r"PartitionFilters: \[([^\]]*)\]", plan).group(1)
+        assert pruned.count() == 200
 
 
 def test_cleanup_artifacts_finds_and_removes_orphans(spark, tmp_path):
